@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Public query surface.
 
 ``entry(spark)`` smoke-runs the flagship analytics query on sf0.001.
-``queries()`` aggregates every operator module's registry; ``oracle_sql()``
-returns the matching DuckDB SQL (omitted only for genuinely
-non-SQL-expressible ops, which the driver checks rows-only).
+``queries()`` aggregates every operator module's registry, in registry
+order; ``oracle_sql()`` returns the matching DuckDB SQL (omitted only for
+the documented non-SQL-expressible ops, which tests/test_oracle_parity.py
+checks rows-only).
 """
 
 from __future__ import annotations
@@ -28,66 +29,6 @@ from akkastreamprocessnpmpackagedependencies_spark.operators.timeseries import R
 from akkastreamprocessnpmpackagedependencies_spark.operators.udx import REG as UDX
 
 _MODULES = [REL, SCAL, TS, DEDUP, SIM, TXT, QUAL, MM, UDX, ADV]
-
-# The driver's correctness gate consumes registry entries IN ORDER (it
-# checks exactly the first 50), so ordering is evidence policy governed by
-# ONE rule, enforced by ``tools/driver_check.py --staleness`` against the
-# per-query fingerprints in tools/evidence.json: every query whose
-# fingerprint differs from the code its last green CORRECTNESS row was
-# computed against must be inside the window, plus every query promised a
-# fresh row via a ``must_rotate`` marker, plus every NEW query (no prior
-# row exists). Prior windows live in git history (this list is rewritten
-# every round).
-_PRIORITY = [
-    # Round-17 window (rebuilt after the round-17 OPTIMIZATION pass,
-    # OPTIMIZATION_r17.md): demand = flagship + the 14 fingerprint-moved
-    # queries (the containment revert, dup-ngram gate, capstone fusion,
-    # contamination collect_set, the CC observe rippling through every
-    # LSH/CC consumer, quality_flags carry hook, split_leakage_audit's
-    # textops module hash, and the npm pagerank/transitive collaterals
-    # through session.py's new table_bytes) + ALL 19 must_rotate-17
-    # promises (the 14 r16-displaced rows + the 5 carried from r15) = 34,
-    # leaving 16 slots filled with the oldest (r14) aged rows in
-    # alphabetical order. The 26 still-displaced r14-aged rows carry
-    # `--must-rotate 18` machine promises (tools/evidence.json).
-    # Pre-handoff gate: `driver_check.py --handoff 17` green on the exact
-    # checkout the driver measures.
-    "npm_dependency_counts",
-    # 14 fingerprint-moved
-    "containment_prefix_pairs", "neardup_source_matrix",
-    "minhash_lsh_neardup", "neardup_clusters",
-    "chargram_jaccard_pairs", "dedup_incremental",
-    "contamination_ngram_hits", "duplicate_ngram_overlap",
-    "fuzzy_dedup_keep_one", "corpus_pipeline_verdicts",
-    "split_leakage_audit", "quality_filter_composite",
-    "npm_dependency_pagerank", "npm_transitive_deps",
-    # 19 must_rotate-17 promises, all honored
-    "stats_moments", "top_unshipped_orders",
-    "supplier_volume_by_nation", "topk_per_customer_agg",
-    "top_orders_per_customer", "running_quantity_by_supplier",
-    "top_orders_global", "window_rank_variants",
-    "skew_salted_join", "top_revenue_suppliers",
-    "returned_item_customers", "small_qty_part_revenue",
-    "zorder_bucket_profile", "unpivot_part_metrics",
-    "asof_purchase_signup", "tfidf_top_terms_per_doc",
-    "token_rarity_scores", "source_mixing_weights",
-    "top_bigram_share",
-    # 16 oldest (r14) aged rows
-    "approx_sketches", "approx_sketches_exact",
-    "date_funcs", "dedup_exact_summary",
-    "dedup_normalized_hash", "doc_fingerprints",
-    "embedding_centroids", "events_hourly_gapfill",
-    "events_sessionize", "events_sliding_1h_30m",
-    "events_tumbling_1h", "grouped_median_pandas",
-    "json_corrupt_tolerant", "json_funcs",
-    "lang_id_heuristic", "map_funcs",
-]
-
-
-
-def _ordered(items: dict) -> dict:
-    head = {k: items[k] for k in _PRIORITY if k in items}
-    return head | {k: v for k, v in items.items() if k not in head}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -377,7 +318,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
     for mod in _MODULES:
         out.update(mod.queries)
-    return _ordered(out)
+    return out
 
 
 def oracle_sql() -> dict[str, str]:
@@ -389,4 +330,4 @@ def oracle_sql() -> dict[str, str]:
     }
     for mod in _MODULES:
         out.update(mod.oracles)
-    return _ordered(out)
+    return out

@@ -18,16 +18,6 @@ coding. The transform arithmetic lives in ``webp_transforms.py``
 (hypothesis-round-trip-tested in isolation before it was wired here);
 this module owns the bitstream framing on both sides.
 
-MAINTENANCE INVARIANT: the four registered decode queries hash THIS
-module whole (closure-local import), but NOT ``webp_transforms.py`` —
-the evidence fingerprint does not follow module-level imports
-transitively. Any behavioral edit to webp_transforms.py MUST be
-accompanied by bumping the revision tag on the next line so the decode
-fingerprints move and the staleness gate sees the change.
-webp_transforms rev: 3 (round 14: LZ77 2D distance plane codes wired —
-decoder maps symbols 1..120 through the spec-derived neighborhood,
-encoder optionally emits them; helpers staged in rounds 12-13)
-
 Scope (honest limits, validated loudly — the PNG/JPEG pattern):
 
 - VP8 LOSSY payloads ("VP8 " chunk) raise ValueError: a DCT video

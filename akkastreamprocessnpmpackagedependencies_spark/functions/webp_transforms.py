@@ -11,13 +11,6 @@ identity for arbitrary images, block sizes, and mode/delta sub-images,
 which is the falsifiability pattern the codec family already uses (a
 bug must exist identically in two unrelated code shapes to hide).
 
-MAINTENANCE INVARIANT: the registered decode queries hash webp.py whole
-but NOT this module (the evidence fingerprint follows function-local
-imports one level, not webp.py's own module-level imports). Any
-behavioral edit HERE must bump the "webp_transforms rev" tag in
-webp.py's module docstring so the decode-query fingerprints move and
-the staleness gate demands fresh driver rows.
-
 Pixel model matches ``webp.py``: a row-major list of uint32 ARGB ints.
 Transform sub-images (per-block predictor modes / color-transform
 elements) are row-major lists over the ceil(w/2^bits) x ceil(h/2^bits)
@@ -684,10 +677,6 @@ def _cross_color_forward_scalar(
 
 # ------------------------------------------- LZ77 distance plane codes
 #
-# Staged in round 12 WITHOUT touching webp.py (the proven two-phase
-# pattern from rounds 10->11: helpers land here behind their own tests;
-# the codec wires them in the round where the four decode-query
-# fingerprints are in-window — recorded in __spark_entry__._PRIORITY).
 # Public spec: RFC 9649 §4.2.2 "Distance Mapping" / libwebp's
 # kCodeToPlaneCodes semantics, re-derived rather than transcribed: the
 # first 120 LZ77 distance symbols are not linear distances but a 2D

@@ -1,13 +1,11 @@
-"""Skew-aware join-strategy advisor (round-15 verdict item 4): the
-pre-flight a 100 TB join wants, unifying the decision that
-``relational.key_skew_profile`` and ``relational.salted_join`` document
-manually. Lives in its own module so its evolution never moves the
-evidence fingerprints of the relational operators (fingerprints hash
-referenced modules transitively).
+"""Skew-aware join-strategy advisor: the pre-flight a 100 TB join wants,
+unifying the decision that ``relational.key_skew_profile`` and
+``relational.salted_join`` document manually. It is its own module
+because it is a planning layer over the relational operators, which it
+imports; they do not depend on it.
 
 The reference has no planner at all (178-line single pipeline,
-src/main/scala/Main.scala); this is part of the driver-mandated scale
-surface.
+src/main/scala/Main.scala).
 """
 
 from __future__ import annotations

@@ -126,16 +126,26 @@ def _band_frame(sig: DataFrame) -> DataFrame:
 
 
 def _verify_jaccard(
-    cand: DataFrame, sig: DataFrame, set_col: str, threshold: float
+    cand: DataFrame, sig_a: DataFrame, sig_b: DataFrame,
+    set_col: str, threshold: float,
 ) -> DataFrame:
-    """Exact jaccard over candidate (doc_a, doc_b) pairs via two
-    signature-frame probes of ``set_col``."""
-    s = sig.select("doc_id", set_col)
+    """Exact jaccard over candidate (doc_a, doc_b) pairs: doc_a probes
+    ``sig_a`` and doc_b probes ``sig_b`` for ``set_col``. The self-join
+    queries pass one signature frame twice; the streaming dedup gate
+    passes the batch's signatures and the stored corpus's, so a replayed
+    batch's orphan band rows cannot self-match (see
+    ``streaming.pipeline.write_dedup_gated``)."""
     inter = F.size(F.array_intersect(F.col(f"sa.{set_col}"), F.col(f"sb.{set_col}")))
     union = F.size(F.col(f"sa.{set_col}")) + F.size(F.col(f"sb.{set_col}")) - inter
     return (
-        cand.join(s.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(s.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        cand.join(
+            sig_a.select("doc_id", set_col).alias("sa"),
+            F.col("doc_a") == F.col("sa.doc_id"),
+        )
+        .join(
+            sig_b.select("doc_id", set_col).alias("sb"),
+            F.col("doc_b") == F.col("sb.doc_id"),
+        )
         .select("doc_a", "doc_b", (inter.cast("double") / union).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
@@ -184,7 +194,7 @@ def _banded_pairs(
     # verified-pairs/candidates is one division away for any caller or
     # monitor. Pinned by tests/test_llm_ops.py.
     cand = cand.observe("lsh_raw_candidates", F.count(F.lit(1)).alias("n"))
-    return _verify_jaccard(cand, sig, set_col, threshold).dropDuplicates(
+    return _verify_jaccard(cand, sig, sig, set_col, threshold).dropDuplicates(
         ["doc_a", "doc_b"]
     )
 
@@ -799,7 +809,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .observe("lsh_raw_candidates", F.count(F.lit(1)).alias("n"))
     )
     pairs = (
-        _verify_jaccard(cand, sig, "sh", JACCARD_THRESHOLD)
+        _verify_jaccard(cand, sig, sig, "sh", JACCARD_THRESHOLD)
         .dropDuplicates(["doc_a", "doc_b"])
         .select(
             F.col("doc_a").alias("new_doc"),

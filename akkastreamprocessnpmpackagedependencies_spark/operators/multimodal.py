@@ -599,8 +599,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-scanline unfilter). The oracle recomputes dims and byte-mean in
     SQL, so a filter-math or container bug anywhere in encode OR decode
     breaks the value hash — the multimodal_decode_real technique, now
-    through a compressed container (round-4 verdict "What's missing"
-    #1 closed with driver-grade evidence once registered in round 6).
+    through a compressed container.
 
     Scale shape: encode and decode run in the SAME Arrow-batched
     executor pass; the compressed payload column never crosses the

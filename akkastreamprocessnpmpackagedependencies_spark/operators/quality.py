@@ -463,14 +463,8 @@ def pack_token_counts(
 
 
 def _corpus_pipeline_oracle() -> str:
-    from .textops import (
-        REG as TXT_REG,
-    )
-    from .textops import (
-        N_PROBE_DOCS,
-        SPLIT_TRAIN_MAX,
-        SPLIT_VAL_MAX,
-    )
+    from .textops import REG as TXT_REG
+    from .textops import N_PROBE_DOCS, sql_split_assign
 
     from ..functions.text import sql_norm
 
@@ -501,12 +495,7 @@ def _corpus_pipeline_oracle() -> str:
       JOIN fuzzy f ON f.doc_id = e.doc_id
       LEFT JOIN contam c ON c.doc_id = e.doc_id)
     SELECT doc_id, verdict, n_tokens,
-           CASE WHEN verdict = 'kept' THEN
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= '{SPLIT_TRAIN_MAX}'
-                  THEN 'train'
-                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= '{SPLIT_VAL_MAX}'
-                  THEN 'val' ELSE 'test' END
-           END AS split
+           CASE WHEN verdict = 'kept' THEN {sql_split_assign('doc_id')} END AS split
     FROM verdicts
     """
 
@@ -553,8 +542,7 @@ def corpus_pipeline_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     executes nightly — and the closest thing this engine has to a
     second flagship."""
     from ..functions.text import norm_expr
-    from .textops import N_PROBE_DOCS, SPLIT_TRAIN_MAX, SPLIT_VAL_MAX
-    from .textops import contamination_ngram_hits
+    from .textops import N_PROBE_DOCS, contamination_ngram_hits, split_assign_expr
 
     d = load_table(spark, sf_dir, "documents")
     # exact_dup keys on the SHARED canonical normalization
@@ -591,17 +579,11 @@ def corpus_pipeline_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.coalesce(F.col("n_gram_hits"), F.lit(0)) > 0, "contaminated")
         .otherwise("kept")
     )
-    h = F.md5(F.col("doc_id").cast("string")).substr(1, 1)
-    split_class = (
-        F.when(h <= SPLIT_TRAIN_MAX, "train")
-        .when(h <= SPLIT_VAL_MAX, "val")
-        .otherwise("test")
-    )
     return j.select(
         "doc_id",
         verdict.alias("verdict"),
         "n_tokens",
-        F.when(verdict == "kept", split_class).alias("split"),
+        F.when(verdict == "kept", split_assign_expr(F.col("doc_id"))).alias("split"),
     )
 
 
@@ -698,9 +680,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded collect_set (≤ 3 splits) per group, then a tiny profile agg.
     Same scale story as dedup_exact_summary plus a constant-size set.
 
-    Registration note (round 6): kept out of the recorded round-5 window
-    by slot discipline; the oracle (norm-hash grouping + string_agg of
-    distinct splits) lands with the registration. Lockstep today:
     tests/test_llm_ops.py recomputes the profiles in pure Python."""
     from ..functions.text import norm_expr
     from .textops import split_assign_expr
@@ -723,9 +702,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_leakage_oracle() -> str:
-    """Oracle for split_leakage_audit (registered round 6, at module
-    bottom): the same normalized-hash grouping and
-    split rule through the shared SQL twins (functions.text.sql_norm,
+    """Oracle for split_leakage_audit: the same normalized-hash grouping
+    and split rule through the shared SQL twins (functions.text.sql_norm,
     textops.sql_split_assign), profile string via string_agg of the
     DISTINCT ordered splits — mirrors concat_ws over array_sort of
     collect_set."""
@@ -751,6 +729,4 @@ def _split_leakage_oracle() -> str:
     """
 
 
-# round-6 registration: staged with a green oracle since round 5, now
-# driver-visible
 REG.add("split_leakage_audit", _split_leakage_oracle())(split_leakage_audit)

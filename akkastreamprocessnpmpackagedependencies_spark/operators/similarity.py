@@ -762,10 +762,9 @@ PCA_BASIS_K = 4  # components in the committed fixed basis below
 
 # The COMMITTED projection basis for ``pca_project_fixed_basis``:
 # PCA_BASIS_K orthonormal 64-dim vectors, inlined as SOURCE literals so
-# the basis — and therefore the oracle SQL and the query's evidence
-# fingerprint — depends only on repo content, never on the numpy/LAPACK
-# build (review finding: the previous import-time QR regeneration could
-# flip a 6 dp rounding boundary across BLAS backends). Provenance:
+# the basis — and therefore the oracle SQL — depends only on repo
+# content, never on the numpy/LAPACK build (an import-time QR
+# regeneration could flip a 6 dp rounding boundary across BLAS backends). Provenance:
 # np.linalg.qr(np.random.default_rng(271).standard_normal((64, 4))),
 # columns rounded to 6 dp. Orthonormality (to the rounding) is asserted
 # in tests/test_llm_ops.py. These literals play the "recorded model
@@ -884,11 +883,9 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns NOTHING for still counts (hits = 0 via the left join), so a
     bucket collapse cannot inflate recall.
 
-    Registration note (round 6): window-slot discipline keeps this out of
-    the round-5 driver window; the DuckDB oracle is the CTE composition
-    of the three already-verified cosine_topk oracles and lands with the
-    registration. Lockstep verification today: tests/test_llm_ops.py
-    recomputes recall in pure Python from the collected frames."""
+    The DuckDB oracle is the CTE composition of the cosine_topk oracles
+    (``_ann_recall_oracle``); tests/test_llm_ops.py also recomputes
+    recall in pure Python from the collected frames."""
     exact = ckpt(
         cosine_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     )
@@ -932,15 +929,11 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall_oracle() -> str:
-    """Staged round-6 oracle for ann_recall_eval
-    (REG.add("ann_recall_eval", _ann_recall_oracle())(ann_recall_eval)):
-    the exact and approximate top-K sets are the ALREADY-VERIFIED oracle
-    bodies of the three cosine_topk queries, wrapped as CTEs; the recall
+    """Oracle for ann_recall_eval: the exact and approximate top-K sets
+    are the oracle bodies of the three cosine_topk queries, wrapped as
+    CTEs, so the recall oracle always follows them; the recall
     arithmetic on top is pure integer counting + one exact division per
-    output cell, mirroring the engine's transcendental-free convention.
-    Rendered via f-string so the recorded evidence fingerprint bakes the
-    underlying oracles in (editing any of them moves this query's
-    fingerprint too)."""
+    output cell, mirroring the engine's transcendental-free convention."""
     exact = REG.oracles["cosine_topk_bruteforce"]
     lsh = REG.oracles["cosine_topk_lsh"]
     ivf = REG.oracles["cosine_topk_ivf"]
@@ -1244,8 +1237,7 @@ _PQ_ADC_ORACLE = f"""
     """
 
 
-# round-6 registrations: the recall gate and the PQ pair, staged with
-# green oracles since round 5, now driver-visible
+# registered here: each oracle is defined after its function
 REG.add("ann_recall_eval", _ann_recall_oracle())(ann_recall_eval)
 REG.add("embedding_pq_codes", _PQ_CODES_ORACLE)(embedding_pq_codes)
 REG.add("pq_adc_topk", _PQ_ADC_ORACLE)(pq_adc_topk)

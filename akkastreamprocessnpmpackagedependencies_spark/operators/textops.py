@@ -800,12 +800,8 @@ SPLIT_VAL_MAX = "e"  # d,e -> val (2/16 = 12.5%); f -> test (1/16 = 6.25%)
 def split_assign_expr(doc_id: Column) -> Column:
     """THE canonical split-membership expression (hash-deterministic
     train/val/test) — one definition so audits and assignment can never
-    disagree. Used by split_leakage_audit (quality.py); NOTE(round-6):
-    dataset_split_assign below and the capstone's split stage
-    (quality.py corpus_pipeline_verdicts) inline the identical chain and
-    adopt this helper when their must_rotate=6 promise rotates them back
-    into the driver window — the same deliberate deferral the norm_expr
-    extraction followed (round-4 verdict 'What's wrong' #3)."""
+    disagree. Used by dataset_split_assign below and by quality.py's
+    split_leakage_audit and corpus_pipeline_verdicts."""
     h = F.md5(doc_id.cast("string")).substr(1, 1)
     return (
         F.when(h <= SPLIT_TRAIN_MAX, "train")
@@ -825,14 +821,7 @@ def sql_split_assign(doc_id: str) -> str:
 
 @REG.add(
     "dataset_split_assign",
-    f"""
-    SELECT doc_id, lang,
-           CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= '{SPLIT_TRAIN_MAX}'
-                THEN 'train'
-                WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= '{SPLIT_VAL_MAX}'
-                THEN 'val' ELSE 'test' END AS split
-    FROM documents
-    """,
+    f"SELECT doc_id, lang, {sql_split_assign('doc_id')} AS split FROM documents",
 )
 def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment: split membership is a pure
@@ -844,14 +833,7 @@ def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is a row-local expression; downstream writers partition by
     the split column."""
     d = load_table(spark, sf_dir, "documents")
-    h = F.md5(F.col("doc_id").cast("string")).substr(1, 1)
-    return d.select(
-        "doc_id", "lang",
-        F.when(h <= SPLIT_TRAIN_MAX, "train")
-        .when(h <= SPLIT_VAL_MAX, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
+    return d.select("doc_id", "lang", split_assign_expr(F.col("doc_id")).alias("split"))
 
 
 MIX_TOKEN_BUDGET = 1_000_000  # target token budget the mixture allocates

@@ -18,7 +18,18 @@ from pyspark.sql import SparkSession
 # Bounded-buffer / throttle semantics from the reference (Main.scala:32,100,104)
 # map to micro-batch admission control, not per-element knobs; see
 # streaming/registry source options.
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def resolve_cpus(cpus: int | str | None = None) -> int:
+    """The local-master width: ``cpus`` if given, else
+    ``$SPARK_GRAFT_CPUS``, else 32. Anything that is not a positive
+    integer (0, "", "-1", "4.0") raises ValueError instead of silently
+    falling back to another width."""
+    raw = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "32")
+    text = str(raw).strip()
+    if not text.isdigit() or int(text) < 1:
+        raise ValueError(f"cpus must be a positive integer, got {raw!r}")
+    return int(text)
 
 
 def get_spark(
@@ -33,21 +44,19 @@ def get_spark(
     partition count at runtime, the skew-join rule splits hot keys, and
     shuffle partitions become a function of cluster cores, not a constant.
 
-    ``cpus`` overrides the ``$SPARK_GRAFT_CPUS`` local-master width for
-    callers whose workload is NOT the benchmark contract — the pytest
-    fixture passes 8 here (tests/conftest.py, measured 2x: tiny-input
-    micro-batch jobs are scheduling-floor-bound at local[32]). bench.py
-    and every production entry point leave it None, so the driver's
-    core-count contract is untouched.
+    ``cpus`` overrides the ``$SPARK_GRAFT_CPUS`` local-master width (see
+    ``resolve_cpus``) for callers whose workload is not bench.py's — the
+    pytest fixture passes 8 here (tests/conftest.py: tiny-input
+    micro-batch jobs are scheduling-floor-bound at local[32]).
+    ``shuffle_partitions`` defaults to the resolved width. ``cpus`` only
+    takes effect for the first session in the process: ``getOrCreate``
+    keeps an existing session's master.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    n_cpus = resolve_cpus(cpus)
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{n_cpus}]")
         .appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n_cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

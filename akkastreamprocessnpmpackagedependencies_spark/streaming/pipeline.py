@@ -595,39 +595,6 @@ def write_hourly_partitions(events: DataFrame, out_path: str):
     return events.writeStream.foreachBatch(_write)
 
 
-def _verify_jaccard_asym(
-    cand: DataFrame, sig_a: DataFrame, sig_b: DataFrame,
-    set_col: str, threshold: float,
-) -> DataFrame:
-    """Exact jaccard over candidate (doc_a, doc_b) pairs with the two
-    sides probing DIFFERENT signature frames — the gate's crash-replay
-    fix needs doc_b restricted to corpus-side signatures. Semantically
-    the two-frame generalization of ``operators.dedup._verify_jaccard``;
-    it lives here rather than as a parameter on that helper because the
-    shared helper's source is baked into six registered queries'
-    evidence fingerprints (measured in round 10: the edit moves
-    ``corpus_pipeline_verdicts``, which has no verification-window slot
-    this round or next). ``tests/test_streaming.py`` pins the
-    equivalence ``_verify_jaccard_asym(c, s, s, ...) ==
-    _verify_jaccard(c, s, ...)`` so the two cannot diverge silently."""
-    inter = F.size(
-        F.array_intersect(F.col(f"sa.{set_col}"), F.col(f"sb.{set_col}"))
-    )
-    union = F.size(F.col(f"sa.{set_col}")) + F.size(F.col(f"sb.{set_col}")) - inter
-    return (
-        cand.join(
-            sig_a.select("doc_id", set_col).alias("sa"),
-            F.col("doc_a") == F.col("sa.doc_id"),
-        )
-        .join(
-            sig_b.select("doc_id", set_col).alias("sb"),
-            F.col("doc_b") == F.col("sb.doc_id"),
-        )
-        .select("doc_a", "doc_b", (inter.cast("double") / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 # sidecar partition fan-out for the dedup gate's band-key table: wide
 # enough that a batch's probe prunes most directories, small enough that
 # local tests don't drown in tiny files and per-batch directory churn;
@@ -756,9 +723,9 @@ def write_dedup_gated(
             .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
             .distinct()
         )
-        drop = _verify_jaccard(within, sig_new, "sh", JACCARD_THRESHOLD).select(
-            F.col("doc_b").alias("doc_id")
-        )
+        drop = _verify_jaccard(
+            within, sig_new, sig_new, "sh", JACCARD_THRESHOLD
+        ).select(F.col("doc_b").alias("doc_id"))
         # Explicit existence check (Hadoop-FS — os.path.isdir would be
         # always-False on s3a/hdfs and skip the gate forever), NOT a
         # blanket try/except around the corpus analysis: swallowing
@@ -861,9 +828,8 @@ def write_dedup_gated(
             # landed before the crash, the replayed doc IS in the corpus,
             # self-matches at 1.0, and is correctly not appended twice.
             corpus_sigs = spark.read.parquet(corpus_path).select("doc_id", "sh")
-            cross_dups = _verify_jaccard_asym(
-                cross, sig_new.select("doc_id", "sh"), corpus_sigs,
-                "sh", JACCARD_THRESHOLD,
+            cross_dups = _verify_jaccard(
+                cross, sig_new, corpus_sigs, "sh", JACCARD_THRESHOLD
             )
             drop = drop.unionByName(
                 cross_dups.select(F.col("doc_a").alias("doc_id"))

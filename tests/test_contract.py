@@ -2,13 +2,24 @@
 
 from __future__ import annotations
 
+import importlib.util
+import os
+
 import __spark_entry__ as entrymod
 
-# documented exemptions: sketch estimates are algorithm-specific, k-means is
-# iterative (both have oracle-green twins), PCA needs an eigendecomposition
-# SQL cannot express (covariance twin is oracle-green; spectral invariants
-# are pytest-asserted)
-ROWS_ONLY_ALLOWED = {"approx_sketches", "kmeans_clusters", "embedding_pca_project"}
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _load(name: str, path: str):
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+ROWS_ONLY_ALLOWED = _load(
+    "oracle_check", os.path.join(_ROOT, "tools", "oracle_check.py")
+).ROWS_ONLY_ALLOWED
 
 
 def test_every_query_is_oracled_or_documented_rows_only():
@@ -23,75 +34,6 @@ def test_query_names_are_stable_identifiers():
         assert name.replace("_", "").isalnum() and name == name.lower()
 
 
-def test_priority_window_is_valid_and_full():
-    """The driver checks exactly the first 50 queries() entries; _PRIORITY
-    must hold 50 unique registered names so no slot is wasted and ordering
-    is fully intentional."""
-    names = list(entrymod.queries())
-    prio = entrymod._PRIORITY
-    assert len(prio) == 50
-    assert len(set(prio)) == 50
-    assert set(prio) <= set(names)
-    assert names[:50] == prio  # _ordered puts the window first, in order
-
-
-def test_no_stale_evidence_outside_driver_window():
-    """Every query whose evidence fingerprint (function source + rendered
-    oracle + referenced helpers) differs from tools/evidence.json — the code
-    its last green CORRECTNESS row was computed against — must be inside the
-    50-entry window (same rule driver_check --staleness enforces; running it
-    here makes pytest the pre-commit guard)."""
-    import subprocess
-    import sys
-
-    r = subprocess.run(
-        [sys.executable, "tools/driver_check.py", "--staleness"],
-        capture_output=True,
-        text=True,
-        cwd=str(__import__("pathlib").Path(__file__).resolve().parent.parent),
-    )
-    assert r.returncode == 0, r.stdout + r.stderr
-
-
-def test_ledger_promise_matches_live_window():
-    """The round the ledger most recently stamped (--evidence-update N)
-    must promise EXACTLY the registry's first-50 on this checkout, with
-    fingerprints matching current code. This is the invariant the
-    round-15 handoff broke (the driver measured a staged branch whose
-    window the ledger never promised); `driver_check.py --handoff N`
-    re-checks it plus the git-state rules at round end, but this half is
-    git-free so plain pytest catches a drifted stamp mid-round too."""
-    import json
-    import pathlib
-    import sys
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(root / "tools"))
-    try:
-        import driver_check as dc
-    finally:
-        sys.path.pop(0)
-
-    recorded = {
-        k: v for k, v in json.load(open(root / "tools" / "evidence.json")).items()
-        if not k.startswith("_")
-    }
-    latest = max(v["round"] for v in recorded.values())
-    stamped = {k for k, v in recorded.items() if v["round"] == latest}
-    names, cur = dc._current_fingerprints()
-    window = set(names[: dc.DRIVER_WINDOW])
-    assert stamped == window, (
-        f"round-{latest} stamp != live window: "
-        f"stamped-only={sorted(stamped - window)}, "
-        f"window-only={sorted(window - stamped)}"
-    )
-    moved = sorted(n for n in window if recorded[n]["fp"] != cur[n])
-    assert not moved, (
-        f"fingerprints moved since the round-{latest} stamp: {moved} "
-        f"(re-run --evidence-update {latest})"
-    )
-
-
 def test_entry_runs_and_is_stable(spark):
     out = entrymod.entry(spark)
     rows = out.collect()
@@ -104,15 +46,7 @@ def test_bench_headline_names_resolve_and_are_unique():
     or renamed entry would crash the driver's per-round bench run), with
     no duplicates, the flagship present, and the compact-line constants
     sane (budget below the measured ~2000-char capture tail)."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod_contract",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"),
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    bench = _load("bench_mod_contract", os.path.join(_ROOT, "bench.py"))
     qs = set(entrymod.queries())
     unknown = [n for n in bench.HEADLINE if n not in qs]
     assert not unknown, f"HEADLINE names not registered: {unknown}"

@@ -627,7 +627,7 @@ def test_streaming_dedup_gated_ingestion(spark, sf_dir, tmp_path):
         .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .distinct()
     )
-    assert _verify_jaccard(acc_pairs, sig_acc, "sh", JACCARD_THRESHOLD).count() == 0
+    assert _verify_jaccard(acc_pairs, sig_acc, sig_acc, "sh", JACCARD_THRESHOLD).count() == 0
 
     # (3) each rejection justified by the drop rule
     sig_all = _signatures(d)
@@ -638,7 +638,7 @@ def test_streaming_dedup_gated_ingestion(spark, sf_dir, tmp_path):
         .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .distinct()
     )
-    matches = _verify_jaccard(pairs, sig_all, "sh", JACCARD_THRESHOLD).collect()
+    matches = _verify_jaccard(pairs, sig_all, sig_all, "sh", JACCARD_THRESHOLD).collect()
     partners: dict[int, set[int]] = {}
     for r in matches:
         partners.setdefault(r.doc_a, set()).add(r.doc_b)
@@ -3073,51 +3073,6 @@ def test_driver_parquet_write_roundtrip_and_empty(spark, tmp_path):
     assert len(got) == 1 and got[0].shard == 2
     assert not table_exists(spark, p2 + "__compact_tmp")
     assert not table_exists(spark, p2 + "__compact_old")
-
-
-def test_verify_jaccard_asym_equals_shared_helper_on_same_frame(spark, sf_dir):
-    """The gate's asymmetric verify is the two-frame generalization of
-    operators.dedup._verify_jaccard; the shared helper's source is baked
-    into six queries' evidence fingerprints, so the generalization lives
-    in the (fingerprint-free) streaming module instead of as a
-    parameter. This equivalence pin is what keeps the two from diverging
-    silently: with both sides given the SAME signature frame, the
-    asymmetric form must reproduce the shared helper's verdicts row for
-    row on real candidate pairs."""
-    from akkastreamprocessnpmpackagedependencies_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        _band_frame,
-        _signatures,
-        _verify_jaccard,
-    )
-    from akkastreamprocessnpmpackagedependencies_spark.session import load_table
-    from akkastreamprocessnpmpackagedependencies_spark.streaming.pipeline import (
-        _verify_jaccard_asym,
-    )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(200)
-    sig = _signatures(d).localCheckpoint()
-    bands = _band_frame(sig)
-    cand = (
-        bands.alias("x")
-        .join(bands.alias("y"), ["b", "bkey"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    want = {
-        (r.doc_a, r.doc_b, round(r.jaccard, 9))
-        for r in _verify_jaccard(cand, sig, "sh", JACCARD_THRESHOLD).collect()
-    }
-    got = {
-        (r.doc_a, r.doc_b, round(r.jaccard, 9))
-        for r in _verify_jaccard_asym(
-            cand, sig, sig, "sh", JACCARD_THRESHOLD
-        ).collect()
-    }
-    assert want, "fixture has near-dups; the comparison must be non-vacuous"
-    assert got == want
 
 
 def test_swap_recover_discards_corrupt_temp_instead_of_promoting(spark, tmp_path):

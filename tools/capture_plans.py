@@ -1,9 +1,9 @@
 """Capture `.explain("formatted")` output for named queries into
-plans/r17/<query>_<stage>.txt — the before/after plan evidence for the
-round-16 optimization pass.
+<out_dir>/<query>_<stage>.txt — before/after plan evidence for an
+optimization pass.
 
-Usage: python tools/capture_plans_r17.py <before|after> <query> [query ...]
-       python tools/capture_plans_r17.py <before|after> --all-headline
+Usage: python tools/capture_plans.py <out_dir> <before|after> <query> [query ...]
+       python tools/capture_plans.py <out_dir> <before|after> --all-headline
 
 Plans are captured at the BENCH scale factor (sf0.1 by default, override
 with SPARK_GRAFT_SF_DIR) so the shapes match what bench.py times.
@@ -14,19 +14,21 @@ localCheckpoint lineage truncation doesn't hide the real plan under a
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17")
 
 
 def main() -> None:
-    stage = sys.argv[1]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    out_dir, stage, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     assert stage in ("before", "after"), stage
-    names = sys.argv[2:]
 
     from akkastreamprocessnpmpackagedependencies_spark import session as sess
 
@@ -40,14 +42,11 @@ def main() -> None:
 
         names = list(bench.HEADLINE)
 
-    spark = get_spark("capture_plans_r17")
+    spark = get_spark("capture_plans")
     qs = entrymod.queries()
-    os.makedirs(OUT_DIR, exist_ok=True)
-    import contextlib
-    import io
-
+    os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        path = os.path.join(OUT_DIR, f"{name}_{stage}.txt")
+        path = os.path.join(out_dir, f"{name}_{stage}.txt")
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             qs[name](spark, SF_DIR).explain("formatted")

@@ -6,15 +6,9 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 0/4 pytest (FULL suite incl. slow tier) + evidence staleness + window budget =="
-# the driver runs the default tier (slow codec/fuzz tests skipped so its
-# verify budget holds — round-17 tiering); verify_all always runs ALL
+echo "== 0/4 pytest (FULL suite incl. slow tier; oracle parity for every query at sf0.001) =="
+# a bare `pytest tests/` skips the slow codec/fuzz tier; verify_all runs ALL
 SPARK_GRAFT_RUN_SLOW=1 python -m pytest tests/ -x -q
-python tools/driver_check.py --staleness
-# window-budget gate for the UPCOMING round (highest recorded driver
-# round + 1): catches over-subscribed rotation demand mechanically
-NEXT_ROUND=$(ls CORRECTNESS_r*.json 2>/dev/null | sed -E 's/[^0-9]//g; s/^0+//' | sort -n | tail -1)
-python tools/driver_check.py --window-budget $(( 10#${NEXT_ROUND:-0} + 1 ))
 
 echo "== 1/4 driver simulation (vanilla session, all queries) =="
 python - <<'EOF'
@@ -78,19 +72,19 @@ else
   echo "no committed BENCH_FULL.json to compare against; gate skipped"
 fi
 
-# Optional density sweep: SF01_SWEEP=1 re-checks the driver window at
-# sf0.1 (two real bugs only ever appeared at that density), skipping the
+# Optional density sweep: SF01_SWEEP=1 re-checks every query at sf0.1
+# (two real bugs only ever appeared at that density), skipping the
 # LSH-family queries whose DuckDB oracles are prohibitively slow there
 # (they are covered at sf0.01 above).
 if [[ "${SF01_SWEEP:-0}" == "1" ]]; then
-  echo "== 4/4 sf0.1 density sweep (driver window minus slow LSH oracles) =="
+  echo "== 4/4 sf0.1 density sweep (all queries minus slow LSH oracles) =="
   python - <<'PYEOF'
 import subprocess, sys
 import __spark_entry__ as e
 slow = {"minhash_lsh_neardup", "chargram_jaccard_pairs", "simhash_candidate_pairs",
         "fuzzy_dedup_keep_one", "neardup_clusters", "dedup_incremental",
         "corpus_pipeline_verdicts", "semdedup_keep_one"}
-names = [q for q in e._PRIORITY if q not in slow]
+names = [q for q in e.queries() if q not in slow]
 r = subprocess.run([sys.executable, "tools/oracle_check.py", "/root/testdata/sf0.1", *names])
 sys.exit(r.returncode)
 PYEOF

@@ -60,27 +60,12 @@ def _npm_reverse_dependency_counts(spark: SparkSession, sf_dir: str) -> DataFram
     point at it. The reference's data model carries these names but
     discards them (reference: src/main/scala/Version.scala:8 ignores the
     map keys it counts); this query keeps the edge and aggregates the
-    other end — the npm-domain generalization of the flagship. Plan: the
-    doc parse + two map-key explodes are one narrow pass; the only
-    shuffle is the final (dep_name, dep_type) hash agg. sf_dir unused —
-    the fixture world is fixed-size by design."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(os.path.join(FIXTURES_DIR, "npm_registry_docs.parquet"))
-    ver = npm.explode_versions(
-        npm.parse_registry(docs.filter(F.col("status_code") == 200))
-    )
-    empty = F.array().cast("array<string>")
-    edges = ver.select(
-        F.explode(F.coalesce(F.map_keys("vdoc.dependencies"), empty)).alias("dep_name"),
-        F.lit("runtime").alias("dep_type"),
-    ).unionAll(
-        ver.select(
-            F.explode(F.coalesce(F.map_keys("vdoc.devDependencies"), empty)).alias("dep_name"),
-            F.lit("dev").alias("dep_type"),
-        )
-    )
-    return edges.groupBy("dep_name", "dep_type").agg(
+    other end — the npm-domain generalization of the flagship. Plan: one
+    scan and one doc parse feed a single explode of both kinds of edge
+    (``npm.dependency_edges``); the only shuffle is the final
+    (dep_name, dep_type) hash agg. sf_dir unused — the fixture world is
+    fixed-size by design."""
+    return _npm_dependency_edges(spark).groupBy("dep_name", "dep_type").agg(
         F.count("*").cast("long").alias("n_dependents")
     )
 
@@ -112,27 +97,22 @@ PR_DAMP = 0.85  # (1 - PR_DAMP) teleport mass, written 0.15 literally below
 TC_HOPS = 3  # transitive-closure search depth
 
 
+def _npm_dependency_edges(spark: SparkSession) -> DataFrame:
+    """(package, dep_name, dep_type) over every 200 fixture doc, each doc
+    scanned and parsed once."""
+    docs = spark.read.parquet(os.path.join(FIXTURES_DIR, "npm_registry_docs.parquet"))
+    ver = npm.explode_versions(npm.parse_registry(docs.filter(F.col("status_code") == 200)))
+    return npm.dependency_edges(ver)
+
+
 def _npm_edges(spark: SparkSession) -> DataFrame:
     """The distinct npm dependency edge list (src depends on dst, runtime +
     dev) — the graph the reference's data model carries but discards
     (Version.scala:8). Shared by the pagerank and transitive-closure
     queries; each oracle rebuilds the identical CTE chain."""
-    docs = spark.read.parquet(os.path.join(FIXTURES_DIR, "npm_registry_docs.parquet"))
-    ver = npm.explode_versions(
-        npm.parse_registry(docs.filter(F.col("status_code") == 200))
-    )
-    empty = F.array().cast("array<string>")
     return (
-        ver.select(
-            F.col("package").alias("src"),
-            F.explode(F.coalesce(F.map_keys("vdoc.dependencies"), empty)).alias("dst"),
-        )
-        .unionAll(
-            ver.select(
-                F.col("package").alias("src"),
-                F.explode(F.coalesce(F.map_keys("vdoc.devDependencies"), empty)).alias("dst"),
-            )
-        )
+        _npm_dependency_edges(spark)
+        .select(F.col("package").alias("src"), F.col("dep_name").alias("dst"))
         .distinct()
     )
 

@@ -23,8 +23,18 @@ Stage-by-stage mapping (SURVEY.md §2):
 - ordered console report (Main.scala:88-95)       -> ORDER BY package, version
 
 Scale: no driver-side state anywhere; the "accumulator" is a distributed
-hash aggregation that spills; the docs join broadcasts only when the docs
-side is small (Catalyst/AQE decides above the hint threshold).
+hash aggregation that spills. Each doc is parsed once: ``explode_versions``
+is an outer explode plus a null filter, because Catalyst's
+InferFiltersFromGenerate turns an inner explode into
+``size(from_json(doc).versions) > 0`` on the scan and parses every doc
+three times (twice in that filter, once in the projection). The parse runs
+in as many tasks as the docs scan has splits; a parquet file of one row
+group is one split, so the 3000-package benchmark docs file parses in one
+task. Hash-partitioning such docs on ``name`` first spread the parse over
+every core, but it shuffled the raw JSON (0.8 -> 7.3 MB written a pass),
+let the report sort's sampling job parse every doc a second time, won
+only 8 of 18 interleaved runs against this form on 4 vCPUs, and slowed the
+12-row fixture flagship by 18% at local[32], so there is no such gate.
 """
 
 from __future__ import annotations
@@ -45,8 +55,9 @@ def load_package_list(spark: SparkSession, path: str) -> DataFrame:
 def attach_registry_docs(packages: DataFrame, docs: DataFrame) -> DataFrame:
     """P2 (hermetic half): replace the live HTTP fetch with an equi-join to
     frozen response rows. Non-200 responses are dropped exactly like the
-    status gate at NpmPackage.scala:9. The docs side is the smaller dim in
-    the fixture world; at scale both sides shuffle-hash-join on ``name``."""
+    status gate at NpmPackage.scala:9. Catalyst picks the join: the
+    package list is broadcast while it is under the session's 32 MB
+    threshold, and above it both sides shuffle on ``name``."""
     return packages.join(docs, "name", "inner").filter(F.col("status_code") == 200)
 
 
@@ -59,11 +70,34 @@ def parse_registry(df: DataFrame, doc_col: str = "doc") -> DataFrame:
 def explode_versions(df: DataFrame) -> DataFrame:
     """P3: mapConcat(versionList) -> explode over the versions MapType.
     Packages whose doc lacks a usable ``versions`` object contribute no
-    rows (inner explode of NULL map = drop), matching the swallow at
-    NpmPackage.scala:17-19."""
+    rows, matching the swallow at NpmPackage.scala:17-19.
+
+    Written as ``explode_outer`` plus ``version IS NOT NULL``: map keys
+    are never null, and a null or empty map yields one null row, which
+    the filter drops, so the rows are those of an inner explode. An inner
+    explode would let Catalyst infer ``size(versions) > 0 AND
+    isnotnull(versions)`` and push it below the parse, copying
+    ``from_json`` into that filter: every doc would be parsed three
+    times instead of once."""
     return df.select(
         F.col("name").alias("package"),
-        F.explode("parsed.versions").alias("version", "vdoc"),
+        F.explode_outer("parsed.versions").alias("version", "vdoc"),
+    ).filter(F.col("version").isNotNull())
+
+
+def dependency_edges(ver: DataFrame) -> DataFrame:
+    """(package, dep_name, dep_type) for every dependency named by a
+    version row of ``explode_versions``; ``dep_type`` is ``runtime`` or
+    ``dev``. Both kinds come from one select over one array, so the docs
+    are scanned and parsed once, not once per kind."""
+    empty = F.array().cast("array<string>")
+
+    def tagged(field: str, kind: str):
+        keys = F.coalesce(F.map_keys(f"vdoc.{field}"), empty)
+        return F.transform(keys, lambda k: F.struct(k.alias("dep_name"), F.lit(kind).alias("dep_type")))
+
+    return ver.select(
+        "package", F.inline(F.concat(tagged("dependencies", "runtime"), tagged("devDependencies", "dev")))
     )
 
 

@@ -24,6 +24,7 @@ Emitted schema matches the fixture docs table: name, status_code, doc.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -34,6 +35,34 @@ from pyspark.sql.datasource import (
 )
 
 SCHEMA = "name string, status_code int, doc string"
+
+
+def _int_option(options: dict, key: str, default: int, minimum: int) -> int:
+    """``options[key]`` (or ``default``) as an integer of at least
+    ``minimum``. Anything else raises ValueError when the reader is built:
+    ``rate=0`` would never emit a row, ``rate=-3`` walks its offsets
+    backwards past the end, and ``numpartitions=0`` reads nothing."""
+    raw = options.get(key, default)
+    try:
+        value = int(str(raw).strip())
+    except ValueError:
+        value = None
+    if value is None or value < minimum:
+        raise ValueError(f"npmregistry option {key} must be an integer >= {minimum}, got {raw!r}")
+    return value
+
+
+def _rate_per_sec(options: dict) -> float:
+    """The fetch budget in requests per second; 0 means unthrottled.
+    A negative, infinite or non-numeric value raises ValueError."""
+    raw = options.get("rate_per_sec", 0.33)
+    try:
+        value = float(str(raw).strip())
+    except ValueError:
+        value = math.nan
+    if not (math.isfinite(value) and value >= 0):
+        raise ValueError(f"npmregistry option rate_per_sec must be a finite number >= 0, got {raw!r}")
+    return value
 
 
 def _package_names(options: dict) -> list[str] | None:
@@ -50,7 +79,7 @@ def _package_names(options: dict) -> list[str] | None:
 
 
 def _load_docs(
-    options: dict, names_override: list[str] | None = None
+    options: dict, names_override: list[str] | None = None, **fetch
 ) -> list[tuple[str, int, str]]:
     """Resolve the (name, status, doc) universe once per reader.
 
@@ -58,7 +87,9 @@ def _load_docs(
     SparkSession access (data sources must be self-contained).
     ``names_override`` restricts a fetch-mode call to a subset of the
     package list — the batch reader passes each partition's own slice so
-    N partitions fetch the list ONCE between them, not N times."""
+    N partitions fetch the list ONCE between them, not N times. ``fetch``
+    (``rate_per_sec``, ``max_retries``, already validated by the reader)
+    goes to the ThrottledFetcher in fetch modes."""
     mode = (options.get("mode") or "fixture").lower()
     names = names_override if names_override is not None else _package_names(options)
     if mode in ("live", "replay"):
@@ -76,11 +107,7 @@ def _load_docs(
                 transport = ReplayTransport(json.load(f))
         else:  # pragma: no cover - no network in the test env
             transport = requests_transport()
-        fetcher = ThrottledFetcher(
-            transport,
-            rate_per_sec=float(options.get("rate_per_sec", 0.33)),
-            max_retries=int(options.get("max_retries", 3)),
-        )
+        fetcher = ThrottledFetcher(transport, **fetch)
         out = []
         for n in names:
             code, text = fetcher(n)
@@ -105,7 +132,9 @@ def _load_docs(
 class NpmRegistryBatchReader(DataSourceReader):
     def __init__(self, options: dict) -> None:
         self.options = options
-        self.n_parts = int(options.get("numpartitions", 4))
+        self.n_parts = _int_option(options, "numpartitions", 4, 1)
+        self.rate_per_sec = _rate_per_sec(options)
+        self.max_retries = _int_option(options, "max_retries", 3, 0)
 
     def partitions(self) -> list[InputPartition]:
         return [InputPartition(i) for i in range(self.n_parts)]
@@ -124,11 +153,11 @@ class NpmRegistryBatchReader(DataSourceReader):
             # intended rate against the remote service).
             names = _package_names(self.options)
             assert names is not None, f"{mode} mode requires packages_path"
-            base = float(self.options.get("rate_per_sec", 0.33))
-            opts = dict(self.options)
-            opts["rate_per_sec"] = str(base / self.n_parts if base > 0 else 0.0)
             yield from _load_docs(
-                opts, names_override=names[partition.value :: self.n_parts]
+                self.options,
+                names_override=names[partition.value :: self.n_parts],
+                rate_per_sec=self.rate_per_sec / self.n_parts,
+                max_retries=self.max_retries,
             )
             return
         # fixture/parquet mode: a local columnar read per task, strided
@@ -155,7 +184,9 @@ class NpmRegistryStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, options: dict) -> None:
         self.options = options
-        self.rate = int(options.get("rate", 5))
+        self.rate = _int_option(options, "rate", 5, 1)
+        self.rate_per_sec = _rate_per_sec(options)
+        self.max_retries = _int_option(options, "max_retries", 3, 0)
         self._rows: list[tuple] | None = None
         self._names: list[str] | None = None
 
@@ -181,7 +212,12 @@ class NpmRegistryStreamReader(SimpleDataSourceStreamReader):
 
     def _slice(self, lo: int, hi: int) -> list[tuple]:
         if self._fetch_mode():
-            return _load_docs(self.options, names_override=self._universe_names()[lo:hi])
+            return _load_docs(
+                self.options,
+                names_override=self._universe_names()[lo:hi],
+                rate_per_sec=self.rate_per_sec,
+                max_retries=self.max_retries,
+            )
         return self._universe()[lo:hi]
 
     def initialOffset(self) -> dict:

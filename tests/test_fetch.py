@@ -219,10 +219,11 @@ def test_batch_reader_fetches_only_its_partition_slice(monkeypatch, tmp_path):
     throttled universe N times and discarded (N-1)/N of it)."""
     from akkastreamprocessnpmpackagedependencies_spark.sources import registry as reg
 
-    calls = []
+    calls, rates = [], []
 
-    def spy(options, names_override=None):
+    def spy(options, names_override=None, **fetch):
         calls.append(names_override)
+        rates.append(fetch["rate_per_sec"])
         return [(n, 200, "{}") for n in (names_override or [])]
 
     monkeypatch.setattr(reg, "_load_docs", spy)
@@ -242,3 +243,42 @@ def test_batch_reader_fetches_only_its_partition_slice(monkeypatch, tmp_path):
     # every fetch was slice-restricted, slices partition the universe
     assert all(ov is not None for ov in calls)
     assert sorted(len(ov) for ov in calls) == [2, 2, 3]
+    # the 3 partitions split the default 0.33 req/s budget evenly
+    assert rates == [0.33 / 3] * 3
+
+
+def test_registry_readers_reject_bad_options():
+    """Bad ``npmregistry`` options raise ValueError when a reader is built,
+    instead of emitting no rows (``rate=0``, ``numpartitions=0``) or
+    walking offsets backwards past the end (``rate=-3``)."""
+    import pytest
+
+    from akkastreamprocessnpmpackagedependencies_spark.sources.registry import (
+        NpmRegistryBatchReader,
+        NpmRegistryStreamReader,
+    )
+
+    bad = [
+        (NpmRegistryStreamReader, {"rate": "0"}),
+        (NpmRegistryStreamReader, {"rate": "-3"}),
+        (NpmRegistryStreamReader, {"rate": "2.5"}),
+        (NpmRegistryStreamReader, {"rate": ""}),
+        (NpmRegistryBatchReader, {"numpartitions": "0"}),
+        (NpmRegistryBatchReader, {"numpartitions": "x"}),
+    ]
+    for reader in (NpmRegistryStreamReader, NpmRegistryBatchReader):
+        bad += [
+            (reader, {"max_retries": "-1"}),
+            (reader, {"max_retries": "one"}),
+            (reader, {"rate_per_sec": "-0.5"}),
+            (reader, {"rate_per_sec": "fast"}),
+            (reader, {"rate_per_sec": "nan"}),
+        ]
+    for reader, options in bad:
+        with pytest.raises(ValueError, match=next(iter(options))):
+            reader(options)
+    # the smallest valid values; rate_per_sec=0 means unthrottled
+    assert NpmRegistryStreamReader({"rate": "1", "max_retries": "0", "rate_per_sec": "0"}).rate == 1
+    assert NpmRegistryBatchReader({"numpartitions": "1", "rate_per_sec": "0"}).n_parts == 1
+    assert NpmRegistryStreamReader({}).rate == 5
+    assert NpmRegistryBatchReader({}).n_parts == 4

@@ -644,3 +644,39 @@ def test_multimodal_decode_webp_is_pruned_scan_with_bounded_widening(spark, sf_d
     )
     assert "PushedFilters: [IsNotNull(text)]" in explained
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in explained
+
+
+def _npm_plans(spark):
+    """Optimized plans of the npm queries that parse registry docs, from
+    the session optimizer run on the analyzed plan: a streaming Dataset
+    refuses ``optimizedPlan`` outside a running query, and a cached frame
+    (another test persists the edge list) would print its cached plan."""
+    import os
+
+    import __spark_entry__ as entry
+
+    from akkastreamprocessnpmpackagedependencies_spark.fixtures import FIXTURES_DIR
+    from akkastreamprocessnpmpackagedependencies_spark.operators import npm
+    from akkastreamprocessnpmpackagedependencies_spark.streaming import pipeline as sp
+
+    packages = spark.read.parquet(os.path.join(FIXTURES_DIR, "npm_packages.parquet"))
+    docs = spark.read.parquet(os.path.join(FIXTURES_DIR, "npm_registry_docs.parquet"))
+    optimizer = spark._jsparkSession.sessionState().optimizer()
+    frames = {
+        "dependency_counts": npm.dependency_counts(packages, docs),
+        "streaming_dependency_counts": sp.streaming_dependency_counts(sp.read_registry_stream(spark, rate=5)),
+        "npm_reverse_dependency_counts": entry._npm_reverse_dependency_counts(spark, ""),
+        "npm_edges": entry._npm_edges(spark),
+    }
+    return {k: optimizer.execute(df._jdf.queryExecution().analyzed()).toString() for k, df in frames.items()}
+
+
+def test_npm_queries_parse_each_doc_once(spark):
+    """Every npm query holds exactly one ``from_json`` and none inside a
+    Filter: an inner explode of the versions map lets Catalyst infer
+    ``size(from_json(doc).versions) > 0`` below the parse (three parses a
+    doc), and a union of one select per dependency kind parses twice."""
+    for name, plan in _npm_plans(spark).items():
+        assert plan.count("from_json(") == 1, name
+        filters = [ln for ln in plan.splitlines() if "Filter" in ln and "from_json(" in ln]
+        assert not filters, (name, filters)

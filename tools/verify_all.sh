@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
-# Full verification: pytest suite, driver simulation on a vanilla session
-# (every query), DuckDB oracle parity at sf0.01, and the bench JSON line.
+# Full verification: pytest suite, the npm benchmark's own tests, a
+# vanilla-session run of every query, DuckDB oracle parity at sf0.01, and
+# the bench JSON line.
 # This is the pre-snapshot guard: run it before any end-of-round commit —
 # round 2 shipped a red suite because this script skipped pytest.
 set -euo pipefail
@@ -9,6 +10,9 @@ cd "$(dirname "$0")/.."
 echo "== 0/4 pytest (FULL suite incl. slow tier; oracle parity for every query at sf0.001) =="
 # a bare `pytest tests/` skips the slow codec/fuzz tier; verify_all runs ALL
 SPARK_GRAFT_RUN_SLOW=1 python -m pytest tests/ -x -q
+
+echo "== 0b/4 benchmark tests (generator determinism, oracle vs fixtures, transcript replay) =="
+python -m pytest perfbench/tests -q -p no:cacheprovider
 
 echo "== 1/4 driver simulation (vanilla session, all queries) =="
 python - <<'EOF'

@@ -595,103 +595,192 @@ def write_hourly_partitions(events: DataFrame, out_path: str):
     return events.writeStream.foreachBatch(_write)
 
 
-# sidecar partition fan-out for the dedup gate's band-key table: wide
-# enough that a batch's probe prunes most directories, small enough that
-# local tests don't drown in tiny files and per-batch directory churn;
-# at cluster scale this would be sized to executors x a few
+# ------------------------------------------- ingestion-gate skeleton
+
+# bucket fan-out of the LSH gate's band sidecar: wide enough that a
+# batch's probe prunes most directories, small enough that local runs
+# don't drown in tiny files and per-batch directory churn
 DEDUP_BAND_BUCKETS = 8
 
-# auto wide-writes switch point (round 14, executing the round-13
-# verdict: the manual flag was the right default at micro-batch sizes
-# but a deployment whose batches grow crossed the churn/parallelism
-# tradeoff silently). Gates whose callers leave ``wide_writes=None``
-# pick the write shape PER BATCH from the batch's row count: below the
-# threshold, ``coalesce(1)`` (one file per touched bucket per batch —
-# directory churn and per-file overhead dominate at micro-batch
-# granularity); at or above it, ``repartition(bucket)`` so buckets
-# write in parallel (a single writer task serializes a cluster-scale
-# append). MEASURED, not reasoned (tools/bench_wide_writes.py ->
-# BENCH_wide_writes.json, interleaved medians over the exact append
-# expression at 64 buckets / ~1 KiB docs): both shapes produce the
-# SAME one-file-per-touched-bucket layout (hash-partitioning on the
-# bucket column lands each bucket in one task), so the trade is purely
-# the wide shape's shuffle + stage boundary vs its parallel encode.
-# Round 14's 5-rep study put the decisive-win point at 25k (the 5k
-# rung's spreads nearly overlapped); the round-15 re-measure at 15
-# reps with 1k/2.5k/10k rungs separates them fully: wide is 0.71x at
-# 5k (narrow [0.92, 1.06] vs wide [0.65, 0.82] — disjoint), 0.46x at
-# 10k, 0.31x at 25k, while at 1k-2.5k narrow keeps a ~1.04-1.06x edge
-# (the shuffle's stage-boundary latency with nothing to amortize it).
-# The threshold sits at the smallest measured decisive-win rung.
-# Explicit True/False still forces either shape.
+# Write-shape switch of every bucketed gate append (``_BucketedTable.write``):
+# below this many rows the append runs as ONE writer task (coalesce(1)),
+# at or above it as one task per bucket (repartition(bucket)). Both
+# shapes write the same one-file-per-touched-bucket layout, so the trade
+# is the wide shape's extra shuffle stage against its parallel encode.
+# Measured by tools/bench_wide_writes.py (BENCH_wide_writes.json, 64
+# buckets, ~1 KiB docs, 15 interleaved reps): wide is 0.71x narrow at
+# 5k rows with disjoint spreads, 0.46x at 10k, 0.31x at 25k, while at
+# 1k-2.5k narrow keeps a ~5% edge. The threshold sits at the smallest
+# decisive-win rung.
 WIDE_WRITES_ROWS = 5_000
 
 
-def _resolve_wide(wide_writes: bool | None, n_rows: int) -> bool:
-    """The gate append's write-shape decision: the caller's explicit
-    choice when given, else the per-batch row-count auto switch
-    (``WIDE_WRITES_ROWS``, module-level so tests can lower it)."""
-    if wide_writes is not None:
-        return wide_writes
-    return n_rows >= WIDE_WRITES_ROWS
+class _BucketedTable:
+    """A parquet table partitioned by a hash bucket of its key,
+    ``pmod(xxhash64(*key), n)`` in column ``col``, so the table is its
+    own index: a batch's probe reads only the bucket directories its own
+    keys hash into (|touched| / n of the table, not all of it), and an
+    append writes one file per touched bucket."""
+
+    def __init__(self, path: str, col: str, key: tuple[str, ...], n: int):
+        self.path, self.col, self.key, self.n = path, col, key, n
+
+    def tag(self, df: DataFrame) -> DataFrame:
+        """``df`` plus its bucket column."""
+        return df.withColumn(
+            self.col, F.pmod(F.xxhash64(*self.key), F.lit(self.n))
+        )
+
+    def probe(self, spark: SparkSession, buckets, has_data: bool | None = None):
+        """The table's rows in ``buckets`` (a list of bucket ids, or a
+        frame whose bucket column names them: one distinct-collect job),
+        or None while the table holds no data. ``has_data`` passes a
+        ``table_has_data`` answer the caller already has for this batch.
+        The guard is has-data, not existence: a crash or an all-empty
+        batch can leave the directory present but file-less, where schema
+        inference throws, so such a table probes as empty; a populated
+        table whose schema drifted still fails the batch loudly."""
+        if has_data is None:
+            has_data = table_has_data(spark, self.path)
+        if not has_data:
+            return None
+        if isinstance(buckets, DataFrame):
+            buckets = [r[0] for r in buckets.select(self.col).distinct().collect()]
+        return spark.read.parquet(self.path).filter(F.col(self.col).isin(buckets))
+
+    def write(
+        self, rows: DataFrame, n_rows: int | None, path: str | None = None,
+        mode: str = "append",
+    ) -> None:
+        """Write ``rows`` (``n_rows`` of them; None for a full-table
+        rewrite of unknown size) partitioned by bucket, in the shape
+        ``WIDE_WRITES_ROWS`` picks."""
+        narrow = n_rows is not None and n_rows < WIDE_WRITES_ROWS
+        shaped = rows.coalesce(1) if narrow else rows.repartition(self.col)
+        shaped.write.mode(mode).partitionBy(self.col).parquet(path or self.path)
 
 
-def write_dedup_gated(
-    docs: DataFrame, corpus_path: str, wide_writes: bool | None = None,
-):
-    """Dedup-gated streaming ingestion — the composition a live training-
-    data pipeline runs: each micro-batch of documents is near-dup-checked
-    (banded MinHash-LSH) against the ALREADY-ACCEPTED corpus and within
-    itself, and only novel documents append. The accepted corpus parquet
-    carries its own signature columns (shingle set + minhashes), so a
-    batch's check reads the corpus' signature columns only — never re-
-    shingling the corpus — which is the production pattern: the signature
-    table is maintained incrementally, and per-batch cost scales with
-    |batch| x bucket occupancy, not |corpus| (same economics as the batch
-    ``dedup_incremental`` query).
+def bloom_bits_for(n_keys: int) -> int:
+    """Bloom width in bits for ``n_keys`` expected keys: ~10 bits per
+    key, the ~1% false-positive point at k=4, rounded up to a power of
+    two (the probe mask needs one) and never below BLOOM_BITS."""
+    return 1 << (max(BLOOM_BITS, 10 * int(n_keys)) - 1).bit_length()
 
-    Probe layout (round-8 verdict #5): accepted band keys live in a
-    SIDECAR table at ``<corpus_path>_bands``, PARTITIONED BY a hash
-    bucket of the band key (``band_bucket``), so each micro-batch probe
-    filter-prunes to the bucket directories its own band keys hash into
-    instead of re-deriving band keys from the full corpus every batch —
-    at 1000-executor scale the probe reads |touched buckets| / |buckets|
-    of a three-column table rather than re-banding every stored
-    signature. The sidecar is written BEFORE the corpus append: a crash
-    between the two leaves only orphan band rows, which surface extra
-    candidates whose exact-jaccard verify runs against CORPUS-SIDE
-    signatures only — an orphan's doc never reached the corpus, so it
-    produces no drop and the replayed batch is re-admitted (verifying
-    against the batch's own signatures instead would self-match every
-    replayed doc at jaccard 1.0 and silently lose the whole batch).
-    Never a silently missed duplicate either way. A corpus created by an
-    older layout (no sidecar) gets a ONE-TIME BACKFILL: the full stored
-    corpus is banded and installed as the sidecar via temp + atomic
-    rename before the first post-upgrade probe, so pre-upgrade docs stay
-    probeable forever (appending only new batches' bands would silently
-    un-gate every pre-upgrade doc).
 
-    Within-batch duplicates keep the smallest doc_id; a batch doc
-    matching the corpus is dropped. Greedy ingestion is order-dependent
-    by design (first-seen wins — what any streaming gate does); the
-    invariants that hold regardless of arrival order are (a) the
-    accepted corpus is pairwise non-duplicate under the LSH check and
-    (b) every rejected doc had a match at rejection time — both asserted
-    in tests/test_streaming.py::test_streaming_dedup_gated_ingestion.
+def _check_bloom_bits(bloom_bits) -> None:
+    """Reject a filter width the kernels cannot use when the gate is
+    built, not inside the first batch's executor task."""
+    if bloom_bits is None:
+        return
+    if (
+        isinstance(bloom_bits, bool) or not isinstance(bloom_bits, int)
+        or bloom_bits < 8 or bloom_bits & (bloom_bits - 1)
+    ):
+        raise ValueError(f"bloom_bits={bloom_bits!r} is not a power of two >= 8")
 
-    Round 13 (mirroring the sibling gates): the sidecar append is
-    switchable via ``wide_writes`` (one writer task at micro-batch
-    granularity vs ``repartition("band_bucket")`` at cluster-scale
-    batch sizes) — since round 14 the default ``None`` AUTO-SWITCHES
-    per batch on the admitted row count (``WIDE_WRITES_ROWS``), so a
-    deployment whose batches grow past micro-batch scale stops
-    funneling appends through one task without anyone flipping a flag;
-    explicit True/False still forces either shape. The corpus/sidecar
-    probes gate on
-    ``table_has_data`` so a file-less directory left by a crash or an
-    all-empty batch probes as an empty corpus instead of crashing
-    schema inference — while a populated-but-drifted corpus still
-    fails the batch loudly through normal inference."""
+
+class _BloomSidecar:
+    """A gate's Bloom filter, persisted as a one-row parquet sidecar
+    (``bits`` plus gate-specific columns) so a restart hydrates it
+    instead of rebuilding it. ``bits`` is the live packed array (None
+    until hydrated or built); ``nbits`` the width the gate asks for
+    (None: take the persisted width)."""
+
+    def __init__(self, path: str, nbits: int | None):
+        self.path, self.nbits, self.bits = path, nbits, None
+
+    def load(self, spark: SparkSession):
+        """The persisted row, or None when there is none, after healing
+        an interrupted swap."""
+        _swap_recover(spark, self.path)
+        if not table_exists(spark, self.path):
+            return None
+        return spark.read.parquet(self.path).collect()[0]
+
+    def adopt(self, row) -> None:
+        """Make ``row``'s filter the live one. A width other than the one
+        asked for raises: a filter cannot be resized in place, and
+        keeping the old width would ignore the caller without a word."""
+        import numpy as np
+
+        bits = np.frombuffer(bytes(row.bits), dtype=np.uint8)
+        if self.nbits is not None and bits.size << 3 != self.nbits:
+            raise ValueError(
+                f"bloom sidecar {self.path} holds {bits.size << 3} bits but "
+                f"the gate runs {self.nbits}; delete the sidecar to rebuild "
+                "at the new size"
+            )
+        self.bits, self.nbits = bits.copy(), bits.size << 3
+
+    def persist(self, spark: SparkSession, extra: tuple, extra_schema: str) -> None:
+        """Atomically replace the sidecar with the live filter + ``extra``."""
+        _atomic_overwrite_rows(
+            spark, [(self.bits.tobytes(), *extra)],
+            "bits binary, " + extra_schema, self.path,
+        )
+
+    def probe(
+        self, df: DataFrame, bc, key: str, cols: list[str], schema: str
+    ) -> DataFrame:
+        """Distinct ``cols`` of the rows of ``df`` whose int64 ``key`` the
+        broadcast filter ``bc`` may hold, evaluated executor-side: the
+        driver ships the filter once per broadcast and never sees keys.
+        A row left out is definitely not in the filter."""
+        nbits = self.nbits
+
+        def _hits(batches):
+            # local import: mapInPandas closures ship by value and must
+            # not capture module globals
+            import numpy as np
+
+            from akkastreamprocessnpmpackagedependencies_spark.streaming.pipeline import (
+                _bloom_query,
+            )
+
+            filt = np.frombuffer(bc.value, dtype=np.uint8)
+            assert filt.size << 3 == nbits
+            for pdf in batches:
+                hits = _bloom_query(filt, pdf[key].to_numpy(dtype=np.int64))
+                if hits.any():
+                    yield pdf.loc[hits, cols].drop_duplicates()
+
+        return df.select(*cols, key).mapInPandas(_hits, schema=schema)
+
+
+def write_dedup_gated(docs: DataFrame, corpus_path: str):
+    """Near-duplicate streaming ingestion gate (banded MinHash-LSH): each
+    micro-batch of documents is checked against the accepted corpus and
+    within itself, and only novel documents are appended to
+    ``corpus_path``. Within a batch the smallest doc_id of a duplicate
+    pair wins; a doc matching the corpus is dropped. Greedy admission is
+    order-dependent by design (first seen wins), and two invariants hold
+    whatever the arrival order: the accepted corpus is pairwise
+    non-duplicate under the LSH check, and every rejected doc had a
+    match when it was rejected (tests/test_streaming.py::
+    test_streaming_dedup_gated_ingestion).
+
+    Layout: the corpus stores each doc's shingle set and minhashes, and
+    its band keys live in a ``<corpus>_bands`` sidecar bucketed by band
+    key (``DEDUP_BAND_BUCKETS``), so a batch's probe reads only the
+    buckets its own band keys hash into and never re-shingles or
+    re-bands the corpus: per-batch cost scales with |batch| x bucket
+    occupancy, not |corpus|.
+
+    Crash ordering: the sidecar is written BEFORE the corpus. A crash
+    between the two leaves orphan band rows for docs that never reached
+    the corpus. They surface as candidates, but the exact-Jaccard verify
+    reads doc_b's signature from the corpus only, so an orphan never
+    matches and the replayed batch is admitted; verifying against the
+    batch's own signatures would self-match every replayed doc at 1.0
+    and lose the batch. When both writes landed, the replayed doc is in
+    the corpus, self-matches, and is not appended twice.
+
+    A corpus with data but an absent or file-less sidecar (an older
+    layout, or a crash after an all-empty append) gets a one-time
+    backfill: the whole corpus is banded into a temp table and renamed
+    into place before the probe, so every stored doc stays probeable and
+    a crash mid-backfill leaves the sidecar absent for the next attempt.
+    Its cost scales with the corpus, so it warns on stderr."""
     from ..operators.dedup import (
         JACCARD_THRESHOLD,
         N_HASHES,
@@ -700,22 +789,17 @@ def write_dedup_gated(
         _verify_jaccard,
     )
 
-    bands_path = corpus_path.rstrip("/") + "_bands"
+    bands = _BucketedTable(
+        corpus_path.rstrip("/") + "_bands", "band_bucket", ("b", "bkey"),
+        DEDUP_BAND_BUCKETS,
+    )
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         sig_new = _signatures(batch.select("doc_id", "text")).localCheckpoint()
-        # within-batch dedup: keep the smallest doc_id of every dup pair
-        # (localCheckpoint: nb feeds the within-join, the corpus probe,
-        # and the sidecar append — derive the bands once)
-        nb = (
-            _band_frame(sig_new)
-            .withColumn(
-                "band_bucket",
-                F.pmod(F.xxhash64("b", "bkey"), F.lit(DEDUP_BAND_BUCKETS)),
-            )
-            .localCheckpoint()
-        )
+        # nb feeds the within-batch join, the corpus probe and the
+        # sidecar append: band once
+        nb = bands.tag(_band_frame(sig_new)).localCheckpoint()
         within = (
             nb.alias("x")
             .join(nb.alias("y"), ["b", "bkey"])
@@ -726,41 +810,12 @@ def write_dedup_gated(
         drop = _verify_jaccard(
             within, sig_new, sig_new, "sh", JACCARD_THRESHOLD
         ).select(F.col("doc_b").alias("doc_id"))
-        # Explicit existence check (Hadoop-FS — os.path.isdir would be
-        # always-False on s3a/hdfs and skip the gate forever), NOT a
-        # blanket try/except around the corpus analysis: swallowing
-        # arbitrary errors here would silently skip the cross-corpus gate
-        # on e.g. a schema drift or a corrupt footer and admit duplicates
-        # forever; only the legitimate first-batch missing-path case may
-        # bypass it.
-        # has-data, not bare existence (round-13 hardening): a corpus
-        # or sidecar directory left FILE-LESS by a crash or an all-empty
-        # batch append reads as an empty corpus here, while a populated-
-        # but-drifted corpus still fails the batch loudly through normal
-        # schema inference (the round-4 regression class, kept pinned by
-        # test_dedup_gate_fails_loudly_on_corpus_schema_drift)
+        # only a corpus with no data may skip the probe; any read error
+        # on a populated one must fail the batch, never admit duplicates
         if table_has_data(spark, corpus_path):
-            if not table_has_data(spark, bands_path):
-                # corpus written by the pre-sidecar layout: ONE-TIME
-                # BACKFILL — band the ENTIRE stored corpus and install
-                # the result as the sidecar via write-to-temp + atomic
-                # rename. Installing the complete sidecar (not just this
-                # batch's rows) is load-bearing: appending only the
-                # batch's bands would make table_exists(bands_path) true
-                # from the next batch on while the sidecar lacked every
-                # pre-upgrade corpus doc — their duplicates would then
-                # be silently admitted forever. The temp+rename makes a
-                # crash mid-backfill leave bands_path absent, so the
-                # next attempt redoes the backfill instead of trusting a
-                # partial sidecar.
-                # Say it out loud (round-13 ADVICE, mirroring the decon
-                # gate's stderr WARNING): this branch also fires when a
-                # crash after an all-empty append left the sidecar
-                # FILE-LESS — correct either way, but a full-corpus
-                # re-band inside a micro-batch whose cost scales with
-                # |corpus| must be attributable, not a silent stall.
+            if not table_has_data(spark, bands.path):
                 print(
-                    f"WARNING [dedup-gate] bands sidecar {bands_path} is "
+                    f"WARNING [dedup-gate] bands sidecar {bands.path} is "
                     f"absent or file-less while the corpus {corpus_path} "
                     "has data — running the ONE-TIME full-corpus band "
                     "backfill (cost scales with corpus size; expected "
@@ -768,65 +823,25 @@ def write_dedup_gated(
                     "the sidecar empty)",
                     file=sys.stderr,
                 )
-                tmp = bands_path + "__backfill_tmp"
-                (
-                    _band_frame(
-                        spark.read.parquet(corpus_path).select(
-                            "doc_id", *[f"mh{h}" for h in range(N_HASHES)]
-                        )
-                    )
-                    .withColumn(
-                        "band_bucket",
-                        F.pmod(F.xxhash64("b", "bkey"), F.lit(DEDUP_BAND_BUCKETS)),
-                    )
-                    # repartition, NOT the per-batch append's coalesce(1):
-                    # the backfill is |corpus|-sized, and funneling it
-                    # through one task would serialize a full-corpus
-                    # rewrite into the first post-upgrade micro-batch —
-                    # one writer task per bucket directory instead
-                    .repartition("band_bucket")
-                    .write.mode("overwrite")
-                    .partitionBy("band_bucket")
-                    .parquet(tmp)
+                tmp = bands.path + "__backfill_tmp"
+                corpus_mh = spark.read.parquet(corpus_path).select(
+                    "doc_id", *[f"mh{h}" for h in range(N_HASHES)]
                 )
-                # a FILE-LESS bands dir can exist here (all-empty
-                # batch appended nothing); Hadoop rename onto an
-                # existing dir would nest tmp INSIDE it — clear it first
-                # (nothing to lose: the has-data guard above says so)
-                fs_delete(spark, bands_path)
-                fs_rename(spark, tmp, bands_path)
-            # pruned probe: only the bucket directories this batch's
-            # band keys hash into are read (partition pruning on the
-            # sidecar's band_bucket partition column)
-            buckets = [
-                r[0] for r in nb.select("band_bucket").distinct().collect()
-            ]
-            corpus_bands = spark.read.parquet(bands_path).filter(
-                F.col("band_bucket").isin(buckets)
-            )
+                bands.write(bands.tag(_band_frame(corpus_mh)), None, tmp, "overwrite")
+                # Hadoop rename onto an existing (file-less) dir would
+                # nest tmp inside it: clear it first
+                fs_delete(spark, bands.path)
+                fs_rename(spark, tmp, bands.path)
             cross = (
                 nb.alias("d")
-                .join(corpus_bands.alias("c"), ["b", "bkey"])
+                .join(bands.probe(spark, nb, has_data=True).alias("c"), ["b", "bkey"])
                 .select(
                     F.col("d.doc_id").alias("doc_a"), F.col("c.doc_id").alias("doc_b")
                 )
                 .distinct()
             )
-            # exact-jaccard verify, ASYMMETRIC on purpose: doc_a's
-            # signature comes from this batch, doc_b's comes ONLY from
-            # the stored corpus (doc_id + sh, a column-pruned scan).
-            # Keeping the batch's own signatures off the doc_b side is
-            # what makes crash replay safe: a crash between the sidecar
-            # append and the corpus append leaves orphan band rows for
-            # docs that never reached the corpus, and on replay those
-            # orphans surface the batch's own docs as (d, d) candidates
-            # — verified against batch-side signatures they'd self-match
-            # at jaccard 1.0 and the whole replayed batch would be
-            # dropped and permanently lost. Against corpus-side
-            # signatures the orphan doc_b never joins (it isn't in the
-            # corpus) and the doc is re-admitted; when BOTH writes
-            # landed before the crash, the replayed doc IS in the corpus,
-            # self-matches at 1.0, and is correctly not appended twice.
+            # asymmetric verify: doc_b's signature comes from the corpus
+            # only (see the crash ordering in the docstring)
             corpus_sigs = spark.read.parquet(corpus_path).select("doc_id", "sh")
             cross_dups = _verify_jaccard(
                 cross, sig_new, corpus_sigs, "sh", JACCARD_THRESHOLD
@@ -839,27 +854,9 @@ def write_dedup_gated(
             .join(drop.distinct(), "doc_id", "left_anti")
             .localCheckpoint()  # decide ONCE; feeds both appends below
         )
-        # sidecar first (see docstring: orphan band rows are safe, a
-        # corpus doc missing from the sidecar would silently skip probes).
-        # one writer task at micro-batch sizes — one file per touched
-        # bucket per batch instead of one per (task x bucket); band rows
-        # are a few ints/strings per accepted doc and directory churn
-        # dominates there. At cluster-scale batch sizes the append
-        # repartitions on the bucket instead (round 14: auto-decided per
-        # batch from the admitted count — a cached-scan job on the
-        # localCheckpoint above — skipped entirely when the caller
-        # forced a shape, mirroring the exact gate's guard (r14 ADVICE).
-        wide = _resolve_wide(
-            wide_writes, keep.count() if wide_writes is None else 0
-        )
-        kept_bands = nb.join(keep.select("doc_id"), "doc_id")
-        shaped = (
-            kept_bands.repartition("band_bucket") if wide
-            else kept_bands.coalesce(1)
-        )
-        shaped.write.mode("append").partitionBy("band_bucket").parquet(
-            bands_path
-        )
+        # sidecar first (see the crash ordering in the docstring); the
+        # write shape follows the admitted doc count
+        bands.write(nb.join(keep.select("doc_id"), "doc_id"), keep.count())
         keep.write.mode("append").parquet(corpus_path)
 
     return docs.writeStream.foreachBatch(_ingest)
@@ -1445,6 +1442,48 @@ def _hll_estimate(regs) -> float:
     return m * m / (2.0 * math.log(2.0) * z)
 
 
+def _packed_sketch(
+    events: DataFrame, shards: int, *, blob: str, dtype: str, shape: tuple,
+    fold, out_schema: str, state_schema: str, extra=None,
+) -> DataFrame:
+    """The state update shared by the packed-array sketches (HLL, CMS,
+    Bloom). Events shard by ``event_id % shards``; a shard's state is
+    ``(blob, n)``: its numpy array (``shape``/``dtype``) packed to bytes,
+    and its event count. Each micro-batch folds the shard's ``user_id``
+    keys in place with ``fold(arr, ids)`` and emits one row: shard, the
+    columns ``extra(arr)`` returns, shard_n, and the packed array under
+    ``blob`` (the mergeable form the global sinks read)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def update(key, pdfs, state):
+        import numpy as np
+        import pandas as pd
+
+        if state.exists:
+            packed, n = state.get
+            arr = np.frombuffer(bytes(packed), dtype=dtype).reshape(shape).copy()
+            n = int(n)
+        else:
+            arr, n = np.zeros(shape, dtype=dtype), 0
+        for pdf in pdfs:
+            ids = pdf["user_id"].to_numpy(dtype=np.int64)
+            n += ids.size
+            fold(arr, ids)
+        packed = arr.tobytes()
+        state.update((packed, n))
+        cols = {"shard": [key[0]], **(extra(arr) if extra else {})}
+        yield pd.DataFrame({**cols, "shard_n": [n], blob: [packed]})
+
+    return (
+        events.select((F.col("event_id") % shards).alias("shard"), "user_id")
+        .groupBy("shard")
+        .applyInPandasWithState(
+            update, out_schema, state_schema, "update",
+            GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
 def streaming_distinct_hll(
     events: DataFrame, shards: int = HLL_SHARDS
 ) -> DataFrame:
@@ -1465,39 +1504,11 @@ def streaming_distinct_hll(
     the latest row per shard feeds the global merge. Registers only grow
     (element-wise max is idempotent/commutative/associative), so the
     sketch is order- and replay-robust by construction."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import numpy as np
-        import pandas as pd
-
-        if state.exists:
-            regs_b, n = state.get
-            regs = np.frombuffer(bytes(regs_b), dtype=np.uint8).copy()
-            n = int(n)
-        else:
-            regs, n = np.zeros(1 << HLL_B, dtype=np.uint8), 0
-        for pdf in pdfs:
-            ids = pdf["user_id"].to_numpy(dtype=np.int64)
-            n += ids.size
-            _hll_update(regs, ids)
-        state.update((regs.tobytes(), n))
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]],
-                "estimate": [_hll_estimate(regs)],
-                "shard_n": [n],
-                "regs": [regs.tobytes()],
-            }
-        )
-
-    return (
-        events.select((F.col("event_id") % shards).alias("shard"), "user_id")
-        .groupBy("shard")
-        .applyInPandasWithState(
-            update, _HLL_OUT_SCHEMA, _HLL_STATE_SCHEMA, "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _packed_sketch(
+        events, shards, blob="regs", dtype="uint8", shape=(1 << HLL_B,),
+        fold=_hll_update, out_schema=_HLL_OUT_SCHEMA,
+        state_schema=_HLL_STATE_SCHEMA,
+        extra=lambda regs: {"estimate": [_hll_estimate(regs)]},
     )
 
 
@@ -1654,7 +1665,7 @@ def _global_merge_fn(
             carry_path,
         )
         out = spark.createDataFrame(emit(batch_id, last_seen), out_schema)
-        _append_or_compact(out, out_path, out_schema, appends, compact_every)
+        _append_or_compact(out, out_path, appends, compact_every)
 
     return _merge
 
@@ -1827,7 +1838,7 @@ def _swap_recover(spark: SparkSession, path: str) -> None:
 
 
 def _append_or_compact(
-    out: DataFrame, out_path: str, schema: str, appends: list, compact_every: int
+    out: DataFrame, out_path: str, appends: list, compact_every: int
 ) -> None:
     """Shared sink idiom of the global-sketch monitoring pipelines: append
     the batch's tiny row group, and every ``compact_every`` appends
@@ -1844,10 +1855,7 @@ def _append_or_compact(
     long-running stream's file count at compact_every + 1 INCLUDING
     across restarts — callers seed ``appends`` from the series' current
     file count at their first batch (see ``_global_merge_pipeline``), so
-    a stream restarted every few batches still compacts on schedule.
-    ``schema``
-    stays in the signature for the callers' self-documentation (the
-    read now carries the parquet schema itself)."""
+    a stream restarted every few batches still compacts on schedule."""
     spark = out.sparkSession
     tmp_new = out_path.rstrip("/") + "__compact_tmp"
     tmp_old = out_path.rstrip("/") + "__compact_old"
@@ -2055,35 +2063,10 @@ def streaming_freq_cms(events: DataFrame, shards: int = CMS_SHARDS) -> DataFrame
     increments, so merging adds ZERO error beyond a single global
     sketch. Each micro-batch emits the shard's table (the mergeable
     form) + event count; the latest row per shard feeds the merge."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import numpy as np
-        import pandas as pd
-
-        shape = (CMS_DEPTH, 1 << CMS_W_BITS)
-        if state.exists:
-            tab_b, n = state.get
-            tab = np.frombuffer(bytes(tab_b), dtype=np.int64).reshape(shape).copy()
-            n = int(n)
-        else:
-            tab, n = np.zeros(shape, dtype=np.int64), 0
-        for pdf in pdfs:
-            ids = pdf["user_id"].to_numpy(dtype=np.int64)
-            n += ids.size
-            _cms_update(tab, ids)
-        state.update((tab.tobytes(), n))
-        yield pd.DataFrame(
-            {"shard": [key[0]], "shard_n": [n], "tab": [tab.tobytes()]}
-        )
-
-    return (
-        events.select((F.col("event_id") % shards).alias("shard"), "user_id")
-        .groupBy("shard")
-        .applyInPandasWithState(
-            update, _CMS_OUT_SCHEMA, _CMS_STATE_SCHEMA, "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _packed_sketch(
+        events, shards, blob="tab", dtype="int64",
+        shape=(CMS_DEPTH, 1 << CMS_W_BITS), fold=_cms_update,
+        out_schema=_CMS_OUT_SCHEMA, state_schema=_CMS_STATE_SCHEMA,
     )
 
 
@@ -2487,328 +2470,163 @@ def _bloom_or_of_keys(keys_df: DataFrame, nbits: int):
 def write_exact_dedup_gated(
     docs: DataFrame, corpus_path: str, normalized: bool = True,
     bloom_prefilter: bool = False, bloom_bits: int | None = None,
-    bloom_expected_keys: int | None = None,
-    bloom_min_ratio: float | None = None,
-    wide_writes: bool | None = None,
     ledger_path: str | None = None,
 ):
-    """EXACT-duplicate streaming ingestion gate — the cheap front door a
-    training pipeline runs BEFORE the near-dup LSH gate
-    (``write_dedup_gated``): a doc whose text digest already exists in
-    the accepted corpus is dropped; within a batch the smallest doc_id
-    per digest wins. ``normalized=True`` digests the canonical form
-    (lowercase / punctuation-stripped / whitespace-collapsed — the
-    shared ``functions.text.norm_expr`` every batch dedup query uses),
-    catching case- and punctuation-variant duplicates; ``False`` gates
-    on byte-exact text only.
+    """EXACT-duplicate streaming ingestion gate, the cheap front door
+    before the near-dup LSH gate (``write_dedup_gated``): a doc whose
+    text digest is already in the accepted corpus is dropped, and within
+    a batch the smallest doc_id per digest wins. ``normalized=True``
+    digests the canonical form (``functions.text.norm_expr``: lowercase,
+    punctuation stripped, whitespace collapsed), catching case and
+    punctuation variants; ``False`` gates on byte-exact text. NULL text
+    digests as '' so it dedups deterministically instead of vanishing
+    (sha2 propagates NULL and equi-joins never match it).
 
-    Layout: the accepted corpus is PARTITIONED BY a hash bucket OF THE
-    DIGEST, so the table doubles as its own digest index — each batch's
-    probe partition-prunes to the buckets its own digests hash into and
-    reads |touched|/|buckets| of a single-column projection, the same
-    economics as the LSH gate's band sidecar. Unlike that gate there is
-    NO sidecar and NO two-write ordering to crash between: the corpus
-    append is the ONLY write, so a batch replayed after a crash
-    anti-joins against its own already-appended rows and drops them —
-    idempotent by construction, and for an EXACT gate the self-match is
-    a correct drop, never data loss (contrast the near-dup gate, where
-    round 10 had to route the verify through corpus-side signatures to
-    get the same property).
+    Layout: the corpus is bucketed by digest (``EXACT_DEDUP_BUCKETS``),
+    so it is its own digest index and a batch's probe reads only the
+    buckets its digests hash into. The append's write shape follows the
+    batch's row count after the within-batch dedup, known before the
+    probe. Without the Bloom sidecar the corpus
+    append is the only write, so a batch replayed after a crash
+    anti-joins against its own appended rows and drops them: idempotent
+    by construction, and for an exact gate the self-match is a correct
+    drop.
 
-    ``bloom_prefilter=True`` (round 11) puts the seventh streaming
-    sketch in front of the probe: a Bloom filter over the ADMITTED
-    corpus' digest keys rides a ``<corpus>_bloom`` sidecar; per batch,
-    membership is evaluated executor-side against the broadcast bits
-    (128 KiB), rows the filter has definitely never seen bypass the
-    corpus anti-join entirely, and a batch with NO suspects never
-    touches the corpus at all — at 100 TB, where most ingested docs are
-    new, the probe read drops from every-batch to
-    false-positive-rate-of-the-filter. Correctness is one-sided by
-    construction: a false positive only routes a row through the exact
-    probe it would have run anyway, and a false NEGATIVE cannot happen
-    because the sidecar persists BEFORE every corpus append (crash
-    between the two leaves the bloom a strict superset of the corpus —
-    replayed rows read "maybe seen", probe exactly, and are admitted;
-    the reverse order could skip the probe for an already-admitted
-    digest and let a duplicate in). Enabling the flag over a
-    pre-existing corpus triggers a one-time distributed backfill
-    (partial filters per partition, OR-merged — see
-    ``_bloom_or_of_keys``); a crash mid-backfill leaves the sidecar
-    absent, so the next start redoes it. Saturation degrades gracefully:
-    a full filter reads everything as suspect, which is exactly the
-    plain gate — and since round 12 it also warns loudly (see below)
-    instead of paying the prefilter's evaluation cost for nothing.
+    ``bloom_prefilter=True`` keeps a Bloom filter of the admitted digests
+    in a ``<corpus>_bloom`` sidecar, ``bloom_bits`` wide (default
+    BLOOM_BITS; ``bloom_bits_for(n)`` sizes it for n expected keys). Per
+    batch the broadcast filter is probed executor-side; rows it has never
+    seen skip the corpus anti-join, and a batch with no suspects never
+    opens the corpus. Crash ordering: the sidecar is persisted BEFORE the
+    corpus append, so a crash between them leaves the filter a superset
+    of the corpus (replayed rows read "maybe seen", probe exactly, and are
+    admitted); the reverse order could skip the probe for an admitted
+    digest. A corpus that predates the sidecar is backfilled once,
+    distributed (``_bloom_or_of_keys``); a crash mid-backfill leaves the
+    sidecar absent and the next start redoes it. A saturated filter reads
+    everything as suspect, which is the plain gate, and warns once.
 
-    Measured two-sided economics (round-12 amendment — the round-11
-    "cost-neutral when the corpus is batch-sized" claim was WRONG,
-    contradicted by the same session's BENCH_FULL and adjudicated by an
-    interleaved A/B, BENCH_AB_bloom_gate.json: 1.39x the plain gate's
-    wall at a batch-sized corpus): the membership evaluation + admitted-
-    key fold are ~4 extra Spark jobs per micro-batch, which dominate
-    when batches are overhead-bound and the probe they replace is small.
-    Against a corpus 100x the batch (BENCH_exact_gate_volume.json,
-    re-measured round 12 with a three-arm design) the prefilter is
-    1.35x end-to-end INCLUDING its one-time backfill — when SIZED for
-    the corpus via ``bloom_expected_keys``; at the 2^20-bit default the
-    same corpus saturates the filter (fill ~0.85, FPR ~0.5) and the arm
-    runs 0.82x, which is exactly the failure the new saturation warning
-    names at backfill time. Two round-12 mitigations narrow the losing
-    region:
+    Measured economics: the evaluation and the admitted-key fold cost
+    about four Spark jobs per batch, which dominate while the corpus is
+    batch-sized (BENCH_AB_bloom_gate.json: 1.39x the plain gate's wall).
+    So while the filter's own key estimate is under
+    ``BLOOM_PREFILTER_MIN_RATIO`` x the batch, the evaluation is skipped
+    and only the fold and persist run, keeping the superset invariant
+    from the first batch (1.22x). Against a corpus 100x the batch the
+    prefilter sized with ``bloom_bits_for`` is 1.35x faster end to end
+    including its backfill; at the 2^20-bit default that corpus saturates
+    the filter and it runs 0.82x (BENCH_exact_gate_volume.json). Enable
+    it when the corpus will dwarf the batch.
 
-    - ADAPTIVE SKIP: per batch, the filter's own fill ratio yields an
-      estimated corpus-key count (n̂ = -(m/k)·ln(1-fill), the standard
-      occupancy inversion); while n̂ < BLOOM_PREFILTER_MIN_RATIO x the
-      batch's kept rows — or the corpus does not exist yet — the
-      membership evaluation and flag-join are SKIPPED (every row takes
-      the plain exact probe) and only the mandatory fold+persist runs,
-      so the crash invariant (bloom ⊇ corpus) is maintained from the
-      first batch and the filter's negatives stay trustworthy the
-      moment the corpus grows past the threshold.
-      ``bloom_min_ratio`` overrides the threshold (0.0 forces the
-      evaluation on from the first batch — the tests pinning the
-      evaluation path use this). Re-measured after the skip (same
-      interleaved A/B harness, committed in BENCH_AB_bloom_gate.json):
-      1.22x at a batch-sized corpus, down from 1.39x — the residual is
-      the invariant-mandatory fold + sidecar persist (skippable never:
-      a lost fold would mint false negatives), not the evaluation.
-    - SIZING: ``bloom_expected_keys`` sizes the filter at ~10 bits per
-      expected corpus key (next power of two), the ~1% FPR point;
-      without it the BLOOM_BITS=2^20 default saturates near ~180k keys
-      (fill 0.5, FPR 6%). A saturation guard warns ONCE per run — at
-      hydration, after backfill, or after a fold — when fill exceeds
-      BLOOM_FILL_WARN, naming the estimated key count and the
-      recommended rebuild size (delete the sidecar to rebuild bigger;
-      correctness is never at stake, only the probe-skip benefit).
-
-    Enable the flag when the corpus will dwarf the batch — every
-    long-lived ingestion deployment; the adaptive skip now makes the
-    warm-up phase cost ~1.2x instead of 1.4x, and the default stays
-    False for short-lived batch-sized jobs.
-
-    Write path (round 13, mirroring the decontamination gate):
-    ``wide_writes=False`` coalesces each append to ONE writer task —
-    one file per touched bucket per batch, right at micro-batch
-    granularity where directory churn dominates; ``wide_writes=True``
-    at cluster-scale batch sizes runs ``repartition("dig_bucket")`` so
-    buckets write in parallel. The round-14 default ``None``
-    AUTO-SWITCHES per batch on the within-batch-deduped row count
-    (``WIDE_WRITES_ROWS``) — that count is known before the corpus
-    probe (the admitted subset is never larger, and "is this a
-    cluster-scale batch" is a property of the batch, not of how many
-    of its docs turn out to be duplicates), and when the Bloom
-    prefilter is on it is needed anyway, so auto mode adds no job
-    there and one cached-scan job otherwise. Corpus
-    probes gate on ``table_has_data`` (round-13 volume-study finding on
-    the decon twin): a crash or an all-empty first batch can leave the
-    corpus directory present but FILE-LESS, where schema inference
-    throws — such a directory now reads as an empty corpus, while a
-    populated-but-drifted one still fails loudly through inference."""
-    # ``ledger_path`` (round 16) maintains the incremental SNAPSHOT
-    # LEDGER alongside the corpus: one cumulative (n_docs, digest-xor
-    # fingerprint, bytes) row per touched bucket per batch, so
-    # "what changed between ingest versions V1 and V2" is an O(buckets)
-    # ledger join (``snapshot_ledger_diff``) instead of a corpus-scale
-    # full-outer join — the grouping-aware incremental twin of the batch
-    # ``snapshot_diff`` operator (operators/relational.py:1815). See the
-    # ledger section below for schema, crash ordering, and healing.
+    ``ledger_path`` maintains the incremental snapshot ledger (see
+    ``_ledger_append_batch``), appended after the corpus; the crash
+    window between the two is healed at the next start. Raises
+    ValueError when ``bloom_bits`` is not a power of two >= 8 or is given
+    without ``bloom_prefilter=True``."""
     from ..functions.text import norm_expr
 
-    if bloom_bits is None:
-        if bloom_expected_keys is not None:
-            # ~10 bits/key is the classic ~1% FPR point for k=4; round
-            # up to a power of two (the probe mask requires it)
-            target = max(BLOOM_BITS, 10 * int(bloom_expected_keys))
-            bloom_bits = 1 << (target - 1).bit_length()
-        else:
-            bloom_bits = BLOOM_BITS  # resolved at call time: the constant
-            # is defined below this function in the module (bloom section)
-    if bloom_min_ratio is None:
-        bloom_min_ratio = BLOOM_PREFILTER_MIN_RATIO  # 0.0 forces the
-        # evaluation on from the first batch (the tests pinning the
-        # evaluation path's semantics use this)
-    bloom_sidecar = corpus_path.rstrip("/") + "_bloom"
-    bloom_state: dict[str, object] = {"bits": None, "n_est": 0.0,
-                                      "fill_warned": False}
+    _check_bloom_bits(bloom_bits)
+    if bloom_bits is not None and not bloom_prefilter:
+        raise ValueError(
+            f"bloom_bits={bloom_bits} is set but bloom_prefilter is off"
+        )
+    corpus = _BucketedTable(
+        corpus_path, "dig_bucket", ("digest",), EXACT_DEDUP_BUCKETS
+    )
+    bloom = _BloomSidecar(corpus_path.rstrip("/") + "_bloom", bloom_bits or BLOOM_BITS)
+    fill = {"n_est": 0.0, "warned": False}
     ledger_state: dict[str, object] = {"reconciled": False, "appends": None}
 
     def _note_fill(where: str) -> None:
-        """Refresh the fill-derived key estimate and fire the one-shot
-        saturation warning (round-12 verdict #6 / ADVICE #3): an
-        undersized filter degrades to all-suspect — correct but paying
-        the prefilter cost for no probe-skip — so say so loudly with
-        the numbers needed to fix it, instead of degrading silently.
-        Counts via the byte-popcount LUT, not np.unpackbits — this runs
-        once per fold, and unpackbits materializes an 8x temporary,
-        which at a bloom_expected_keys-sized filter (e.g. 2^30 bits =
-        128 MiB) would be a gigabyte per micro-batch (round-12 review
-        finding)."""
+        """Refresh the fill-derived key estimate (n = -(m/k) ln(1 - fill),
+        the occupancy inversion) and warn once when the filter is
+        saturating, with the numbers needed to rebuild it bigger.
+        Counts with the byte-popcount LUT: np.unpackbits would make an 8x
+        temporary per batch."""
         import math
 
-        bits = bloom_state["bits"]
-        fill = _bloom_popcount(bits) / bloom_bits
-        bloom_state["n_est"] = (
-            float("inf") if fill >= 1.0
-            else -(bloom_bits / BLOOM_K) * math.log1p(-fill)
-        )
-        if fill > BLOOM_FILL_WARN and not bloom_state["fill_warned"]:
-            bloom_state["fill_warned"] = True
-            # a fully-saturated filter gives an infinite estimate; cap
-            # so the recommendation stays a finite "much bigger"
-            est = int(min(bloom_state["n_est"], 2**40))
-            rec = 1 << (10 * max(est, 1) - 1).bit_length()
+        m = bloom.nbits
+        f = _bloom_popcount(bloom.bits) / m
+        fill["n_est"] = float("inf") if f >= 1.0 else -(m / BLOOM_K) * math.log1p(-f)
+        if f > BLOOM_FILL_WARN and not fill["warned"]:
+            fill["warned"] = True
+            # a full filter estimates infinity: cap to keep it finite
+            est = int(min(fill["n_est"], 2**40))
             print(
-                f"WARNING [bloom-gate] {where}: filter fill {fill:.2f} "
-                f"(est FPR {fill ** BLOOM_K:.3f}, ~{bloom_state['n_est']:.0f} "
-                f"keys in {bloom_bits} bits) — the prefilter is saturating "
-                f"and its probe-skip benefit is vanishing; rebuild with "
-                f"bloom_bits>={rec} or pass bloom_expected_keys (delete "
-                f"the sidecar {bloom_sidecar} to trigger the backfill at "
-                f"the new size; correctness is unaffected either way)",
+                f"WARNING [bloom-gate] {where}: filter fill {f:.2f} "
+                f"(est FPR {f ** BLOOM_K:.3f}, ~{fill['n_est']:.0f} keys in "
+                f"{m} bits) — the prefilter is saturating and its "
+                f"probe-skip benefit is vanishing; rebuild with "
+                f"bloom_bits>={bloom_bits_for(est)} (delete the sidecar "
+                f"{bloom.path} to trigger the backfill at the new size; "
+                "correctness is unaffected either way)",
                 file=sys.stderr,
             )
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        basis = norm_expr(F.col("text")) if normalized else F.col("text")
-        # NULL text digests as the empty string (review finding, round
-        # 10): sha2 propagates NULL and equi-joins never match NULL
-        # keys, so without the coalesce a NULL-text doc silently
-        # vanished — neither admitted nor deduped. Folding NULL into ''
-        # makes the gate total: NULL/empty docs dedup against each
-        # other deterministically and the first one is admitted.
-        #
-        # Round 17 (guide §5 "fewer materializing actions"): digest,
-        # bucket, and the within-batch winner are ONE pass and ONE
-        # localCheckpoint. The previous shape paid two checkpoints (the
-        # digest frame, then a groupBy-min self-join against it); the
-        # min-per-digest window keeps the IDENTICAL multiset semantics —
-        # every row whose doc_id equals its digest group's minimum
-        # survives — with one digest-keyed shuffle and no self-join, and
-        # sha2 still runs exactly once per row.
         from pyspark.sql.window import Window
 
+        spark = batch.sparkSession
+        basis = norm_expr(F.col("text")) if normalized else F.col("text")
+        # digest, bucket and the within-batch winner in one pass and one
+        # checkpoint: every row whose doc_id is its digest's minimum
         keep = (
-            batch.withColumn("digest", F.sha2(F.coalesce(basis, F.lit("")), 256))
-            .withColumn(
-                "dig_bucket",
-                F.pmod(F.xxhash64("digest"), F.lit(EXACT_DEDUP_BUCKETS)),
+            corpus.tag(
+                batch.withColumn("digest", F.sha2(F.coalesce(basis, F.lit("")), 256))
             )
             .withColumn("_mn", F.min("doc_id").over(Window.partitionBy("digest")))
             .filter(F.col("doc_id") == F.col("_mn"))
             .drop("_mn")
             .localCheckpoint()  # decide ONCE; feeds sizing, probe, appends
         )
-        corpus_exists = table_has_data(spark, corpus_path)
-        # one cached-scan job answers BOTH sizing questions (round 17):
-        # the per-bucket counts carry the admitted-row total (write-shape
-        # auto switch + bloom adaptive skip) AND the touched-bucket list
-        # (partition-pruned probe) — previously a count() job plus a
-        # separate distinct().collect() job per batch.
-        need_rows = wide_writes is None or bloom_prefilter
-        bucket_counts = (
-            {
-                int(r[0]): int(r[1])
-                for r in keep.groupBy("dig_bucket").count().collect()
-            }
-            if (need_rows or corpus_exists)
-            else {}
-        )
+        corpus_exists = table_has_data(spark, corpus.path)
+        # one job answers both sizing questions: the row total (write
+        # shape, adaptive skip) and the touched buckets (pruned probe)
+        bucket_counts = {
+            int(r[0]): int(r[1])
+            for r in keep.groupBy("dig_bucket").count().collect()
+        }
         batch_rows = sum(bucket_counts.values())
-        wide = _resolve_wide(wide_writes, batch_rows)
         if ledger_path is not None and not ledger_state["reconciled"]:
-            # FIRST batch of a (re)started stream, BEFORE this batch's
-            # append: heal the ledger's only crash window (corpus append
-            # landed, ledger append did not — a replay admits 0 rows, so
-            # without this the divergence would be permanent)
+            # first batch after a (re)start, before its append: heal the
+            # ledger's crash window (corpus append landed, ledger did not)
             _ledger_reconcile(spark, corpus_path, ledger_path)
             ledger_state["reconciled"] = True
         prefilter_active = False
         if bloom_prefilter:
-            import numpy as np
-
-            if bloom_state["bits"] is None:  # first batch: hydrate
-                _swap_recover(spark, bloom_sidecar)
-                if table_exists(spark, bloom_sidecar):
-                    row = spark.read.parquet(bloom_sidecar).collect()[0]
-                    bits = np.frombuffer(bytes(row.bits), dtype=np.uint8)
-                    if bits.size != bloom_bits >> 3:
-                        raise ValueError(
-                            f"bloom sidecar holds {bits.size * 8} bits, "
-                            f"expected {bloom_bits}; delete the sidecar to "
-                            "rebuild at the new size"
-                        )
-                    bloom_state["bits"] = bits.copy()
+            if bloom.bits is None:  # first batch: hydrate, backfill or start empty
+                row = bloom.load(spark)
+                if row is not None:
+                    bloom.adopt(row)
                     _note_fill("sidecar hydration")
                 elif corpus_exists:
-                    # one-time legacy backfill: the corpus predates the
-                    # sidecar, so every existing digest must enter the
-                    # filter before any batch may trust a negative (a
-                    # file-less corpus dir never reaches here:
-                    # corpus_exists is the has-data check)
-                    bloom_state["bits"] = _bloom_or_of_keys(
-                        spark.read.parquet(corpus_path).select(
+                    bloom.bits = _bloom_or_of_keys(
+                        spark.read.parquet(corpus.path).select(
                             F.xxhash64("digest").alias("dig_key")
                         ),
-                        bloom_bits,
+                        bloom.nbits,
                     )
                     _note_fill("corpus backfill")
                 else:
-                    bloom_state["bits"] = np.zeros(
-                        bloom_bits >> 3, dtype=np.uint8
-                    )
-            # adaptive skip (round 12, BENCH_AB_bloom_gate.json): the
-            # evaluation only pays once the corpus dwarfs the batch;
-            # until the filter's own key estimate crosses the ratio the
-            # batch takes the plain probe and only the invariant-
-            # mandatory fold below runs. batch_rows was counted above
-            # (shared with the write-shape switch).
-            prefilter_active = (
-                corpus_exists
-                and bloom_state["n_est"]
-                >= bloom_min_ratio * max(batch_rows, 1)
+                    import numpy as np
+
+                    bloom.bits = np.zeros(bloom.nbits >> 3, dtype=np.uint8)
+            prefilter_active = corpus_exists and (
+                fill["n_est"] >= BLOOM_PREFILTER_MIN_RATIO * max(batch_rows, 1)
             )
         if prefilter_active:
             from pyspark.sql import Observation
 
-            bits = bloom_state["bits"]
-            bc = spark.sparkContext.broadcast(bytes(bits))
-            nbits = bloom_bits
-
-            def _maybe_seen(batches):
-                import numpy as np
-                import pandas as pd
-
-                from akkastreamprocessnpmpackagedependencies_spark.streaming.pipeline import (
-                    _bloom_query,
-                )
-
-                filt = np.frombuffer(bc.value, dtype=np.uint8)
-                assert filt.size == nbits >> 3
-                for pdf in batches:
-                    keys = pdf["dig_key"].to_numpy(dtype=np.int64)
-                    out = pdf[["digest", "doc_id", "dig_bucket"]].copy()
-                    out["maybe_seen"] = _bloom_query(filt, keys)
-                    yield out
-
-            # round 17: dig_bucket rides along so the suspect frame IS the
-            # probe frame (the old shape re-joined keep to re-attach it),
-            # and the suspect count + touched-bucket set ride the
-            # checkpoint's own job as a CollectMetrics observation — two
-            # fewer Spark jobs per prefiltered batch (a count and a
-            # distinct-collect).
+            bc = spark.sparkContext.broadcast(bytes(bloom.bits))
+            # the suspect count and touched buckets ride the checkpoint's
+            # own job as an observation instead of two more jobs
             s_obs = Observation(f"bloom_suspects_{batch_id}")
             flags = (
-                keep.withColumn("dig_key", F.xxhash64("digest"))
-                .select("digest", "doc_id", "dig_bucket", "dig_key")
-                .mapInPandas(
-                    _maybe_seen,
-                    schema=(
-                        "digest string, doc_id long, dig_bucket long, "
-                        "maybe_seen boolean"
-                    ),
+                bloom.probe(
+                    keep.withColumn("dig_key", F.xxhash64("digest")), bc,
+                    "dig_key", ["digest", "doc_id", "dig_bucket"],
+                    "digest string, doc_id long, dig_bucket long",
                 )
-                .filter(F.col("maybe_seen"))
-                .select("digest", "doc_id", "dig_bucket")
                 .observe(
                     s_obs,
                     F.count(F.lit(1)).alias("n"),
@@ -2819,59 +2637,34 @@ def write_exact_dedup_gated(
             n_suspect = int(s_obs.get["n"])
             suspect_buckets = [int(b) for b in s_obs.get["buckets"]]
             bc.unpersist(blocking=False)  # flags materialized above
-        # Explicit existence check (Hadoop-FS), same rationale as the
-        # LSH gate: only the legitimate first-batch missing-path case
-        # may skip the probe; any read error must fail the batch. With
-        # the prefilter, a batch with zero suspects skips the corpus
-        # read outright — the bloom negative is definitive.
-        if corpus_exists and not (prefilter_active and n_suspect == 0):
-            buckets = (
-                suspect_buckets if prefilter_active else list(bucket_counts)
+        # a batch with zero suspects skips the corpus read outright: the
+        # Bloom negative is definitive
+        seen = None
+        if not (prefilter_active and n_suspect == 0):
+            seen = corpus.probe(
+                spark, suspect_buckets if prefilter_active else list(bucket_counts),
+                has_data=corpus_exists,
             )
-            seen = (
-                spark.read.parquet(corpus_path)
-                .filter(F.col("dig_bucket").isin(buckets))
-                .select("digest")
-            )
+        if seen is not None:
+            seen = seen.select("digest")
             if prefilter_active:
                 dup = flags.join(seen, "digest").select("digest", "doc_id")
                 keep = keep.join(dup, ["digest", "doc_id"], "left_anti")
             else:
                 keep = keep.join(seen, "digest", "left_anti")
         if bloom_prefilter:
-            # fold the batch's admitted keys in and persist BEFORE the
-            # append — the bloom-superset-of-corpus crash invariant
+            # fold the admitted keys in and persist BEFORE the append
             keep = keep.localCheckpoint()  # freeze: feeds keys AND append
-            key_rows = keep.select(
-                F.xxhash64("digest").alias("dig_key")
+            bloom.bits |= _bloom_or_of_keys(
+                keep.select(F.xxhash64("digest").alias("dig_key")), bloom.nbits
             )
-            batch_bits = _bloom_or_of_keys(key_rows, bloom_bits)
-            bits = bloom_state["bits"]
-            bits |= batch_bits
             _note_fill(f"fold (batch {batch_id})")
-            _atomic_overwrite_rows(
-                spark,
-                [(bits.tobytes(), int(batch_id))],
-                "bits binary, last_batch long",
-                bloom_sidecar,
-            )
+            bloom.persist(spark, (int(batch_id),), "last_batch long")
         elif ledger_path is not None and corpus_exists:
-            # round 17: freeze the post-probe frame once — without this
-            # the ledger's per-bucket partial collect AND the corpus
-            # append below EACH re-ran the anti-join probe (a second
-            # partition-pruned corpus read per batch). The bloom branch
-            # already checkpoints here for the fold.
+            # freeze the probed frame once: the ledger's partial collect
+            # and the append would each re-run the anti-join otherwise
             keep = keep.localCheckpoint()
-        # one writer task at micro-batch sizes (directory churn
-        # dominates); one writer per bucket at cluster-scale batches —
-        # auto-decided above unless the caller forced a shape
-        shaped = (
-            keep.repartition("dig_bucket") if wide
-            else keep.coalesce(1)
-        )
-        shaped.write.mode("append").partitionBy("dig_bucket").parquet(
-            corpus_path
-        )
+        corpus.write(keep, batch_rows)
         if ledger_path is not None:
             _ledger_append_batch(
                 spark, keep, ledger_path, int(batch_id), ledger_state
@@ -3099,11 +2892,7 @@ def _ledger_append_batch(
     )
     if state.get("appends") is None:
         state["appends"] = [max(fs_count_data_files(spark, ledger_path), 1)]
-    _append_or_compact(
-        out, ledger_path,
-        "dig_bucket long, version long, n_docs long, fp long, bytes_sum long",
-        state["appends"], LEDGER_COMPACT_EVERY,
-    )
+    _append_or_compact(out, ledger_path, state["appends"], LEDGER_COMPACT_EVERY)
 
 
 def _fs_list_dirs(spark: SparkSession, path: str, prefix: str) -> list[str]:
@@ -3228,335 +3017,206 @@ def write_benchmark_grams(
 
 def write_decontaminated(
     docs: DataFrame, benchmark_grams: str, out_path: str, n: int = 5,
-    bloom_bits: int | None = None, wide_writes: bool | None = None,
+    bloom_bits: int | None = None,
 ):
-    """STREAMING DECONTAMINATION gate — the third ingestion front door
+    """STREAMING DECONTAMINATION gate, the third ingestion front door
     beside the exact-digest and MinHash-LSH dedup gates: a doc sharing
     any word n-gram with a held-out benchmark set (the probe set the
     batch twin ``contamination_ngram_hits`` joins against) is routed to
     a ``<out>_quarantine`` verdict table with its distinct-hit count;
-    clean docs are admitted to ``out_path``. The decontamination pass
-    every training-data pipeline runs before export, at ingest time.
+    clean docs are admitted to ``out_path``. Verdicts equal the batch
+    twin's row for row: a Bloom false positive costs one small join, a
+    false negative cannot happen, and the confirm join is exact.
 
-    Economics (the exact-gate pattern, applied to a STATIC filter): the
-    benchmark's gram keys live in a Bloom built ONCE — distributed,
-    ``_bloom_or_of_keys``, O(partitions) fixed blobs — persisted to a
-    ``<out>_benchbloom`` sidecar (restart hydrates; a crash mid-build
-    leaves it absent and the next start rebuilds). ``bloom_bits=None``
-    AUTO-SIZES from the benchmark's gram count at ~10 bits/key (the ~1%
-    FPR point), so the ADVICE-class saturation footgun cannot happen by
-    default. Sizing caveat, measured not asserted (round-13 volume
-    study, BENCH_decon_volume.json): the unit that matters is the
-    per-DOC false-positive rate, 1-(1-fpr)^grams_per_doc — at the ~1%
-    per-gram default a ~200-gram clean doc is a suspect ~87% of the
-    time, so the confirm join still runs on clean batches (correct,
-    just not free); pass ``bloom_bits`` sized for per-gram FPR ~=
-    doc_fpr_target / grams_per_doc (e.g. 2^26 bits = 8 MiB broadcast
-    for a ~25k-gram benchmark) and clean batches skip the join
-    entirely — measured 1.4-1.7x end-to-end on all-clean streams at
-    sf0.1 across four study runs (committed: BENCH_decon_volume.json,
-    which also prices honestly-diverse 10%-contaminated batches at
-    ~0.35x the clean-auto rate: contamination carries its own cost). The sidecar carries the probe set's IDENTITY (gram count +
-    order-independent xor of the hashed grams + the shingle width) and
-    hydration validates it against the live ``benchmark_grams`` content
-    (round-12 ADVICE): a benchmark regenerated while the sidecar
-    persists would otherwise leave a STALE filter whose false negatives
-    silently admit contamination — the one way the no-false-negative
-    invariant could break from outside; a mismatch rebuilds loudly. An
-    explicitly-passed ``bloom_bits`` that disagrees with a VALID
-    sidecar's size raises (delete the sidecar to resize), mirroring the
-    exact gate's check — silently keeping the old size would ignore the
-    caller's ask with no signal. Per batch every exploded gram probes
-    the broadcast bits executor-side; after the first batch, a batch
-    with ZERO maybe-hits never opens the benchmark parquet, and only
-    suspect docs' grams take the exact broadcast confirm join. (The
-    identity validation makes the FIRST batch of every gate INSTANCE
-    read the benchmark once; round 14, per the round-13 ADVICE, an
-    UNREADABLE benchmark at hydration no longer kills a restart when an
-    identity-carrying sidecar exists — the gate warns, trusts the
-    sidecar, and keeps admitting provably-clean batches, while any
-    suspect batch still fails loudly at the exact confirm join until
-    the benchmark is readable again. Restart durability and the
-    stale-filter hazard both land on the safe side: a filter can only
-    go stale via a REGENERATED benchmark, and regeneration makes the
-    benchmark readable, so the next hydration validates against it.) A
-    Bloom false positive costs one
-    small join, a false NEGATIVE cannot happen (no-false-negative
-    kernel invariant), so contamination can never slip through the
-    prescreen. Dropping clean docs is impossible too: the confirm join
-    is exact, so verdicts equal the batch twin's row for row.
+    The benchmark's gram keys live in a static Bloom filter built once
+    (distributed, ``_bloom_or_of_keys``) and persisted to a
+    ``<out>_benchbloom`` sidecar; a restart hydrates it, a crash
+    mid-build leaves it absent and the next start rebuilds. Per batch
+    every exploded gram probes the broadcast filter executor-side, a
+    batch with zero maybe-hits never opens the benchmark parquet, and
+    only suspect docs' grams take the exact broadcast confirm join.
+    ``bloom_bits=None`` sizes the filter with ``bloom_bits_for`` the gram
+    count (~1% per-gram FPR). What matters is the per-DOC rate,
+    1-(1-fpr)^grams_per_doc: at 1% a ~200-gram clean doc is a suspect
+    ~87% of the time, so the confirm join still runs on clean batches.
+    Sized for per-gram FPR ~ doc_fpr_target / grams_per_doc (2^26 bits,
+    an 8 MiB broadcast, for a ~25k-gram benchmark), clean batches skip
+    it: 1.4-1.7x end to end on all-clean streams at sf0.1, while
+    10%-contaminated batches run at ~0.35x the clean rate
+    (BENCH_decon_volume.json). ``bloom_bits`` that disagrees with a valid
+    sidecar's width raises (delete the sidecar to resize).
 
-    Replay safety: the gate is stateless (the filter is read-only), so
-    a replayed batch re-derives identical verdicts; both sinks are
-    PARTITIONED BY a doc_id hash bucket and each batch anti-joins its
-    own rows against the touched buckets before appending (the
-    self-indexing idiom of the exact gate) — idempotent by
-    construction, no sidecar ordering to crash between.
+    The sidecar records the probe set's identity (gram count, xor of the
+    hashed grams, shingle width) and hydration checks it against the
+    live benchmark: a regenerated benchmark would otherwise leave a stale
+    filter whose false negatives admit contamination, so a mismatch
+    rebuilds loudly. The first batch of each gate instance therefore
+    reads the benchmark once. If the benchmark is unreadable then and a
+    sidecar with identity and the same shingle width exists, the gate
+    warns and trusts it: suspect batches still fail at the confirm join
+    until the benchmark is readable again, and a filter can only go
+    stale through a regeneration, which makes the benchmark readable.
 
-    Write path: ``wide_writes=False`` coalesces each sink append to
-    ONE writer task — one file per touched bucket per batch, right at
-    micro-batch granularity where directory churn dominates; at
-    cluster scale, where a micro-batch is itself large,
-    ``wide_writes=True`` runs ``repartition("doc_bucket")`` instead so
-    the append writes one task PER BUCKET in parallel rather than
-    funneling the whole admitted batch through a single task (the
-    sibling exact gate documents the same trade at its append site).
-    The round-14 default ``None`` auto-switches PER APPEND on the
-    frame's row count (``WIDE_WRITES_ROWS``) — the count each append
-    already takes to guard the empty-frame case now does double duty,
-    so auto mode adds no extra job."""
+    Replay safety: the filter is read-only, so a replayed batch
+    re-derives identical verdicts. Both sinks are bucketed by doc_id
+    (``DECON_BUCKETS``) and each append first anti-joins its rows
+    against the buckets they touch, so appends are idempotent; the
+    quarantine is appended before the admitted sink. Raises ValueError
+    when ``bloom_bits`` is not a power of two >= 8."""
     from ..functions.text import word_shingles
 
-    quarantine = out_path.rstrip("/") + "_quarantine"
-    bloom_sidecar = out_path.rstrip("/") + "_benchbloom"
-    state: dict[str, object] = {"bits": None, "nbits": bloom_bits}
-
-    def _bucketed(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "doc_bucket", F.pmod(F.xxhash64("doc_id"), F.lit(DECON_BUCKETS))
-        )
+    _check_bloom_bits(bloom_bits)
+    admitted = _BucketedTable(out_path, "doc_bucket", ("doc_id",), DECON_BUCKETS)
+    quarantine = _BucketedTable(
+        out_path.rstrip("/") + "_quarantine", "doc_bucket", ("doc_id",),
+        DECON_BUCKETS,
+    )
+    bloom = _BloomSidecar(out_path.rstrip("/") + "_benchbloom", bloom_bits)
+    state: dict[str, object] = {"bc": None, "bench": None}
 
     def _append_new(
-        spark, rows: DataFrame, path: str, known_count: int | None = None
+        spark, table: _BucketedTable, rows: DataFrame, n_rows: int | None = None
     ) -> None:
-        """Replay-idempotent append: drop rows already present in the
-        touched buckets (partition-pruned single-column probe), then
-        append — write shape per ``_resolve_wide`` (see the write-path
-        note in the docstring). One count serves BOTH the empty-frame
-        guard and the auto wide-writes switch (round 14, retiring the
-        per-append ``take(1)`` the round-13 review flagged); a caller
-        that already counted the frame passes ``known_count`` so the
-        quarantine path adds no job at all."""
+        """Replay-idempotent append: drop rows already in the touched
+        buckets, then append. One count serves the empty-frame guard and
+        the write shape; a caller that already counted passes ``n_rows``.
+        An empty frame is never written: appending one to a sink that
+        does not exist yet would leave a file-less directory."""
         rows = rows.localCheckpoint()  # decide once: probe AND append
-        if known_count is not None:
-            n = known_count
-        elif wide_writes is not None:
-            # forced shape: only non-emptiness matters — a first-row
-            # probe, not a full cached-scan count (r14 ADVICE)
-            n = 1 if rows.take(1) else 0
-        else:
-            n = rows.count()
-        if n == 0:
-            # nothing to append: writing an empty frame to a NOT-YET-
-            # EXISTING sink would create the file-less directory that
-            # breaks downstream schema inference — the round-13 review
-            # moved the guard here so it covers the admitted sink too
-            # (a 100%-contaminated batch empties it), not just the
-            # quarantine path
+        if n_rows is None:
+            n_rows = rows.count()
+        if n_rows == 0:
             return
-        if table_has_data(spark, path):  # file-less dir == empty sink
-            buckets = [
-                r[0] for r in rows.select("doc_bucket").distinct().collect()
-            ]
-            seen = (
-                spark.read.parquet(path)
-                .filter(F.col("doc_bucket").isin(buckets))
-                .select("doc_id")
+        seen = table.probe(spark, rows)
+        if seen is not None:
+            rows = rows.join(seen.select("doc_id"), "doc_id", "left_anti")
+        table.write(rows, n_rows)
+
+    def _hydrate(spark) -> None:
+        """Hydrate the filter from a sidecar whose identity matches the
+        live benchmark, or build and persist it."""
+        # the probe set's identity, one aggregate over the benchmark; an
+        # unreadable benchmark is held and re-raised on every path that
+        # needs the read
+        n_grams = grams_xor = None
+        bench_err: Exception | None = None
+        try:
+            keys = spark.read.parquet(benchmark_grams).select(
+                F.xxhash64("gram").alias("k")
             )
-            rows = rows.join(seen, "doc_id", "left_anti")
-        shaped = (
-            rows.repartition("doc_bucket") if _resolve_wide(wide_writes, n)
-            else rows.coalesce(1)
-        )
-        shaped.write.mode("append").partitionBy("doc_bucket").parquet(path)
+            ident = keys.agg(
+                F.count("*").alias("n_grams"),
+                F.expr("bit_xor(k)").alias("grams_xor"),
+            ).collect()[0]
+            n_grams = int(ident.n_grams)
+            grams_xor = int(ident.grams_xor or 0)
+        except Exception as ex:  # noqa: BLE001 — held; re-raised on
+            bench_err = ex       # every path that needs the read
+        row = bloom.load(spark)
+        if row is not None:
+            has_identity = "n_grams" in row.__fields__
+            if bench_err is not None and not has_identity:
+                raise bench_err  # pre-identity sidecar: must rebuild
+            if bench_err is not None and int(row.shingle_n) != n:
+                # a sidecar over other-length shingles can never be
+                # trusted: its probes would pass contaminated docs
+                raise ValueError(
+                    f"decon bloom sidecar {bloom.path} was built "
+                    f"over {int(row.shingle_n)}-shingles but this "
+                    f"gate runs n={n}; refusing the trust-sidecar "
+                    f"restart while the benchmark at "
+                    f"{benchmark_grams} is unreadable"
+                ) from bench_err
+            if bench_err is not None:
+                print(
+                    f"WARNING [decon-gate] benchmark set at "
+                    f"{benchmark_grams} is unreadable ({bench_err}); "
+                    f"trusting the identity-carrying sidecar "
+                    f"{bloom.path} so the restart can proceed — "
+                    "if the benchmark was REGENERATED before it "
+                    "became unreadable, this filter is stale; "
+                    "suspect batches will fail loudly at the exact "
+                    "confirm join until the benchmark is readable",
+                    file=sys.stderr,
+                )
+            current = bench_err is not None or (
+                has_identity  # pre-identity sidecars rebuild
+                and int(row.n_grams) == n_grams
+                and int(row.grams_xor) == grams_xor
+                and int(row.shingle_n) == n
+            )
+            if current:
+                bloom.adopt(row)
+            else:
+                print(
+                    f"WARNING [decon-gate] sidecar {bloom.path} does "
+                    f"not match the live benchmark set at {benchmark_grams} "
+                    f"(stored identity vs current n_grams={n_grams} "
+                    f"grams_xor={grams_xor} n={n}) — a stale filter's "
+                    "false negatives would silently admit contamination; "
+                    "rebuilding from the current benchmark",
+                    file=sys.stderr,
+                )
+        if bloom.bits is None:
+            if bench_err is not None:
+                raise bench_err  # build/rebuild requires the keys
+            if bloom.nbits is None:
+                bloom.nbits = bloom_bits_for(n_grams)
+            bloom.bits = _bloom_or_of_keys(keys, bloom.nbits)
+            bloom.persist(
+                spark, (-1, n_grams, grams_xor, n),
+                "last_batch long, n_grams long, grams_xor long, shingle_n long",
+            )
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
-        import numpy as np
-
         spark = batch.sparkSession
-        if state["bits"] is None:  # first batch: hydrate or build
-            _swap_recover(spark, bloom_sidecar)
-            # the probe set's identity — one aggregate over the (small)
-            # benchmark parquet, first batch only. An unreadable
-            # benchmark is held, not raised (round-13 ADVICE: the
-            # identity validation cost restarts their independence from
-            # the benchmark file): when a sidecar WITH identity fields
-            # exists, hydration trusts it and warns — the filter it
-            # carries has no false negatives against the benchmark it
-            # recorded, and the exact confirm join (which needs the real
-            # gram set) only runs on suspect batches, failing THAT batch
-            # loudly if the benchmark is still unreadable then. Every
-            # path that must read the benchmark anyway (no sidecar to
-            # trust, a pre-identity sidecar, a rebuild) re-raises.
-            n_grams = grams_xor = None
-            bench_err: Exception | None = None
-            try:
-                keys = (
-                    spark.read.parquet(benchmark_grams)
-                    .select(F.xxhash64("gram").alias("k"))
-                )
-                ident = keys.agg(
-                    F.count("*").alias("n_grams"),
-                    F.expr("bit_xor(k)").alias("grams_xor"),
-                ).collect()[0]
-                n_grams = int(ident.n_grams)
-                grams_xor = int(ident.grams_xor or 0)
-            except Exception as ex:  # noqa: BLE001 — held; re-raised on
-                bench_err = ex       # every path that needs the read
-            if table_exists(spark, bloom_sidecar):
-                row = spark.read.parquet(bloom_sidecar).collect()[0]
-                has_identity = "n_grams" in row.__fields__
-                if bench_err is not None and not has_identity:
-                    raise bench_err  # pre-identity sidecar: must rebuild
-                if bench_err is not None and int(row.shingle_n) != n:
-                    # benchmark-independent consistency check (r14
-                    # ADVICE): the shingle-length comparison needs no
-                    # benchmark read, and a sidecar built over
-                    # different-length shingles can NEVER be trusted —
-                    # its probes would yield ~zero maybe-hits and admit
-                    # contaminated docs as "provably clean". Re-raise
-                    # the held read error instead of proceeding.
-                    raise ValueError(
-                        f"decon bloom sidecar {bloom_sidecar} was built "
-                        f"over {int(row.shingle_n)}-shingles but this "
-                        f"gate runs n={n}; refusing the trust-sidecar "
-                        f"restart while the benchmark at "
-                        f"{benchmark_grams} is unreadable"
-                    ) from bench_err
-                if bench_err is not None:
-                    print(
-                        f"WARNING [decon-gate] benchmark set at "
-                        f"{benchmark_grams} is unreadable ({bench_err}); "
-                        f"trusting the identity-carrying sidecar "
-                        f"{bloom_sidecar} so the restart can proceed — "
-                        "if the benchmark was REGENERATED before it "
-                        "became unreadable, this filter is stale; "
-                        "suspect batches will fail loudly at the exact "
-                        "confirm join until the benchmark is readable",
-                        file=sys.stderr,
-                    )
-                current = bench_err is not None or (
-                    has_identity  # pre-identity sidecars rebuild
-                    and int(row.n_grams) == n_grams
-                    and int(row.grams_xor) == grams_xor
-                    and int(row.shingle_n) == n
-                )
-                bits = np.frombuffer(bytes(row.bits), dtype=np.uint8)
-                if current and bloom_bits is not None and (
-                    int(bits.size) << 3
-                ) != bloom_bits:
-                    raise ValueError(
-                        f"decon bloom sidecar holds {int(bits.size) << 3} "
-                        f"bits, bloom_bits asks for {bloom_bits}; delete "
-                        f"the sidecar {bloom_sidecar} to rebuild at the "
-                        "new size"
-                    )
-                if current:
-                    state["bits"] = bits.copy()
-                    state["nbits"] = int(bits.size) << 3
-                else:
-                    print(
-                        f"WARNING [decon-gate] sidecar {bloom_sidecar} does "
-                        f"not match the live benchmark set at {benchmark_grams} "
-                        f"(stored identity vs current n_grams={n_grams} "
-                        f"grams_xor={grams_xor} n={n}) — a stale filter's "
-                        "false negatives would silently admit contamination; "
-                        "rebuilding from the current benchmark",
-                        file=sys.stderr,
-                    )
-            if state["bits"] is None:
-                if bench_err is not None:
-                    raise bench_err  # build/rebuild requires the keys
-                if state["nbits"] is None:
-                    target = max(BLOOM_BITS, 10 * n_grams)
-                    state["nbits"] = 1 << (target - 1).bit_length()
-                state["bits"] = _bloom_or_of_keys(keys, state["nbits"])
-                _atomic_overwrite_rows(
-                    spark,
-                    [(state["bits"].tobytes(), -1, n_grams, grams_xor, n)],
-                    "bits binary, last_batch long, n_grams long, "
-                    "grams_xor long, shingle_n long",
-                    bloom_sidecar,
-                )
-        if state.get("bc") is None:
-            # the filter is STATIC (built/hydrated once) — broadcast it
-            # ONCE and reuse across every batch. Honest framing: at the
-            # volume study's 5k-row batches this measured WITHIN NOISE
-            # (scheduling dominates); it is kept because re-broadcasting
-            # an up-to-8-MiB filter every micro-batch is strictly wasted
-            # work that scales with filter size x batch cadence
-            state["bc"] = spark.sparkContext.broadcast(bytes(state["bits"]))
-            # the driver-side numpy copy is dead weight from here on —
-            # keep a True sentinel so the first-batch branch stays
-            # closed and the blob is freed (review finding). foreachBatch
-            # has no stop hook, so bc/bench retention is a documented
-            # per-instance cost: one filter + one small cached frame.
-            state["bits"] = True
-        b = _bucketed(batch).localCheckpoint()  # shingle ONCE below
+        if state["bc"] is None:
+            _hydrate(spark)
+            # the filter is static: broadcast it once per gate instance
+            # (re-broadcasting up to 8 MiB a batch is wasted work that
+            # scales with filter size x batch cadence) and free the
+            # driver copy; foreachBatch has no stop hook, so the
+            # broadcast and the cached benchmark live as long as the gate
+            state["bc"] = spark.sparkContext.broadcast(bytes(bloom.bits))
+            bloom.bits = None
+        b = admitted.tag(batch).localCheckpoint()  # shingle ONCE below
         grams = b.select(
             "doc_id",
             F.explode(word_shingles(F.col("text"), n)).alias("gram"),
         ).withColumn("k", F.xxhash64("gram"))
-        bc = state["bc"]
-        nbits = state["nbits"]
-
-        def _maybe_hit(batches):
-            import numpy as np
-            import pandas as pd
-
-            from akkastreamprocessnpmpackagedependencies_spark.streaming.pipeline import (
-                _bloom_query,
-            )
-
-            filt = np.frombuffer(bc.value, dtype=np.uint8)
-            assert (int(filt.size) << 3) == nbits
-            for pdf in batches:
-                hits = _bloom_query(filt, pdf["k"].to_numpy(dtype=np.int64))
-                out = pdf.loc[hits, ["doc_id"]]
-                if len(out):
-                    yield out.drop_duplicates()
-
         suspects = (
-            grams.select("doc_id", "k")
-            .mapInPandas(_maybe_hit, schema="doc_id long")
+            bloom.probe(grams, state["bc"], "k", ["doc_id"], "doc_id long")
             .distinct()
             .localCheckpoint()  # evaluate the broadcast probe ONCE
         )
-        n_suspect = suspects.count()
-        contaminated = None
-        if n_suspect > 0:
-            # exact confirm: ONLY suspect docs' grams join the real
-            # benchmark set (broadcast — the probe set is small by
-            # construction, as in the batch twin). The frame is STATIC
-            # like the filter: persist it once and reuse across suspect
-            # batches instead of re-reading the parquet every time
-            if state.get("bench") is None:
+        n_cont = 0
+        if suspects.count() > 0:
+            # exact confirm: only suspect docs' grams join the benchmark
+            # set (broadcast: the probe set is small by construction),
+            # persisted once and reused across suspect batches
+            if state["bench"] is None:
                 state["bench"] = (
-                    spark.read.parquet(benchmark_grams)
-                    .select("gram")
-                    .persist()
+                    spark.read.parquet(benchmark_grams).select("gram").persist()
                 )
-            bench = state["bench"]
             contaminated = (
                 grams.join(suspects, "doc_id")
-                .join(F.broadcast(bench), "gram")
+                .join(F.broadcast(state["bench"]), "gram")
                 .groupBy("doc_id")
                 .agg(F.countDistinct("gram").alias("n_gram_hits"))
                 .localCheckpoint()  # feeds quarantine AND the anti-join
             )
             n_cont = contaminated.count()
-            if n_cont == 0:
-                # every suspect was a bloom false positive (round-13
-                # volume study: an all-FP batch used to append an EMPTY
-                # frame here, leaving a file-less quarantine directory
-                # that crashed the NEXT batch's idempotence probe on
-                # schema inference)
-                contaminated = None
-        if contaminated is not None:
+        # an all-false-positive batch writes no quarantine at all
+        if n_cont > 0:
             _append_new(
-                spark,
-                _bucketed(
+                spark, quarantine,
+                admitted.tag(
                     contaminated.withColumn("batch_id", F.lit(int(batch_id)))
                 ),
-                quarantine,
-                known_count=n_cont,  # counted above; > 0 here
+                n_cont,
             )
-            admitted = b.join(
-                contaminated.select("doc_id"), "doc_id", "left_anti"
-            )
-        else:
-            admitted = b
-        _append_new(spark, admitted, out_path)
+            b = b.join(contaminated.select("doc_id"), "doc_id", "left_anti")
+        _append_new(spark, admitted, b)
 
     return docs.writeStream.foreachBatch(_ingest)
 
@@ -3685,35 +3345,10 @@ def streaming_seen_bloom(events: DataFrame, shards: int = BLOOM_SHARDS) -> DataF
     (the throughput topology, as with HLL/CMS); each micro-batch emits
     the shard's packed bit array + event count; the latest row per
     shard feeds ``bloom_merged_bits``."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import numpy as np
-        import pandas as pd
-
-        nbytes = BLOOM_BITS >> 3
-        if state.exists:
-            bits_b, n = state.get
-            bits = np.frombuffer(bytes(bits_b), dtype=np.uint8).copy()
-            n = int(n)
-        else:
-            bits, n = np.zeros(nbytes, dtype=np.uint8), 0
-        for pdf in pdfs:
-            ids = pdf["user_id"].to_numpy(dtype=np.int64)
-            n += ids.size
-            _bloom_update(bits, ids)
-        state.update((bits.tobytes(), n))
-        yield pd.DataFrame(
-            {"shard": [key[0]], "shard_n": [n], "bits": [bits.tobytes()]}
-        )
-
-    return (
-        events.select((F.col("event_id") % shards).alias("shard"), "user_id")
-        .groupBy("shard")
-        .applyInPandasWithState(
-            update, _BLOOM_OUT_SCHEMA, _BLOOM_STATE_SCHEMA, "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _packed_sketch(
+        events, shards, blob="bits", dtype="uint8", shape=(BLOOM_BITS >> 3,),
+        fold=_bloom_update, out_schema=_BLOOM_OUT_SCHEMA,
+        state_schema=_BLOOM_STATE_SCHEMA,
     )
 
 

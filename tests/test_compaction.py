@@ -22,7 +22,6 @@ def _ingest(spark, d, src, corpus, ck, ledger=None):
             .option("maxFilesPerTrigger", 1)
             .parquet(src),
             corpus,
-            wide_writes=False,
             ledger_path=ledger,
         )
         .option("checkpointLocation", ck)

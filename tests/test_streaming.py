@@ -1761,8 +1761,8 @@ def test_append_or_compact_swap_is_crash_recoverable(spark, tmp_path):
     appends = [0]
     for b in range(5):  # compact_every=3 -> one compaction inside
         _append_or_compact(
-            spark.createDataFrame([(b, float(b))], schema), out,
-            schema, appends, compact_every=3,
+            spark.createDataFrame([(b, float(b))], schema), out, appends,
+            compact_every=3,
         )
     rows = {(r.batch_id, r.v) for r in spark.read.parquet(out).collect()}
     assert rows == {(b, float(b)) for b in range(5)}
@@ -1776,7 +1776,7 @@ def test_append_or_compact_swap_is_crash_recoverable(spark, tmp_path):
     fs_rename(spark, out, out + "__compact_tmp")
     assert not table_exists(spark, out)
     _append_or_compact(
-        spark.createDataFrame([(5, 5.0)], schema), out, schema, appends,
+        spark.createDataFrame([(5, 5.0)], schema), out, appends,
         compact_every=3,
     )
     healed = {(r.batch_id, r.v) for r in spark.read.parquet(out).collect()}
@@ -3438,7 +3438,7 @@ def test_write_global_bloom_live_pipeline_and_restart_carry(spark, sf_dir, tmp_p
 
 
 def test_exact_dedup_gate_bloom_prefilter_equivalence_and_probe_skip(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """bloom_prefilter=True must change the gate's ECONOMICS, never its
     answers: (1) on a stream with cross-batch normalized duplicates and
@@ -3454,6 +3454,8 @@ def test_exact_dedup_gate_bloom_prefilter_equivalence_and_probe_skip(
 
     from akkastreamprocessnpmpackagedependencies_spark.session import load_table
 
+    # evaluate the prefilter from the first batch on
+    monkeypatch.setattr(sp, "BLOOM_PREFILTER_MIN_RATIO", 0.0)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = d.filter(F.col("doc_id") % 4 == 1)
     src = str(tmp_path / "bg_src")
@@ -3486,13 +3488,13 @@ def test_exact_dedup_gate_bloom_prefilter_equivalence_and_probe_skip(
     plain = str(tmp_path / "bg_plain")
     bloomed = str(tmp_path / "bg_bloom")
     run(plain, "bg_ck_p")
-    run(bloomed, "bg_ck_b", bloom_prefilter=True, bloom_min_ratio=0.0)
+    run(bloomed, "bg_ck_b", bloom_prefilter=True)
     want = {r.doc_id for r in spark.read.parquet(plain).select("doc_id").collect()}
     got = {r.doc_id for r in spark.read.parquet(bloomed).select("doc_id").collect()}
     assert got == want, "prefilter changed the admitted set"
 
     # (2) full replay, fresh checkpoint: nothing new
-    run(bloomed, "bg_ck_b2", bloom_prefilter=True, bloom_min_ratio=0.0)
+    run(bloomed, "bg_ck_b2", bloom_prefilter=True)
     assert {
         r.doc_id for r in spark.read.parquet(bloomed).select("doc_id").collect()
     } == want
@@ -3543,7 +3545,6 @@ def test_exact_dedup_gate_bloom_prefilter_equivalence_and_probe_skip(
             .parquet(src),
             bloomed,
             bloom_prefilter=True,
-            bloom_min_ratio=0.0,
         )
         .option("checkpointLocation", str(tmp_path / "bg_ck_b"))
         .start()
@@ -3564,7 +3565,9 @@ def test_exact_dedup_gate_bloom_prefilter_equivalence_and_probe_skip(
     )
 
 
-def test_exact_dedup_gate_bloom_crash_window_is_safe(spark, sf_dir, tmp_path):
+def test_exact_dedup_gate_bloom_crash_window_is_safe(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The crash ordering: the sidecar persists BEFORE the corpus
     append, so the exposed window leaves the bloom a strict SUPERSET of
     the corpus. Reconstructed directly: a sidecar containing the keys
@@ -3575,6 +3578,7 @@ def test_exact_dedup_gate_bloom_crash_window_is_safe(spark, sf_dir, tmp_path):
 
     from akkastreamprocessnpmpackagedependencies_spark.session import load_table
 
+    monkeypatch.setattr(sp, "BLOOM_PREFILTER_MIN_RATIO", 0.0)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     batch1 = d.filter(F.col("doc_id") % 10 == 1)
     batch2 = d.filter(F.col("doc_id") % 10 == 2)
@@ -3584,7 +3588,7 @@ def test_exact_dedup_gate_bloom_crash_window_is_safe(spark, sf_dir, tmp_path):
     q = (
         sp.write_exact_dedup_gated(
             spark.readStream.schema(d.schema).parquet(src),
-            corpus, bloom_prefilter=True, bloom_min_ratio=0.0,
+            corpus, bloom_prefilter=True,
         )
         .option("checkpointLocation", str(tmp_path / "cw_ck1"))
         .start()
@@ -3626,7 +3630,7 @@ def test_exact_dedup_gate_bloom_crash_window_is_safe(spark, sf_dir, tmp_path):
     q = (
         sp.write_exact_dedup_gated(
             spark.readStream.schema(d.schema).parquet(src),
-            corpus, bloom_prefilter=True, bloom_min_ratio=0.0,
+            corpus, bloom_prefilter=True,
         )
         .option("checkpointLocation", str(tmp_path / "cw_ck2"))
         .start()
@@ -3654,7 +3658,9 @@ def test_exact_dedup_gate_bloom_crash_window_is_safe(spark, sf_dir, tmp_path):
     assert keepers2 > 0
 
 
-def test_exact_dedup_gate_bloom_backfills_legacy_corpus(spark, sf_dir, tmp_path):
+def test_exact_dedup_gate_bloom_backfills_legacy_corpus(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Enabling bloom_prefilter over a corpus that PREDATES the sidecar
     must backfill the filter from the corpus before trusting any
     negative — without it, every legacy digest reads definitely-new,
@@ -3682,6 +3688,7 @@ def test_exact_dedup_gate_bloom_backfills_legacy_corpus(spark, sf_dir, tmp_path)
     n1 = spark.read.parquet(corpus).count()
     assert not sp.table_exists(spark, corpus + "_bloom")
     # same docs again (ids shifted so they are not self-rows), bloom on
+    monkeypatch.setattr(sp, "BLOOM_PREFILTER_MIN_RATIO", 0.0)
     _time.sleep(1.1)
     docs.withColumn("doc_id", F.col("doc_id") + 3_000_000).coalesce(
         1
@@ -3689,7 +3696,7 @@ def test_exact_dedup_gate_bloom_backfills_legacy_corpus(spark, sf_dir, tmp_path)
     q = (
         sp.write_exact_dedup_gated(
             spark.readStream.schema(d.schema).parquet(src),
-            corpus, bloom_prefilter=True, bloom_min_ratio=0.0,
+            corpus, bloom_prefilter=True,
         )
         .option("checkpointLocation", str(tmp_path / "lb_ck2"))
         .start()
@@ -4136,82 +4143,6 @@ def test_decontamination_gate_explicit_bits_mismatch_raises(
     run("bm_ck3")  # auto mode accepts the hydrated size
 
 
-def test_decontamination_gate_wide_writes_layout(spark, sf_dir, tmp_path):
-    """Round-12 verdict #5: the gate's append path is switchable —
-    ``wide_writes=False`` (default) funnels each append through ONE
-    writer task, ``wide_writes=True`` repartitions on ``doc_bucket`` so
-    buckets write in parallel at cluster-scale batch sizes. Either way
-    the on-disk layout invariant holds — exactly one file per touched
-    bucket per batch, rows hash-routed to their bucket — and both
-    sinks' CONTENT is identical across the two modes."""
-    import glob as _glob
-
-    from akkastreamprocessnpmpackagedependencies_spark.session import load_table
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    bench_path = str(tmp_path / "ww_bench")
-    N = 5
-    sp.write_benchmark_grams(
-        spark, d.filter(F.col("doc_id") < 20), bench_path, n=N
-    )
-    # one contaminated + many clean docs, in ONE batch per mode
-    stream_docs = d.filter(
-        (F.col("doc_id") >= 20) & (F.col("doc_id") < 60)
-    ).unionByName(
-        d.filter(F.col("doc_id") == 7).select(
-            F.lit(9_200_001).alias("doc_id"), "text"
-        )
-    )
-    src = str(tmp_path / "ww_src")
-    stream_docs.coalesce(1).write.parquet(src)
-
-    def run(out, wide):
-        q = (
-            sp.write_decontaminated(
-                spark.readStream.schema(d.schema).parquet(src),
-                bench_path, out, n=N, wide_writes=wide,
-            )
-            .option(
-                "checkpointLocation", str(tmp_path / f"ww_ck_{wide}")
-            )
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    def layout(path) -> dict[str, int]:
-        return {
-            os.path.basename(b): len(_glob.glob(os.path.join(b, "*.parquet")))
-            for b in _glob.glob(os.path.join(path, "doc_bucket=*"))
-        }
-
-    out_narrow = str(tmp_path / "ww_narrow")
-    out_wide = str(tmp_path / "ww_wide")
-    run(out_narrow, wide=False)
-    run(out_wide, wide=True)
-    for out in (out_narrow, out_wide):
-        lay = layout(out)
-        assert lay and all(nf == 1 for nf in lay.values()), (
-            "one batch touched each bucket once -> one file per bucket",
-            out, lay,
-        )
-    assert layout(out_narrow).keys() == layout(out_wide).keys()
-    for sink in ("", "_quarantine"):
-        a = {
-            tuple(r) for r in spark.read.parquet(out_narrow + sink)
-            .drop("batch_id").collect()
-        }
-        b = {
-            tuple(r) for r in spark.read.parquet(out_wide + sink)
-            .drop("batch_id").collect()
-        }
-        assert a == b, f"content diverged between write modes in {sink or 'admit'}"
-    assert 9_200_001 in {
-        r.doc_id
-        for r in spark.read.parquet(out_narrow + "_quarantine").collect()
-    }
-
-
 def test_decontamination_gate_survives_all_false_positive_batches(
     spark, sf_dir, tmp_path
 ):
@@ -4271,7 +4202,7 @@ def test_decontamination_gate_survives_all_false_positive_batches(
     assert quarantined == {9_300_001}
 
 
-def test_gates_survive_fileless_corpus_dirs(spark, sf_dir, tmp_path):
+def test_gates_survive_fileless_corpus_dirs(spark, sf_dir, tmp_path, monkeypatch):
     """Round-13 hardening (found on the decon twin): a corpus directory
     can exist with NO data files — a crash between mkdir and the first
     commit, or an all-empty first batch — and ``table_exists`` is
@@ -4305,12 +4236,13 @@ def test_gates_survive_fileless_corpus_dirs(spark, sf_dir, tmp_path):
     assert spark.read.parquet(ecorpus).count() == n_docs
 
     # exact gate, bloom backfill over the file-less corpus
+    monkeypatch.setattr(sp, "BLOOM_PREFILTER_MIN_RATIO", 0.0)
     bcorpus = str(tmp_path / "fl_bloom")
     fileless(bcorpus)
     q = (
         sp.write_exact_dedup_gated(
             spark.readStream.schema(d.schema).parquet(src),
-            bcorpus, bloom_prefilter=True, bloom_min_ratio=0.0,
+            bcorpus, bloom_prefilter=True,
         )
         .option("checkpointLocation", str(tmp_path / "fl_bck"))
         .start()
@@ -4332,18 +4264,51 @@ def test_gates_survive_fileless_corpus_dirs(spark, sf_dir, tmp_path):
     assert spark.read.parquet(lcorpus).count() == n_docs
 
 
-def test_sibling_gates_wide_writes_parity(spark, sf_dir, tmp_path):
-    """Round-13: the exact and LSH gates' appends are switchable like
-    the decon gate's. Either mode yields identical corpus CONTENT and
-    the same one-file-per-touched-bucket-per-batch layout for the
-    bucket-partitioned tables (exact corpus; LSH band sidecar)."""
+@pytest.mark.parametrize("gate", ["exact", "lsh", "decon"])
+def test_gate_write_shapes_share_layout_and_content(
+    spark, sf_dir, tmp_path, monkeypatch, gate
+):
+    """Each gate's append is written in either shape: narrow
+    (coalesce(1), forced by a threshold no batch reaches) and wide
+    (repartition(bucket), forced by a threshold of 0). Either way the
+    bucketed tables (exact corpus; LSH band sidecar; decon admitted and
+    quarantine sinks) hold exactly one file per touched bucket per batch
+    on the same buckets, and the gate's content is identical."""
     import glob as _glob
 
     from akkastreamprocessnpmpackagedependencies_spark.session import load_table
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs = d.filter(F.col("doc_id") % 25 == 9)
-    src = str(tmp_path / "wp_src")
+    if gate == "exact":
+        start = sp.write_exact_dedup_gated
+        # (table suffix, bucket column, compared columns or None)
+        tables = [("", "dig_bucket", ["doc_id", "digest", "dig_bucket"])]
+    elif gate == "lsh":
+        start = sp.write_dedup_gated
+        tables = [("", None, ["doc_id"]), ("_bands", "band_bucket", None)]
+    else:
+        bench_path = str(tmp_path / "ww_bench")
+        sp.write_benchmark_grams(
+            spark, d.filter(F.col("doc_id") < 20), bench_path, n=5
+        )
+        # one contaminated + many clean docs, in ONE batch per shape
+        docs = d.filter(
+            (F.col("doc_id") >= 20) & (F.col("doc_id") < 60)
+        ).unionByName(
+            d.filter(F.col("doc_id") == 7).select(
+                F.lit(9_200_001).alias("doc_id"), "text"
+            )
+        )
+
+        def start(s, out):
+            return sp.write_decontaminated(s, bench_path, out, n=5)
+
+        tables = [
+            ("", "doc_bucket", ["doc_id", "text", "doc_bucket"]),
+            ("_quarantine", "doc_bucket", ["doc_id", "n_gram_hits", "doc_bucket"]),
+        ]
+    src = str(tmp_path / "ww_src")
     docs.coalesce(1).write.parquet(src)
 
     def layout(path, col) -> dict[str, int]:
@@ -4353,94 +4318,81 @@ def test_sibling_gates_wide_writes_parity(spark, sf_dir, tmp_path):
         }
 
     results = {}
-    for wide in (False, True):
-        ec = str(tmp_path / f"wp_exact_{wide}")
+    for shape, threshold in (("narrow", 10**12), ("wide", 0)):
+        monkeypatch.setattr(sp, "WIDE_WRITES_ROWS", threshold)
+        out = str(tmp_path / f"ww_{shape}")
         q = (
-            sp.write_exact_dedup_gated(
-                spark.readStream.schema(d.schema).parquet(src),
-                ec, wide_writes=wide,
-            )
-            .option("checkpointLocation", str(tmp_path / f"wp_eck_{wide}"))
+            start(spark.readStream.schema(d.schema).parquet(src), out)
+            .option("checkpointLocation", str(tmp_path / f"ww_ck_{shape}"))
             .start()
         )
         _drain(q)
-        lc = str(tmp_path / f"wp_lsh_{wide}")
-        q = (
-            sp.write_dedup_gated(
-                spark.readStream.schema(d.schema).parquet(src),
-                lc, wide_writes=wide,
+        results[shape] = {
+            suffix: (
+                col and layout(out + suffix, col),
+                cols and {
+                    tuple(r)
+                    for r in spark.read.parquet(out + suffix).select(*cols).collect()
+                },
             )
-            .option("checkpointLocation", str(tmp_path / f"wp_lck_{wide}"))
-            .start()
-        )
-        _drain(q)
-        results[wide] = {
-            "exact_rows": {
-                tuple(r)
-                for r in spark.read.parquet(ec)
-                .select("doc_id", "digest", "dig_bucket").collect()
-            },
-            "exact_layout": layout(ec, "dig_bucket"),
-            "lsh_docs": {r.doc_id for r in spark.read.parquet(lc).collect()},
-            "bands_layout": layout(lc + "_bands", "band_bucket"),
+            for suffix, col, cols in tables
         }
-    a, b = results[False], results[True]
-    assert a["exact_rows"] == b["exact_rows"]
-    assert a["lsh_docs"] == b["lsh_docs"]
-    for key in ("exact_layout", "bands_layout"):
-        assert a[key].keys() == b[key].keys(), key
-        # one batch per mode -> exactly one file per touched bucket
-        assert all(nf == 1 for nf in a[key].values()), (key, a[key])
-        assert all(nf == 1 for nf in b[key].values()), (key, b[key])
-
-
-def test_resolve_wide_threshold_edges():
-    """Inclusive at the threshold; explicit flags override any count."""
-    assert sp._resolve_wide(None, sp.WIDE_WRITES_ROWS) is True
-    assert sp._resolve_wide(None, sp.WIDE_WRITES_ROWS - 1) is False
-    assert sp._resolve_wide(None, 0) is False
-    assert sp._resolve_wide(True, 0) is True
-    assert sp._resolve_wide(False, 10**9) is False
+    for suffix, col, cols in tables:
+        (lay_n, rows_n), (lay_w, rows_w) = (
+            results["narrow"][suffix], results["wide"][suffix]
+        )
+        assert rows_n == rows_w, f"content diverged between shapes in {suffix!r}"
+        if col:
+            assert lay_n.keys() == lay_w.keys(), suffix
+            # one batch per shape -> exactly one file per touched bucket
+            for lay in (lay_n, lay_w):
+                assert lay and all(nf == 1 for nf in lay.values()), (suffix, lay)
+    if gate == "decon":
+        assert 9_200_001 in {r[0] for r in results["narrow"]["_quarantine"][1]}
 
 
 def test_wide_writes_auto_switch_on_batch_row_count(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """Round-13 verdict #5: ``wide_writes=None`` (the new default) must
-    pick the write shape PER BATCH from the batch's row count instead
-    of leaving a deployment whose micro-batches grow funneling every
-    append through one writer task. The two shapes produce the SAME
-    one-file-per-touched-bucket layout (coalesce(1): one task holding
-    all buckets; repartition(bucket): one task per bucket), so the
-    decision itself is observed through ``_resolve_wide`` — spied, not
-    stubbed: the real decision runs, against a lowered threshold, on
-    all THREE gates, below and above it."""
+    """Each gate picks its append shape PER BATCH from the batch's row
+    count, so a deployment whose micro-batches grow stops funneling every
+    append through one writer task. The switch is inclusive: with
+    ``WIDE_WRITES_ROWS`` set to exactly the big batch's count, the small
+    batch appends narrow (coalesce(1)) and the big one wide
+    (repartition(bucket)), on all THREE gates. Both shapes write the same
+    layout, so the shape is observed on the frame method that
+    ``_BucketedTable.write`` calls: spied, not stubbed."""
     from akkastreamprocessnpmpackagedependencies_spark.session import load_table
 
-    real = sp._resolve_wide
-    calls: list[tuple[bool | None, int, bool]] = []
+    real_write = sp._BucketedTable.write
+    picked: list[str] = []
 
-    def spy(ww, n):
-        out = real(ww, n)
-        calls.append((ww, n, out))
-        return out
+    def spy_write(self, rows, n_rows, *args, **kw):
+        with monkeypatch.context() as m:
+            for name, shape in (("coalesce", "narrow"), ("repartition", "wide")):
+                real = getattr(type(rows), name)
 
-    monkeypatch.setattr(sp, "_resolve_wide", spy)
-    monkeypatch.setattr(sp, "WIDE_WRITES_ROWS", 25)
+                def shaped(df, *a, _real=real, _shape=shape):
+                    picked.append(_shape)
+                    return _real(df, *a)
+
+                m.setattr(type(rows), name, shaped)
+            real_write(self, rows, n_rows, *args, **kw)
+
+    monkeypatch.setattr(sp._BucketedTable, "write", spy_write)
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     small = d.filter(F.col("doc_id") % 50 == 3)   # ~10 docs at sf0.001
     big = d.filter(F.col("doc_id") % 4 == 1)      # ~125 docs
     n_small, n_big = small.count(), big.count()
-    assert n_small < 25 <= n_big, (n_small, n_big)
+    assert n_small < n_big, (n_small, n_big)
+    monkeypatch.setattr(sp, "WIDE_WRITES_ROWS", n_big)
 
-    def run(gate, src_df, out, **kw):
+    def run(gate, src_df, out):
         src = out + "_src"
         src_df.coalesce(1).write.parquet(src)
         q = (
-            gate(
-                spark.readStream.schema(d.schema).parquet(src), out, **kw
-            )
+            gate(spark.readStream.schema(d.schema).parquet(src), out)
             .option("checkpointLocation", out + "_ck")
             .start()
         )
@@ -4448,8 +4400,7 @@ def test_wide_writes_auto_switch_on_batch_row_count(
 
     # benchmark grams from synthetic gibberish no documents row contains,
     # so ZERO docs quarantine and the decon gate makes exactly one
-    # (admitted-sink) append per batch — the decision trace stays
-    # deterministic
+    # (admitted-sink) append per batch
     bench_path = str(tmp_path / "aw_bench")
     sp.write_benchmark_grams(
         spark,
@@ -4461,42 +4412,25 @@ def test_wide_writes_auto_switch_on_batch_row_count(
         n=5,
     )
     gates = [
-        (sp.write_exact_dedup_gated, {}),
-        (sp.write_dedup_gated, {}),
-        (
-            lambda s, out, **kw: sp.write_decontaminated(
-                s, bench_path, out, n=5, **kw
-            ),
-            {},
-        ),
+        sp.write_exact_dedup_gated,
+        sp.write_dedup_gated,
+        lambda s, out: sp.write_decontaminated(s, bench_path, out, n=5),
     ]
-    for i, (gate, kw) in enumerate(gates):
-        for label, src_df, expect_wide in (
-            ("small", small, False), ("big", big, True),
+    for i, gate in enumerate(gates):
+        for label, src_df, expect in (
+            ("small", small, "narrow"), ("big", big, "wide"),
         ):
-            calls.clear()
+            picked.clear()
             out = str(tmp_path / f"aw_{i}_{label}")
-            run(gate, src_df, out, **kw)
-            # every auto decision this stream made agrees with the
-            # threshold side (the decon gate decides per sink append;
-            # its only append here is the full admitted batch — the
-            # gibberish benchmark guarantees zero quarantined docs)
-            assert calls, "gate never consulted the write-shape switch"
-            assert all(ww is None for ww, _, _ in calls)
-            assert all(got is expect_wide for _, _, got in calls), (
-                label, calls,
-            )
+            run(gate, src_df, out)
+            assert picked, "gate never wrote through the bucketed append"
+            assert all(p == expect for p in picked), (label, picked)
             # content sanity: every streamed doc landed in the sink
             assert spark.read.parquet(out).count() == src_df.count()
-            # an explicit flag still overrides the auto switch
-            calls.clear()
-            forced = str(tmp_path / f"aw_{i}_{label}_forced")
-            run(gate, src_df, forced, wide_writes=not expect_wide, **kw)
-            assert all(got is (not expect_wide) for _, _, got in calls)
 
 
 def test_exact_dedup_gate_bloom_adaptive_skip_probes_until_corpus_dwarfs_batch(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """Round-12 adaptive skip (BENCH_AB_bloom_gate.json adjudication):
     while the filter's key estimate says the corpus is under
@@ -4524,13 +4458,13 @@ def test_exact_dedup_gate_bloom_adaptive_skip_probes_until_corpus_dwarfs_batch(
     ck = str(tmp_path / "as_ck")
     docs.coalesce(1).write.parquet(src)
 
-    def run(**kw):
+    def run():
         q = (
             sp.write_exact_dedup_gated(
                 spark.readStream.schema(d.schema)
                 .option("maxFilesPerTrigger", 1)
                 .parquet(src),
-                corpus, bloom_prefilter=True, **kw,
+                corpus, bloom_prefilter=True,
             )
             .option("checkpointLocation", ck)
             .start()
@@ -4564,11 +4498,13 @@ def test_exact_dedup_gate_bloom_adaptive_skip_probes_until_corpus_dwarfs_batch(
     # ratio beating this corpus/batch shape — at sf0.1 test data the
     # corpus would cross the default threshold and mask the probe
     # (round-12 review finding)
+    monkeypatch.setattr(sp, "BLOOM_PREFILTER_MIN_RATIO", 1e30)
     with _pytest.raises(Exception, match="FOREACH_BATCH|Parquet|parquet"):
-        run(bloom_min_ratio=1e30)
+        run()
     # same checkpoint, evaluation forced: the failed batch replays,
     # reads bloom-negative, never opens the corpus, and lands whole
-    run(bloom_min_ratio=0.0)
+    monkeypatch.setattr(sp, "BLOOM_PREFILTER_MIN_RATIO", 0.0)
+    run()
     import pyarrow.parquet as pq
 
     new_rows = 0
@@ -4622,9 +4558,10 @@ def test_exact_dedup_gate_bloom_saturation_warns_once(
 def test_exact_dedup_gate_bloom_expected_keys_sizes_filter(
     spark, sf_dir, tmp_path
 ):
-    """``bloom_expected_keys`` sizes the filter at ~10 bits/key rounded
-    up to a power of two (never below the default): 300k expected keys
-    -> 4,194,304 bits (2^22), visible in the persisted sidecar blob."""
+    """``bloom_bits_for`` sizes the filter for an expected key count at
+    ~10 bits/key rounded up to a power of two (never below the default):
+    300k expected keys -> 4,194,304 bits (2^22), visible in the persisted
+    sidecar blob."""
     from akkastreamprocessnpmpackagedependencies_spark.session import load_table
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -4635,15 +4572,42 @@ def test_exact_dedup_gate_bloom_expected_keys_sizes_filter(
     q = (
         sp.write_exact_dedup_gated(
             spark.readStream.schema(d.schema).parquet(src),
-            corpus, bloom_prefilter=True, bloom_expected_keys=300_000,
+            corpus, bloom_prefilter=True, bloom_bits=sp.bloom_bits_for(300_000),
         )
         .option("checkpointLocation", str(tmp_path / "ek_ck"))
         .start()
     )
     q.processAllAvailable()
     q.stop()
+    assert sp.bloom_bits_for(300_000) == 1 << 22
     side = spark.read.parquet(corpus + "_bloom").collect()[0]
     assert len(bytes(side.bits)) == (1 << 22) >> 3
+
+
+def test_gates_reject_bad_bloom_config_when_built(spark, tmp_path):
+    """Bad Bloom configuration fails when the gate is built, naming the
+    value, instead of inside the first batch's executor task (a width
+    that is not a power of two) or not at all (``bloom_bits`` on an
+    exact gate whose prefilter is off). Builds the gates; no stream
+    starts."""
+    import re
+
+    stream = spark.readStream.format("rate").load()
+    corpus, out = str(tmp_path / "corpus"), str(tmp_path / "out")
+    bench = str(tmp_path / "bench")
+    for bits in (1000, 0, -8, 4, (1 << 20) + 1, 1024.0, True):
+        msg = re.escape(f"bloom_bits={bits!r}")
+        with pytest.raises(ValueError, match=msg):
+            sp.write_exact_dedup_gated(
+                stream, corpus, bloom_prefilter=True, bloom_bits=bits
+            )
+        with pytest.raises(ValueError, match=msg):
+            sp.write_decontaminated(stream, bench, out, bloom_bits=bits)
+    with pytest.raises(ValueError, match="bloom_bits=1048576.*bloom_prefilter"):
+        sp.write_exact_dedup_gated(stream, corpus, bloom_bits=1 << 20)
+    # the smallest valid width builds on both gates
+    sp.write_exact_dedup_gated(stream, corpus, bloom_prefilter=True, bloom_bits=8)
+    sp.write_decontaminated(stream, bench, out, bloom_bits=8)
 
 
 def test_bloom_or_of_keys_matches_single_update_any_partitioning(spark):

@@ -164,14 +164,14 @@ def main() -> None:
         # DEFAULT 2^20 bits, which 500k keys saturate (fill ~0.85, FPR
         # ~0.52 — half the all-new rows read maybe-seen and still probe;
         # the round-12 saturation warning fires here by design); and the
-        # prefilter SIZED for the corpus via bloom_expected_keys (~10
+        # prefilter SIZED for the corpus via bloom_bits_for (~10
         # bits/key -> 2^23, FPR ~1%), the configuration the docstring
         # actually recommends for a corpus this size
         arms = (
             ("plain", {}),
             ("bloom_default_bits", {"bloom_prefilter": True}),
             ("bloom_sized", {"bloom_prefilter": True,
-                             "bloom_expected_keys": n_seed}),
+                             "bloom_bits": sp.bloom_bits_for(n_seed)}),
         )
         for arm, kw in arms:
             corpus = os.path.join(work, f"seeded_corpus_{arm}")

@@ -1,34 +1,29 @@
 """Measure the narrow/wide gate-append crossover that grounds
-``WIDE_WRITES_ROWS`` (round 14: the auto switch initially landed with a
-REASONED threshold of 100k rows — ~100 MiB, about a second of
-single-task parquet encoding — and this study replaced the reasoning
-with a measurement, the repo's measured-not-asserted rule; the
-committed BENCH_wide_writes.json moved the constant to 25k, the
-smallest size where the wide shape's win is decisive — 0.34x — rather
-than inside spread-overlap noise).
+``WIDE_WRITES_ROWS``: the smallest batch size at which the wide shape's
+win is decisive rather than inside spread-overlap noise.
 
-What is timed: the exact write expression every gate's append runs —
-``coalesce(1)`` (narrow) vs ``repartition(bucket)`` (wide) followed by
-``write.mode("append").partitionBy(bucket).parquet(...)`` — over a
+What is timed: the append every gate runs, ``_BucketedTable.write`` in
+``streaming/pipeline.py``: ``coalesce(1)`` (narrow) or
+``repartition(bucket)`` (wide), then
+``write.mode("append").partitionBy(bucket).parquet(...)``, over a
 localCheckpointed synthetic docs frame (doc_id + ~1 KiB text + a
 64-bucket hash column, the DECON_BUCKETS/EXACT_DEDUP_BUCKETS layout),
-at a ladder of batch sizes bracketing the threshold. Shapes are
-INTERLEAVED per rep (narrow, wide, narrow, wide, ...) so ambient drift
-lands on both arms — the ab_chargram discipline — and every rep writes
-to a fresh directory so no arm pays accumulated-listing costs the
-other skipped.
+at a ladder of batch sizes bracketing the threshold. Each shape is
+forced by setting ``WIDE_WRITES_ROWS`` just above (narrow) or at (wide)
+the batch size. Shapes are INTERLEAVED per rep (narrow, wide, narrow,
+wide, ...) so ambient drift lands on both arms, and every rep writes to
+a fresh directory so no arm pays accumulated-listing costs the other
+skipped.
 
-Honest scope: this is a single-JVM local[N] measurement against a
-local filesystem. The headline finding transfers to any regime: both
-shapes write the SAME one-file-per-touched-bucket layout (hash
+Scope: a single-JVM local[N] measurement against a local filesystem.
+Both shapes write the SAME one-file-per-touched-bucket layout (hash
 partitioning lands each bucket in exactly one task), so the trade is
-purely the wide shape's extra shuffle stage vs its parallel encode —
-there is no small-files argument for the narrow shape, only a
-per-micro-batch stage-latency one, which is why tiny batches stay
-narrow. A 1000-executor cluster writing to an object store moves the
-constants (shuffle round-trip latency up, per-task encode throughput
-flat), which is exactly why the switch is a module constant with a
-manual override rather than a hardcoded shape.
+the wide shape's extra shuffle stage against its parallel encode; there
+is no small-files argument for the narrow shape, only a per-batch
+stage-latency one, which is why tiny batches stay narrow. A cluster
+writing to an object store moves the constants (shuffle round-trip
+latency up, per-task encode throughput flat), so re-measure there
+before moving the threshold.
 
 Usage: python tools/bench_wide_writes.py [out_json]
 Default out: BENCH_wide_writes.json in the repo root.
@@ -75,6 +70,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    from akkastreamprocessnpmpackagedependencies_spark.streaming import pipeline as sp
 
     work = tempfile.mkdtemp(prefix="wide_writes_")
     try:
@@ -93,15 +89,14 @@ def main() -> None:
             "tokens_per_doc": TOKENS_PER_DOC,
             "sizes": {},
         }
+        threshold = sp.WIDE_WRITES_ROWS
         for size in SIZES:
             rows = (
-                spark.range(size)
-                .select(
-                    F.col("id").alias("doc_id"),
-                    tok_cols.alias("text"),
-                    F.pmod(F.xxhash64("id"), F.lit(BUCKETS)).alias(
-                        "doc_bucket"
-                    ),
+                sp._BucketedTable(work, "doc_bucket", ("doc_id",), BUCKETS)
+                .tag(
+                    spark.range(size).select(
+                        F.col("id").alias("doc_id"), tok_cols.alias("text")
+                    )
                 )
                 .localCheckpoint()  # input build must not be timed
             )
@@ -109,16 +104,15 @@ def main() -> None:
             samples: dict[str, list[float]] = {"narrow": [], "wide": []}
             for rep in range(reps):
                 for shape in ("narrow", "wide"):  # interleaved
-                    out = os.path.join(work, f"o_{size}_{shape}_{rep}")
-                    shaped = (
-                        rows.coalesce(1) if shape == "narrow"
-                        else rows.repartition("doc_bucket")
+                    table = sp._BucketedTable(
+                        os.path.join(work, f"o_{size}_{shape}_{rep}"),
+                        "doc_bucket", ("doc_id",), BUCKETS,
                     )
+                    sp.WIDE_WRITES_ROWS = size + 1 if shape == "narrow" else size
                     t0 = time.perf_counter()
-                    shaped.write.mode("append").partitionBy(
-                        "doc_bucket"
-                    ).parquet(out)
+                    table.write(rows, size)
                     samples[shape].append(time.perf_counter() - t0)
+            sp.WIDE_WRITES_ROWS = threshold
             med = {
                 s: round(statistics.median(v), 3) for s, v in samples.items()
             }
@@ -141,11 +135,7 @@ def main() -> None:
             if r["wide_over_narrow"] <= 1.0
         ]
         result["local_crossover_rows"] = min(cross) if cross else None
-        from akkastreamprocessnpmpackagedependencies_spark.streaming.pipeline import (
-            WIDE_WRITES_ROWS,
-        )
-
-        result["wide_writes_rows_constant"] = WIDE_WRITES_ROWS
+        result["wide_writes_rows_constant"] = threshold
         with open(out_json, "w") as f:
             json.dump(result, f, indent=2)
             f.write("\n")

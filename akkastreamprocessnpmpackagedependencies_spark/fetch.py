@@ -141,7 +141,9 @@ def http_enrich(
     (default: real network via requests) with one transport instance per
     partition — exponential backoff on 5xx/connection errors and a token
     bucket at ``rate_per_sec`` (element-granular, unlike the micro-batch
-    cap in the streaming source)."""
+    cap in the streaming source). Any other ``mode`` raises ValueError."""
+    if mode not in ("fixture", "live"):
+        raise ValueError(f"http_enrich mode must be 'fixture' or 'live', got {mode!r}")
     if mode == "fixture" and docs is None:
         from .fixtures import registry_docs
 

@@ -24,6 +24,7 @@ Emitted schema matches the fixture docs table: name, status_code, doc.
 
 from __future__ import annotations
 
+import json
 import math
 from collections.abc import Iterator
 
@@ -35,6 +36,24 @@ from pyspark.sql.datasource import (
 )
 
 SCHEMA = "name string, status_code int, doc string"
+MODES = ("fixture", "live", "replay")
+
+
+def _mode(options: dict) -> str:
+    """The source mode, after checking that the options it needs are set.
+    A misspelt mode, a fetch mode without ``packages_path`` or a replay
+    without ``transcript_path`` raises ValueError when the reader is
+    built, instead of serving fixture docs or failing inside the first
+    micro-batch."""
+    raw = options.get("mode") or "fixture"
+    mode = raw.lower()
+    if mode not in MODES:
+        raise ValueError(f"npmregistry option mode must be one of {MODES}, got {raw!r}")
+    if mode != "fixture" and not options.get("packages_path"):
+        raise ValueError(f"npmregistry option packages_path is required in {mode} mode")
+    if mode == "replay" and not options.get("transcript_path"):
+        raise ValueError("npmregistry option transcript_path is required in replay mode")
+    return mode
 
 
 def _int_option(options: dict, key: str, default: int, minimum: int) -> int:
@@ -78,8 +97,17 @@ def _package_names(options: dict) -> list[str] | None:
         return [ln.strip() for ln in f if ln.strip()]
 
 
+def _read_transcript(options: dict) -> dict[str, list]:
+    """The replay transcript {name: [outcome, ...]} at ``transcript_path``."""
+    with open(options["transcript_path"]) as f:
+        return json.load(f)
+
+
 def _load_docs(
-    options: dict, names_override: list[str] | None = None, **fetch
+    options: dict,
+    names_override: list[str] | None = None,
+    transcript: dict[str, list] | None = None,
+    **fetch,
 ) -> list[tuple[str, int, str]]:
     """Resolve the (name, status, doc) universe once per reader.
 
@@ -87,24 +115,22 @@ def _load_docs(
     SparkSession access (data sources must be self-contained).
     ``names_override`` restricts a fetch-mode call to a subset of the
     package list — the batch reader passes each partition's own slice so
-    N partitions fetch the list ONCE between them, not N times. ``fetch``
-    (``rate_per_sec``, ``max_retries``, already validated by the reader)
-    goes to the ThrottledFetcher in fetch modes."""
-    mode = (options.get("mode") or "fixture").lower()
+    N partitions fetch the list ONCE between them, not N times. In replay
+    mode ``transcript`` is the already-parsed transcript (read from
+    ``transcript_path`` when None); each call replays it from the start.
+    ``fetch`` (``rate_per_sec``, ``max_retries``, already validated by
+    the reader) goes to the ThrottledFetcher in fetch modes."""
+    mode = _mode(options)
     names = names_override if names_override is not None else _package_names(options)
-    if mode in ("live", "replay"):
+    if mode != "fixture":
         # Both run the SAME ThrottledFetcher engine (retry/backoff/token
-        # bucket); only the transport differs. ``replay`` reads a JSON
-        # transcript {name: [outcome, ...]} from ``transcript_path`` so the
-        # live-path code executes with no network (record/replay harness).
+        # bucket); only the transport differs. ``replay`` serves the
+        # transcript so the live-path code executes with no network
+        # (record/replay harness).
         from ..fetch import ReplayTransport, ThrottledFetcher, requests_transport
 
-        assert names is not None, f"{mode} mode requires packages_path"
         if mode == "replay":
-            import json
-
-            with open(options["transcript_path"]) as f:
-                transport = ReplayTransport(json.load(f))
+            transport = ReplayTransport(transcript if transcript is not None else _read_transcript(options))
         else:  # pragma: no cover - no network in the test env
             transport = requests_transport()
         fetcher = ThrottledFetcher(transport, **fetch)
@@ -132,6 +158,7 @@ def _load_docs(
 class NpmRegistryBatchReader(DataSourceReader):
     def __init__(self, options: dict) -> None:
         self.options = options
+        self.mode = _mode(options)
         self.n_parts = _int_option(options, "numpartitions", 4, 1)
         self.rate_per_sec = _rate_per_sec(options)
         self.max_retries = _int_option(options, "max_retries", 3, 0)
@@ -140,8 +167,7 @@ class NpmRegistryBatchReader(DataSourceReader):
         return [InputPartition(i) for i in range(self.n_parts)]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        mode = (self.options.get("mode") or "fixture").lower()
-        if mode in ("live", "replay"):
+        if self.mode != "fixture":
             # fetch ONLY this partition's stride of the package list —
             # each executor fetches its slice exactly once (review fix:
             # the old per-partition _load_docs fetched the whole list N
@@ -152,7 +178,6 @@ class NpmRegistryBatchReader(DataSourceReader):
             # partition previously spent the full budget -> N x the
             # intended rate against the remote service).
             names = _package_names(self.options)
-            assert names is not None, f"{mode} mode requires packages_path"
             yield from _load_docs(
                 self.options,
                 names_override=names[partition.value :: self.n_parts],
@@ -180,23 +205,24 @@ class NpmRegistryStreamReader(SimpleDataSourceStreamReader):
     replay re-fetched everything to serve one slice. Fixture mode keeps
     the cheap cached local read. Live-mode replay determinism is the
     registry's to give (a re-fetch may observe new data); ``replay``
-    mode serves canned transcripts and replays exactly."""
+    mode serves canned transcripts and replays exactly. The transcript
+    is parsed once per reader and every slice replays a fresh
+    ``ReplayTransport`` over it, so re-reading a slice sees the same
+    outcome sequence (retries included) without re-parsing the file."""
 
     def __init__(self, options: dict) -> None:
         self.options = options
+        self.mode = _mode(options)
         self.rate = _int_option(options, "rate", 5, 1)
         self.rate_per_sec = _rate_per_sec(options)
         self.max_retries = _int_option(options, "max_retries", 3, 0)
         self._rows: list[tuple] | None = None
         self._names: list[str] | None = None
-
-    def _fetch_mode(self) -> bool:
-        return (self.options.get("mode") or "fixture").lower() in ("live", "replay")
+        self._transcript: dict[str, list] | None = None
 
     def _universe_names(self) -> list[str]:
         if self._names is None:
             names = _package_names(self.options)
-            assert names is not None, "live/replay mode requires packages_path"
             # sorted: slice order must equal the sorted-row order
             # _load_docs emits, so offsets index one stable universe
             self._names = sorted(names)
@@ -208,13 +234,18 @@ class NpmRegistryStreamReader(SimpleDataSourceStreamReader):
         return self._rows
 
     def _size(self) -> int:
-        return len(self._universe_names()) if self._fetch_mode() else len(self._universe())
+        return len(self._universe_names()) if self.mode != "fixture" else len(self._universe())
 
     def _slice(self, lo: int, hi: int) -> list[tuple]:
-        if self._fetch_mode():
+        if lo == hi:
+            return []
+        if self.mode != "fixture":
+            if self.mode == "replay" and self._transcript is None:
+                self._transcript = _read_transcript(self.options)
             return _load_docs(
                 self.options,
                 names_override=self._universe_names()[lo:hi],
+                transcript=self._transcript,
                 rate_per_sec=self.rate_per_sec,
                 max_retries=self.max_retries,
             )

@@ -2508,15 +2508,18 @@ def write_exact_dedup_gated(
 
     Measured economics: the evaluation and the admitted-key fold cost
     about four Spark jobs per batch, which dominate while the corpus is
-    batch-sized (BENCH_AB_bloom_gate.json: 1.39x the plain gate's wall).
+    batch-sized (BENCH_AB_bloom_gate.json: 1.39x the plain gate's wall;
+    ``tools/gate_arm.py`` arms ``plain`` and ``bloom`` time both gates).
     So while the filter's own key estimate is under
     ``BLOOM_PREFILTER_MIN_RATIO`` x the batch, the evaluation is skipped
     and only the fold and persist run, keeping the superset invariant
     from the first batch (1.22x). Against a corpus 100x the batch the
     prefilter sized with ``bloom_bits_for`` is 1.35x faster end to end
     including its backfill; at the 2^20-bit default that corpus saturates
-    the filter and it runs 0.82x (BENCH_exact_gate_volume.json). Enable
-    it when the corpus will dwarf the batch.
+    the filter and it runs 0.82x (BENCH_exact_gate_volume.json, whose
+    10/4/1-batch splits are ``tools/gate_arm.py`` arms ``plain``,
+    ``plain_4`` and ``plain_1``). Enable it when the corpus will dwarf
+    the batch.
 
     ``ledger_path`` maintains the incremental snapshot ledger (see
     ``_ledger_append_batch``), appended after the corpus; the crash
@@ -2847,9 +2850,11 @@ def _ledger_append_batch(
     pair); the crash window between the two is healed by
     ``_ledger_reconcile`` at next start.
 
-    Cost discipline (BENCH_AB_ledger.json): the first cut re-read the
-    ledger's max version and full state every batch — 1.39x the plain
-    gate at micro-batch sizes, pure overhead-bound jobs. The state is
+    Cost discipline (BENCH_AB_ledger.json; ``tools/gate_arm.py`` arms
+    ``plain`` and ``ledger`` time the gate without and with it): the
+    first cut re-read the ledger's max version and full state every
+    batch — 1.39x the plain gate at micro-batch sizes, pure
+    overhead-bound jobs. The state is
     O(buckets), so it now CARRIES in driver memory across batches
     (hydrated once after the reconcile — the same carry idiom as the
     global-sketch sinks), leaving exactly one extra Spark job per
@@ -3043,7 +3048,9 @@ def write_decontaminated(
     an 8 MiB broadcast, for a ~25k-gram benchmark), clean batches skip
     it: 1.4-1.7x end to end on all-clean streams at sf0.1, while
     10%-contaminated batches run at ~0.35x the clean rate
-    (BENCH_decon_volume.json). ``bloom_bits`` that disagrees with a valid
+    (BENCH_decon_volume.json; ``tools/gate_arm.py`` arms
+    ``decon_clean_auto``, ``decon_clean_sized`` and
+    ``decon_contaminated``). ``bloom_bits`` that disagrees with a valid
     sidecar's width raises (delete the sidecar to resize).
 
     The sidecar records the probe set's identity (gram count, xor of the
@@ -3226,11 +3233,11 @@ def write_decontaminated(
 BLOOM_BITS = 1 << 20  # 128 KiB of bits per shard
 BLOOM_K = 4  # hash functions; FPR ~ (1 - e^{-kn/m})^k
 BLOOM_SHARDS = 4
-# exact-gate prefilter tuning (round 12): evaluate the membership
+# exact-gate prefilter tuning: evaluate the membership
 # prefilter only once the filter's own key estimate says the corpus is
 # at least this many times the batch — below that the evaluation's
 # fixed per-batch jobs cost more than the tiny probe they can skip
-# (adjudicated: BENCH_AB_bloom_gate.json, 1.39x at corpus == batch)
+# (BENCH_AB_bloom_gate.json: 1.39x at corpus == batch)
 BLOOM_PREFILTER_MIN_RATIO = 8
 # one-shot saturation warning threshold: fill 0.5 with k=4 is ~6% FPR,
 # the knee past which the prefilter's probe-skip benefit decays fast

@@ -273,15 +273,13 @@ HEADLINE = [
 ]
 
 
-# Streaming surface (round-7 verdict item #3): each stateful/windowed
-# operator timed over the sf events fixture, sliced into time-ordered
-# files so several micro-batches run. Round 15: STREAM_PASSES full
-# passes per op (was one) — the r13->r14 compare flagged six untouched
-# ops in BOTH directions on single-pass numbers, adjudicated ambient by
-# tools/ab_streaming_noise.py; median-of-3 kills that noise at the
-# source, and the recorded [min, median, max] rows_per_sec_band lets
-# tools/bench_compare.py suppress cross-session swings the way the
-# batch side's spread bands already do.
+# Streaming surface: each stateful/windowed operator timed over the sf
+# events fixture, sliced into time-ordered files so several micro-batches
+# run. Each op runs STREAM_PASSES full passes and reports the median:
+# single-pass rows/s swung both ways on untouched ops (session noise, as
+# BENCH_AB_streaming_noise.json records), and the recorded [min, median,
+# max] rows_per_sec_band lets tools/bench_compare.py suppress
+# cross-session swings the way the batch side's spread bands already do.
 STREAM_N_FILES = 6
 STREAM_FILES_PER_TRIGGER = 2
 STREAM_PASSES = 3

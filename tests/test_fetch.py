@@ -221,7 +221,7 @@ def test_batch_reader_fetches_only_its_partition_slice(monkeypatch, tmp_path):
 
     calls, rates = [], []
 
-    def spy(options, names_override=None, **fetch):
+    def spy(options, names_override=None, transcript=None, **fetch):
         calls.append(names_override)
         rates.append(fetch["rate_per_sec"])
         return [(n, 200, "{}") for n in (names_override or [])]
@@ -274,11 +274,107 @@ def test_registry_readers_reject_bad_options():
             (reader, {"rate_per_sec": "fast"}),
             (reader, {"rate_per_sec": "nan"}),
         ]
+        bad += [
+            (reader, {"mode": "replya"}),
+            (reader, {"mode": "live"}),
+            (reader, {"mode": "replay", "transcript_path": "t.json"}),
+        ]
     for reader, options in bad:
         with pytest.raises(ValueError, match=next(iter(options))):
             reader(options)
+    # a replay reader without a transcript names the missing option
+    for reader in (NpmRegistryStreamReader, NpmRegistryBatchReader):
+        with pytest.raises(ValueError, match="transcript_path"):
+            reader({"mode": "replay", "packages_path": "p.txt"})
+    # http_enrich checks its mode before it touches the frame
+    with pytest.raises(ValueError, match="mode"):
+        fetch.http_enrich(None, mode="fixtures")
     # the smallest valid values; rate_per_sec=0 means unthrottled
     assert NpmRegistryStreamReader({"rate": "1", "max_retries": "0", "rate_per_sec": "0"}).rate == 1
     assert NpmRegistryBatchReader({"numpartitions": "1", "rate_per_sec": "0"}).n_parts == 1
     assert NpmRegistryStreamReader({}).rate == 5
     assert NpmRegistryBatchReader({}).n_parts == 4
+
+
+def _replay_reader(tmp_path, transcript: dict, names: list[str], **options):
+    from akkastreamprocessnpmpackagedependencies_spark.sources.registry import NpmRegistryStreamReader
+
+    pkgs = tmp_path / "packages.txt"
+    pkgs.write_text("".join(f"{n}\n" for n in names))
+    tpath = tmp_path / "transcript.json"
+    tpath.write_text(json.dumps(transcript))
+    opts = {
+        "mode": "replay",
+        "packages_path": str(pkgs),
+        "transcript_path": str(tpath),
+        "rate_per_sec": "0",
+        "max_retries": "0",
+        **options,
+    }
+    return NpmRegistryStreamReader(opts), opts
+
+
+# "beta" answers 502 once, then 200: with no retries each fresh replay of
+# its slice must observe the 502 again
+_FLAKY = {
+    "alpha": [[200, '{"versions": {}}']],
+    "beta": [502, [200, '{"versions": {"1.0.0": {}}}']],
+    "delta": ["error"],
+    "epsilon": [[200, "{}"]],
+}
+_NAMES = ["epsilon", "alpha", "beta", "gamma", "delta"]
+
+
+def test_replay_reader_parses_transcript_once(monkeypatch, tmp_path):
+    """One parse of the transcript serves every ``read`` of a replay
+    stream reader, and its rows equal a fresh parse per slice."""
+    from akkastreamprocessnpmpackagedependencies_spark.sources import registry as reg
+
+    reader, opts = _replay_reader(tmp_path, _FLAKY, _NAMES, rate="2")
+    loads = []
+    real_load = reg.json.load
+
+    def spy(f):
+        loads.append(f.name)
+        return real_load(f)
+
+    monkeypatch.setattr(reg.json, "load", spy)
+    offset, slices = reader.initialOffset(), []
+    while True:
+        batch, nxt = reader.read(offset)
+        rows = list(batch)
+        if not rows:
+            break
+        slices.append((offset["index"], nxt["index"], rows))
+        offset = nxt
+    assert loads == [opts["transcript_path"]]
+    assert [(lo, hi) for lo, hi, _ in slices] == [(0, 2), (2, 4), (4, 5)]
+    names = sorted(_NAMES)
+    for lo, hi, rows in slices:
+        assert rows == reg._load_docs(opts, names_override=names[lo:hi], rate_per_sec=0, max_retries=0)
+    assert [r[:2] for _, _, rows in slices for r in rows] == [
+        ("alpha", 200), ("beta", 502), ("delta", 0), ("epsilon", 200), ("gamma", 404)
+    ]
+
+
+def test_replay_reader_rereads_a_slice_identically(tmp_path):
+    """``readBetweenOffsets`` over a slice already read replays the same
+    outcome sequence: "beta" fails with 502 again instead of seeing the
+    200 a shared transport would have moved on to."""
+    reader, _ = _replay_reader(tmp_path, _FLAKY, _NAMES, rate="5")
+    first, end = reader.read(reader.initialOffset())
+    first = list(first)
+    again = list(reader.readBetweenOffsets({"index": 0}, end))
+    assert again == first
+    assert dict((n, c) for n, c, _ in again)["beta"] == 502
+
+
+def test_empty_slice_touches_no_file():
+    """An empty slice returns no rows without opening the package list or
+    the transcript (neither path exists here)."""
+    from akkastreamprocessnpmpackagedependencies_spark.sources.registry import NpmRegistryStreamReader
+
+    reader = NpmRegistryStreamReader(
+        {"mode": "replay", "packages_path": "/nonexistent/p.txt", "transcript_path": "/nonexistent/t.json"}
+    )
+    assert list(reader.readBetweenOffsets({"index": 3}, {"index": 3})) == []

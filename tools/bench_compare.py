@@ -9,28 +9,26 @@ driver-recorded ``BENCH_r{N}.json``. A driver file's payload sits under
 ``parsed``; when the driver's capture window truncated the line
 (``parsed: null`` — BENCH_r04.json is exactly this), the loader
 re-parses what it can from the ``tail`` string by scanning the longest
-``"name": float`` run, so a truncated round still yields its surviving
-queries instead of silently comparing nothing. Prints every query whose
-median changed by more than the ratio (default 1.5x either way) plus
-adds/removes, so a round's bench deltas are triaged in one look instead
-of eyeballing two JSON blobs.
+``"name": float`` run, so a truncated artifact still yields its
+surviving queries instead of silently comparing nothing. Prints every
+query whose median changed by more than the ratio (default 1.5x either
+way) plus adds/removes, so a change's bench deltas are triaged in one
+look instead of eyeballing two JSON blobs.
 
-Session normalization (round-8, after THREE consecutive rounds of
-ambient-drift audit cost — r5 phantom swings, r6 chargram +50%, r7 a
-uniform 1.66x session that flagged 89 of 96 untouched queries): bench.py
-now times a fixed calibration micro-workload (deterministic in-memory
-agg + one shuffle, no parquet, bracketing the measured passes) and
-records its median. When BOTH artifacts carry it, every NEW median and
+Session normalization: ambient drift between sessions can shift every
+query uniformly (one session ran 1.66x slower and flagged 89 of 96
+untouched queries), so bench.py times a fixed calibration
+micro-workload (deterministic in-memory agg + one shuffle, no parquet,
+bracketing the measured passes) and records its median. When BOTH artifacts carry it, every NEW median and
 band is divided by (new_cal / old_cal) before any flagging logic — the
 calibration measures the session, never the code, so a uniformly
 shifted session cancels out. ``--normalize median`` is the fallback for
-pre-round-8 artifacts without calibration: it divides by the median
+artifacts without calibration: it divides by the median
 per-query ratio instead (a uniform shift moves that median; real
 regressions in a handful of queries do not). ``--normalize none``
 disables both.
 
-Noise-band suppression (round-7, TIGHTENED round-8 per ADVICE): when
-BOTH files carry the per-query ``spread`` ([min, median, max] over the
+Noise-band suppression: when BOTH files carry the per-query ``spread`` ([min, median, max] over the
 measured passes), a super-threshold delta is suppressed as noise ONLY if
 the (normalized) new MEDIAN lies inside the old [min, max] band — mere
 band overlap let one outlier pass inflate a band enough to mask a
@@ -39,9 +37,9 @@ back to median-only flagging. Suppressed deltas are summarized so they
 stay auditable.
 
 Exits non-zero when an input yields ZERO queries — that is a broken
-artifact, not an empty delta (round-4 ADVICE); explained deltas stay
-exit 0 (see the PLANS.md bench-methodology note). With
-``--fail-on-regression`` (round-8 verdict #3, the verify_all gate) it
+artifact, not an empty delta; explained deltas stay exit 0 (see the
+PLANS.md bench-methodology note). With ``--fail-on-regression`` (the
+verify_all gate) it
 ALSO exits non-zero when any query's normalized median is >ratio slower
 AND outside the old sample band — the confirmed-regression definition;
 in-band deltas remain suppressed noise and speedups stay exit 0."""
@@ -96,7 +94,7 @@ def load(
                 )
             return qs, {}, None, {}, {}, None, frozenset()
     cal = d.get("calibration")
-    py_cal = d.get("calibration_pyworker")  # compact-line scalar (r12+)
+    py_cal = d.get("calibration_pyworker")  # compact-line scalar
     if isinstance(cal, dict):  # BENCH_FULL carries the whole record
         py = cal.get("pyworker") or {}
         py_cal = py.get("median")
@@ -104,13 +102,13 @@ def load(
     raw_tags = d.get("pyworker_queries")
     tags = frozenset(raw_tags or [])
     if raw_tags is None:
-        # r14+ compact lines carry their own (kept-query-intersected)
+        # current compact lines carry their own (kept-query-intersected)
         # tag list, which the branch above prefers — including a
         # present-but-empty list, which is authoritative ("none of the
         # kept queries are pyworker"), not missing data. Only genuinely
-        # tagless artifacts (pre-r14 compact lines) reach here; backfill
-        # from the CURRENT checkout's bench.py and say so out loud
-        # (round-12 ADVICE): the live tag set may not describe what an
+        # tagless artifacts (older compact lines) reach here; backfill
+        # from the CURRENT checkout's bench.py and say so out loud,
+        # because the live tag set may not describe what an
         # OLD artifact measured — a query added to PYWORKER_QUERIES
         # since then would silently switch normalization classes for
         # that artifact's side
@@ -167,7 +165,7 @@ def session_norm(
                 statistics.median(ratios),
                 f"median per-query ratio over {len(ratios)} common queries",
             )
-    return 1.0, "no calibration in both artifacts (pre-round-8); not normalized"
+    return 1.0, "no calibration in both artifacts; not normalized"
 
 
 def pyworker_norm(
@@ -181,17 +179,17 @@ def pyworker_norm(
     label: str = "pyworker normalization",
 ) -> float | None:
     """Divisor for PYWORKER-tagged queries, or None to fall back to the
-    JVM divisor. Both calibrations present: their ratio. Pre-round-12
-    artifact on either side: dividing tagged queries by the JVM
-    calibration is known to phantom-flag them wholesale when only the
-    JVM side of the session shifted (demonstrated r11 AND r12), so the
+    JVM divisor. Both calibrations present: their ratio. An artifact
+    without the pyworker calibration on either side: dividing tagged
+    queries by the JVM calibration phantom-flags them wholesale when
+    only the JVM side of the session shifted (seen in two sessions), so the
     tagged class self-normalizes by its own median ratio when >=5 are
     in common — a uniform python-side shift cancels while a single real
     regression still stands out; a class-wide coordinated regression is
     the blind spot, which is what the printed divisor and the
-    --drift-since line are for. Shared by the per-round comparison and
-    the cumulative-drift line (the drift total used to re-introduce the
-    exact phantom this fixes — round-12 review finding)."""
+    --drift-since line are for. Shared by the pairwise comparison and
+    the cumulative-drift line, so the drift total cannot re-introduce
+    the phantom this avoids."""
     if mode not in ("cal", "auto"):
         return None
     if old_pycal and new_pycal and old_pycal > 0:
@@ -232,9 +230,9 @@ def pyworker_norm(
 
 def median_in_band(median: float, band: list[float]) -> bool:
     """True when ``median`` lies inside the [min, .., max] sample band —
-    the round-8 suppression rule (new median within OLD band), strictly
-    tighter than the round-7 band-overlap rule a single outlier pass
-    could satisfy forever."""
+    the suppression rule (new median within OLD band), strictly tighter
+    than band overlap, which a single outlier pass could satisfy
+    forever."""
     return band[0] <= median <= band[-1]
 
 
@@ -256,8 +254,8 @@ def main() -> None:
         del argv[i : i + 2]
     if "--normalize" in argv:
         i = argv.index("--normalize")
-        # round-8 ADVICE: a trailing --normalize raised IndexError and a
-        # typo'd mode fell through to a misleading "no calibration" note
+        # a trailing --normalize or a typo'd mode must not fall through
+        # to a misleading "no calibration" note
         if i + 1 >= len(argv) or argv[i + 1] not in _MODES:
             got = argv[i + 1] if i + 1 < len(argv) else "(nothing)"
             sys.exit(
@@ -290,11 +288,10 @@ def main() -> None:
         print(f"session normalization: dividing new timings by {norm:.3f} ({why})")
     else:
         print(f"session normalization: off ({why})")
-    # pyworker twin (round-12): queries tagged python-worker-bound are
-    # normalized by the mapInPandas calibration instead — the JVM
-    # calibration over-corrects them when only the JVM side of the
-    # session shifted (round-11's phantom uniform ~1.2x on untouched
-    # python-heavy queries)
+    # pyworker twin: queries tagged python-worker-bound are normalized
+    # by the mapInPandas calibration instead — the JVM calibration
+    # over-corrects them when only the JVM side of the session shifted
+    # (a phantom uniform ~1.2x on untouched python-heavy queries)
     py_tags = new_tags or old_tags
     py_norm = pyworker_norm(
         old, new, old_pycal, new_pycal, py_tags, mode, norm
@@ -309,9 +306,7 @@ def main() -> None:
         a, b = old[q], new[q] / _norm_for(q)
         if (b == 0) != (a == 0):
             # a measured query can't take literally 0s on either side —
-            # suspicious artifact value, not a real delta (round-4 ADVICE:
-            # the b>0 guard hid the new-side case; the old-side case is
-            # the same disease in OLD.json)
+            # suspicious artifact value on either side, not a real delta
             flagged.append((0.0, q, a, b))
         elif a > 0 and (b / a >= ratio or (b > 0 and a / b >= ratio)):
             if q in old_sp and q in new_sp and median_in_band(b, old_sp[q]):
@@ -339,7 +334,7 @@ def main() -> None:
         print(f"added   ({len(added)}): {', '.join(added)}")
     if removed:
         print(f"removed ({len(removed)}): {', '.join(removed)}")
-    # streaming surface (BENCH_FULL round 8+): compare rows/s per op,
+    # streaming surface (BENCH_FULL "streaming"): compare rows/s per op,
     # normalized the same way (rows/s scales INVERSELY with session
     # slowness, so multiply by norm)
     s_both = sorted(set(old_str) & set(new_str))
@@ -348,13 +343,12 @@ def main() -> None:
         a = old_str[op].get("rows_per_sec") or 0
         b = (new_str[op].get("rows_per_sec") or 0) * norm
         if a and b and (a / b >= ratio or b / a >= ratio):
-            # round 15: bench.py now records a cross-pass
-            # rows_per_sec_band per op (median-of-STREAM_PASSES); the
-            # batch side's suppression rule applies unchanged — a swing
-            # whose normalized new rate still lies inside the OLD band
-            # is session noise, not a regression (the r13->r14 six-ops-
-            # both-directions signature tools/ab_streaming_noise.py
-            # adjudicated as ambient)
+            # bench.py records a cross-pass rows_per_sec_band per op
+            # (median-of-STREAM_PASSES); the batch side's suppression
+            # rule applies unchanged — a swing whose normalized new rate
+            # still lies inside the OLD band is session noise, not a
+            # regression (BENCH_AB_streaming_noise.json records such
+            # swings in both directions on untouched ops)
             oband = old_str[op].get("rows_per_sec_band")
             if oband and median_in_band(b, sorted(oband)):
                 s_suppressed += 1
@@ -377,7 +371,7 @@ def main() -> None:
             f"{s_flagged}"
             + (f"; noise-suppressed: {s_suppressed}" if s_suppressed else "")
         )
-    # kernel surface (BENCH_FULL round 10+): pure-numpy rows/s per
+    # kernel surface (BENCH_FULL "kernels"): pure-numpy rows/s per
     # sketch kernel, normalized by the KERNEL calibration (the numpy
     # twin of the session calibration — Spark's JVM calibration can't
     # see non-JVM work). rows/s scales inversely with host slowness, so
@@ -394,8 +388,7 @@ def main() -> None:
             # flag phantom regressions or mask real ones — say so loudly
             # instead of silently normalizing by 1.0
             k_norm = 1.0
-            # name each missing side — with BOTH absent the old
-            # message blamed only 'old' (round-11 ADVICE)
+            # name each missing side, both when both are absent
             missing = [
                 s for s, c in (("old", ko_cal), ("new", kn_cal)) if not c
             ]
@@ -433,16 +426,16 @@ def main() -> None:
         + (f"; noise-suppressed: {len(suppressed)}" if suppressed else "")
     )
     if drift_since:
-        # cumulative-drift line (round-9 verdict #6): sub-threshold creep
-        # (r8->r9 was 1.11x) compounds invisibly across rounds when each
-        # r->r+1 comparison stays inside the flag ratio; anchoring a
+        # cumulative-drift line: sub-threshold creep (1.11x in one step)
+        # compounds invisibly across changes when each pairwise
+        # comparison stays inside the flag ratio; anchoring a
         # second total against the OLDEST calibration-bearing artifact
         # makes the accumulated drift a printed, gateable number.
         b0, _, b0_cal, _, _, b0_pycal, b0_tags = load(drift_since)
         d_norm, d_why = session_norm(b0, new, b0_cal, new_cal, mode)
         # the drift total divides tagged queries by their own class
-        # divisor too — summing them under the JVM divisor re-created
-        # the phantom uniform shift this round fixed (review finding)
+        # divisor too — summing them under the JVM divisor re-creates
+        # the phantom uniform shift pyworker_norm avoids
         d_tags = new_tags or b0_tags
         d_pynorm = pyworker_norm(
             b0, new, b0_pycal, new_pycal, d_tags, mode, d_norm,
@@ -476,7 +469,7 @@ def main() -> None:
         with open(json_flags, "w") as f:
             json.dump({"regressed": regressed}, f)
     if fail_on_regression:
-        # gate mode (round-8 verdict #3): a CONFIRMED regression — the
+        # gate mode: a CONFIRMED regression — the
         # normalized new median is >ratio slower AND outside the old
         # sample band (in-band deltas were already suppressed above) —
         # fails the run. Speedups and zero-artifact anomalies stay

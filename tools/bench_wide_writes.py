@@ -44,11 +44,10 @@ sys.path.insert(0, REPO)
 
 SIZES = (1_000, 2_500, 5_000, 10_000, 25_000, 100_000, 400_000)
 REPS = 5
-# round 15 (r14 verdict #4): the 5k rung showed wide 0.76x with NEARLY
-# separated spreads at 5 reps — re-measure the small rungs at triple
-# the rep count (and add 1k/2.5k/10k rungs) to decide whether the
-# threshold halves. Large rungs stay at REPS (their spreads were
-# already decisively separated and each rep is seconds long).
+# Rungs below SMALL_CUTOFF sit near the crossover, where the two shapes'
+# spreads nearly overlap at 5 reps, so they take REPS_SMALL reps. Large
+# rungs stay at REPS: their spreads separate decisively and each rep is
+# seconds long.
 REPS_SMALL = 15
 SMALL_CUTOFF = 25_000
 BUCKETS = 64  # DECON_BUCKETS == EXACT_DEDUP_BUCKETS

@@ -28,7 +28,6 @@ SHOWCASE = [
     ("events_value_rolling_1h", "time-RANGE window frame"),
     ("events_hourly_gapfill", "spine generation + gap-fill + carry-forward"),
     ("topk_per_customer_agg", "per-group top-k via bounded array agg (no window sort)"),
-    # round-3 additions
     ("nation_market_share", "Q8 shape: four broadcast dims, two fact shuffles, ratio agg"),
     ("late_shipment_suppliers", "Q21 shape: key-only derived sets + two semi joins"),
     ("chargram_jaccard_pairs", "banded LSH + hashed-shingle int-array verify"),
@@ -37,13 +36,11 @@ SHOWCASE = [
     ("quality_filter_composite", "pure column-expression quality gates, single scan"),
     ("pack_sequences", "distributed two-pass prefix sum; sharded window, offsets broadcast"),
     ("tfidf_top_terms_per_doc", "tf agg -> df re-agg join (AQE-broadcast) -> per-doc top-k"),
-    # round-4 additions
     ("approx_sketches_exact", "exact twin of the sketch query: distinct counts + discrete percentiles"),
     ("kmeans_assignments", "final Lloyd assignment (broadcast argmin against checkpointed centroids)"),
     ("multimodal_decode_real", "real PPM decode through Arrow-batched mapInPandas"),
     ("multimodal_decode_webp", "VP8L WebP encode+decode fused in one Arrow-batched pass"),
     ("min_cost_supplier", "Q2 shape: correlated MIN as window-min — single fact scan"),
-    # round-15 additions (merged from r15-staging)
     ("containment_prefix_pairs", "PPJoin prefix filter: rarest-shingle index equi-join -> exact containment verify"),
     ("neardup_source_matrix", "LSH pair rollup to an unordered source-pair matrix"),
     ("dedup_incremental", "corpus-vs-delta banded LSH: cost scales with the delta"),
@@ -72,110 +69,60 @@ SHOWCASE = [
     ("dataset_shuffle_order", "seeded epoch shuffle: bucketed global rank on uniform hash key"),
     ("multimodal_decode_audio", "real WAV decode: wave-module parse in Arrow-batched mapInPandas"),
     ("events_mad_outliers", "robust MAD fences: three partial-agg passes, broadcast scalar frames"),
-    # round-5 additions
     ("pca_project_fixed_basis", "recorded-basis projection: committed literals, one Arrow-batched pass"),
     ("pii_redact", "regexp redaction chain: row-local codegen, zero exchanges, sha-pinned output"),
     ("chunk_documents", "overlapping token chunking: generate+explode, zero exchanges"),
     ("bigram_lm_probs", "bigram LM stats: partial-agg counts, exact two-phase salted top-K"),
     ("corpus_budget_select", "token-budget selection: ckpt'd scores, bucketed distributed prefix sum"),
-    # round-16 addition
     ("join_strategy_advisor", "join pre-flight: per-edge 1-row dim-size + ceil-skew reductions, O(edges) output"),
 ]
 
 PREAMBLE_NOTES = """\
-## Bench methodology (round 4)
+## Bench methodology
 
 `bench.py` reports the MEDIAN of 3 timed runs per query after one full
 unmeasured warmup pass, and the timed span includes query CONSTRUCTION
 (eager builders — the LSH family localCheckpoints its verified pairs so
-the signature cache can be released — are charged honestly). Rationale:
-round 3's flagged regressions (`cosine_topk_bruteforce` 3.4x,
-`window_rank_variants` 2.4x on byte-identical code) disappeared under
-median-of-3 (r4: 0.400 s / 0.462 s, back at r2 levels), confirming them
-as one-shot JIT/GC scheduling artifacts of the single-JVM loop, not plan
-regressions. Deltas that REMAIN under this methodology are real; the
-intentional ones:
+the signature cache can be released — are charged). One-shot timings of
+byte-identical code swung 2-3x from JIT/GC scheduling in the single-JVM
+loop; the median of 3 removes that class, so deltas that remain are
+real. Two costs are charged on purpose:
 
-- `kmeans_clusters`/`kmeans_assignments` (~4 s): full Lloyd now runs
-  inside the timed span instead of leaking into untimed construction;
-- `neardup_clusters` (~2 s): alternating-star rounds are 2 actions + a
-  checkpoint each — the price of bounded convergence on adversarial
-  components;
-- the LSH/simhash family (`minhash_lsh_neardup` 0.34->0.8 s,
-  `simhash_candidate_pairs` 1.2->2.7, `simhash_fingerprints`
-  0.14->~0.5-1.0, `cosine_topk_lsh` 0.27->0.6, `fuzzy_dedup_keep_one`
-  0.39->2.4): the round-3 numbers were FLATTERED by the cache leak the
-  round-3 verdict ordered fixed (#7) — persisted signature frames were
-  never released, and Spark's cache manager matches plan FRAGMENTS, so
-  every later family query in the bench loop silently reused them.
-  With caches correctly released (asserted empty after each query in
-  tests/test_llm_ops.py), each query now pays its own full cost.
-  Verified in isolation: simhash_fingerprints steady-state is ~0.55 s
-  in a fresh session — the 0.14 s r3 reading was a cross-query cache
-  hit, not achievable per-query cost.
+- iterative queries (`kmeans_clusters`, `kmeans_assignments`,
+  `neardup_clusters`, `npm_dependency_pagerank`, `npm_transitive_deps`)
+  run their iterations and eager checkpoints inside the timed span: the
+  price of bounded lineage at any iteration count (tests/test_plans.py
+  proves the plan stays flat at raised constants);
+- each LSH/simhash query releases its persisted signature frames
+  (asserted empty in tests/test_llm_ops.py), so it pays its own full
+  cost: Spark's cache manager matches plan FRAGMENTS, and a leaked frame
+  would let every later family query reuse it.
 
-Sub-second drifts of <0.35 s absolute on small aggregate queries
-(bracket_revenue, promo_revenue_ratio, ...) are single-JVM run noise at
-median-of-3 resolution.
+Each measured pass visits the suite in a different seeded-shuffled
+order, so session interference hits different queries each pass.
+BENCH_FULL.json records per-query [min, median, max] spread, and the
+stdout line is trimmed to fit a ~2000-char capture tail (totals +
+flagship + slowest queries; the full map stays in BENCH_FULL.json).
+`tools/bench_compare.py` divides new timings by the ratio of a
+calibration micro-workload (deterministic in-memory agg + one shuffle,
+no parquet; CAL_RUNS samples bracketing the measured passes), because
+between-session ambient shifts move every query uniformly, and
+suppresses a delta only when the normalized new MEDIAN lies inside the
+old band. BENCH_FULL also carries a "streaming" section — rows/s and
+per-micro-batch latency spread for the stateful/windowed operators over
+time-sliced sf event files — compared with the inverse normalization
+(rows/s scales inversely with session slowness).
 
-Round-5 expected deltas (construction still charged): the iterative npm
-graph queries (`npm_dependency_pagerank`, `npm_transitive_deps`) now
-``ckpt`` every round — each eager localCheckpoint is an action INSIDE
-the timed span, so their numbers trade a little fixture-scale time for
-bounded lineage at any iteration count (tests/test_plans.py proves the
-plan stays flat at raised constants). `session_overlap_pairs`
-checkpoints its session frame once instead of deriving sessionize twice
-— strictly less work. `multimodal_decode_audio` gained the ASCII/non-
-empty guard filter (row-local, negligible). Since round 5 the bench
-also writes the full result (notes included) to BENCH_FULL.json and
-prints a compact final line, so the driver's bounded stdout capture can
-parse it again (r4's line outgrew the window).
-
-Round-7 de-noise: each of the 3 measured passes now visits the suite in
-a different seeded-shuffled order, BENCH_FULL.json records per-query
-[min, median, max] spread, the stdout line is trimmed to fit the
-driver's measured ~2000-char capture tail (totals + flagship + slowest
-queries; full map stays in BENCH_FULL.json), and
-`tools/bench_compare.py` suppresses deltas whose spread bands overlap.
-Adjudication of the r6->r7 compare (old artifact has no spread, so all
-flags shown): `chargram_jaccard_pairs` 3.09->5.19 s in-suite flagged
-1.68x on UNTOUCHED code — its r7 spread band is [3.57, 14.1] and a
-fresh-session standalone median is 2.74 s (faster than r6), so the
-in-suite number is neighbor interference, the exact class the spread
-recording now makes self-suppressing; `tfidf_top_terms_per_doc` 0.42x
-and `grouped_median_pandas` 0.63x are improvements of the same noise
-class. Common-96-query total: 0.99x (flat).
-
-Round-8 session normalization: rounds 5-7 each lost audit time to
-BETWEEN-session ambient shifts the spread bands cannot absorb (r7 ran a
-uniform ~1.66x slower than r6 on untouched code, flagging 89 of 96
-queries). bench.py now times a fixed calibration micro-workload
-(deterministic in-memory agg + one shuffle, no parquet; CAL_RUNS
-samples bracketing the measured passes, start AND end medians recorded
-so mid-session drift is visible) and `tools/bench_compare.py` divides
-new timings by the old/new calibration ratio before any flag logic
-(`--normalize median` approximates this for pre-round-8 artifacts; the
-r6->r7 compare re-adjudicates from 89 flags to ~4 genuine movers under
-it). The noise rule is also tighter per round-7 ADVICE: suppression now
-requires the normalized new MEDIAN inside the old band, not mere band
-overlap. BENCH_FULL additionally gains a "streaming" section — rows/s
-and per-micro-batch latency spread for the stateful/windowed operators
-over time-sliced sf event files — which the comparator diffs with the
-inverse normalization (rows/s scales inversely with session slowness).
-
-Round-14 plan change (the merged plane-wiring branch's scan widening):
-the REAL-codec decode queries (`multimodal_decode_real/_png/_jpeg/
-_webp/_audio`) now show `Exchange RoundRobinPartitioning` under the
-MapInPandas at sf0.01/sf0.1 — `_widen_for_cpu` repartitions to
-defaultParallelism ONLY when the parquet scan yields fewer splits than
-cores (the sf0.1 documents table is one 594 KB file -> ONE split, so
-the whole codec pass previously ran on 1 of 32 cores). That exchange
-is the documented INTENDED shape at test scale: the shuffled payload
-is the two projected columns, cheap next to per-row codec CPU. At
-production scale the scan has >= cores splits, the condition is false,
-and the plan reverts to the shuffle-free scan->MapInPandas shown in
-earlier rounds (payloads never leave the scanning executor). The
-FAKE-codec queries (features, frame_sample) stay unwidened by design.
+The real-codec decode queries (`multimodal_decode_real/_png/_jpeg/
+_webp/_audio`) show `Exchange RoundRobinPartitioning` under the
+MapInPandas at sf0.01/sf0.1: `_widen_for_cpu` repartitions to
+defaultParallelism only when the parquet scan yields fewer splits than
+cores (the sf0.1 documents table is one 594 KB file, so one split). The
+shuffled payload is the two projected columns, cheap next to per-row
+codec CPU. At production scale the scan has >= cores splits, the
+condition is false, and the plan is the shuffle-free scan->MapInPandas
+(payloads never leave the scanning executor). The fake-codec queries
+(features, frame_sample) stay unwidened by design.
 
 ## Semantics notes
 

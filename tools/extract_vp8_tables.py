@@ -91,9 +91,9 @@ def extract(lib_path: str) -> dict[str, object]:
     # numbers {DC,TM,VE,HE,LD,RD,VR,VL,HD,HU}. The decoder (and its
     # tree/prediction dispatch) uses RFC numbering, so permute both
     # axes into RFC order: RFC mode m lives at libwebp row PERM[m].
-    # (Round-15 lesson: this mismatch made B_PRED context chains pick
-    # wrong probability rows for any neighborhood containing a
-    # diagonal mode — caught by libwebp rejecting synthetic streams.)
+    # (Without it B_PRED context chains pick wrong probability rows for
+    # any neighborhood containing a diagonal mode, and libwebp rejects
+    # the synthetic streams.)
     perm = [0, 1, 2, 3, 6, 4, 5, 7, 8, 9]
     kf_b_mode = [
         raw_b_mode[(perm[a] * 10 + perm[l]) * 9 + p_]
@@ -102,12 +102,12 @@ def extract(lib_path: str) -> dict[str, object]:
     # The {253,136,...} anchor row is default_coeff_probs[0][1][0], NOT
     # the table start: the true [0][0] context rows are 33 bytes of 128
     # placeholders (type-0 blocks begin at position 1, so band 0 is
-    # unreachable and the spec fills it with 128s). Round-15 lesson,
-    # confirmed by disassembling VP8ParseProba's table base: anchoring
-    # at the first NON-bland row shifted every band by one and made the
-    # decoder read EOB bits at prob 1 — caught because the real
-    # bitstreams were information-theoretically too short for that
-    # model. Anchor 33 bytes back and validate the placeholder prefix.
+    # unreachable and the spec fills it with 128s), as VP8ParseProba's
+    # table base confirms: anchoring at the first NON-bland row shifts
+    # every band by one and makes the
+    # decoder read EOB bits at prob 1 (the real bitstreams are
+    # information-theoretically too short for that model). Anchor 33
+    # bytes back and validate the placeholder prefix.
     coeff_at -= 33
     default_coeff = list(data[coeff_at : coeff_at + 1056])
     if default_coeff[:33] != [128] * 33:

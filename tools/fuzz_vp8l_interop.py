@@ -2,10 +2,10 @@
 against the system libwebp, at fuzz scale — the committed-harness
 companion to the permanent interop tests in tests/test_webp.py.
 
-Round-15 origin: a seven-round-old transcription bug in the
-code-length order survived 60,000 self-round-trip fuzz cases because
-encoder and decoder shared the constant; it died the first time an
-independent implementation judged the streams. This harness makes that
+Why: a transcription bug in the code-length order once survived
+60,000 self-round-trip fuzz cases because encoder and decoder shared
+the constant; it died the first time an independent implementation
+judged the streams. This harness makes that
 judgment a standing, reproducible sweep in BOTH directions:
 
 - OUTBOUND: our encoder (a rotation over every bitstream shape —

@@ -1,7 +1,5 @@
-"""Deep fuzz of the complete WebP VP8L encode/decode mode matrix — the
-round-11 depth pass, re-run whenever the codec gains a bitstream shape
-(round 14: 2D distance plane codes landed on main; this run includes
-them in the matrix for the first time).
+"""Deep fuzz of the complete WebP VP8L encode/decode mode matrix, to
+re-run whenever the codec gains a bitstream shape.
 
 Matrix: three raster families (uniform noise, smooth gradients,
 small-palette blocks) x every encode-mode combination that composes

@@ -2,8 +2,8 @@
 # Full verification: pytest suite, the npm benchmark's own tests, a
 # vanilla-session run of every query, DuckDB oracle parity at sf0.01, and
 # the bench JSON line.
-# This is the pre-snapshot guard: run it before any end-of-round commit —
-# round 2 shipped a red suite because this script skipped pytest.
+# Run it before committing: it includes pytest, so a red suite cannot
+# pass it.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -42,18 +42,18 @@ git show HEAD:BENCH_FULL.json > /tmp/bench_full_prev.json 2>/dev/null || true
 python bench.py 2>/dev/null | tail -1 | python -c "import json,sys; d=json.load(sys.stdin); print('bench ok:', d['value'], d['unit'], len(d['queries']), 'queries')"
 
 echo "== 3b/4 bench regression gate (vs last committed BENCH_FULL) =="
-# round-8 verdict #3: FAIL on a confirmed regression — normalized median
-# >1.5x slower AND outside the old sample band. Calibration-normalized,
-# so a uniformly slow session cannot trip it. The calibration is a pure
-# CPU workload, so FS/JVM ambient drift can still throw single-run
-# flags on untouched queries (measured: two back-to-back r9 runs each
-# flagged 2-3 DIFFERENT untouched queries, intersection empty) — a flag
-# therefore only fails the gate when an independent second bench run
-# reproduces it. Skipped when HEAD has no BENCH_FULL.json.
+# FAIL on a confirmed regression — normalized median >1.5x slower AND
+# outside the old sample band. Calibration-normalized, so a uniformly
+# slow session cannot trip it. The calibration is a pure CPU workload,
+# so FS/JVM ambient drift can still throw single-run flags on untouched
+# queries (two back-to-back runs each flagged 2-3 different untouched
+# queries, intersection empty) — a flag therefore only fails the gate
+# when an independent second bench run reproduces it. Skipped when HEAD
+# has no BENCH_FULL.json.
 if [[ -s /tmp/bench_full_prev.json ]]; then
   # --drift-since anchors a cumulative-drift line against the OLDEST
-  # calibration-bearing artifact (round-9 verdict #6): sub-1.5x creep
-  # per round compounds invisibly without it
+  # calibration-bearing artifact: sub-1.5x creep per change compounds
+  # invisibly without it
   if ! python tools/bench_compare.py /tmp/bench_full_prev.json BENCH_FULL.json \
         --drift-since BENCH_r08.json \
         --fail-on-regression --json-flags /tmp/bench_flags1.json | tail -8; then

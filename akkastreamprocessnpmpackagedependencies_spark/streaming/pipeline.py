@@ -14,30 +14,33 @@ analogues implemented here:
   operators via ``applyInPandasWithState`` — capabilities with no
   reference counterpart (no timestamps exist there at all): a per-user
   counter (plus a ``transformWithStateInPandas`` twin, protobuf-gated),
-  an expiring sessionizer, and the round-7 sketch trio a monitoring
-  pipeline runs where exact state would be unbounded — sharded
-  Misra-Gries heavy hitters, Greenwald-Khanna quantiles, and per-key
-  Welford anomaly detection, each with its deterministic guarantee
-  asserted against batch ground truth in ``tests/test_streaming.py``.
+  an expiring sessionizer, and the sketches a monitoring pipeline runs
+  where exact state would be unbounded — sharded Misra-Gries heavy
+  hitters, Greenwald-Khanna quantiles, HyperLogLog distinct counts,
+  count-min frequencies, a deterministic reservoir sample, a Bloom
+  membership filter and per-key Welford anomaly detection, each with
+  its deterministic guarantee asserted against batch ground truth in
+  ``tests/test_streaming.py``;
+- the global-sketch sinks, this module's streaming form of the
+  reference's fold: ``write_global_quantiles`` / ``_distinct`` /
+  ``_freq`` / ``_bloom`` / ``_reservoir`` merge the latest per-shard
+  summary rows (``gk_merged_quantiles``, ``hll_merged_distinct``,
+  ``cms_merged_counts``, ``bloom_merged_bits``, ``reservoir_merged``)
+  in one foreachBatch function, ``_global_merge_fn``, and append the
+  global answer to a parquet time series; ``mg_global_heavy_hitters``
+  is the union of key-sharded heavy-hitter summaries;
+- the ingestion gates (exact digest, MinHash-LSH near-duplicate,
+  decontamination), which admit only novel or clean documents to a
+  bucketed corpus.
 
 Scale notes: streaming aggs shuffle once per micro-batch on the grouping
 key; the state store is partitioned the same way, so state lookups are
 local. Watermarks bound state size — without them a 100 TB stream's window
-state grows forever.
-
-Round-8 throughput work: the Misra-Gries and Welford operators' within-
-batch paths are vectorized (``value_counts`` + one batched decrement;
-numpy cumsum closed forms) — the per-event Python loop was the
-throughput ceiling at a real event rate — and the GK sketch gained a
-summary-emitting twin (``streaming_quantiles_gk_summary``) plus a pure
-merge (``gk_merged_quantiles``) that answers GLOBAL quantiles across
-shards with the summed-eps bound — operationalized live by
-``write_global_quantiles`` (foreachBatch merge -> parquet time series)
-and mirrored for the heavy-hitter sketch by
-``mg_global_heavy_hitters`` (key-sharded summaries union with the
-shard-local guarantee). ``bench.py`` now times this whole surface
-(rows/s + per-micro-batch latency, BENCH_FULL.json "streaming"
-section).
+state grows forever. The sketch operators' within-batch paths are
+vectorized (``value_counts`` plus one batched decrement, numpy cumsum
+closed forms, a sorted-batch GK splice): a per-event Python loop caps
+throughput at a real event rate. ``bench.py`` times this surface (rows/s
+and per-micro-batch latency, BENCH_FULL.json "streaming" section).
 """
 
 from __future__ import annotations
@@ -219,9 +222,9 @@ def sessionize_with_expiry(events: DataFrame, watermark: str = "30 minutes") -> 
             )
 
         def sessions(times):
-            # vectorized gap walk (round 8): a strictly-greater-than-gap
-            # silence starts a new session, exactly the old per-element
-            # walk (equivalence proven over randomized + boundary cases)
+            # vectorized gap walk: a strictly-greater-than-gap silence
+            # starts a new session, the same sessions a per-element walk
+            # gives (the tests check randomized and boundary cases)
             if not times:
                 return []
             import numpy as np
@@ -358,7 +361,7 @@ def append_watermark_sentinels(
     spark: SparkSession, src_path: str, ts_ns: int,
 ) -> None:
     """The terminal-flush pattern for bounded replays through the outer
-    stream-stream join (round-10 verdict #5): append one END-OF-STREAM
+    stream-stream join: append one END-OF-STREAM
     sentinel file to a file-based events source — one 'purchase' and one
     'signup' row (both join sides consume the same source through
     event_type filters, and the global watermark is the MINIMUM across
@@ -372,8 +375,8 @@ def append_watermark_sentinels(
     whether placed after ``withWatermark`` or after the join — is
     pushed by Catalyst below the EventTimeWatermark node into the
     parquet scan, where row-group min/max stats prune the sentinel file
-    outright (measured in round 11: the sentinel micro-batches read 0
-    source rows and the watermark never moved). Instead the sentinels
+    outright (measured: the sentinel micro-batches read 0 source rows
+    and the watermark never moved). Instead the sentinels
     are constructed so they CANNOT emit: they carry distinct users so
     they never match each other (and no real user is negative), and a
     null-padded emission of the sentinel purchase would need the final
@@ -423,7 +426,7 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     on any non-local store — write_dedup_gated would never gate against
     the corpus (silent duplicate admission) and write_hourly_partitions
     would dynamically overwrite touched hours with only the batch's rows
-    (silent data loss) — the round-4 ADVICE medium finding. The path
+    (silent data loss). The path
     resolves its OWN filesystem from the active Hadoop conf, so file:/,
     hdfs:// and object stores all route correctly; errors propagate (a
     transient FS failure must fail the batch, never demote to
@@ -438,13 +441,14 @@ def table_has_data(spark: SparkSession, path: str) -> bool:
     """True when ``path`` exists AND holds at least one non-hidden entry
     (a data file, or a partition subdirectory for partitionBy layouts —
     ``fs_count_data_files`` is deliberately non-recursive, so it cannot
-    answer this for bucket-partitioned tables). The round-13 gate
-    hardening: a sink directory can exist FILE-LESS (crash between
+    answer this for bucket-partitioned tables). Why the gates need it:
+    a sink directory can exist FILE-LESS (crash between
     mkdir and first commit, or an all-empty batch's append), where
     ``table_exists`` is True but schema inference throws; probes gate
     on THIS check so a file-less directory reads as an empty corpus,
     while a populated-but-drifted corpus still fails loudly through
-    normal schema inference (the round-4 regression class)."""
+    normal schema inference (treating every read error as "empty" would
+    silently re-admit the whole corpus)."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -452,8 +456,7 @@ def table_has_data(spark: SparkSession, path: str) -> bool:
         return False
     # listStatusIterator + early break, NOT listStatus: this runs per
     # micro-batch, and a long-lived unpartitioned corpus accumulates one
-    # file per batch. Honest scope (second review pass): filesystems
-    # that override the iterator (HDFS, S3A) page the listing, so the
+    # file per batch. Scope of the saving: filesystems that override the iterator (HDFS, S3A) page the listing, so the
     # early break avoids both the full array and extra LIST round-trips;
     # RawLocalFileSystem's default iterator still builds the array
     # JVM-side, where the break only saves the per-entry py4j traffic.
@@ -468,8 +471,8 @@ def table_has_data(spark: SparkSession, path: str) -> bool:
         # A non-hidden DIRECTORY (a `bucket=N/` partition dir) is only
         # data if something non-hidden lives INSIDE it — a crash can
         # leave the partition dir itself empty, which crashes schema
-        # inference exactly like a file-less root (round-13 ADVICE: the
-        # old check stopped one level short). One level is the repo's
+        # inference exactly like a file-less root, so a check that
+        # stops at the root misreads it. One level is the repo's
         # whole layout space (every gate partitions by a single bucket
         # column); anything non-hidden inside — file OR deeper dir —
         # counts as data, because answering "empty" when rows exist
@@ -516,7 +519,7 @@ def fs_count_data_files(spark: SparkSession, path: str) -> int:
     compaction counter after a restart: without it, ``appends`` reset to
     0 every (re)start, so a stream restarted every few batches never
     reached ``compact_every`` and the series' file count grew without
-    bound — the round-10 ADVICE finding. Dot/underscore-prefixed entries
+    bound. Dot/underscore-prefixed entries
     (_SUCCESS, .crc sidecars) don't hold rows, so they don't count
     against the compaction bound."""
     jvm = spark._jvm
@@ -658,6 +661,18 @@ class _BucketedTable:
         narrow = n_rows is not None and n_rows < WIDE_WRITES_ROWS
         shaped = rows.coalesce(1) if narrow else rows.repartition(self.col)
         shaped.write.mode(mode).partitionBy(self.col).parquet(path or self.path)
+
+
+def _observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+    """``df`` evaluated once by a local checkpoint, and the named
+    aggregates ``aggs`` over its rows, computed by that same job as an
+    ``Observation``: a gate needs no separate count or collect job to
+    size, guard or prune what it does with the frame next."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    df = df.observe(obs, *[c.alias(k) for k, c in aggs.items()]).localCheckpoint()
+    return df, obs.get
 
 
 def bloom_bits_for(n_keys: int) -> int:
@@ -874,8 +889,8 @@ def stateful_user_counts_tws(events: DataFrame) -> DataFrame:
     Environment note (honest seam, PIL-pattern): PRESENT BUT
     UNEXECUTABLE IN THIS CONTAINER. The state-server protocol needs
     ``google.protobuf``, which this container does not ship and cannot
-    obtain offline (round-8 check: no vendored wheel, no pip-cache hit,
-    no network) — so this operator has NEVER executed here and its
+    obtain offline (no vendored wheel, no pip-cache hit, no network) —
+    so this operator has NEVER executed here and its
     equality test is a pytest skip until an environment ships protobuf.
     The operator raises ImportError with the named dependency up
     front instead of crashing the streaming Python runner mid-query
@@ -968,9 +983,9 @@ def streaming_heavy_hitters(
     the shard's current summary tagged with its event count, so the
     latest row group per shard is the live sketch.
 
-    Within-batch path (round-8 vectorization, round-7 verdict item #4):
-    instead of walking events one at a time in Python — the operator's
-    throughput ceiling at a real event rate — each pandas batch collapses
+    Within-batch path: instead of walking events one at a time in
+    Python — the operator's throughput ceiling at a real event rate —
+    each pandas batch collapses
     to per-key WEIGHTED counts via ``value_counts`` (one C pass), merges
     them into the summary, and applies ONE batched decrement: subtract
     the (capacity+1)-th largest count from every counter and drop the
@@ -1083,8 +1098,8 @@ def streaming_value_anomalies(
     replay ordered the same way, and the emitted z-scores match a serial
     recomputation to well under the test's 1e-9.
 
-    Within-batch path (round-8 vectorization, round-7 verdict item #4):
-    the Welford recursion unrolled over a batch is closed-form — after
+    Within-batch path, vectorized because a per-event Python loop caps
+    throughput at a real event rate: the Welford recursion unrolled over a batch is closed-form — after
     the j-th in-batch value, n_j = n0 + j and mean_j = (n0*mean0 +
     cumsum(v)_j) / n_j, and the M2 increments (v_j - mean_{j-1}) *
     (v_j - mean_j) need only the SHIFTED running-mean array — so the
@@ -1159,13 +1174,14 @@ def _gk_state_dump(tup: list[list], n: int) -> tuple:
 
 def _gk_insert_batch(tup: list[list], n: int, pdf, eps: float) -> int:
     """Insert one pandas batch of (ts, event_id, value) rows into the GK
-    summary as a SORTED-BATCH SPLICE (round-8 verdict #4, replacing the
-    per-value Python loop): sort the batch once, vectorize the insertion
+    summary as a SORTED-BATCH SPLICE (a per-value Python loop caps
+    throughput at a real event rate): sort the batch once, vectorize the
+    insertion
     positions with one ``searchsorted``, splice every new (v, 1, delta)
     tuple in with ``np.insert``, then run ONE left-to-right compress pass
-    at the batch-final threshold. Shared by the estimate- and
-    summary-emitting operators so their state evolution is identical;
-    returns the new n and mutates ``tup`` in place.
+    at the batch-final threshold. ``_gk_sketch`` runs it for both the
+    estimate- and the summary-emitting operator, so their state evolves
+    identically; returns the new n and mutates ``tup`` in place.
 
     Correctness shape (the tests pin it): inserting the batch in value
     order is a legal GK01 insertion order, and the k-th smallest batch
@@ -1189,10 +1205,9 @@ def _gk_insert_batch(tup: list[list], n: int, pdf, eps: float) -> int:
     (n_final), so the post-batch summary is at least as compressed;
     mid-batch the working set is O(summary + batch) — micro-batch sized,
     never stream sized.
-    GK state evolution remains deterministic GIVEN THE BATCH SPLIT (the
-    checkpoint-recovery test replays identical per-file batches), same
-    as the previous kernel, whose compress points also depended on the
-    per-batch insert concatenation."""
+    GK state evolution is deterministic GIVEN THE BATCH SPLIT (the
+    compress points depend on the batch boundaries; the
+    checkpoint-recovery test replays identical per-file batches)."""
     import numpy as np
 
     vals = pdf["value"].to_numpy(dtype=float)
@@ -1246,13 +1261,100 @@ def _gk_insert_batch(tup: list[list], n: int, pdf, eps: float) -> int:
     return n_new
 
 
+def _gk_query(tup: list[list], n: int, phi: float, eps: float) -> float:
+    """The GK01 QUANTILE rule over one summary of ``n`` values: answer
+    the value BEFORE the first tuple whose rmax exceeds r + eps*n, where
+    r = ceil(phi*n); under the GK invariant its rank is within eps*n of
+    r. (A two-sided containment test is WRONG: near-boundary tuples can
+    all have rmax past the band while the previous value is still in
+    bounds.) NaN for an empty summary."""
+    import math
+
+    r = max(1, int(math.ceil(phi * n)))
+    rmin = 0
+    prev = tup[0][0] if tup else float("nan")
+    for v, g, d in tup:
+        rmin += g
+        if rmin + d > r + eps * n:
+            return prev
+        prev = v
+    return prev
+
+
+def _gk_sketch(
+    events: DataFrame, eps: float, shards: int, *, rows, out_schema: str,
+    mode: str,
+) -> DataFrame:
+    """The state update shared by the two GK operators. Events shard by
+    ``user_id % shards``; each micro-batch folds the shard's values into
+    its summary with ``_gk_insert_batch``, so both operators' state
+    evolves identically, and yields ``rows(shard, tup, n)``, a pandas
+    frame in ``out_schema``."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def update(key, pdfs, state):
+        tup, n = _gk_state_load(state)
+        for pdf in pdfs:
+            n = _gk_insert_batch(tup, n, pdf, eps)
+        state.update(_gk_state_dump(tup, n))
+        yield rows(key[0], tup, n)
+
+    return (
+        events.select(
+            (F.col("user_id") % shards).alias("shard"), "ts", "event_id", "value"
+        )
+        .groupBy("shard")
+        .applyInPandasWithState(
+            update, out_schema, _GK_STATE_SCHEMA, mode,
+            GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
+def streaming_quantiles_gk(
+    events: DataFrame, eps: float = GK_EPS, shards: int = GK_SHARDS
+) -> DataFrame:
+    """Streaming quantiles via the Greenwald-Khanna summary in group
+    state — the third of the streaming-sketch trio (exact counter /
+    Misra-Gries heavy hitters / GK quantiles): continuous percentile
+    monitoring of ``value`` whose state is O((1/eps) log(eps n)) tuples
+    per shard instead of the stream itself.
+
+    Each state tuple (v, g, delta) brackets the true rank of v between
+    rmin = sum(g up to here) and rmax = rmin + delta; inserts add
+    (v, 1, floor(2 eps n) - 1) before the first larger element (delta 0
+    at the extremes) — spliced per batch by the vectorized kernel — and
+    a per-batch compress merges neighbors while
+    g_i + g_{i+1} + delta_{i+1} <= 2 eps n — the GK invariant that makes
+    every phi-quantile answerable within eps*n rank error,
+    DETERMINISTICALLY (no randomness, unlike KLL/reservoir), which is
+    what lets the test assert hard bounds against exact batch ranks.
+    Emits the current estimates for GK_PHIS per shard each micro-batch,
+    tagged with the shard's event count; latest row group per shard is
+    the live answer."""
+
+    def rows(shard, tup, n):
+        import pandas as pd
+
+        return pd.DataFrame({
+            "shard": shard,
+            "phi": GK_PHIS,
+            "estimate": [_gk_query(tup, n, phi, eps) for phi in GK_PHIS],
+            "shard_n": n,
+        })
+
+    return _gk_sketch(
+        events, eps, shards, rows=rows, out_schema=_GK_OUT_SCHEMA, mode="update"
+    )
+
+
 def gk_merged_quantiles(
     summaries: list[tuple[list[float], list[int], list[int], int]],
     phis: list[float] = GK_PHIS,
     eps: float = GK_EPS,
 ) -> dict[float, float]:
-    """GLOBAL quantiles from per-shard GK summaries (round-7 verdict item
-    #6: GK summaries are mergeable). Pure function — the inputs are the
+    """GLOBAL quantiles from per-shard GK summaries (GK summaries are
+    mergeable). Pure function — the inputs are the
     (vs, gs, ds, n) rows ``streaming_quantiles_gk_summary`` emits, a few
     hundred tuples per shard no matter how large the stream, so merging
     1000 shards driver-side (or in ``foreachBatch``) is O(total tuples ×
@@ -1317,39 +1419,28 @@ def streaming_quantiles_gk_summary(
     events: DataFrame, eps: float = GK_EPS, shards: int = GK_SHARDS
 ) -> DataFrame:
     """The summary-emitting twin of ``streaming_quantiles_gk``: identical
-    state evolution (shared ``_gk_insert_batch`` kernel), but each
+    state evolution (shared ``_gk_sketch`` update), but each
     micro-batch emits the shard's raw GK tuples (vs, gs, ds, n) instead
     of point estimates — the mergeable form. Downstream, the latest row
     per shard feeds ``gk_merged_quantiles`` for GLOBAL quantiles with
     the summed-eps bound; the rows are O((1/eps) log(eps n)) doubles per
     shard, so shipping them every batch costs kilobytes at any stream
     size."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def update(key, pdfs, state):
+    def rows(shard, tup, n):
         import pandas as pd
 
-        tup, n = _gk_state_load(state)
-        for pdf in pdfs:
-            n = _gk_insert_batch(tup, n, pdf, eps)
-        state.update(_gk_state_dump(tup, n))
         vs, gs, ds, _ = _gk_state_dump(tup, n)
-        yield pd.DataFrame(
-            {"shard": [key[0]], "vs": [vs], "gs": [gs], "ds": [ds], "shard_n": [n]}
+        return pd.DataFrame(
+            {"shard": [shard], "vs": [vs], "gs": [gs], "ds": [ds], "shard_n": [n]}
         )
 
-    return (
-        events.select(
-            (F.col("user_id") % shards).alias("shard"), "ts", "event_id", "value"
-        )
-        .groupBy("shard")
-        # append mode: each batch's summary row is an immutable time-series
-        # record (never retracted), which also admits durable append sinks
-        # (parquet) for checkpoint-recovery coverage
-        .applyInPandasWithState(
-            update, _GK_SUMMARY_OUT_SCHEMA, _GK_STATE_SCHEMA, "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    # append mode: each batch's summary row is an immutable time-series
+    # record (never retracted), which also admits durable append sinks
+    # (parquet) for checkpoint-recovery coverage
+    return _gk_sketch(
+        events, eps, shards, rows=rows, out_schema=_GK_SUMMARY_OUT_SCHEMA,
+        mode="append",
     )
 
 
@@ -1552,8 +1643,8 @@ def mg_global_heavy_hitters(
     (shard, user_id, mg_count, shard_n) records — take the latest
     summary per shard before calling. Returns ``(counts, bound)`` where
     ``bound = total_n / (capacity + 1)`` is that guarantee threshold —
-    computed here (round-8 ADVICE: the parameters were previously dead)
-    so callers assert against the SAME bound the docstring promises.
+    computed here so callers assert against the SAME bound the
+    docstring promises.
     Pure function; merging 1000 shards is dict-union work on
     shards x capacity counters."""
     out: dict[int, int] = {}
@@ -1570,101 +1661,84 @@ def mg_global_heavy_hitters(
     return out, total_n / (capacity + 1)
 
 
-def _global_merge_pipeline(
-    summaries: DataFrame, out_path: str, *, carry_schema: str,
-    out_schema: str, output_mode: str, compact_every: int,
-    row_state, hydrate_state, carry_row, emit, rows_transform=None,
-):
-    """The shared skeleton of the live global-sketch pipelines
-    (``write_global_quantiles`` / ``write_global_distinct`` /
-    ``write_global_freq`` / ``write_global_bloom``) — extracted once
-    there were three hand-kept copies of the same carry/persist/compact
-    choreography (the ``_banded_pairs`` lesson: duplicated scaffolding
-    diverges silently). The per-batch function itself lives in
-    ``_global_merge_fn`` (split out in round 12 so the crash-point fuzz
-    can drive the choreography directly — one streaming-engine start
-    per fuzz cycle priced the randomized harness out of the suite);
-    this wrapper binds it to the stream."""
-    return summaries.writeStream.outputMode(output_mode).foreachBatch(
-        _global_merge_fn(
-            out_path,
-            carry_schema=carry_schema,
-            out_schema=out_schema,
-            compact_every=compact_every,
-            row_state=row_state,
-            hydrate_state=hydrate_state,
-            carry_row=carry_row,
-            emit=emit,
-            rows_transform=rows_transform,
-        )
-    )
-
-
 def _global_merge_fn(
-    out_path: str, *, carry_schema: str, out_schema: str,
-    compact_every: int, row_state, hydrate_state, carry_row, emit,
-    rows_transform=None,
+    out_path: str, *, out_schema: str, compact_every: int, emit,
 ):
-    """The foreachBatch function behind ``_global_merge_pipeline``.
-    Per micro-batch: hydrate the per-shard carry from the
-    ``<out_path>_carry`` sidecar at the FIRST batch after (re)start;
-    keep each shard's latest state (max shard_n — states put shard_n
-    LAST); persist the carry via atomic swap BEFORE the series append (a
-    crash between the two replays the batch, which re-derives the same
-    carry — idempotent; the reverse order could emit a series row no
-    persisted carry backs); emit the merged rows; append-or-compact the
-    series. The sketch-specific pieces come in as four small functions:
+    """The foreachBatch function of every live global-sketch sink
+    (``write_global_quantiles`` / ``_distinct`` / ``_freq`` / ``_bloom``
+    / ``_reservoir``). The carry is each shard's latest summary rows,
+    exactly as the summary stream emitted them: the rows with the
+    largest ``shard_n`` (one row for the GK and packed-array sketches,
+    the k sampled events for the reservoir), replaced only when a later
+    emission's ``shard_n`` is strictly larger. A shard that is quiet in
+    a batch (a NoTimeout stateful op emits only for shards that received
+    events) thus keeps feeding the merge.
 
-    - ``row_state(r)``: summary row -> carried state tuple
-    - ``hydrate_state(r)``: carry-sidecar row -> state tuple
-    - ``carry_row(shard, state)``: state -> carry-sidecar row tuple
-    - ``emit(batch_id, last_seen)``: merged output row tuples
-    - ``rows_transform(rows)`` (optional): reshape the collected batch
-      before the per-shard latest-state fold — for summary stages that
-      emit SEVERAL rows per shard per batch (the reservoir emits its k
-      sampled events as k rows), this groups them into one record per
-      shard carrying arrays, so the carry/merge choreography stays
-      one-row-per-shard like the scalar-summary sinks
+    Per micro-batch: hydrate the carry from the ``<out_path>_carry``
+    sidecar at the first batch after a (re)start; fold the batch in;
+    persist the carry via atomic swap BEFORE the series append (a crash
+    between the two replays the batch, which re-derives the same carry,
+    whereas the reverse order could append a series row no persisted
+    carry backs); append ``emit(batch_id, rows, n_total)`` (all carried
+    rows, and the sum of the shards' ``shard_n``) to the series,
+    compacting every ``compact_every`` appends.
+
+    The sidecar's schema is the batch's own. Hydration selects the
+    summary's columns by name, so a sidecar holding them in another
+    order still hydrates; one that lacks a column raises ValueError
+    naming it (delete the sidecar to start the carry afresh: quiet
+    shards then drop out of the merge until their next event).
 
     Restart semantics == a fresh call of this factory: all mutable
-    state (hydration flag, carry cache, compaction counter) lives in
-    the closure, exactly what a new driver process would rebuild.
+    state (hydration flag, carry, compaction counter) lives in the
+    closure, exactly what a new driver process would rebuild.
     """
     carry_path = out_path.rstrip("/") + "_carry"
-    last_seen: dict[int, tuple] = {}
+    carried: dict[int, list] = {}  # shard -> its latest summary rows
     hydrated = [False]
     appends = [0]  # files appended since the last compaction
+
+    def _fold(rows: list) -> None:
+        latest: dict[int, list] = {}
+        for r in rows:
+            cur = latest.get(r.shard)
+            if cur is None or r.shard_n > cur[0].shard_n:
+                latest[r.shard] = [r]
+            elif r.shard_n == cur[0].shard_n:
+                cur.append(r)
+        for s, rs in latest.items():
+            if s not in carried or rs[0].shard_n > carried[s][0].shard_n:
+                carried[s] = rs
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         if not hydrated[0]:
-            hydrated[0] = True
             _swap_recover(spark, carry_path)
             if table_exists(spark, carry_path):
-                for r in spark.read.parquet(carry_path).collect():
-                    last_seen[r.shard] = hydrate_state(r)
-            # seed the compaction counter from the series' CURRENT file
-            # count, so the compact_every+1 file-count bound holds
-            # across restarts (a counter reset to 0 every start never
-            # compacts under frequent restarts — round-10 ADVICE)
+                carry = spark.read.parquet(carry_path)
+                missing = [c for c in batch.columns if c not in carry.columns]
+                if missing:
+                    raise ValueError(
+                        f"global-sketch carry {carry_path} lacks the summary "
+                        f"columns {missing}; delete it to start the carry afresh"
+                    )
+                _fold(carry.select(*batch.columns).collect())
+            # seed the compaction counter from the series' current file
+            # count, so the compact_every + 1 file bound holds across
+            # restarts (a counter reset to 0 at every start would never
+            # compact a stream that restarts often)
             _swap_recover(spark, out_path)
             appends[0] = fs_count_data_files(spark, out_path)
-        rows = batch.collect()  # O(shards) summary rows (O(shards x k)
-        # for the reservoir's per-event rows), never the stream itself
+            hydrated[0] = True
+        rows = batch.collect()  # O(shards) summary rows (x k for the
+        # reservoir), never the stream itself
         if not rows:
             return  # empty micro-batch: nothing changed, emit nothing
-        if rows_transform is not None:
-            rows = rows_transform(rows)
-        for r in rows:
-            if r.shard not in last_seen or r.shard_n > last_seen[r.shard][-1]:
-                last_seen[r.shard] = row_state(r)
-        _atomic_overwrite_rows(
-            spark,
-            [carry_row(s, v) for s, v in last_seen.items()],
-            carry_schema,
-            carry_path,
-        )
-        out = spark.createDataFrame(emit(batch_id, last_seen), out_schema)
+        _fold(rows)
+        kept = [r for rs in carried.values() for r in rs]
+        _atomic_overwrite_rows(spark, kept, batch.schema, carry_path)
+        n_total = sum(rs[0].shard_n for rs in carried.values())
+        out = spark.createDataFrame(emit(batch_id, kept, n_total), out_schema)
         _append_or_compact(out, out_path, appends, compact_every)
 
     return _merge
@@ -1676,92 +1750,56 @@ def write_global_quantiles(
 ):
     """Operationalize the GK merge as a LIVE pipeline: consume the
     summary stream (``streaming_quantiles_gk_summary``) in foreachBatch,
-    keep each shard's LATEST summary (max shard_n) — carried across
-    micro-batches in driver memory and persisted to a restart-surviving
-    sidecar, so a shard that is quiet this batch
-    still contributes its accumulated state to the global merge (a
-    NoTimeout stateful op only re-emits a shard's summary when the shard
-    received events) — merge driver-side (kilobytes of tuples no matter
+    carry each shard's latest summary across micro-batches and restarts
+    (``_global_merge_fn``: a quiet shard still contributes its
+    accumulated state), merge driver-side (kilobytes of tuples no matter
     the stream size) and append one row per phi per micro-batch to
     ``out_path``. The stored history is the global-quantile time series
     a monitoring pipeline wants; the last batch_id group is the live
     answer, within the summed-eps rank bound of ``gk_merged_quantiles``.
-
-    Restart semantics: the carried per-shard cache lives in driver
-    memory AND is persisted each batch to a ``<out_path>_carry`` sidecar
-    (one row per shard, kilobytes, atomically swapped); at the first
-    batch after a (re)start the cache re-hydrates from the sidecar, so a
-    quiet shard's accumulated state keeps contributing to the global
-    merge across restarts instead of dropping out until its next event.
-    The carry is written BEFORE the series append: a crash between the
-    two replays the batch, which re-derives the same carry
-    (idempotent), whereas the reverse order could emit a series row no
-    persisted carry backs. n_total still annotates every row, so any
-    residual coverage gap (e.g. a pre-carry-era sink) stays visible.
+    n_total (events the merged summaries cover) annotates every row.
 
     Small files: every ``compact_every`` appends the accumulated series
     (tiny — phis x batches rows) is rewritten in Spark as one file,
     bounding the file count of a long-running stream at
     ``compact_every + 1`` regardless of uptime."""
 
-    def emit(batch_id: int, last_seen: dict) -> list[tuple]:
-        merged = gk_merged_quantiles(list(last_seen.values()), eps=eps)
-        n_total = sum(s[3] for s in last_seen.values())
+    def emit(batch_id: int, rows: list, n_total: int) -> list[tuple]:
+        merged = gk_merged_quantiles(
+            [(r.vs, r.gs, r.ds, r.shard_n) for r in rows], eps=eps
+        )
         return [
             (int(batch_id), float(phi), float(est), int(n_total))
             for phi, est in merged.items()
         ]
 
-    return _global_merge_pipeline(
-        summaries, out_path,
-        carry_schema=(
-            "shard long, vs array<double>, gs array<long>, "
-            "ds array<long>, shard_n long"
-        ),
-        out_schema="batch_id long, phi double, estimate double, n_total long",
-        output_mode="append",
-        compact_every=compact_every,
-        row_state=lambda r: (r.vs, r.gs, r.ds, r.shard_n),
-        hydrate_state=lambda r: (list(r.vs), list(r.gs), list(r.ds), r.shard_n),
-        carry_row=lambda s, v: (
-            int(s), list(v[0]), list(v[1]), list(v[2]), int(v[3])
-        ),
-        emit=emit,
+    return summaries.writeStream.outputMode("append").foreachBatch(
+        _global_merge_fn(
+            out_path,
+            out_schema="batch_id long, phi double, estimate double, n_total long",
+            compact_every=compact_every, emit=emit,
+        )
     )
 
 
-def _ddl_to_arrow(schema: str):
-    """Arrow schema for the small DDL subset the carry sidecars use
-    (long / double / binary / array<long> / array<double>) — enough to
-    build their parquet driver-side without a Spark job."""
-    import pyarrow as pa
-
-    prim = {"long": pa.int64(), "double": pa.float64(), "binary": pa.binary()}
-    fields = []
-    for part in schema.split(","):
-        name, typ = part.strip().split(None, 1)
-        typ = typ.strip()
-        if typ.startswith("array<"):
-            fields.append((name, pa.list_(prim[typ[6:-1]])))
-        else:
-            fields.append((name, prim[typ]))
-    return pa.schema(fields)
-
-
 def _driver_write_parquet(
-    spark: SparkSession, rows: list, ddl_schema: str, path: str
+    spark: SparkSession, rows: list, schema, path: str
 ) -> None:
-    """Write a tiny driver-side row list as ONE parquet file through the
-    Hadoop FileSystem API — NO Spark job. The carry sidecar is O(shards)
-    kilobyte rows that already live on the driver; round 10's first cut
-    shipped them through ``createDataFrame().write`` and the fixed
-    job-launch overhead (~1-2 s) dominated every micro-batch (measured
-    as the write_global_quantiles 5,450 -> 3,552 rows/s informational
-    flag). pyarrow serializes the rows in-process and the bytes go out
-    over the same FileSystem abstraction every other path uses, so s3a/
-    hdfs/file: all still route correctly and ``spark.read.parquet``
-    reads the result like any other table."""
-    schema = _ddl_to_arrow(ddl_schema)
+    """Write a tiny driver-side row list (tuples in ``schema`` order; a
+    DDL string or a StructType) as ONE parquet file through the Hadoop
+    FileSystem API — NO Spark job. The sidecars are O(shards) kilobyte
+    rows that already live on the driver; shipping them through
+    ``createDataFrame().write`` adds a job launch (~1-2 s) to every
+    micro-batch, which dominated the global-sketch sinks' batch time.
+    pyarrow serializes the rows in-process and the bytes go out over
+    the same FileSystem abstraction every other path uses, so s3a/hdfs/
+    file: all still route correctly and ``spark.read.parquet`` reads the
+    result like any other table."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    schema = to_arrow_schema(schema)
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1795,19 +1833,17 @@ def _driver_write_parquet(
         raise IOError(f"rename failed: {tmp} -> {final}")
 
 
-def _atomic_overwrite_rows(
-    spark: SparkSession, rows: list, ddl_schema: str, path: str
-) -> None:
-    """Overwrite ``path`` with driver-side ``rows`` via the
-    write-temp-then-swap idiom (see ``_append_or_compact``): a direct
-    overwrite deletes the target directory before writing, so a crash
-    mid-write would lose the previous contents; the swap keeps a
+def _swap_in(spark: SparkSession, path: str, write) -> None:
+    """Replace ``path`` with what ``write(tmp)`` writes to a temp
+    sibling: rename the live path aside, install the temp, drop the old.
+    A direct overwrite deletes the target directory before writing, so a
+    crash mid-write would lose the previous contents; the swap keeps a
     complete copy on disk at every instant, and ``_swap_recover`` heals
-    the one exposed window."""
+    its one exposed window (live path renamed away, temp not yet
+    installed)."""
     tmp_new = path.rstrip("/") + "__compact_tmp"
     tmp_old = path.rstrip("/") + "__compact_old"
-    _swap_recover(spark, path)
-    _driver_write_parquet(spark, rows, ddl_schema, tmp_new)
+    write(tmp_new)
     fs_delete(spark, tmp_old)
     if table_exists(spark, path):
         fs_rename(spark, path, tmp_old)
@@ -1815,11 +1851,21 @@ def _atomic_overwrite_rows(
     fs_delete(spark, tmp_old)
 
 
+def _atomic_overwrite_rows(
+    spark: SparkSession, rows: list, schema, path: str
+) -> None:
+    """Overwrite ``path`` with driver-side ``rows`` (``schema`` as
+    ``_driver_write_parquet`` takes it) through ``_swap_in``, after
+    healing an interrupted swap."""
+    _swap_recover(spark, path)
+    _swap_in(spark, path, lambda tmp: _driver_write_parquet(spark, rows, schema, tmp))
+
+
 def _swap_recover(spark: SparkSession, path: str) -> None:
     """Heal the swap idiom's exposed crash window: the live path was
     renamed aside and the replacement was not yet installed — install
     the surviving temp. The temp is VALIDATED by actually reading it
-    before promotion (review finding, round 10): a crash can also land
+    before promotion: a crash can also land
     MID-WRITE of the temp itself — e.g. the driver dies inside the very
     first carry persist, before any live path exists — and promoting a
     truncated parquet would wedge every subsequent hydration on a
@@ -1843,37 +1889,25 @@ def _append_or_compact(
     """Shared sink idiom of the global-sketch monitoring pipelines: append
     the batch's tiny row group, and every ``compact_every`` appends
     rewrite the whole series as one file, IN SPARK (read -> union ->
-    coalesce(1) -> write temp -> swap) — never a driver collect of the
+    coalesce(1) -> ``_swap_in``) — never a driver collect of the
     accumulated series, whose size is O(stream lifetime). The swap keeps
-    a full copy on disk at every instant: write the compacted series to
-    a temp sibling, rename the live path aside, install the temp, drop
-    the old — a direct overwrite would delete the directory before
-    writing, so a crash mid-compaction would lose the entire series. A
-    crash inside the swap's only exposed window (live path renamed away,
-    temp not yet installed) is healed by the recovery step at the top of
-    the next call, which installs the surviving temp. Bounds a
+    a full copy on disk at every instant, so a crash mid-compaction
+    loses nothing; a crash inside its one exposed window is healed by
+    the recovery step at the top of the next call. Bounds a
     long-running stream's file count at compact_every + 1 INCLUDING
     across restarts — callers seed ``appends`` from the series' current
-    file count at their first batch (see ``_global_merge_pipeline``), so
-    a stream restarted every few batches still compacts on schedule."""
+    file count at their first batch (see ``_global_merge_fn``), so a
+    stream restarted every few batches still compacts on schedule."""
     spark = out.sparkSession
-    tmp_new = out_path.rstrip("/") + "__compact_tmp"
-    tmp_old = out_path.rstrip("/") + "__compact_old"
     _swap_recover(spark, out_path)
     if appends[0] >= compact_every:
         # writing the temp reads out_path while writing a DIFFERENT
         # directory, so no materialization barrier is needed
-        (
-            spark.read.parquet(out_path)
-            .unionByName(out)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp_new)
+        _swap_in(
+            spark, out_path,
+            lambda tmp: spark.read.parquet(out_path).unionByName(out)
+            .coalesce(1).write.mode("overwrite").parquet(tmp),
         )
-        fs_delete(spark, tmp_old)
-        fs_rename(spark, out_path, tmp_old)
-        fs_rename(spark, tmp_new, out_path)
-        fs_delete(spark, tmp_old)
         appends[0] = 1
     else:
         out.coalesce(1).write.mode("append").parquet(out_path)
@@ -1886,99 +1920,21 @@ def write_global_distinct(
     """Operationalize the HLL merge as a LIVE pipeline, the cardinality
     twin of ``write_global_quantiles``: consume ``streaming_distinct_hll``
     rows in foreachBatch, carry each shard's latest registers across
-    micro-batches (quiet shards keep contributing; the carry persists to
-    a ``<out_path>_carry`` sidecar written before each series append and
-    re-hydrates at the first batch after a restart, so pre-restart state
-    survives — same semantics and crash ordering as
-    ``write_global_quantiles``), merge
+    micro-batches and restarts (``_global_merge_fn``), merge
     register-wise — ZERO added error, see ``hll_merged_distinct`` — and
     append one (batch_id, estimate, n_total) row per micro-batch to the
     parquet time series, compacting every ``compact_every`` appends.
     The last row is the live global distinct count; n_total records how
     many events the merged registers have absorbed."""
-    def emit(batch_id: int, last_seen: dict) -> list[tuple]:
-        est = hll_merged_distinct([v[0] for v in last_seen.values()])
-        n_total = sum(v[1] for v in last_seen.values())
+
+    def emit(batch_id: int, rows: list, n_total: int) -> list[tuple]:
+        est = hll_merged_distinct([r.regs for r in rows])
         return [(int(batch_id), float(est), int(n_total))]
 
-    return _global_merge_pipeline(
-        summaries, out_path,
-        carry_schema="shard long, regs binary, shard_n long",
-        out_schema="batch_id long, estimate double, n_total long",
-        output_mode="update",
-        compact_every=compact_every,
-        row_state=lambda r: (bytes(r.regs), r.shard_n),
-        hydrate_state=lambda r: (bytes(r.regs), r.shard_n),
-        carry_row=lambda s, v: (int(s), v[0], int(v[1])),
-        emit=emit,
-    )
-
-
-def streaming_quantiles_gk(
-    events: DataFrame, eps: float = GK_EPS, shards: int = GK_SHARDS
-) -> DataFrame:
-    """Streaming quantiles via the Greenwald-Khanna summary in group
-    state — the third of the streaming-sketch trio (exact counter /
-    Misra-Gries heavy hitters / GK quantiles): continuous percentile
-    monitoring of ``value`` whose state is O((1/eps) log(eps n)) tuples
-    per shard instead of the stream itself.
-
-    Each state tuple (v, g, delta) brackets the true rank of v between
-    rmin = sum(g up to here) and rmax = rmin + delta; inserts add
-    (v, 1, floor(2 eps n) - 1) before the first larger element (delta 0
-    at the extremes) — spliced per batch by the vectorized kernel — and
-    a per-batch compress merges neighbors while
-    g_i + g_{i+1} + delta_{i+1} <= 2 eps n — the GK invariant that makes
-    every phi-quantile answerable within eps*n rank error,
-    DETERMINISTICALLY (no randomness, unlike KLL/reservoir), which is
-    what lets the test assert hard bounds against exact batch ranks.
-    Emits the current estimates for GK_PHIS per shard each micro-batch,
-    tagged with the shard's event count; latest row group per shard is
-    the live answer."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import math
-
-        import pandas as pd
-
-        tup, n = _gk_state_load(state)
-        for pdf in pdfs:
-            n = _gk_insert_batch(tup, n, pdf, eps)
-
-        out = {k: [] for k in ("shard", "phi", "estimate", "shard_n")}
-        for phi in GK_PHIS:
-            # the GK01 QUANTILE rule: answer the value BEFORE the first
-            # tuple whose rmax exceeds r + eps*n — under the invariant
-            # its rank is within eps*n of r (a two-sided containment
-            # test is WRONG: near-boundary tuples can all have rmax past
-            # the band while the previous value is still in bounds)
-            r = max(1, int(math.ceil(phi * n)))
-            bound = eps * n
-            rmin = 0
-            ans = prev = tup[0][0] if tup else float("nan")
-            for v, g, d in tup:
-                rmin += g
-                if rmin + d > r + bound:
-                    ans = prev
-                    break
-                prev = v
-                ans = v
-            out["shard"].append(key[0])
-            out["phi"].append(phi)
-            out["estimate"].append(ans)
-            out["shard_n"].append(n)
-        state.update(_gk_state_dump(tup, n))
-        yield pd.DataFrame(out)
-
-    return (
-        events.select(
-            (F.col("user_id") % shards).alias("shard"), "ts", "event_id", "value"
-        )
-        .groupBy("shard")
-        .applyInPandasWithState(
-            update, _GK_OUT_SCHEMA, _GK_STATE_SCHEMA, "update",
-            GroupStateTimeout.NoTimeout,
+    return summaries.writeStream.outputMode("update").foreachBatch(
+        _global_merge_fn(
+            out_path, out_schema="batch_id long, estimate double, n_total long",
+            compact_every=compact_every, emit=emit,
         )
     )
 
@@ -2099,42 +2055,32 @@ def cms_merged_counts(tabs: list, keys) -> dict[int, int]:
 def write_global_freq(
     summaries: DataFrame, out_path: str, probe_keys, compact_every: int = 16
 ):
-    """Operationalize the CMS merge as a LIVE pipeline — the frequency
-    member of the global-sketch trio (``write_global_quantiles`` /
-    ``write_global_distinct`` / this): consume ``streaming_freq_cms``
-    rows in foreachBatch, carry each shard's latest table across
-    micro-batches (persisted to an atomically-swapped ``<out>_carry``
-    sidecar written before each series append and re-hydrated at stream
-    start, so quiet shards keep contributing across restarts — same
-    semantics and crash ordering as the other two), merge element-wise —
-    the sum IS the single global sketch, zero added error, see
-    ``cms_merged_counts`` — and append one (batch_id, key, estimate,
-    n_total) row per probed key per micro-batch to the parquet time
-    series, compacting every ``compact_every`` appends. ``probe_keys``
-    is the fixed list of keys being monitored (the CMS answers point
-    queries, so a monitoring pipeline names its keys up front); the
-    latest batch's rows are the live per-key frequency estimates, each
-    within the (e/width)*n_total single-sketch bound of its true global
-    count."""
+    """Operationalize the CMS merge as a LIVE pipeline: consume
+    ``streaming_freq_cms`` rows in foreachBatch, carry each shard's
+    latest table across micro-batches and restarts
+    (``_global_merge_fn``), merge element-wise — the sum IS the single
+    global sketch, zero added error, see ``cms_merged_counts`` — and
+    append one (batch_id, key, estimate, n_total) row per probed key per
+    micro-batch to the parquet time series, compacting every
+    ``compact_every`` appends. ``probe_keys`` is the fixed list of keys
+    being monitored (the CMS answers point queries, so a monitoring
+    pipeline names its keys up front); the latest batch's rows are the
+    live per-key frequency estimates, each within the (e/width)*n_total
+    single-sketch bound of its true global count."""
     keys = [int(k) for k in probe_keys]
 
-    def emit(batch_id: int, last_seen: dict) -> list[tuple]:
-        est = cms_merged_counts([v[0] for v in last_seen.values()], keys)
-        n_total = sum(v[1] for v in last_seen.values())
+    def emit(batch_id: int, rows: list, n_total: int) -> list[tuple]:
+        est = cms_merged_counts([r.tab for r in rows], keys)
         return [
             (int(batch_id), int(k), int(est[k]), int(n_total)) for k in keys
         ]
 
-    return _global_merge_pipeline(
-        summaries, out_path,
-        carry_schema="shard long, tab binary, shard_n long",
-        out_schema="batch_id long, key long, estimate long, n_total long",
-        output_mode="update",
-        compact_every=compact_every,
-        row_state=lambda r: (bytes(r.tab), r.shard_n),
-        hydrate_state=lambda r: (bytes(r.tab), r.shard_n),
-        carry_row=lambda s, v: (int(s), v[0], int(v[1])),
-        emit=emit,
+    return summaries.writeStream.outputMode("update").foreachBatch(
+        _global_merge_fn(
+            out_path,
+            out_schema="batch_id long, key long, estimate long, n_total long",
+            compact_every=compact_every, emit=emit,
+        )
     )
 
 
@@ -2329,98 +2275,34 @@ def write_global_reservoir(
     samples: DataFrame, out_path: str, k: int = RSV_CAPACITY,
     compact_every: int = 16,
 ):
-    """Operationalize the reservoir merge as a LIVE pipeline — the
-    fifth member of the global-sketch sink family (quantiles /
-    distinct / freq / bloom / this): consume
+    """Operationalize the reservoir merge as a LIVE pipeline: consume
     ``streaming_reservoir_sample`` rows in foreachBatch, carry each
-    shard's latest reservoir across micro-batches (persisted to the
-    atomically-swapped ``<out>_carry`` sidecar written before each
-    series append and re-hydrated at stream start, so a quiet shard's
-    sampled events keep representing it across restarts — same
-    semantics and crash ordering as the other four), merge by top-k of
-    the union — which by the deterministic-priority identity
-    (``reservoir_merged``) IS the sample a single reservoir over the
-    whole stream would hold, zero added distributional error — and
-    append one row per sampled event per micro-batch to the parquet
-    time series. The latest batch_id group is the live global uniform
-    sample (eval carve-outs, drift inspection panels); the history is
-    how the sample evolved. n_total annotates every row.
+    shard's latest reservoir (its k sampled rows) across micro-batches
+    and restarts (``_global_merge_fn``), so a quiet shard's sampled
+    events keep representing it, merge by top-k of the union — which by
+    the deterministic-priority identity (``reservoir_merged``) IS the
+    sample a single reservoir over the whole stream would hold, zero
+    added distributional error — and append one row per sampled event
+    per micro-batch to the parquet time series. The latest batch_id
+    group is the live global uniform sample (eval carve-outs, drift
+    inspection panels); the history is how the sample evolved. n_total
+    annotates every row."""
 
-    The reservoir's summary stage emits k ROWS per shard per batch
-    (its sample), not one scalar-summary row — the skeleton's
-    ``rows_transform`` hook groups them into one array-carrying record
-    per shard, after which the carry/merge choreography (and the
-    crash-point fuzz that drives it) is identical to the scalar
-    sinks'."""
-    from collections import namedtuple
-
-    ShardRes = namedtuple(
-        "ShardRes", "shard eids pris uids vals shard_n"
-    )
-
-    def group_rows(rows: list) -> list:
-        by_shard: dict[int, list] = {}
-        for r in rows:
-            by_shard.setdefault(int(r.shard), []).append(r)
-        out = []
-        for s, rs in by_shard.items():
-            # within one micro-batch a shard emits one reservoir; if a
-            # replayed frame ever carried two emissions, the larger
-            # shard_n is the later one — keep its rows only
-            n_max = max(int(r.shard_n) for r in rs)
-            rs = [r for r in rs if int(r.shard_n) == n_max]
-            out.append(ShardRes(
-                shard=s,
-                eids=[int(r.event_id) for r in rs],
-                pris=[float(r.priority) for r in rs],
-                uids=[int(r.user_id) for r in rs],
-                vals=[float(r.value) for r in rs],
-                shard_n=n_max,
-            ))
-        return out
-
-    def emit(batch_id: int, last_seen: dict) -> list[tuple]:
-        seen: dict[int, tuple] = {}
-        for eids, pris, uids, vals, _n in last_seen.values():
-            for e, p, u, v in zip(eids, pris, uids, vals):
-                # an event id lives in exactly one shard (shard =
-                # event_id % shards), so this dict never collides
-                # across shards; it exists for dict-shape symmetry
-                # with reservoir_merged, whose identity this emit
-                # reimplements over the carried arrays
-                seen[int(e)] = (float(p), int(u), float(v))
-        n_total = sum(v[-1] for v in last_seen.values())
-        items = sorted(
-            seen.items(), key=lambda kv: (kv[1][0], kv[0]), reverse=True
-        )[:k]
+    def emit(batch_id: int, rows: list, n_total: int) -> list[tuple]:
         return [
-            (int(batch_id), int(e), int(u), float(v), float(p), int(n_total))
-            for e, (p, u, v) in items
+            (int(batch_id), e, u, v, p, int(n_total))
+            for e, u, v, p in reservoir_merged(rows, k)
         ]
 
-    return _global_merge_pipeline(
-        samples, out_path,
-        carry_schema=(
-            "shard long, eids array<long>, pris array<double>, "
-            "uids array<long>, vals array<double>, shard_n long"
-        ),
-        out_schema=(
-            "batch_id long, event_id long, user_id long, value double, "
-            "priority double, n_total long"
-        ),
-        output_mode="update",
-        compact_every=compact_every,
-        row_state=lambda r: (r.eids, r.pris, r.uids, r.vals, r.shard_n),
-        hydrate_state=lambda r: (
-            list(r.eids), list(r.pris), list(r.uids), list(r.vals),
-            r.shard_n,
-        ),
-        carry_row=lambda s, v: (
-            int(s), list(v[0]), list(v[1]), list(v[2]), list(v[3]),
-            int(v[4]),
-        ),
-        emit=emit,
-        rows_transform=group_rows,
+    return samples.writeStream.outputMode("update").foreachBatch(
+        _global_merge_fn(
+            out_path,
+            out_schema=(
+                "batch_id long, event_id long, user_id long, value double, "
+                "priority double, n_total long"
+            ),
+            compact_every=compact_every, emit=emit,
+        )
     )
 
 
@@ -2618,27 +2500,20 @@ def write_exact_dedup_gated(
                 fill["n_est"] >= BLOOM_PREFILTER_MIN_RATIO * max(batch_rows, 1)
             )
         if prefilter_active:
-            from pyspark.sql import Observation
-
             bc = spark.sparkContext.broadcast(bytes(bloom.bits))
             # the suspect count and touched buckets ride the checkpoint's
-            # own job as an observation instead of two more jobs
-            s_obs = Observation(f"bloom_suspects_{batch_id}")
-            flags = (
+            # own job instead of two more jobs
+            flags, s_m = _observed_checkpoint(  # the broadcast probe, ONCE
                 bloom.probe(
                     keep.withColumn("dig_key", F.xxhash64("digest")), bc,
                     "dig_key", ["digest", "doc_id", "dig_bucket"],
                     "digest string, doc_id long, dig_bucket long",
-                )
-                .observe(
-                    s_obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.collect_set("dig_bucket").alias("buckets"),
-                )
-                .localCheckpoint()  # evaluate the broadcast probe ONCE
+                ),
+                n=F.count(F.lit(1)),
+                buckets=F.collect_set("dig_bucket"),
             )
-            n_suspect = int(s_obs.get["n"])
-            suspect_buckets = [int(b) for b in s_obs.get["buckets"]]
+            n_suspect = int(s_m["n"])
+            suspect_buckets = [int(b) for b in s_m["buckets"]]
             bc.unpersist(blocking=False)  # flags materialized above
         # a batch with zero suspects skips the corpus read outright: the
         # Bloom negative is definitive
@@ -2851,11 +2726,11 @@ def _ledger_append_batch(
     ``_ledger_reconcile`` at next start.
 
     Cost discipline (BENCH_AB_ledger.json; ``tools/gate_arm.py`` arms
-    ``plain`` and ``ledger`` time the gate without and with it): the
-    first cut re-read the ledger's max version and full state every
-    batch — 1.39x the plain gate at micro-batch sizes, pure
+    ``plain`` and ``ledger`` time the gate without and with it):
+    re-reading the ledger's max version and full state every batch
+    measured 1.39x the plain gate at micro-batch sizes, pure
     overhead-bound jobs. The state is
-    O(buckets), so it now CARRIES in driver memory across batches
+    O(buckets), so it CARRIES in driver memory across batches
     (hydrated once after the reconcile — the same carry idiom as the
     global-sketch sinks), leaving exactly one extra Spark job per
     admitting batch: the per-bucket partial collect (O(touched buckets)
@@ -3081,20 +2956,23 @@ def write_decontaminated(
     bloom = _BloomSidecar(out_path.rstrip("/") + "_benchbloom", bloom_bits)
     state: dict[str, object] = {"bc": None, "bench": None}
 
+    def _frozen(rows: DataFrame) -> tuple[DataFrame, int, list[int]]:
+        """``rows`` checkpointed, with its row count and touched buckets."""
+        rows, m = _observed_checkpoint(
+            rows, n=F.count(F.lit(1)), buckets=F.collect_set(admitted.col)
+        )
+        return rows, int(m["n"]), [int(b) for b in m["buckets"]]
+
     def _append_new(
-        spark, table: _BucketedTable, rows: DataFrame, n_rows: int | None = None
+        spark, table: _BucketedTable, rows: DataFrame, n_rows: int, buckets: list
     ) -> None:
-        """Replay-idempotent append: drop rows already in the touched
-        buckets, then append. One count serves the empty-frame guard and
-        the write shape; a caller that already counted passes ``n_rows``.
-        An empty frame is never written: appending one to a sink that
-        does not exist yet would leave a file-less directory."""
-        rows = rows.localCheckpoint()  # decide once: probe AND append
-        if n_rows is None:
-            n_rows = rows.count()
+        """Replay-idempotent append of a ``_frozen`` frame: drop rows
+        already in the touched buckets, then append. An empty frame is
+        never written: appending one to a sink that does not exist yet
+        would leave a file-less directory."""
         if n_rows == 0:
             return
-        seen = table.probe(spark, rows)
+        seen = table.probe(spark, buckets)
         if seen is not None:
             rows = rows.join(seen.select("doc_id"), "doc_id", "left_anti")
         table.write(rows, n_rows)
@@ -3186,18 +3064,17 @@ def write_decontaminated(
             # broadcast and the cached benchmark live as long as the gate
             state["bc"] = spark.sparkContext.broadcast(bytes(bloom.bits))
             bloom.bits = None
-        b = admitted.tag(batch).localCheckpoint()  # shingle ONCE below
+        b, n_b, b_buckets = _frozen(admitted.tag(batch))  # shingle ONCE below
         grams = b.select(
             "doc_id",
             F.explode(word_shingles(F.col("text"), n)).alias("gram"),
         ).withColumn("k", F.xxhash64("gram"))
-        suspects = (
+        suspects, s_m = _observed_checkpoint(  # the broadcast probe, ONCE
             bloom.probe(grams, state["bc"], "k", ["doc_id"], "doc_id long")
-            .distinct()
-            .localCheckpoint()  # evaluate the broadcast probe ONCE
+            .distinct(),
+            n=F.count(F.lit(1)),
         )
-        n_cont = 0
-        if suspects.count() > 0:
+        if int(s_m["n"]) > 0:
             # exact confirm: only suspect docs' grams join the benchmark
             # set (broadcast: the probe set is small by construction),
             # persisted once and reused across suspect batches
@@ -3205,25 +3082,22 @@ def write_decontaminated(
                 state["bench"] = (
                     spark.read.parquet(benchmark_grams).select("gram").persist()
                 )
-            contaminated = (
-                grams.join(suspects, "doc_id")
-                .join(F.broadcast(state["bench"]), "gram")
-                .groupBy("doc_id")
-                .agg(F.countDistinct("gram").alias("n_gram_hits"))
-                .localCheckpoint()  # feeds quarantine AND the anti-join
-            )
-            n_cont = contaminated.count()
-        # an all-false-positive batch writes no quarantine at all
-        if n_cont > 0:
-            _append_new(
-                spark, quarantine,
+            cont, n_cont, cont_buckets = _frozen(  # quarantine AND anti-join
                 admitted.tag(
-                    contaminated.withColumn("batch_id", F.lit(int(batch_id)))
-                ),
-                n_cont,
+                    grams.join(suspects, "doc_id")
+                    .join(F.broadcast(state["bench"]), "gram")
+                    .groupBy("doc_id")
+                    .agg(F.countDistinct("gram").alias("n_gram_hits"))
+                    .withColumn("batch_id", F.lit(int(batch_id)))
+                )
             )
-            b = b.join(contaminated.select("doc_id"), "doc_id", "left_anti")
-        _append_new(spark, admitted, b)
+            # an all-false-positive batch writes no quarantine at all
+            if n_cont > 0:
+                _append_new(spark, quarantine, cont, n_cont, cont_buckets)
+                b, n_b, b_buckets = _frozen(
+                    b.join(cont.select("doc_id"), "doc_id", "left_anti")
+                )
+        _append_new(spark, admitted, b, n_b, b_buckets)
 
     return docs.writeStream.foreachBatch(_ingest)
 
@@ -3260,8 +3134,8 @@ _POPCOUNT_LUT = None  # built lazily: 256-entry bits-per-byte table
 def _bloom_popcount(bits) -> float:
     """Set-bit count of a packed filter via a byte LUT — the temporary
     is |bits| int64 elements instead of np.unpackbits' 8x uint8 blow-up
-    (which at a corpus-sized filter is a GiB-scale allocation per call,
-    round-12 review finding)."""
+    (which at a corpus-sized filter is a GiB-scale allocation per
+    call)."""
     import numpy as np
 
     global _POPCOUNT_LUT
@@ -3394,12 +3268,10 @@ def bloom_might_contain(blobs: list, keys) -> dict[int, bool]:
 def write_global_bloom(
     summaries: DataFrame, out_path: str, probe_keys, compact_every: int = 16
 ):
-    """Operationalize the Bloom merge as a LIVE pipeline — the fourth
-    global-sketch sink on the shared ``_global_merge_pipeline`` skeleton
-    (quantiles / distinct / freq / this), inheriting its carry sidecar,
-    crash ordering, restart hydration, and seeded compaction unchanged:
-    consume ``streaming_seen_bloom`` rows in foreachBatch, carry each
-    shard's latest bit array, OR them — byte-exactly the single global
+    """Operationalize the Bloom merge as a LIVE pipeline: consume
+    ``streaming_seen_bloom`` rows in foreachBatch, carry each shard's
+    latest bit array across micro-batches and restarts
+    (``_global_merge_fn``), OR them — byte-exactly the single global
     filter, see ``bloom_merged_bits`` — and append one (batch_id, key,
     seen, n_total, fill_ratio) row per probed key per micro-batch to the
     parquet time series. ``probe_keys`` is the fixed watch list (point
@@ -3408,31 +3280,24 @@ def write_global_bloom(
     fill_ratio**k, so a monitoring panel sees saturation coming."""
     keys = [int(k) for k in probe_keys]
 
-    def emit(batch_id: int, last_seen: dict) -> list[tuple]:
+    def emit(batch_id: int, rows: list, n_total: int) -> list[tuple]:
         import numpy as np
 
-        blobs = [v[0] for v in last_seen.values()]
-        merged = bloom_merged_bits(blobs)
-        ks = np.asarray(keys, dtype=np.int64)
-        ans = _bloom_query(merged, ks)
-        n_total = sum(v[1] for v in last_seen.values())
+        merged = bloom_merged_bits([r.bits for r in rows])
+        ans = _bloom_query(merged, np.asarray(keys, dtype=np.int64))
         fill = _bloom_popcount(merged) / BLOOM_BITS
         return [
-            (int(batch_id), int(k), bool(a), int(n_total), fill)
-            for k, a in zip(ks.tolist(), ans.tolist())
+            (int(batch_id), k, bool(a), int(n_total), fill)
+            for k, a in zip(keys, ans.tolist())
         ]
 
-    return _global_merge_pipeline(
-        summaries, out_path,
-        carry_schema="shard long, bits binary, shard_n long",
-        out_schema=(
-            "batch_id long, key long, seen boolean, n_total long, "
-            "fill_ratio double"
-        ),
-        output_mode="update",
-        compact_every=compact_every,
-        row_state=lambda r: (bytes(r.bits), r.shard_n),
-        hydrate_state=lambda r: (bytes(r.bits), r.shard_n),
-        carry_row=lambda s, v: (int(s), v[0], int(v[1])),
-        emit=emit,
+    return summaries.writeStream.outputMode("update").foreachBatch(
+        _global_merge_fn(
+            out_path,
+            out_schema=(
+                "batch_id long, key long, seen boolean, n_total long, "
+                "fill_ratio double"
+            ),
+            compact_every=compact_every, emit=emit,
+        )
     )

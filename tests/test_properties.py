@@ -538,9 +538,10 @@ def test_jpeg_progressive_equals_baseline_property(
 )
 @settings(max_examples=60, deadline=None)
 def test_gk_bulk_kernel_rank_bound_property(data, splits, seed):
-    """The sorted-splice GK kernel (round 9) under randomized streams AND
+    """The sorted-splice GK kernel under randomized streams AND
     randomized micro-batch splits: after folding the whole stream, every
-    phi-quantile answered by the GK01 rule must sit within eps*n rank
+    phi-quantile answered by the GK01 rule (``_gk_query``, the answer
+    ``streaming_quantiles_gk`` emits) must sit within eps*n rank
     error of the exact sorted data — the operator's contract,
     independent of batch boundaries, duplicates, or value range. Also
     re-asserts the structural invariants (value order, mass
@@ -578,16 +579,7 @@ def test_gk_bulk_kernel_rank_bound_property(data, splits, seed):
     for phi in sp.GK_PHIS:
         r = max(1, int(math.ceil(phi * n)))
         band = eps * n
-        # the GK01 answer rule (same as streaming_quantiles_gk)
-        rmin = 0
-        ans = prev = tup[0][0]
-        for v, g, d in tup:
-            rmin += g
-            if rmin + d > r + band:
-                ans = prev
-                break
-            prev = v
-            ans = v
+        ans = sp._gk_query(tup, n, phi, eps)
         lo = bisect.bisect_left(xs, ans) + 1
         hi = bisect.bisect_right(xs, ans)
         # +1 absorbs ceil/tie slack, same as the streaming test's bound

@@ -4690,44 +4690,48 @@ def test_table_has_data_semantics(spark, tmp_path):
 
 # ------------------------------------- global-sink crash-point fuzz
 
-# each sink as (summary_builder, sink_builder): the summary stream is
-# run ONCE per sink to harvest its real micro-batch rows; the fuzz then
-# drives the sink's foreachBatch function directly (round-12 refactor:
-# _global_merge_fn), so 20+ crash/restart cycles cost driver-side jobs,
-# not 20+ streaming-engine starts
+# each sink as (summary_builder, sink_builder, output_mode): the summary
+# stream is run ONCE per sink, in the sink's own output mode, to harvest
+# its real micro-batch rows; the fuzz then drives the sink's
+# foreachBatch function (_global_merge_fn) directly, so 20+ crash/restart
+# cycles cost driver-side jobs, not 20+ streaming-engine starts. The
+# reservoir sink's summary emits k rows per shard per batch, so it puts
+# the multi-row carry through the same crash points as the one-row sinks
 _FUZZ_SINKS = {
     "quantiles": (
         lambda ev: sp.streaming_quantiles_gk_summary(ev),
         lambda ev, out: sp.write_global_quantiles(
             sp.streaming_quantiles_gk_summary(ev), out, compact_every=2
         ),
+        "append",
     ),
     "distinct": (
         lambda ev: sp.streaming_distinct_hll(ev),
         lambda ev, out: sp.write_global_distinct(
             sp.streaming_distinct_hll(ev), out, compact_every=2
         ),
+        "update",
     ),
     "freq": (
         lambda ev: sp.streaming_freq_cms(ev),
         lambda ev, out: sp.write_global_freq(
             sp.streaming_freq_cms(ev), out, [3, 7, 424242], compact_every=2
         ),
+        "update",
     ),
     "bloom": (
         lambda ev: sp.streaming_seen_bloom(ev),
         lambda ev, out: sp.write_global_bloom(
             sp.streaming_seen_bloom(ev), out, [3, 7, 424242], compact_every=2
         ),
+        "update",
     ),
-    # round 14: the reservoir sink exercises the skeleton's
-    # rows_transform hook (k rows per shard per batch, grouped to one
-    # array-carrying record) through the same crash points
     "reservoir": (
         lambda ev: sp.streaming_reservoir_sample(ev),
         lambda ev, out: sp.write_global_reservoir(
             sp.streaming_reservoir_sample(ev), out, compact_every=2
         ),
+        "update",
     ),
 }
 
@@ -4770,37 +4774,27 @@ def _fuzz_events_src(spark, base_dir, n_files=4, per_file=100):
 
 
 def _fuzz_capture_cfg(spark, tmp_path, sink, monkeypatch):
-    """Build the sink once with _global_merge_pipeline spied, capturing
-    the exact skeleton config the public sink uses — the fuzz then
-    mints fresh _merge closures (== driver restarts) from it."""
+    """Build the sink once with _global_merge_fn spied, capturing the
+    exact config the public sink passes it — the fuzz then mints fresh
+    _merge closures (== driver restarts) from it. The sink's writer is
+    never started."""
     cfg = {}
-    real = sp._global_merge_pipeline
+    real = sp._global_merge_fn
 
-    def spy(summaries, out_path, **kw):
+    def spy(out_path, **kw):
         cfg.update(kw)
+        return real(out_path, **kw)
 
-        class _W:  # never started; the builder just returns it
-            def option(self, *a, **k):
-                return self
-
-            def start(self):
-                raise AssertionError("fuzz spy writer must not start")
-
-        return _W()
-
-    monkeypatch.setattr(sp, "_global_merge_pipeline", spy)
+    monkeypatch.setattr(sp, "_global_merge_fn", spy)
     try:
         ev = sp.read_events_stream(
             spark, str(tmp_path), max_files=1
-        )  # path only shapes the (never-started) spy writer
+        )  # path only shapes the (never-started) writer
         _FUZZ_SINKS[sink][1](ev, str(tmp_path / "fz_spy_out"))
     finally:
-        monkeypatch.setattr(sp, "_global_merge_pipeline", real)
-    assert cfg, "spy captured no skeleton config"
-    # writer-level, not _merge-level — but the harvest must write the
-    # summary stream in the sink's OWN mode (quantiles is append-only)
-    mode = cfg.pop("output_mode")
-    return cfg, mode
+        monkeypatch.setattr(sp, "_global_merge_fn", real)
+    assert cfg, "spy captured no merge config"
+    return cfg, _FUZZ_SINKS[sink][2]
 
 
 def _fuzz_harvest_batches(spark, src, tmp_path, sink, mode):
@@ -4832,23 +4826,22 @@ def _fuzz_harvest_batches(spark, src, tmp_path, sink, mode):
 @_pytest_mod.mark.parametrize("sink", sorted(_FUZZ_SINKS))
 def test_global_sink_crash_point_fuzz(spark, tmp_path, monkeypatch, sink,
                                       _fuzz_src_dir):
-    """Round-12 verdict #5: the carry/compact/swap idioms each had
-    hand-reconstructed crash tests; this harness kills the skeleton at
-    a SEEDED RANDOM filesystem operation (any rename/delete of any
-    batch — carry swap, series append bookkeeping, compaction swap) by
-    making the op raise, then simulates the driver restart the
-    streaming engine would perform (a FRESH _merge closure — hydration
-    flag, carry cache, compaction counter all rebuilt — replaying the
-    failed batch id with identical rows, which is exactly what the
-    checkpoint guarantees) and asserts across 5 seeds per sink (20
-    crash/restart cycles over the four sinks sharing the skeleton):
+    """Crash-point fuzz of the global-sketch sinks' carry, append and
+    compaction swaps: kill _global_merge_fn at a SEEDED RANDOM filesystem
+    operation (any rename/delete of any batch — carry swap, series
+    append bookkeeping, compaction swap) by making the op raise, then
+    simulate the driver restart the streaming engine would perform (a
+    FRESH _merge closure — hydration flag, carry, compaction counter all
+    rebuilt — replaying the failed batch id with identical rows, which
+    is exactly what the checkpoint guarantees) and assert across 5 seeds
+    per sink (25 crash/restart cycles over the five sinks):
 
     1. the DISTINCT series rows equal a crash-free reference run's
        byte-for-byte (replay after an uncommitted append may duplicate
        a batch's rows — the documented idempotent-replay semantics —
        but may never change or lose a value);
     2. the series file count stays within the compact_every + 1 bound
-       (restart-seeded counter, round-11 brief);
+       (the compaction counter is seeded from the series at restart);
     3. where the series carries n_total, it is non-decreasing in
        batch_id (a lost carry would dent it after a restart).
     """
@@ -4920,3 +4913,133 @@ def test_global_sink_crash_point_fuzz(spark, tmp_path, monkeypatch, sink,
             assert seq == sorted(seq), (
                 f"seed {seed}: n_total dipped after a crash/restart"
             )
+
+
+def _summary_rows(sink: str, shard: int, n: int) -> list[tuple]:
+    """One hand-built emission of ``sink``'s summary stage for ``shard``
+    after ``n`` events, in the summary's own column order: one row for
+    the GK and packed-array sketches, three sampled events for the
+    reservoir. Contents depend on (shard, n), so a stale emission and a
+    fresh one merge to different outputs."""
+    import numpy as np
+
+    ids = np.arange(n, dtype=np.int64) * 7 + 1000 * shard
+    if sink == "quantiles":
+        return [(shard, [10.0 * shard, 10.0 * shard + n], [1, n - 1], [0, 0], n)]
+    if sink == "distinct":
+        regs = np.zeros(1 << sp.HLL_B, dtype=np.uint8)
+        sp._hll_update(regs, ids)
+        return [(shard, float(n), n, regs.tobytes())]
+    if sink == "freq":
+        tab = np.zeros((sp.CMS_DEPTH, 1 << sp.CMS_W_BITS), dtype=np.int64)
+        sp._cms_update(tab, ids % 5)
+        return [(shard, n, tab.tobytes())]
+    if sink == "bloom":
+        bits = np.zeros(sp.BLOOM_BITS >> 3, dtype=np.uint8)
+        sp._bloom_update(bits, ids % 5)
+        return [(shard, n, bits.tobytes())]
+    eids = [shard + sp.RSV_SHARDS * (n + j) for j in range(3)]
+    pris = sp._rsv_priority(np.asarray(eids, dtype=np.int64)).tolist()
+    return [(shard, e, e % 97, float(n), p, n) for e, p in zip(eids, pris)]
+
+
+_SUMMARY_SCHEMAS = {
+    "quantiles": sp._GK_SUMMARY_OUT_SCHEMA,
+    "distinct": sp._HLL_OUT_SCHEMA,
+    "freq": sp._CMS_OUT_SCHEMA,
+    "bloom": sp._BLOOM_OUT_SCHEMA,
+    "reservoir": sp._RSV_OUT_SCHEMA,
+}
+
+# the carry each sink wrote before its sidecar held summary rows: a
+# per-sink record of (shard, sketch payload, shard_n), reservoir arrays
+# for the k sampled events. Hydration reads the summary's columns by
+# name, so a record holding all of them hydrates; one lacking any raises
+_PRE_SUMMARY_CARRIES = {
+    "quantiles": (
+        "shard long, vs array<double>, gs array<long>, ds array<long>, "
+        "shard_n long",
+        lambda r: (r[0], r[1], r[2], r[3], r[4]),
+        None,
+    ),
+    "distinct": ("shard long, regs binary, shard_n long",
+                 lambda r: (r[0], r[3], r[2]), "estimate"),
+    "freq": ("shard long, tab binary, shard_n long",
+             lambda r: (r[0], r[2], r[1]), None),
+    "bloom": ("shard long, bits binary, shard_n long",
+              lambda r: (r[0], r[2], r[1]), None),
+    "reservoir": (
+        "shard long, eids array<long>, pris array<double>, "
+        "uids array<long>, vals array<double>, shard_n long",
+        lambda r: (r[0], [r[1]], [r[4]], [r[2]], [r[3]], r[5]),
+        "event_id",
+    ),
+}
+
+
+@_pytest_mod.mark.parametrize("sink", sorted(_FUZZ_SINKS))
+def test_global_merge_fn_carries_latest_summary_rows(
+    spark, tmp_path, monkeypatch, sink
+):
+    """Every global-sketch sink's merge function, driven directly with
+    hand-built summary frames (no streaming engine): a quiet shard's
+    rows keep feeding the output; a shard emitting twice in one frame
+    is carried at its larger shard_n only, and a stale emission never
+    replaces the carry; a fresh closure (a restart) hydrates the carry;
+    the reservoir's output is ``reservoir_merged`` over the carried
+    rows; and a carry written in the pre-summary-row format hydrates
+    when it holds every summary column, else raises ValueError."""
+    cfg, _mode = _fuzz_capture_cfg(spark, tmp_path, sink, monkeypatch)
+    schema = _SUMMARY_SCHEMAS[sink]
+
+    def frame(*emissions):
+        rows = [r for s, n in emissions for r in _summary_rows(sink, s, n)]
+        return spark.createDataFrame(rows, schema)
+
+    def expected(bid, *emissions):
+        rows = frame(*emissions).collect()
+        n_total = sum(n for _, n in emissions)
+        return rows, {tuple(t) for t in cfg["emit"](bid, rows, n_total)}
+
+    def series(out, bid):
+        return {
+            tuple(r) for r in spark.read.parquet(out).collect()
+            if r.batch_id == bid
+        }
+
+    out = str(tmp_path / "gm_out")
+    merge = sp._global_merge_fn(out, **cfg)
+    merge(frame((0, 4), (1, 6)), 0)
+    assert series(out, 0) == expected(0, (0, 4), (1, 6))[1]
+    # shard 1 is quiet; shard 2 emits twice in one frame
+    merge(frame((0, 9), (2, 3), (2, 8)), 1)
+    assert series(out, 1) == expected(1, (0, 9), (1, 6), (2, 8))[1]
+    carry = spark.read.parquet(out + "_carry").collect()
+    assert sorted({(r.shard, r.shard_n) for r in carry}) == [(0, 9), (1, 6), (2, 8)]
+    assert len(carry) == 3 * len(_summary_rows(sink, 0, 1))
+
+    # restart: shards 0 and 2 come only from the hydrated carry, and a
+    # stale shard-0 emission does not replace it
+    merge = sp._global_merge_fn(out, **cfg)
+    merge(frame((1, 11), (0, 4)), 2)
+    rows, want = expected(2, (0, 9), (1, 11), (2, 8))
+    assert series(out, 2) == want
+    if sink == "reservoir":
+        assert sorted(t[1:5] for t in series(out, 2)) == sorted(
+            sp.reservoir_merged(rows, sp.RSV_CAPACITY)
+        )
+
+    old_out = str(tmp_path / "gm_old_out")
+    ddl, to_old, missing = _PRE_SUMMARY_CARRIES[sink]
+    sp._driver_write_parquet(
+        spark, [to_old(r) for r in _summary_rows(sink, 0, 5)], ddl,
+        old_out + "_carry",
+    )
+    merge = sp._global_merge_fn(old_out, **cfg)
+    if missing is None:
+        merge(frame((1, 2)), 0)
+        assert series(old_out, 0) == expected(0, (0, 5), (1, 2))[1]
+    else:
+        with _pytest_mod.raises(ValueError, match=missing) as err:
+            merge(frame((1, 2)), 0)
+        assert old_out + "_carry" in str(err.value)

@@ -20,7 +20,8 @@ analogues implemented here:
   count-min frequencies, a deterministic reservoir sample, a Bloom
   membership filter and per-key Welford anomaly detection, each with
   its deterministic guarantee asserted against batch ground truth in
-  ``tests/test_streaming.py``;
+  ``tests/test_streaming.py``; the counter and every sketch but Welford
+  share one group-state update, ``_sharded_sketch``;
 - the global-sketch sinks, this module's streaming form of the
   reference's fold: ``write_global_quantiles`` / ``_distinct`` /
   ``_freq`` / ``_bloom`` / ``_reservoir`` merge the latest per-shard
@@ -144,27 +145,62 @@ _STATE_SCHEMA = "n long"
 _OUT_SCHEMA = "user_id long, n_events long"
 
 
-def stateful_user_counts(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: a running
-    per-user event counter whose state survives across micro-batches (the
-    idiom for operators Spark's built-in aggs can't express)."""
+def _sharded_sketch(
+    events: DataFrame, shard, cols, *, init, load, fold, dump, rows,
+    out_schema: str, state_schema: str, mode: str = "update",
+) -> DataFrame:
+    """The group-state protocol of the eight sharded-state operators:
+    ``stateful_user_counts``, ``streaming_heavy_hitters``,
+    ``streaming_quantiles_gk`` and ``streaming_quantiles_gk_summary``,
+    ``streaming_distinct_hll``, ``streaming_freq_cms``,
+    ``streaming_seen_bloom`` and ``streaming_reservoir_sample``.
+
+    Events group by the column ``shard`` (aliased ``shard``) and carry
+    ``cols``. A group's state is ``(*dump(sketch), n)``: the sketch's
+    columns and the shard's event count, so ``state_schema`` ends in
+    ``n long``. Per micro-batch the sketch is ``load(*saved)`` from the
+    state, or ``init()`` for a new shard; each pandas chunk is folded as
+    ``sketch = fold(sketch, pdf, n)``, ``n`` counting the rows before
+    the chunk. The state is then updated and the operator yields
+    ``rows(shard, sketch, n)``, a pandas frame in ``out_schema``."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def update(key, pdfs, state):
-        import pandas as pd
-
-        n = state.get[0] if state.exists else 0
+        if state.exists:
+            *saved, n = state.get
+            sketch, n = load(*saved), int(n)
+        else:
+            sketch, n = init(), 0
         for pdf in pdfs:
+            sketch = fold(sketch, pdf, n)
             n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
+        state.update((*dump(sketch), n))
+        yield rows(key[0], sketch, n)
 
     return (
-        events.select("user_id", "ts", "event_id")
-        .groupBy("user_id")
+        events.select(shard.alias("shard"), *cols)
+        .groupBy("shard")
         .applyInPandasWithState(
-            update, _OUT_SCHEMA, _STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
+            update, out_schema, state_schema, mode, GroupStateTimeout.NoTimeout
         )
+    )
+
+
+def stateful_user_counts(events: DataFrame) -> DataFrame:
+    """Custom stateful operator via applyInPandasWithState: a running
+    per-user event counter whose state survives across micro-batches (the
+    idiom for operators Spark's built-in aggs can't express). Each user
+    is its own shard, with no sketch beside its count."""
+
+    def rows(user_id, _, n):
+        import pandas as pd
+
+        return pd.DataFrame({"user_id": [user_id], "n_events": [n]})
+
+    return _sharded_sketch(
+        events, F.col("user_id"), [], init=lambda: None, load=lambda: None,
+        fold=lambda _, pdf, n: None, dump=lambda _: (), rows=rows,
+        out_schema=_OUT_SCHEMA, state_schema=_STATE_SCHEMA,
     )
 
 
@@ -996,38 +1032,26 @@ def streaming_heavy_hitters(
     deterministic guarantee, order-robust, at per-batch instead of
     per-event Python cost. ``_mg_merge`` is the pure, unit-testable
     kernel."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def update(key, pdfs, state):
+    def fold(mg, pdf, n):
+        vc = pdf["user_id"].value_counts()
+        return _mg_merge(mg, zip(vc.index, vc.to_numpy()), capacity)
+
+    def rows(shard, mg, n):
         import pandas as pd
 
-        if state.exists:
-            items, counts, n = state.get
-            mg = dict(zip(items, counts))
-            n = int(n)
-        else:
-            mg, n = {}, 0
-        for pdf in pdfs:
-            n += len(pdf)
-            vc = pdf["user_id"].value_counts()
-            mg = _mg_merge(mg, zip(vc.index, vc.to_numpy()), capacity)
-        state.update((list(mg), list(mg.values()), n))
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]] * len(mg),
-                "user_id": list(mg),
-                "mg_count": list(mg.values()),
-                "shard_n": [n] * len(mg),
-            }
-        )
+        return pd.DataFrame({
+            "shard": [shard] * len(mg),
+            "user_id": list(mg),
+            "mg_count": list(mg.values()),
+            "shard_n": [n] * len(mg),
+        })
 
-    return (
-        events.select((F.col("user_id") % shards).alias("shard"), "user_id")
-        .groupBy("shard")
-        .applyInPandasWithState(
-            update, _MG_OUT_SCHEMA, _MG_STATE_SCHEMA, "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _sharded_sketch(
+        events, F.col("user_id") % shards, ["user_id"], init=dict,
+        load=lambda items, counts: dict(zip(items, counts)), fold=fold,
+        dump=lambda mg: (list(mg), list(mg.values())), rows=rows,
+        out_schema=_MG_OUT_SCHEMA, state_schema=_MG_STATE_SCHEMA,
     )
 
 
@@ -1161,27 +1185,21 @@ _GK_SUMMARY_OUT_SCHEMA = (
 )
 
 
-def _gk_state_load(state) -> tuple[list[list], int]:
-    if state.exists:
-        vs, gs, ds, n = state.get
-        return [[float(v), int(g), int(d)] for v, g, d in zip(vs, gs, ds)], int(n)
-    return [], 0
+def _gk_state_dump(tup: list) -> tuple:
+    """The summary's (vs, gs, ds) columns."""
+    return ([t[0] for t in tup], [t[1] for t in tup], [t[2] for t in tup])
 
 
-def _gk_state_dump(tup: list[list], n: int) -> tuple:
-    return ([t[0] for t in tup], [t[1] for t in tup], [t[2] for t in tup], n)
-
-
-def _gk_insert_batch(tup: list[list], n: int, pdf, eps: float) -> int:
-    """Insert one pandas batch of (ts, event_id, value) rows into the GK
-    summary as a SORTED-BATCH SPLICE (a per-value Python loop caps
-    throughput at a real event rate): sort the batch once, vectorize the
-    insertion
-    positions with one ``searchsorted``, splice every new (v, 1, delta)
-    tuple in with ``np.insert``, then run ONE left-to-right compress pass
-    at the batch-final threshold. ``_gk_sketch`` runs it for both the
-    estimate- and the summary-emitting operator, so their state evolves
-    identically; returns the new n and mutates ``tup`` in place.
+def _gk_insert_batch(tup: list, n: int, pdf, eps: float) -> list:
+    """Insert one pandas batch's ``value`` column into the GK summary
+    (a list of (v, g, delta) tuples) as a SORTED-BATCH SPLICE (a
+    per-value Python loop caps throughput at a real event rate): sort
+    the batch once, vectorize the insertion positions with one
+    ``searchsorted``, splice every new (v, 1, delta) tuple in with
+    ``np.insert``, then run ONE left-to-right compress pass at the
+    batch-final threshold. ``tup`` summarizes the ``n`` values
+    seen before ``pdf``; returns the summary of all of them. Both GK
+    operators fold with it, so their state evolves identically.
 
     Correctness shape (the tests pin it): inserting the batch in value
     order is a legal GK01 insertion order, and the k-th smallest batch
@@ -1212,7 +1230,7 @@ def _gk_insert_batch(tup: list[list], n: int, pdf, eps: float) -> int:
 
     vals = pdf["value"].to_numpy(dtype=float)
     if vals.size == 0:
-        return n
+        return tup
     vals = np.sort(vals)
     n_new = n + int(vals.size)
     # virtual sequential insertion times: k-th smallest value "arrives"
@@ -1257,11 +1275,10 @@ def _gk_insert_batch(tup: list[list], n: int, pdf, eps: float) -> int:
         else:
             out.append([vs_l[j], g_here, ds_l[j]])
             pending = 0
-    tup[:] = out
-    return n_new
+    return out
 
 
-def _gk_query(tup: list[list], n: int, phi: float, eps: float) -> float:
+def _gk_query(tup: list, n: int, phi: float, eps: float) -> float:
     """The GK01 QUANTILE rule over one summary of ``n`` values: answer
     the value BEFORE the first tuple whose rmax exceeds r + eps*n, where
     r = ceil(phi*n); under the GK invariant its rank is within eps*n of
@@ -1281,44 +1298,13 @@ def _gk_query(tup: list[list], n: int, phi: float, eps: float) -> float:
     return prev
 
 
-def _gk_sketch(
-    events: DataFrame, eps: float, shards: int, *, rows, out_schema: str,
-    mode: str,
-) -> DataFrame:
-    """The state update shared by the two GK operators. Events shard by
-    ``user_id % shards``; each micro-batch folds the shard's values into
-    its summary with ``_gk_insert_batch``, so both operators' state
-    evolves identically, and yields ``rows(shard, tup, n)``, a pandas
-    frame in ``out_schema``."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        tup, n = _gk_state_load(state)
-        for pdf in pdfs:
-            n = _gk_insert_batch(tup, n, pdf, eps)
-        state.update(_gk_state_dump(tup, n))
-        yield rows(key[0], tup, n)
-
-    return (
-        events.select(
-            (F.col("user_id") % shards).alias("shard"), "ts", "event_id", "value"
-        )
-        .groupBy("shard")
-        .applyInPandasWithState(
-            update, out_schema, _GK_STATE_SCHEMA, mode,
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def streaming_quantiles_gk(
     events: DataFrame, eps: float = GK_EPS, shards: int = GK_SHARDS
 ) -> DataFrame:
     """Streaming quantiles via the Greenwald-Khanna summary in group
-    state — the third of the streaming-sketch trio (exact counter /
-    Misra-Gries heavy hitters / GK quantiles): continuous percentile
-    monitoring of ``value`` whose state is O((1/eps) log(eps n)) tuples
-    per shard instead of the stream itself.
+    state (``_sharded_sketch``, sharded by ``user_id % shards``):
+    continuous percentile monitoring of ``value`` whose state is
+    O((1/eps) log(eps n)) tuples per shard instead of the stream itself.
 
     Each state tuple (v, g, delta) brackets the true rank of v between
     rmin = sum(g up to here) and rmax = rmin + delta; inserts add
@@ -1343,8 +1329,12 @@ def streaming_quantiles_gk(
             "shard_n": n,
         })
 
-    return _gk_sketch(
-        events, eps, shards, rows=rows, out_schema=_GK_OUT_SCHEMA, mode="update"
+    return _sharded_sketch(
+        events, F.col("user_id") % shards, ["value"], init=list,
+        load=lambda *cols: list(zip(*cols)),
+        fold=lambda tup, pdf, n: _gk_insert_batch(tup, n, pdf, eps),
+        dump=_gk_state_dump, rows=rows, out_schema=_GK_OUT_SCHEMA,
+        state_schema=_GK_STATE_SCHEMA,
     )
 
 
@@ -1419,7 +1409,7 @@ def streaming_quantiles_gk_summary(
     events: DataFrame, eps: float = GK_EPS, shards: int = GK_SHARDS
 ) -> DataFrame:
     """The summary-emitting twin of ``streaming_quantiles_gk``: identical
-    state evolution (shared ``_gk_sketch`` update), but each
+    state evolution (the same ``_gk_insert_batch`` fold), but each
     micro-batch emits the shard's raw GK tuples (vs, gs, ds, n) instead
     of point estimates — the mergeable form. Downstream, the latest row
     per shard feeds ``gk_merged_quantiles`` for GLOBAL quantiles with
@@ -1430,7 +1420,7 @@ def streaming_quantiles_gk_summary(
     def rows(shard, tup, n):
         import pandas as pd
 
-        vs, gs, ds, _ = _gk_state_dump(tup, n)
+        vs, gs, ds = _gk_state_dump(tup)
         return pd.DataFrame(
             {"shard": [shard], "vs": [vs], "gs": [gs], "ds": [ds], "shard_n": [n]}
         )
@@ -1438,9 +1428,12 @@ def streaming_quantiles_gk_summary(
     # append mode: each batch's summary row is an immutable time-series
     # record (never retracted), which also admits durable append sinks
     # (parquet) for checkpoint-recovery coverage
-    return _gk_sketch(
-        events, eps, shards, rows=rows, out_schema=_GK_SUMMARY_OUT_SCHEMA,
-        mode="append",
+    return _sharded_sketch(
+        events, F.col("user_id") % shards, ["value"], init=list,
+        load=lambda *cols: list(zip(*cols)),
+        fold=lambda tup, pdf, n: _gk_insert_batch(tup, n, pdf, eps),
+        dump=_gk_state_dump, rows=rows, out_schema=_GK_SUMMARY_OUT_SCHEMA,
+        state_schema=_GK_STATE_SCHEMA, mode="append",
     )
 
 
@@ -1448,6 +1441,11 @@ HLL_B = 12  # 2^12 = 4096 registers; standard error 1.04/sqrt(m) ~ 1.6%
 HLL_SHARDS = 4
 
 _HLL_STATE_SCHEMA = "regs binary, n long"
+_HLL_SPEC = (
+    "uint8", (1 << HLL_B,),
+    "register width {} != 2^HLL_B = {}; summaries from different HLL_B "
+    "configurations do not merge",
+)
 _HLL_OUT_SCHEMA = "shard long, estimate double, shard_n long, regs binary"
 
 
@@ -1533,56 +1531,62 @@ def _hll_estimate(regs) -> float:
     return m * m / (2.0 * math.log(2.0) * z)
 
 
+def _unpack(blob, dtype: str, shape: tuple, what: str):
+    """The ``shape``/``dtype`` numpy array (read-only) packed in
+    ``blob``. A blob of another width raises ValueError with ``what``
+    formatted by the blob's and the expected element counts: summaries
+    of different sketch configurations neither load nor merge."""
+    import numpy as np
+
+    arr = np.frombuffer(bytes(blob), dtype=dtype)
+    want = int(np.prod(shape))
+    if arr.size != want:
+        raise ValueError(what.format(arr.size, want))
+    return arr.reshape(shape)
+
+
 def _packed_sketch(
-    events: DataFrame, shards: int, *, blob: str, dtype: str, shape: tuple,
-    fold, out_schema: str, state_schema: str, extra=None,
+    events: DataFrame, shards: int, *, blob: str, spec: tuple, fold,
+    out_schema: str, state_schema: str, extra=None,
 ) -> DataFrame:
-    """The state update shared by the packed-array sketches (HLL, CMS,
-    Bloom). Events shard by ``event_id % shards``; a shard's state is
-    ``(blob, n)``: its numpy array (``shape``/``dtype``) packed to bytes,
-    and its event count. Each micro-batch folds the shard's ``user_id``
-    keys in place with ``fold(arr, ids)`` and emits one row: shard, the
+    """The packed-array sketches (HLL, CMS, Bloom) on ``_sharded_sketch``.
+    Events shard by ``event_id % shards``; the sketch is a numpy array,
+    ``spec = (dtype, shape, what)`` as ``_unpack`` takes it, kept in
+    state packed to bytes. Each chunk's ``user_id`` keys fold in place
+    with ``fold(arr, ids)``; each micro-batch emits one row: shard, the
     columns ``extra(arr)`` returns, shard_n, and the packed array under
     ``blob`` (the mergeable form the global sinks read)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def update(key, pdfs, state):
+    def init():
         import numpy as np
+
+        return np.zeros(spec[1], dtype=spec[0])
+
+    def fold_keys(arr, pdf, n):
+        fold(arr, pdf["user_id"].to_numpy(dtype="int64"))
+        return arr
+
+    def rows(shard, arr, n):
         import pandas as pd
 
-        if state.exists:
-            packed, n = state.get
-            arr = np.frombuffer(bytes(packed), dtype=dtype).reshape(shape).copy()
-            n = int(n)
-        else:
-            arr, n = np.zeros(shape, dtype=dtype), 0
-        for pdf in pdfs:
-            ids = pdf["user_id"].to_numpy(dtype=np.int64)
-            n += ids.size
-            fold(arr, ids)
-        packed = arr.tobytes()
-        state.update((packed, n))
-        cols = {"shard": [key[0]], **(extra(arr) if extra else {})}
-        yield pd.DataFrame({**cols, "shard_n": [n], blob: [packed]})
+        cols = {"shard": [shard], **(extra(arr) if extra else {})}
+        return pd.DataFrame({**cols, "shard_n": [n], blob: [arr.tobytes()]})
 
-    return (
-        events.select((F.col("event_id") % shards).alias("shard"), "user_id")
-        .groupBy("shard")
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _sharded_sketch(
+        events, F.col("event_id") % shards, ["user_id"], init=init,
+        load=lambda packed: _unpack(packed, *spec).copy(), fold=fold_keys,
+        dump=lambda arr: (arr.tobytes(),), rows=rows, out_schema=out_schema,
+        state_schema=state_schema,
     )
 
 
 def streaming_distinct_hll(
     events: DataFrame, shards: int = HLL_SHARDS
 ) -> DataFrame:
-    """Streaming DISTINCT COUNT via HyperLogLog group state — the fourth
-    streaming sketch (exact counter / Misra-Gries heavy hitters / GK
-    quantiles / HLL cardinality): "how many distinct users has the
-    stream seen", continuously, in 4 KiB of state per shard where the
-    exact answer needs a row per key.
+    """Streaming DISTINCT COUNT via HyperLogLog group state
+    (``_packed_sketch``): "how many distinct users has the stream seen",
+    continuously, in 4 KiB of state per shard where the exact answer
+    needs a row per key.
 
     Sharding is deliberately by ``event_id % shards`` — NOT by the
     counted key — so every shard sees an overlapping slice of the user
@@ -1596,9 +1600,8 @@ def streaming_distinct_hll(
     (element-wise max is idempotent/commutative/associative), so the
     sketch is order- and replay-robust by construction."""
     return _packed_sketch(
-        events, shards, blob="regs", dtype="uint8", shape=(1 << HLL_B,),
-        fold=_hll_update, out_schema=_HLL_OUT_SCHEMA,
-        state_schema=_HLL_STATE_SCHEMA,
+        events, shards, blob="regs", spec=_HLL_SPEC, fold=_hll_update,
+        out_schema=_HLL_OUT_SCHEMA, state_schema=_HLL_STATE_SCHEMA,
         extra=lambda regs: {"estimate": [_hll_estimate(regs)]},
     )
 
@@ -1616,13 +1619,7 @@ def hll_merged_distinct(regs_list: list) -> float:
 
     merged = np.zeros(1 << HLL_B, dtype=np.uint8)
     for rb in regs_list:
-        regs = np.frombuffer(bytes(rb), dtype=np.uint8)
-        if regs.size != merged.size:
-            raise ValueError(
-                f"register width {regs.size} != 2^HLL_B = {merged.size}; "
-                "summaries from different HLL_B configurations do not merge"
-            )
-        merged = np.maximum(merged, regs)
+        merged = np.maximum(merged, _unpack(rb, *_HLL_SPEC))
     return _hll_estimate(merged)
 
 
@@ -1639,25 +1636,23 @@ def mg_global_heavy_hitters(
                                <= mg_count + total_n/(capacity+1),
 
     so every key with true global frequency above total_n/(capacity+1)
-    is guaranteed present (its shard bound is tighter). rows are
-    (shard, user_id, mg_count, shard_n) records — take the latest
-    summary per shard before calling. Returns ``(counts, bound)`` where
-    ``bound = total_n / (capacity + 1)`` is that guarantee threshold —
-    computed here so callers assert against the SAME bound the
-    docstring promises.
+    is guaranteed present (its shard bound is tighter). rows are the
+    summary's Rows (``user_id`` and ``mg_count`` are read) — take the
+    latest summary per shard before calling. Returns ``(counts,
+    bound)`` where ``bound = total_n / (capacity + 1)`` is that guarantee
+    threshold — computed here so callers assert against the SAME bound
+    the docstring promises.
     Pure function; merging 1000 shards is dict-union work on
     shards x capacity counters."""
     out: dict[int, int] = {}
     for r in rows:
-        uid, c = int(r[1] if not hasattr(r, "user_id") else r.user_id), int(
-            r[2] if not hasattr(r, "mg_count") else r.mg_count
-        )
+        uid = int(r.user_id)
         if uid in out:
             raise ValueError(
                 f"key {uid} present in two shard summaries — rows are not "
                 "key-sharded; the union bound does not apply"
             )
-        out[uid] = c
+        out[uid] = int(r.mg_count)
     return out, total_n / (capacity + 1)
 
 
@@ -1997,16 +1992,20 @@ def _cms_query(tab, ids):
 
 
 _CMS_STATE_SCHEMA = "tab binary, n long"
+_CMS_SPEC = (
+    "int64", (CMS_DEPTH, 1 << CMS_W_BITS),
+    "table size {} != depth*width = {}; summaries from different CMS "
+    "configurations do not merge",
+)
 _CMS_OUT_SCHEMA = "shard long, shard_n long, tab binary"
 
 
 def streaming_freq_cms(events: DataFrame, shards: int = CMS_SHARDS) -> DataFrame:
     """Streaming per-key FREQUENCY estimation via a count-min sketch in
-    group state — the fifth streaming sketch (exact counter /
-    Misra-Gries heavy hitters / GK quantiles / HLL cardinality / CMS
-    frequency). MG answers "which keys are heavy"; CMS answers "how
-    often has ANY given key occurred", continuously, in depth x width
-    int64 cells (128 KiB here) per shard instead of a counter per key.
+    group state (``_packed_sketch``). MG answers "which keys are heavy";
+    CMS answers "how often has ANY given key occurred", continuously, in
+    depth x width int64 cells (128 KiB here) per shard instead of a
+    counter per key.
 
     Guarantees (both pinned in tests): an estimate NEVER undercounts,
     and overcounts exceed (e/width) * n_shard with probability at most
@@ -2020,8 +2019,7 @@ def streaming_freq_cms(events: DataFrame, shards: int = CMS_SHARDS) -> DataFrame
     sketch. Each micro-batch emits the shard's table (the mergeable
     form) + event count; the latest row per shard feeds the merge."""
     return _packed_sketch(
-        events, shards, blob="tab", dtype="int64",
-        shape=(CMS_DEPTH, 1 << CMS_W_BITS), fold=_cms_update,
+        events, shards, blob="tab", spec=_CMS_SPEC, fold=_cms_update,
         out_schema=_CMS_OUT_SCHEMA, state_schema=_CMS_STATE_SCHEMA,
     )
 
@@ -2037,16 +2035,9 @@ def cms_merged_counts(tabs: list, keys) -> dict[int, int]:
     to estimate."""
     import numpy as np
 
-    shape = (CMS_DEPTH, 1 << CMS_W_BITS)
-    merged = np.zeros(shape, dtype=np.int64)
+    merged = np.zeros(_CMS_SPEC[1], dtype=np.int64)
     for tb in tabs:
-        tab = np.frombuffer(bytes(tb), dtype=np.int64)
-        if tab.size != merged.size:
-            raise ValueError(
-                f"table size {tab.size} != depth*width = {merged.size}; "
-                "summaries from different CMS configurations do not merge"
-            )
-        merged += tab.reshape(shape)
+        merged += _unpack(tb, *_CMS_SPEC)
     ks = np.asarray(list(keys), dtype=np.int64)
     est = _cms_query(merged, ks)
     return {int(k): int(v) for k, v in zip(ks, est)}
@@ -2181,16 +2172,16 @@ def streaming_reservoir_sample(
     weighted: bool = False,
 ) -> DataFrame:
     """Streaming UNIFORM (or weight-proportional) SAMPLE via a
-    deterministic reservoir in group state — the sixth streaming sketch
-    (counter / heavy hitters / quantiles / cardinality / frequency /
-    sample): "hold k representative events of everything seen", the
-    primitive a training-data pipeline uses for eval carve-outs, data
-    inspection, and monitoring panels that must not scan the stream.
+    deterministic reservoir in group state (``_sharded_sketch``, sharded
+    by ``event_id % shards``): "hold k representative events of
+    everything seen", the primitive a training-data pipeline uses for
+    eval carve-outs, data inspection, and monitoring panels that must
+    not scan the stream.
 
     Each event's sampling priority is a deterministic hash-derived
     uniform (weighted: Efraimidis-Spirakis u^(1/w) keys over ``value``),
     and the reservoir is simply the top-k by priority. That determinism
-    buys the strongest merge/replay story of the six sketches: the
+    buys the strongest merge/replay story of the sketches: the
     global sample is the top-k of the union of per-shard reservoirs,
     which EQUALS the top-k of the concatenated stream ELEMENT FOR
     ELEMENT (any globally-top event is top in its own shard), replay
@@ -2199,56 +2190,38 @@ def streaming_reservoir_sample(
     Per batch each shard emits its reservoir rows tagged with shard_n;
     the latest rows per shard feed ``reservoir_merged``. State is O(k)
     per shard at any stream size."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def update(key, pdfs, state):
-        import numpy as np
+    def load(eids, pris, uids, vals):
+        return {e: (p, u, v) for e, p, u, v in zip(eids, pris, uids, vals)}
+
+    def fold(res, pdf, n):
+        _rsv_update(
+            res, pdf["event_id"].to_numpy(dtype="int64"),
+            pdf["user_id"].to_numpy(dtype="int64"),
+            pdf["value"].to_numpy(dtype="float64"), k, weighted,
+        )
+        return res
+
+    def dump(res):  # the state's columns, top priority first
+        items = sorted(res.items(), key=lambda kv: (kv[1][0], kv[0]), reverse=True)
+        return (
+            [e for e, _ in items], [p for _, (p, _, _) in items],
+            [u for _, (_, u, _) in items], [v for _, (_, _, v) in items],
+        )
+
+    def rows(shard, res, n):
         import pandas as pd
 
-        res: dict[int, tuple] = {}
-        n = 0
-        if state.exists:
-            eids, pris, uids, vals, n0 = state.get
-            n = int(n0)
-            res = {
-                int(e): (float(p), int(u), float(v))
-                for e, p, u, v in zip(eids, pris, uids, vals)
-            }
-        for pdf in pdfs:
-            eids = pdf["event_id"].to_numpy(dtype=np.int64)
-            uids = pdf["user_id"].to_numpy(dtype=np.int64)
-            vals = pdf["value"].to_numpy(dtype=np.float64)
-            n += eids.size
-            _rsv_update(res, eids, uids, vals, k, weighted)
-        items = sorted(res.items(), key=lambda kv: (kv[1][0], kv[0]), reverse=True)
-        state.update((
-            [e for e, _ in items],
-            [p for _, (p, _, _) in items],
-            [u for _, (_, u, _) in items],
-            [v for _, (_, _, v) in items],
-            n,
-        ))
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]] * len(items),
-                "event_id": [e for e, _ in items],
-                "user_id": [u for _, (_, u, _) in items],
-                "value": [v for _, (_, _, v) in items],
-                "priority": [p for _, (p, _, _) in items],
-                "shard_n": [n] * len(items),
-            }
-        )
+        eids, pris, uids, vals = dump(res)
+        return pd.DataFrame({
+            "shard": [shard] * len(eids), "event_id": eids, "user_id": uids,
+            "value": vals, "priority": pris, "shard_n": [n] * len(eids),
+        })
 
-    return (
-        events.select(
-            (F.col("event_id") % shards).alias("shard"),
-            "event_id", "user_id", "value",
-        )
-        .groupBy("shard")
-        .applyInPandasWithState(
-            update, _RSV_OUT_SCHEMA, _RSV_STATE_SCHEMA, "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    return _sharded_sketch(
+        events, F.col("event_id") % shards, ["event_id", "user_id", "value"],
+        init=dict, load=load, fold=fold, dump=dump, rows=rows,
+        out_schema=_RSV_OUT_SCHEMA, state_schema=_RSV_STATE_SCHEMA,
     )
 
 
@@ -2390,10 +2363,11 @@ def write_exact_dedup_gated(
 
     Measured economics: the evaluation and the admitted-key fold cost
     about four Spark jobs per batch, which dominate while the corpus is
-    batch-sized (BENCH_AB_bloom_gate.json: 1.39x the plain gate's wall;
-    ``tools/gate_arm.py`` arms ``plain`` and ``bloom`` time both gates).
-    So while the filter's own key estimate is under
-    ``BLOOM_PREFILTER_MIN_RATIO`` x the batch, the evaluation is skipped
+    batch-sized (1.39x the plain gate's wall over 5,000 docs in 10
+    batches; ``tools/gate_arm.py`` arms ``plain`` and ``bloom`` time both
+    gates, interleaved by ``tools/ab.py``). So while the filter's own key
+    estimate is under ``BLOOM_PREFILTER_MIN_RATIO`` x the batch, the
+    evaluation is skipped
     and only the fold and persist run, keeping the superset invariant
     from the first batch (1.22x). Against a corpus 100x the batch the
     prefilter sized with ``bloom_bits_for`` is 1.35x faster end to end
@@ -2453,25 +2427,24 @@ def write_exact_dedup_gated(
 
         spark = batch.sparkSession
         basis = norm_expr(F.col("text")) if normalized else F.col("text")
-        # digest, bucket and the within-batch winner in one pass and one
-        # checkpoint: every row whose doc_id is its digest's minimum
-        keep = (
+        # digest, bucket and the within-batch winner in one pass, decided
+        # ONCE by one checkpoint: every row whose doc_id is its digest's
+        # minimum. The checkpoint's own job also answers both sizing
+        # questions: the row total (write shape, adaptive skip) and the
+        # touched buckets (pruned probe)
+        keep, k_m = _observed_checkpoint(
             corpus.tag(
                 batch.withColumn("digest", F.sha2(F.coalesce(basis, F.lit("")), 256))
             )
             .withColumn("_mn", F.min("doc_id").over(Window.partitionBy("digest")))
             .filter(F.col("doc_id") == F.col("_mn"))
-            .drop("_mn")
-            .localCheckpoint()  # decide ONCE; feeds sizing, probe, appends
+            .drop("_mn"),
+            n=F.count(F.lit(1)),
+            buckets=F.collect_set("dig_bucket"),
         )
+        batch_rows = int(k_m["n"])
+        touched = [int(b) for b in k_m["buckets"]]
         corpus_exists = table_has_data(spark, corpus.path)
-        # one job answers both sizing questions: the row total (write
-        # shape, adaptive skip) and the touched buckets (pruned probe)
-        bucket_counts = {
-            int(r[0]): int(r[1])
-            for r in keep.groupBy("dig_bucket").count().collect()
-        }
-        batch_rows = sum(bucket_counts.values())
         if ledger_path is not None and not ledger_state["reconciled"]:
             # first batch after a (re)start, before its append: heal the
             # ledger's crash window (corpus append landed, ledger did not)
@@ -2520,7 +2493,7 @@ def write_exact_dedup_gated(
         seen = None
         if not (prefilter_active and n_suspect == 0):
             seen = corpus.probe(
-                spark, suspect_buckets if prefilter_active else list(bucket_counts),
+                spark, suspect_buckets if prefilter_active else touched,
                 has_data=corpus_exists,
             )
         if seen is not None:
@@ -2725,11 +2698,12 @@ def _ledger_append_batch(
     pair); the crash window between the two is healed by
     ``_ledger_reconcile`` at next start.
 
-    Cost discipline (BENCH_AB_ledger.json; ``tools/gate_arm.py`` arms
-    ``plain`` and ``ledger`` time the gate without and with it):
-    re-reading the ledger's max version and full state every batch
-    measured 1.39x the plain gate at micro-batch sizes, pure
-    overhead-bound jobs. The state is
+    Cost discipline: re-reading the ledger's max version and full state
+    every batch measured 1.39x the plain gate at micro-batch sizes
+    (5,000 docs in 8 batches), pure overhead-bound jobs; the carried
+    state below brought it to 1.20x, about 0.36 s a batch
+    (``tools/gate_arm.py`` arms ``plain`` and ``ledger`` time the gate
+    without and with it). The state is
     O(buckets), so it CARRIES in driver memory across batches
     (hydrated once after the reconcile — the same carry idiom as the
     global-sketch sinks), leaving exactly one extra Spark job per
@@ -2899,8 +2873,8 @@ def write_decontaminated(
     docs: DataFrame, benchmark_grams: str, out_path: str, n: int = 5,
     bloom_bits: int | None = None,
 ):
-    """STREAMING DECONTAMINATION gate, the third ingestion front door
-    beside the exact-digest and MinHash-LSH dedup gates: a doc sharing
+    """STREAMING DECONTAMINATION gate, an ingestion front door beside
+    the exact-digest and MinHash-LSH dedup gates: a doc sharing
     any word n-gram with a held-out benchmark set (the probe set the
     batch twin ``contamination_ngram_hits`` joins against) is routed to
     a ``<out>_quarantine`` verdict table with its distinct-hit count;
@@ -3111,7 +3085,8 @@ BLOOM_SHARDS = 4
 # prefilter only once the filter's own key estimate says the corpus is
 # at least this many times the batch — below that the evaluation's
 # fixed per-batch jobs cost more than the tiny probe they can skip
-# (BENCH_AB_bloom_gate.json: 1.39x at corpus == batch)
+# (measured 1.39x the plain gate's wall at corpus == batch, 1.22x with
+# the skip; ``tools/gate_arm.py`` arms ``plain`` and ``bloom``)
 BLOOM_PREFILTER_MIN_RATIO = 8
 # one-shot saturation warning threshold: fill 0.5 with k=4 is ~6% FPR,
 # the knee past which the prefilter's probe-skip benefit decays fast
@@ -3203,15 +3178,18 @@ def _bloom_query(bits, ids):
 
 
 _BLOOM_STATE_SCHEMA = "bits binary, n long"
+_BLOOM_SPEC = (
+    "uint8", (BLOOM_BITS >> 3,),
+    "filter size {} != BLOOM_BITS/8 = {}; summaries from different bloom "
+    "configurations do not merge",
+)
 _BLOOM_OUT_SCHEMA = "shard long, shard_n long, bits binary"
 
 
 def streaming_seen_bloom(events: DataFrame, shards: int = BLOOM_SHARDS) -> DataFrame:
-    """Streaming set MEMBERSHIP via a Bloom filter in group state — the
-    seventh streaming sketch (exact counter / MG heavy hitters / GK
-    quantiles / HLL cardinality / CMS frequency / deterministic
-    reservoir / Bloom membership): "might this key have appeared?", the
-    primitive behind at-scale dedup admission, join pre-filtering, and
+    """Streaming set MEMBERSHIP via a Bloom filter in group state
+    (``_packed_sketch``): "might this key have appeared?", the primitive
+    behind at-scale dedup admission, join pre-filtering, and
     already-processed checks, in BLOOM_BITS bits per shard instead of a
     key set that grows with the stream.
 
@@ -3227,9 +3205,8 @@ def streaming_seen_bloom(events: DataFrame, shards: int = BLOOM_SHARDS) -> DataF
     the shard's packed bit array + event count; the latest row per
     shard feeds ``bloom_merged_bits``."""
     return _packed_sketch(
-        events, shards, blob="bits", dtype="uint8", shape=(BLOOM_BITS >> 3,),
-        fold=_bloom_update, out_schema=_BLOOM_OUT_SCHEMA,
-        state_schema=_BLOOM_STATE_SCHEMA,
+        events, shards, blob="bits", spec=_BLOOM_SPEC, fold=_bloom_update,
+        out_schema=_BLOOM_OUT_SCHEMA, state_schema=_BLOOM_STATE_SCHEMA,
     )
 
 
@@ -3243,13 +3220,7 @@ def bloom_merged_bits(blobs: list):
 
     merged = np.zeros(BLOOM_BITS >> 3, dtype=np.uint8)
     for b in blobs:
-        arr = np.frombuffer(bytes(b), dtype=np.uint8)
-        if arr.size != merged.size:
-            raise ValueError(
-                f"filter size {arr.size} != BLOOM_BITS/8 = {merged.size}; "
-                "summaries from different bloom configurations do not merge"
-            )
-        merged |= arr
+        merged |= _unpack(b, *_BLOOM_SPEC)
     return merged
 
 

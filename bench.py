@@ -276,10 +276,11 @@ HEADLINE = [
 # Streaming surface: each stateful/windowed operator timed over the sf
 # events fixture, sliced into time-ordered files so several micro-batches
 # run. Each op runs STREAM_PASSES full passes and reports the median:
-# single-pass rows/s swung both ways on untouched ops (session noise, as
-# BENCH_AB_streaming_noise.json records), and the recorded [min, median,
-# max] rows_per_sec_band lets tools/bench_compare.py suppress
-# cross-session swings the way the batch side's spread bands already do.
+# single-pass rows/s swung both ways on untouched ops (three quiet passes
+# of one build spread stateful_user_counts over 11k-32k rows/s), and the
+# recorded [min, median, max] rows_per_sec_band lets
+# tools/bench_compare.py suppress cross-session swings the way the batch
+# side's spread bands already do.
 STREAM_N_FILES = 6
 STREAM_FILES_PER_TRIGGER = 2
 STREAM_PASSES = 3
@@ -493,15 +494,12 @@ def bench_streaming(spark, sf_dir: str) -> dict:
             )
             record("write_exact_dedup_gated", q, t0)
 
-            # the bloom-prefiltered variant of the same gate (round 11; the
-            # round-11 "cost-neutral at this corpus size" claim was WRONG —
-            # adjudicated by interleaved A/B in round 12,
-            # BENCH_AB_bloom_gate.json): at this batch-sized corpus the
-            # adaptive skip keeps the arm within ~1.2x of plain (the
-            # residual is the crash-invariant-mandatory fold+persist); the
-            # two-sided economics live in BENCH_exact_gate_volume.json.
-            # Benching it per round catches overhead creep in the prefilter
-            # machinery itself
+            # the bloom-prefiltered variant of the same gate: at this
+            # batch-sized corpus the adaptive skip keeps it within ~1.2x of
+            # plain (measured over 5,000 docs in 10 batches; the residual
+            # is the fold+persist the crash ordering needs;
+            # tools/gate_arm.py arms plain and bloom reproduce it). Timing
+            # it here catches overhead creep in the prefilter machinery
             bcorpus = os.path.join(pdir, "egb_corpus")
             t0 = time.perf_counter()
             q = (
@@ -641,10 +639,11 @@ def bench_kernels() -> dict:
         return ts
 
     def gk_pass():
-        tup: list[list] = []
+        tup: list = []
         n = 0
         for chunk in np.array_split(gk_vals, 10):
-            n = _gk_insert_batch(tup, n, pd.DataFrame({"value": chunk}), GK_EPS)
+            tup = _gk_insert_batch(tup, n, pd.DataFrame({"value": chunk}), GK_EPS)
+            n += chunk.size
 
     record("gk_insert", gk_vals.size, timed(gk_pass))
 

@@ -568,7 +568,8 @@ def test_gk_bulk_kernel_rank_bound_property(data, splits, seed):
         pdf = pd.DataFrame(
             {"ts": range(len(batch)), "event_id": range(len(batch)), "value": batch}
         )
-        n = sp._gk_insert_batch(tup, n, pdf, eps)
+        tup = sp._gk_insert_batch(tup, n, pdf, eps)
+        n += len(batch)
     assert n == len(data)
     assert sum(g for _, g, _ in tup) == n
     vs = [v for v, _, _ in tup]

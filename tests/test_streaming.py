@@ -1195,8 +1195,8 @@ def test_gk_merged_quantiles_pure_kernel_exactness():
         pdf = pd.DataFrame(
             {"ts": range(len(vals)), "event_id": range(len(vals)), "value": vals}
         )
-        n = sp._gk_insert_batch(tup, n, pdf, eps)
-        shards.append(sp._gk_state_dump(tup, n))
+        tup = sp._gk_insert_batch(tup, n, pdf, eps)
+        shards.append((*sp._gk_state_dump(tup), len(vals)))
     xs = sorted(allv)
     n_total = len(xs)
     merged = sp.gk_merged_quantiles(shards)
@@ -1319,9 +1319,8 @@ def test_gk_merged_quantiles_property_random_shards():
             pdf = pd.DataFrame(
                 {"ts": range(m), "event_id": range(m), "value": vals}
             )
-            tup = []
-            n = sp._gk_insert_batch(tup, 0, pdf, eps)
-            shards.append(sp._gk_state_dump(tup, n))
+            tup = sp._gk_insert_batch([], 0, pdf, eps)
+            shards.append((*sp._gk_state_dump(tup), m))
         xs = sorted(allv)
         n_total = len(xs)
         max_shard = max(s[3] for s in shards)
@@ -1414,72 +1413,113 @@ def test_write_global_quantiles_live_pipeline(spark, sf_dir, tmp_path):
         assert lo - bound <= target <= hi + bound, (phi, r, lo, hi, target)
 
 
-def test_gk_summary_state_survives_checkpoint_restart(spark, sf_dir, tmp_path):
-    """State recovery for the round-8 GK summary operator: the per-shard
-    (vs, gs, ds, n) summary must survive a stop/restart from the
-    checkpoint. GK state evolution is deterministic given the batch
-    split (sorted-splice kernel: same per-file batches -> same state), so
-    the FINAL per-shard summary after phase-1 (2 files) + restart +
-    phase-2 (2 files) must equal, tuple for tuple, an uninterrupted run
-    over the same 4 files — a reset state would restart n at 0 and
-    produce visibly different (g, delta) layouts."""
+# case -> (operator, output mode, state key column, count column, shards;
+# None for the counter, whose every user is its own shard)
+_RESTART_CASES = {
+    "counter": (sp.stateful_user_counts, "update", "user_id", "n_events", None),
+    "mg": (sp.streaming_heavy_hitters, "update", "shard", "shard_n", sp.MG_SHARDS),
+    "gk_summary": (
+        sp.streaming_quantiles_gk_summary, "append", "shard", "shard_n",
+        sp.GK_SHARDS,
+    ),
+    "hll": (sp.streaming_distinct_hll, "update", "shard", "shard_n", sp.HLL_SHARDS),
+    "cms": (sp.streaming_freq_cms, "update", "shard", "shard_n", sp.CMS_SHARDS),
+    "bloom": (sp.streaming_seen_bloom, "update", "shard", "shard_n", sp.BLOOM_SHARDS),
+    "reservoir": (
+        sp.streaming_reservoir_sample, "update", "shard", "shard_n", sp.RSV_SHARDS,
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def _restart_parts(spark, sf_dir, tmp_path_factory):
+    """The events as 4 time-ordered parquet files, written once."""
     import glob
-    import os
+
+    from akkastreamprocessnpmpackagedependencies_spark.session import load_events
+
+    staging = str(tmp_path_factory.mktemp("restart") / "staged")
+    _write_time_sliced(load_events(spark, sf_dir), staging, 4)
+    parts = sorted(glob.glob(os.path.join(staging, "part-*")), key=os.path.getmtime)
+    assert len(parts) == 4
+    return parts
+
+
+@pytest.mark.parametrize("case", sorted(_RESTART_CASES))
+def test_keyed_state_survives_checkpoint_restart(
+    spark, sf_dir, tmp_path, case, _restart_parts
+):
+    """State recovery for every operator on ``_sharded_sketch``: 2 files,
+    a stop, a restart from the SAME checkpoint, 2 more files must leave
+    each shard's latest rows equal to those of an uninterrupted run over
+    the 4 files (the same per-file micro-batches, so even GK, whose
+    compress points follow the batch split, matches tuple for tuple;
+    HLL, CMS, Bloom and the reservoir would match under any split), and
+    the shards' counts must sum to the event count: a state reset at the
+    restart would restart a count at 0, a replay would count twice."""
     import shutil
     import time
 
     from akkastreamprocessnpmpackagedependencies_spark.session import load_events
 
-    staging = str(tmp_path / "staged")
-    _write_time_sliced(load_events(spark, sf_dir), staging, 4)
-    parts = sorted(glob.glob(os.path.join(staging, "part-*")), key=os.path.getmtime)
-    assert len(parts) == 4
+    op, mode, key, count, shards = _RESTART_CASES[case]
 
     def arrive(live, ps, t0):
+        # strictly increasing mtimes: the file source orders files by
+        # modification time, and two copies can land in one millisecond
         os.makedirs(live, exist_ok=True)
         for i, p in enumerate(ps):
             dst = os.path.join(live, os.path.basename(p))
             shutil.copy(p, dst)
             os.utime(dst, (t0 + i, t0 + i))
 
-    def final_summaries(sink):
-        rows = spark.read.parquet(sink).collect()
-        latest = {}
-        for r in rows:
-            if r.shard not in latest or r.shard_n > latest[r.shard][3]:
-                latest[r.shard] = (list(r.vs), list(r.gs), list(r.ds), r.shard_n)
-        return latest
-
-    def start(live, sink, ck):
+    def run(live, sink, ck):
+        # foreachBatch appends: a durable sink that takes either output
+        # mode and recovers from a checkpoint (the memory sink cannot
+        # recover; the parquet sink rejects update)
         ev = sp.read_events_stream(spark, live, max_files=1)
-        return (
-            sp.streaming_quantiles_gk_summary(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
+        _drain(
+            op(ev).writeStream.outputMode(mode)
+            .foreachBatch(lambda b, _: b.write.mode("append").parquet(sink))
             .option("checkpointLocation", ck)
             .start()
         )
 
-    # interrupted run: 2 files, stop, restart from checkpoint, 2 more
-    live_a = str(tmp_path / "live_a")
-    sink_a = str(tmp_path / "gk_sink_a")
-    ck_a = str(tmp_path / "gk_ck_a")
-    arrive(live_a, parts[:2], time.time() - 60)
-    _drain(start(live_a, sink_a, ck_a))
-    arrive(live_a, parts[2:], time.time() - 30)
-    _drain(start(live_a, sink_a, ck_a))
+    def latest(sink):
+        """key -> (its largest count, the rows emitted with it)."""
+        best = {}
+        for r in spark.read.parquet(sink).collect():
+            row = tuple(
+                bytes(v) if isinstance(v, (bytes, bytearray))
+                else tuple(v) if isinstance(v, list) else v
+                for v in r
+            )
+            k, c = r[key], r[count]
+            if k not in best or c > best[k][0]:
+                best[k] = (c, [row])
+            elif c == best[k][0]:
+                best[k][1].append(row)
+        return {k: (c, sorted(rows)) for k, (c, rows) in best.items()}
 
-    # uninterrupted control: all 4 files, one run
-    live_b = str(tmp_path / "live_b")
-    sink_b = str(tmp_path / "gk_sink_b")
-    arrive(live_b, parts, time.time() - 60)
-    _drain(start(live_b, sink_b, str(tmp_path / "gk_ck_b")))
+    live_a, sink_a, ck_a = (str(tmp_path / f"{d}_a") for d in ("live", "sink", "ck"))
+    arrive(live_a, _restart_parts[:2], time.time() - 60)
+    run(live_a, sink_a, ck_a)
+    arrive(live_a, _restart_parts[2:], time.time() - 30)
+    run(live_a, sink_a, ck_a)
+    live_b, sink_b, ck_b = (str(tmp_path / f"{d}_b") for d in ("live", "sink", "ck"))
+    arrive(live_b, _restart_parts, time.time() - 60)
+    run(live_b, sink_b, ck_b)
 
-    a, b = final_summaries(sink_a), final_summaries(sink_b)
-    assert set(a) == set(b) == set(range(sp.GK_SHARDS))
-    for shard in a:
-        assert a[shard] == b[shard], (shard, a[shard][3], b[shard][3])
+    a, b = latest(sink_a), latest(sink_b)
+    events = load_events(spark, sf_dir)
+    keys = (
+        set(range(shards)) if shards
+        else {r.user_id for r in events.select("user_id").distinct().collect()}
+    )
+    assert set(a) == set(b) == keys
+    assert sum(c for c, _ in a.values()) == events.count()  # none lost or replayed
+    for k in a:
+        assert a[k] == b[k], (case, k, a[k][0], b[k][0])
 
 
 def test_welford_closed_form_matches_serial_recursion_numerically():
@@ -1583,7 +1623,8 @@ def test_gk_insert_kernel_maintains_invariant():
                     "value": batch,
                 }
             )
-            n = sp._gk_insert_batch(tup, n, pdf, eps)
+            tup = sp._gk_insert_batch(tup, n, pdf, eps)
+            n += len(batch)
             bound = max(1, int(math.floor(2 * eps * n)))
             vs = [t[0] for t in tup]
             assert vs == sorted(vs), name  # summary stays value-ordered
@@ -2127,22 +2168,21 @@ def test_gk_insert_kernel_edge_batches():
              "value": vals}
         )
 
-    tup, n = [], 0
-    assert sp._gk_insert_batch(tup, n, batch([]), eps) == 0 and tup == []
-    n = sp._gk_insert_batch(tup, 0, batch([5.0]), eps)
-    assert n == 1 and tup == [[5.0, 1, 0]]
+    assert sp._gk_insert_batch([], 0, batch([]), eps) == []
+    tup, n = sp._gk_insert_batch([], 0, batch([5.0]), eps), 1
+    assert tup == [[5.0, 1, 0]]
     # all-duplicates, several batches: mass conserved, order kept
     for k in range(4):
-        n = sp._gk_insert_batch(tup, n, batch([5.0] * 100, start=100 * k), eps)
-    assert n == 401
+        tup = sp._gk_insert_batch(tup, n, batch([5.0] * 100, start=100 * k), eps)
+        n += 100
     assert sum(t[1] for t in tup) == 401
     vs = [t[0] for t in tup]
     assert vs == sorted(vs)
     bound = max(1, int(math.floor(2 * eps * n)))
     assert all(g + d <= bound for _, g, d in tup[1:])
     # ties against stored values plus straddling values
-    n = sp._gk_insert_batch(tup, n, batch([4.0, 5.0, 6.0], start=999), eps)
-    assert n == 404 and sum(t[1] for t in tup) == 404
+    tup = sp._gk_insert_batch(tup, n, batch([4.0, 5.0, 6.0], start=999), eps)
+    assert sum(t[1] for t in tup) == 404
     vs = [t[0] for t in tup]
     assert vs == sorted(vs) and vs[0] == 4.0 and vs[-1] == 6.0
     # new global min and max took delta 0 (extremes anchor the range)
@@ -2225,84 +2265,6 @@ def test_streaming_distinct_hll_per_shard_and_global_union(spark, sf_dir, tmp_pa
     # the merge is a union, not a sum: overlapping shards make the sum
     # of per-shard distincts a gross overcount of the global answer
     assert sum(truth.values()) > 1.5 * true_global
-
-
-def test_hll_state_survives_checkpoint_restart(spark, sf_dir, tmp_path):
-    """State recovery for the HLL op: per-shard registers must survive a
-    stop/restart from the checkpoint. HLL is even stronger than GK here —
-    registers are a grow-only element-wise max, so the interrupted run's
-    FINAL registers must equal the uninterrupted run's BYTE FOR BYTE
-    regardless of batch boundaries (not merely given the same split),
-    and the update-mode sink's latest row per shard must carry the full
-    stream's shard_n."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from akkastreamprocessnpmpackagedependencies_spark.session import load_events
-
-    staging = str(tmp_path / "hll_staged")
-    _write_time_sliced(load_events(spark, sf_dir), staging, 4)
-    parts = sorted(glob.glob(os.path.join(staging, "part-*")), key=os.path.getmtime)
-    assert len(parts) == 4
-
-    def arrive(live, ps, t0):
-        os.makedirs(live, exist_ok=True)
-        for i, p in enumerate(ps):
-            dst = os.path.join(live, os.path.basename(p))
-            shutil.copy(p, dst)
-            os.utime(dst, (t0 + i, t0 + i))
-
-    def start(live, sink, ck):
-        # update-mode rows through foreachBatch appends: a durable sink
-        # that BOTH tolerates update output and recovers from checkpoints
-        # (memory sink cannot recover; parquet rejects update directly)
-        ev = sp.read_events_stream(spark, live, max_files=1)
-
-        def _sink(batch, batch_id):
-            batch.write.mode("append").parquet(sink)
-
-        return (
-            sp.streaming_distinct_hll(ev)
-            .writeStream.outputMode("update")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-
-    def final_rows(sink):
-        rows = spark.read.parquet(sink).collect()
-        latest = {}
-        for r in rows:
-            if r.shard not in latest or r.shard_n > latest[r.shard][1]:
-                latest[r.shard] = (bytes(r.regs), r.shard_n, r.estimate)
-        return latest
-
-    # interrupted: 2 files, stop, restart from the SAME checkpoint, 2 more
-    live_a = str(tmp_path / "hll_live_a")
-    sink_a = str(tmp_path / "hll_sink_a")
-    ck_a = str(tmp_path / "hll_ck_a")
-    arrive(live_a, parts[:2], time.time() - 60)
-    _drain(start(live_a, sink_a, ck_a))
-    arrive(live_a, parts[2:], time.time() - 30)
-    _drain(start(live_a, sink_a, ck_a))
-    a = final_rows(sink_a)
-
-    # uninterrupted control over the same 4 files
-    live_b = str(tmp_path / "hll_live_b")
-    sink_b = str(tmp_path / "hll_sink_b")
-    arrive(live_b, parts, time.time() - 60)
-    _drain(start(live_b, sink_b, str(tmp_path / "hll_ck_b")))
-    b = final_rows(sink_b)
-
-    assert set(a) == set(b) == set(range(sp.HLL_SHARDS))
-    total = load_events(spark, sf_dir).count()
-    assert sum(v[1] for v in a.values()) == total  # no event lost or replayed
-    for shard in a:
-        assert a[shard][0] == b[shard][0], f"shard {shard} registers diverged"
-        assert a[shard][1] == b[shard][1]
-        assert a[shard][2] == b[shard][2]
 
 
 @pytest.mark.slow
@@ -2446,76 +2408,6 @@ def test_streaming_freq_cms_per_shard_and_global_sum(spark, sf_dir, tmp_path):
     for k in top:
         t = true_global[k]
         assert t <= merged[k] <= t + max(3 * g_bound, 1), (k, t, merged[k])
-
-
-def test_cms_state_survives_checkpoint_restart(spark, sf_dir, tmp_path):
-    """State recovery for the CMS op: like HLL, the final table depends
-    only on the MULTISET of events (per-cell addition commutes), so the
-    interrupted run's final table must equal the uninterrupted run's
-    BYTE FOR BYTE regardless of batch boundaries, with no event lost or
-    double-counted across the restart."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from akkastreamprocessnpmpackagedependencies_spark.session import load_events
-
-    staging = str(tmp_path / "cms_staged")
-    _write_time_sliced(load_events(spark, sf_dir), staging, 4)
-    parts = sorted(glob.glob(os.path.join(staging, "part-*")), key=os.path.getmtime)
-    assert len(parts) == 4
-
-    def arrive(live, ps, t0):
-        os.makedirs(live, exist_ok=True)
-        for i, p in enumerate(ps):
-            dst = os.path.join(live, os.path.basename(p))
-            shutil.copy(p, dst)
-            os.utime(dst, (t0 + i, t0 + i))
-
-    def start(live, sink, ck):
-        ev = sp.read_events_stream(spark, live, max_files=1)
-
-        def _sink(batch, batch_id):
-            batch.write.mode("append").parquet(sink)
-
-        return (
-            sp.streaming_freq_cms(ev)
-            .writeStream.outputMode("update")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-
-    def final_rows(sink):
-        rows = spark.read.parquet(sink).collect()
-        latest = {}
-        for r in rows:
-            if r.shard not in latest or r.shard_n > latest[r.shard][1]:
-                latest[r.shard] = (bytes(r.tab), r.shard_n)
-        return latest
-
-    live_a = str(tmp_path / "cms_live_a")
-    sink_a = str(tmp_path / "cms_sink_a")
-    ck_a = str(tmp_path / "cms_ck_a")
-    arrive(live_a, parts[:2], time.time() - 60)
-    _drain(start(live_a, sink_a, ck_a))
-    arrive(live_a, parts[2:], time.time() - 30)
-    _drain(start(live_a, sink_a, ck_a))
-    a = final_rows(sink_a)
-
-    live_b = str(tmp_path / "cms_live_b")
-    sink_b = str(tmp_path / "cms_sink_b")
-    arrive(live_b, parts, time.time() - 60)
-    _drain(start(live_b, sink_b, str(tmp_path / "cms_ck_b")))
-    b = final_rows(sink_b)
-
-    assert set(a) == set(b) == set(range(sp.CMS_SHARDS))
-    total = load_events(spark, sf_dir).count()
-    assert sum(v[1] for v in a.values()) == total
-    for shard in a:
-        assert a[shard][0] == b[shard][0], f"shard {shard} tables diverged"
-        assert a[shard][1] == b[shard][1]
 
 
 @pytest.mark.slow
@@ -3299,6 +3191,38 @@ def test_bloom_kernel_identities_and_fpr():
 
     with _pytest.raises(ValueError, match="do not merge"):
         sp.bloom_merged_bits([bytes(8)])
+
+
+@pytest.mark.parametrize("sketch", ["bloom", "cms", "hll"])
+def test_packed_sketch_width_check(spark, monkeypatch, sketch):
+    """A packed blob of another width raises ValueError in the sketch's
+    state load and in its merge; the right width loads and merges. The
+    load is the one ``_packed_sketch`` hands ``_sharded_sketch``,
+    captured without starting a stream."""
+    import numpy as np
+
+    op, spec, merge = {
+        "bloom": (sp.streaming_seen_bloom, sp._BLOOM_SPEC, sp.bloom_merged_bits),
+        "cms": (
+            sp.streaming_freq_cms, sp._CMS_SPEC,
+            lambda blobs: sp.cms_merged_counts(blobs, [1]),
+        ),
+        "hll": (sp.streaming_distinct_hll, sp._HLL_SPEC, sp.hll_merged_distinct),
+    }[sketch]
+    got = {}
+    monkeypatch.setattr(
+        sp, "_sharded_sketch", lambda ev, shard, cols, **kw: got.update(kw)
+    )
+    op(None)
+    good = got["dump"](got["init"]())[0]
+    assert len(good) == np.zeros(spec[1], spec[0]).nbytes
+    assert got["load"](good).shape == spec[1]
+    merge([good, good])
+    for bad in (good[: len(good) // 2], good + bytes(8)):
+        with pytest.raises(ValueError, match="do not merge"):
+            got["load"](bad)
+        with pytest.raises(ValueError, match="do not merge"):
+            merge([good, bad])
 
 
 def test_streaming_seen_bloom_matches_batch_and_merges_exactly(spark, sf_dir, tmp_path):
@@ -4432,12 +4356,13 @@ def test_wide_writes_auto_switch_on_batch_row_count(
 def test_exact_dedup_gate_bloom_adaptive_skip_probes_until_corpus_dwarfs_batch(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """Round-12 adaptive skip (BENCH_AB_bloom_gate.json adjudication):
-    while the filter's key estimate says the corpus is under
-    BLOOM_PREFILTER_MIN_RATIO x the batch, the membership evaluation is
-    SKIPPED — every row takes the plain exact probe — but the fold+
-    persist still runs so the sidecar stays a superset of the corpus
-    from the very first batch. Pinned mechanically both ways on a
+    """The adaptive skip (the evaluation's fixed jobs measured 1.39x the
+    plain gate's wall at corpus == batch; ``tools/gate_arm.py`` arms
+    ``plain`` and ``bloom``): while the filter's key estimate says the
+    corpus is under BLOOM_PREFILTER_MIN_RATIO x the batch, the
+    membership evaluation is SKIPPED — every row takes the plain exact
+    probe — but the fold+persist still runs so the sidecar stays a
+    superset of the corpus from the very first batch. Pinned mechanically both ways on a
     corrupted corpus: the default-ratio gate must FAIL the batch (it
     read the corpus = evaluation skipped), and a forced-evaluation
     re-run over the same checkpoint must sail through (all-new rows are

@@ -347,8 +347,8 @@ def main() -> None:
             # (median-of-STREAM_PASSES); the batch side's suppression
             # rule applies unchanged — a swing whose normalized new rate
             # still lies inside the OLD band is session noise, not a
-            # regression (BENCH_AB_streaming_noise.json records such
-            # swings in both directions on untouched ops)
+            # regression (three quiet passes of one build swung untouched
+            # ops both ways, e.g. stateful_user_counts 11k-32k rows/s)
             oband = old_str[op].get("rows_per_sec_band")
             if oband and median_in_band(b, sorted(oband)):
                 s_suppressed += 1

@@ -18,9 +18,11 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
-from pyspark.sql import DataFrame
+if TYPE_CHECKING:
+    import pandas as pd
+    from pyspark.sql import DataFrame
 
 RESULT_SCHEMA = "name string, status_code int, doc string"
 
@@ -141,7 +143,14 @@ def http_enrich(
     (default: real network via requests) with one transport instance per
     partition — exponential backoff on 5xx/connection errors and a token
     bucket at ``rate_per_sec`` (element-granular, unlike the micro-batch
-    cap in the streaming source). Any other ``mode`` raises ValueError."""
+    cap in the streaming source). Any other ``mode`` raises ValueError.
+
+    pandas is imported here, not at module level: the streaming registry
+    source imports this module for its fetcher in every Python process
+    Spark starts for the source, and pandas alone takes 0.2-0.5 s to
+    import on a 4-vCPU host."""
+    import pandas as pd
+
     if mode not in ("fixture", "live"):
         raise ValueError(f"http_enrich mode must be 'fixture' or 'live', got {mode!r}")
     if mode == "fixture" and docs is None:

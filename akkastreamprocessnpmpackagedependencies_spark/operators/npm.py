@@ -27,14 +27,25 @@ hash aggregation that spills. Each doc is parsed once: ``explode_versions``
 is an outer explode plus a null filter, because Catalyst's
 InferFiltersFromGenerate turns an inner explode into
 ``size(from_json(doc).versions) > 0`` on the scan and parses every doc
-three times (twice in that filter, once in the projection). The parse runs
-in as many tasks as the docs scan has splits; a parquet file of one row
-group is one split, so the 3000-package benchmark docs file parses in one
-task. Hash-partitioning such docs on ``name`` first spread the parse over
-every core, but it shuffled the raw JSON (0.8 -> 7.3 MB written a pass),
-let the report sort's sampling job parse every doc a second time, won
-only 8 of 18 interleaved runs against this form on 4 vCPUs, and slowed the
-12-row fixture flagship by 18% at local[32], so there is no such gate.
+three times (twice in that filter, once in the projection).
+
+Parallelism (the reference's ``Balance(2)``): the parse runs in as many
+tasks as its input has partitions. A docs scan narrower than the
+session's ``defaultParallelism`` (a parquet file of one row group has
+one split that holds data) is hash-partitioned on ``name`` after the
+join, so parse, explode and both halves of the aggregation run in one
+stage on every core: ``HashPartitioning(name)`` already satisfies the
+``(package, version)`` grouping, so there is no second shuffle. A wider
+scan, such as a registry dump of many row groups, parses in place and
+shuffles only the partial aggregates. The report sorts in one
+partition, so no range-sampling job parses the docs a second time. On
+the 3000-package benchmark docs (7.4 MB, one row group, two splits at
+local[4]) a pass took 1.005 s against 1.236 s for the in-place parse
+and range sort (medians of 12 interleaved runs with a fixed-width
+exchange, 4 vCPUs; the AQE-coalesced width below matched it within 5 ms
+in one session), with the busy share of the cores up from 0.12 to 0.20
+and 7.3 MB of docs shuffled a pass instead of 0.8 MB of partial
+aggregates.
 """
 
 from __future__ import annotations
@@ -57,8 +68,25 @@ def attach_registry_docs(packages: DataFrame, docs: DataFrame) -> DataFrame:
     frozen response rows. Non-200 responses are dropped exactly like the
     status gate at NpmPackage.scala:9. Catalyst picks the join: the
     package list is broadcast while it is under the session's 32 MB
-    threshold, and above it both sides shuffle on ``name``."""
-    return packages.join(docs, "name", "inner").filter(F.col("status_code") == 200)
+    threshold, and above it both sides shuffle on ``name``.
+
+    When ``docs`` scans as fewer partitions than the session's
+    ``defaultParallelism``, the matched docs are hash-partitioned on
+    ``name``, so the parse downstream runs on every core. The exchange
+    takes its width from ``spark.sql.shuffle.partitions`` and lets AQE
+    coalesce it by bytes: the 12-doc fixture parses in one task instead
+    of paying a task per core. A docs scan at least as wide as the cores
+    is returned as joined.
+
+    The scan's width is read from its own RDD: ``docs.rdd`` also plans a
+    conversion to Python rows, and its check took 24-35 ms against 19-25
+    ms for this one (medians of 40 calls on the benchmark docs and the
+    fixture, 4 vCPUs)."""
+    joined = packages.join(docs, "name", "inner").filter(F.col("status_code") == 200)
+    cores = docs.sparkSession.sparkContext.defaultParallelism
+    if docs._jdf.queryExecution().toRdd().getNumPartitions() < cores:
+        return joined.repartition("name")
+    return joined
 
 
 def parse_registry(df: DataFrame, doc_col: str = "doc") -> DataFrame:
@@ -131,8 +159,12 @@ def accumulate_counts(df: DataFrame) -> DataFrame:
 
 def report(df: DataFrame) -> DataFrame:
     """K1: the fold-then-nested-print exists to group output by package
-    (PDF p.2); declaratively that intent is ORDER BY package, version."""
-    return df.orderBy("package", "version")
+    (PDF p.2); declaratively that intent is ORDER BY package, version.
+
+    The sort runs in one partition: the report is one row per version and
+    every caller collects it, while a range-partitioned sort would first
+    run a sampling job over its whole input, parse included."""
+    return df.repartition(1).orderBy("package", "version")
 
 
 def nested_report(df: DataFrame) -> DataFrame:

@@ -2706,10 +2706,14 @@ def _ledger_append_batch(
     without and with it). The state is
     O(buckets), so it CARRIES in driver memory across batches
     (hydrated once after the reconcile — the same carry idiom as the
-    global-sketch sinks), leaving exactly one extra Spark job per
-    admitting batch: the per-bucket partial collect (O(touched buckets)
-    rows, control-plane by construction) feeding a driver-side abelian
-    merge and one tiny append. The in-memory mirror cannot diverge from
+    global-sketch sinks): per admitting batch the ledger adds the
+    per-bucket partial collect (O(touched buckets) rows, control-plane by
+    construction) feeding a driver-side abelian merge, one tiny append,
+    and the gate's ``localCheckpoint`` of the probed frame. Measured
+    over a whole stream, the reconcile at its start included,
+    ``tools/gate_arm.py`` arm ``ledger`` runs 9.6 Spark jobs a batch
+    against 5.7 for arm ``plain`` (5,000 docs in 10 batches, sf0.001),
+    3.9 more. The in-memory mirror cannot diverge from
     the parquet ledger: both are written from the same merged rows, and
     a crash between them is the same window the reconcile already
     heals. Appends compact through ``_append_or_compact`` every

@@ -378,3 +378,22 @@ def test_empty_slice_touches_no_file():
         {"mode": "replay", "packages_path": "/nonexistent/p.txt", "transcript_path": "/nonexistent/t.json"}
     )
     assert list(reader.readBetweenOffsets({"index": 3}, {"index": 3})) == []
+
+
+def test_registry_source_imports_without_pandas():
+    """The streaming registry source and the fetcher it imports load no
+    pandas: Spark imports them in a fresh Python process per query, and
+    pandas would be most of that import's time. Checked in a fresh
+    interpreter, because this test session has pandas loaded already."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import akkastreamprocessnpmpackagedependencies_spark.sources.registry\n"
+        "import akkastreamprocessnpmpackagedependencies_spark.fetch\n"
+        "print('pandas' in sys.modules)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "False", out.stderr

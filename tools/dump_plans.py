@@ -15,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = "/root/testdata/sf0.01"
 
 SHOWCASE = [
-    ("npm_dependency_counts", "flagship: fixture join -> from_json -> explode -> agg"),
+    ("npm_dependency_counts", "flagship: fixture join -> name exchange -> from_json -> explode -> agg -> one-partition sort"),
     ("pricing_summary", "filtered scan + hash agg; filter/pruning pushed to parquet"),
     ("supplier_volume_by_nation", "dim joins broadcast; fact never shuffles for dims"),
     ("local_supplier_revenue", "six-table join: 3 broadcasts + one fact-fact shuffle"),

@@ -53,6 +53,8 @@ import sys
 import tempfile
 import time
 
+from query_arm import probe_job_id
+
 COPIES = 10
 TOKENS_PER_DOC = 60  # a synthetic clean doc has 56 5-grams
 ARMS = {  # arm -> micro-batches
@@ -188,14 +190,6 @@ def main(argv: list[str] | None = None) -> int:
 
     from akkastreamprocessnpmpackagedependencies_spark.streaming import pipeline as sp
 
-    def cur_job_id() -> int:
-        # job ids are global and sequential: a probe job brackets the count
-        sc.setJobGroup("probe", "probe")
-        sc.parallelize([0], 1).count()
-        ids = sc.statusTracker().getJobIdsForGroup("probe")
-        sc.setJobGroup(None, None)
-        return max(ids)
-
     work = tempfile.mkdtemp(prefix=f"gate_arm_{args.arm}_")
     try:
         src = os.path.join(work, "src")
@@ -205,13 +199,13 @@ def main(argv: list[str] | None = None) -> int:
         else:
             n_rows, writer = gate_input(spark, sp, args, src, out, work)
         spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm the JVM
-        j0 = cur_job_id()
+        j0 = probe_job_id(sc)
         t0 = time.perf_counter()
         q = writer.option("checkpointLocation", os.path.join(work, "ck")).start()
         q.processAllAvailable()
         q.stop()
         wall = time.perf_counter() - t0
-        jobs = cur_job_id() - j0 - 1
+        jobs = probe_job_id(sc) - j0 - 1
         if args.arm.startswith("sink_"):
             series = spark.read.parquet(out).collect()
             distinct = "\n".join(sorted({repr(tuple(r)) for r in series}))

@@ -1,6 +1,7 @@
 """One query arm for ``tools/ab.py``: time one registered query the way
 ``bench.py`` does and print one JSON line with its median time and, as
-``result``, its row count (which must match across checkouts).
+``result``, its row count (which must match across checkouts), and
+the Spark jobs a timed run starts.
 
     python /path/to/tools/query_arm.py SF_DIR QUERY
 
@@ -21,6 +22,18 @@ import sys
 import time
 
 RUNS = 3  # bench.py's MEASURE_RUNS
+
+
+def probe_job_id(sc) -> int:
+    """The id of a one-task probe job run now. Job ids are global and
+    sequential, so two probes bracket the jobs run between them; a job
+    group would miss broadcast jobs, which run under a group of their
+    own."""
+    sc.setJobGroup("probe", "probe")
+    sc.parallelize([0], 1).count()
+    ids = sc.statusTracker().getJobIdsForGroup("probe")
+    sc.setJobGroup(None, None)
+    return max(ids)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -46,14 +59,19 @@ def main(argv: list[str] | None = None) -> int:
 
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     run_once()
+    j0 = probe_job_id(spark.sparkContext)
     walls = [run_once() for _ in range(RUNS)]
+    jobs = (probe_job_id(spark.sparkContext) - j0 - 1) / RUNS
     rows = qs[args.query](spark, args.sf_dir).count()
     spark.stop()
     print(json.dumps({
         "correct": True,
         "attempted": RUNS,
         "failed": 0,
-        "metrics": {"query.wall_s": {"value": statistics.median(walls), "unit": "s"}},
+        "metrics": {
+            "query.wall_s": {"value": statistics.median(walls), "unit": "s"},
+            "query.jobs_per_run": {"value": jobs, "unit": "count"},
+        },
         "result": {"rows": rows},
     }))
     return 0

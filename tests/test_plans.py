@@ -688,12 +688,12 @@ def _npm_exchanges(df) -> list[str]:
     return [ln.strip(" +-:") for ln in _plan(df).splitlines() if "Exchange " in ln and "BroadcastExchange" not in ln]
 
 
-def test_narrow_docs_spread_the_parse_on_name(spark):
-    """Docs narrower than the session's parallelism are hash-partitioned on
-    ``name`` once after the join; that exchange also serves the (package,
-    version) aggregation, and the report sorts in one partition, so there
-    is no range sort (whose sampling job would parse the docs again) and
-    no shuffle on ``package``."""
+def test_npm_docs_spread_the_parse_on_name(spark):
+    """The matched docs are hash-partitioned on ``name`` once after the
+    join, even from a one-partition scan; that exchange also serves the
+    (package, version) aggregation, and the report sorts in one partition,
+    so there is no range sort (whose sampling job would parse the docs
+    again) and no shuffle on ``package``."""
     import os
 
     from akkastreamprocessnpmpackagedependencies_spark.fixtures import FIXTURES_DIR
@@ -707,24 +707,3 @@ def test_narrow_docs_spread_the_parse_on_name(spark):
     assert sum("SinglePartition" in ln for ln in exchanges) == 1, exchanges
     assert not [ln for ln in exchanges if "rangepartitioning" in ln or "hashpartitioning(package" in ln], exchanges
 
-
-def test_wide_docs_parse_in_place(spark):
-    """Docs with at least ``defaultParallelism`` partitions are parsed where
-    they were scanned: no exchange on ``name``, only the partial
-    aggregates shuffle, and still no range sort. The package list is
-    broadcast as in the flagship (an RDD-backed frame has no size
-    estimate, so the join would otherwise shuffle both sides on
-    ``name``)."""
-    from pyspark.sql import functions as F
-
-    from akkastreamprocessnpmpackagedependencies_spark import fixtures
-    from akkastreamprocessnpmpackagedependencies_spark.operators import npm
-    from akkastreamprocessnpmpackagedependencies_spark.schemas import PACKAGES_SCHEMA, REGISTRY_DOCS_SCHEMA
-
-    packages = spark.createDataFrame([(n,) for n in fixtures.package_names()], PACKAGES_SCHEMA)
-    docs = spark.createDataFrame(fixtures.registry_docs(), REGISTRY_DOCS_SCHEMA)
-    assert docs.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
-    exchanges = _npm_exchanges(npm.dependency_counts(F.broadcast(packages), docs))
-    assert not [ln for ln in exchanges if "hashpartitioning(name" in ln or "rangepartitioning" in ln], exchanges
-    assert sum("hashpartitioning(package" in ln for ln in exchanges) == 1, exchanges
-    assert sum("SinglePartition" in ln for ln in exchanges) == 1, exchanges

@@ -9,7 +9,7 @@ Layout
 - ``schemas``    : StructType schemas (npm registry doc, testdata tables)
 - ``fixtures``   : deterministic hermetic NPM fixtures (replace live registry)
 - ``sources``    : readers + custom rate-limited registry DataSource
-- ``fetch``      : batch HTTP enrichment via mapInPandas (retry, politeness)
+- ``fetch``      : registry fetch engine behind the registry source (retry, politeness)
 - ``operators``  : the operator library — every op is ``DataFrame -> DataFrame``
 - ``functions``  : reusable Column-expression helpers (cosine, minhash, ...)
 - ``streaming``  : Structured Streaming pipelines (event-time, watermarks)

@@ -1,30 +1,21 @@
-"""Batch HTTP enrichment: the reference's blocking per-element fetch
-(reference: src/main/scala/NpmPackage.scala:7-22) as an Arrow-batched
-``mapInPandas`` operator with per-partition session reuse, bounded
-retry/backoff, a token-bucket rate cap, and null-on-failure (the engine's
-PERMISSIVE error model replaces the reference's silent drop — failures stay
-visible as status_code rows instead of vanishing).
+"""The registry fetch engine behind the ``npmregistry`` source's live and
+replay modes: the reference's blocking per-element fetch (reference:
+src/main/scala/NpmPackage.scala:7-22) with bounded retry/backoff, a
+token-bucket rate cap and failures kept as status-code rows (the
+reference drops a package on any non-200; here a failure stays visible
+as status_code 0 or the last status).
 
-Three modes:
-- ``fixture`` (default): resolve documents from a local mapping — correctness
-  never depends on registry availability;
-- ``live``: GET https://registry.npmjs.org/<name> through the retry engine;
-- ``live`` with an injected ``transport``: the SAME retry/backoff/token-bucket
-  code driven by a canned transcript (``ReplayTransport``) — how the live
-  path executes in CI with no network.
+Transports: ``requests_transport`` GETs https://registry.npmjs.org/<name>;
+``ReplayTransport`` serves a canned transcript, so the same retry,
+backoff and token-bucket code runs with no network.
+
+The module imports no pandas: the streaming source imports it in every
+Python process Spark starts for the source.
 """
 
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
-if TYPE_CHECKING:
-    import pandas as pd
-    from pyspark.sql import DataFrame
-
-RESULT_SCHEMA = "name string, status_code int, doc string"
 
 
 class TransportError(Exception):
@@ -85,8 +76,9 @@ class ThrottledFetcher:
 
 
 def requests_transport():  # pragma: no cover - no network in the test env
-    """Real-network transport: one requests.Session per partition, requests
-    exceptions normalized to TransportError."""
+    """Real-network transport: one requests.Session per call (the readers
+    call it once per partition or stream slice), requests exceptions
+    normalized to TransportError."""
     try:
         import requests
     except ImportError as e:
@@ -107,9 +99,8 @@ class ReplayTransport:
     """Canned HTTP transcript: ``transcript[name]`` is the ordered list of
     outcomes successive requests for that name observe — ``"error"`` (raise
     TransportError), a bare int status, or ``[status, body]``. The last
-    outcome repeats once the list is exhausted; unknown names 404. Picklable,
-    so it rides into mapInPandas workers — the record/replay harness that
-    lets the live-path code run hermetically."""
+    outcome repeats once the list is exhausted; unknown names 404. The
+    record/replay harness that lets the live-path code run hermetically."""
 
     def __init__(self, transcript: dict[str, list]) -> None:
         self.transcript = {k: list(v) for k, v in transcript.items()}
@@ -125,65 +116,3 @@ class ReplayTransport:
             return (step, "")
         code, body = step
         return (int(code), body)
-
-
-def http_enrich(
-    packages: DataFrame,
-    *,
-    mode: str = "fixture",
-    docs: dict[str, tuple[int, str]] | None = None,
-    rate_per_sec: float = 0.33,
-    max_retries: int = 3,
-    transport=None,
-) -> DataFrame:
-    """packages(name) -> (name, status_code, doc).
-
-    mode='fixture': look up ``docs`` (falls back to the committed fixture
-    set). mode='live': run names through ThrottledFetcher over ``transport``
-    (default: real network via requests) with one transport instance per
-    partition — exponential backoff on 5xx/connection errors and a token
-    bucket at ``rate_per_sec`` (element-granular, unlike the micro-batch
-    cap in the streaming source). Any other ``mode`` raises ValueError.
-
-    pandas is imported here, not at module level: the streaming registry
-    source imports this module for its fetcher in every Python process
-    Spark starts for the source, and pandas alone takes 0.2-0.5 s to
-    import on a 4-vCPU host."""
-    import pandas as pd
-
-    if mode not in ("fixture", "live"):
-        raise ValueError(f"http_enrich mode must be 'fixture' or 'live', got {mode!r}")
-    if mode == "fixture" and docs is None:
-        from .fixtures import registry_docs
-
-        docs = {name: (code, doc) for name, code, doc in registry_docs()}
-
-    def fixture_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resolved = pdf["name"].map(lambda n: docs.get(n))
-            yield pd.DataFrame(
-                {
-                    "name": pdf["name"],
-                    "status_code": resolved.map(lambda r: r[0] if r else 404).astype("int32"),
-                    "doc": resolved.map(lambda r: r[1] if r else None),
-                }
-            )
-
-    def live_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fetcher = ThrottledFetcher(
-            transport if transport is not None else requests_transport(),
-            rate_per_sec=rate_per_sec,
-            max_retries=max_retries,
-        )
-        for pdf in batches:
-            results = pdf["name"].map(fetcher)
-            yield pd.DataFrame(
-                {
-                    "name": pdf["name"],
-                    "status_code": results.map(lambda t: t[0]).astype("int32"),
-                    "doc": results.map(lambda t: t[1]),
-                }
-            )
-
-    fn = fixture_fn if mode == "fixture" else live_fn
-    return packages.select("name").mapInPandas(fn, schema=RESULT_SCHEMA)

@@ -12,12 +12,22 @@ pipeline feeds into its metrics system.
 At 100 TB this is the only affordable way to audit a pipeline run:
 metrics ride the existing pass as extra aggregate expressions (codegen'd,
 partial-aggregated), so cost is O(columns observed), not O(data re-read).
+
+Jobs: ``job_profile`` folds the Spark jobs a callable starts into their
+job, stage, task and shuffle-write counts, read from Spark's status
+store. Job and stage counts do not depend on the host, so they rank
+plans where wall time cannot.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from collections.abc import Callable
+from typing import TypeVar
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
 
 
 def observed_rows(df: DataFrame, name: str = "rows") -> tuple[DataFrame, Observation]:
@@ -46,3 +56,39 @@ def observe_stream(df: DataFrame, name: str, *metrics: "F.Column") -> DataFrame:
     micro-batch reports them in StreamingQueryProgress.observedMetrics
     (an Observation object is batch-only, so streaming passes the name)."""
     return df.observe(name, *metrics)
+
+
+def probe_job_id(sc) -> int:
+    """The id of a zero-task probe job run now. Job ids are global and
+    sequential, so two probes bracket the jobs run between them; a job
+    group would miss broadcast jobs, which run under a group of their
+    own. The probe runs in the JVM only and starts no task."""
+    return sc._jsc.emptyRDD().countAsync().jobIds()[0]
+
+
+def job_profile(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, dict[str, int]]:
+    """Run ``fn()`` and fold the Spark jobs it started, bracketed by
+    ``probe_job_id``. Returns (``fn``'s result, ``{jobs, stages, tasks,
+    shuffle_write_bytes}``). A stage counts once, and only if it ran:
+    AQE runs each exchange as its own job, and the job that reads the
+    exchange lists that stage again as skipped. The listener bus updates
+    the status store asynchronously, so the fold drains it first."""
+    sc = spark.sparkContext
+    j0 = probe_job_id(sc)
+    out = fn()
+    j1 = probe_job_id(sc)
+    jvm, jsc = sc._jvm, sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store, seq = jsc.statusStore(), jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    no_statuses, no_quantiles = jvm.java.util.ArrayList(), sc._gateway.new_array(jvm.double, 0)
+    stage_ids = {s for j in range(j0 + 1, j1) for s in seq(store.job(j).stageIds())}
+    prof = {"jobs": j1 - j0 - 1, "stages": 0, "tasks": 0, "shuffle_write_bytes": 0}
+    for sid in sorted(stage_ids):
+        attempts = [
+            a for a in seq(store.stageData(sid, False, no_statuses, False, no_quantiles))
+            if a.status().name() != "SKIPPED"
+        ]
+        prof["stages"] += bool(attempts)
+        prof["tasks"] += sum(a.numTasks() for a in attempts)
+        prof["shuffle_write_bytes"] += sum(a.shuffleWriteBytes() for a in attempts)
+    return out, prof

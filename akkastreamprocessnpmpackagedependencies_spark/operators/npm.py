@@ -10,7 +10,7 @@ Stage-by-stage mapping (SURVEY.md §2):
 - map(NpmPackage) (Main.scala:25)                 -> column alias
 - throttle/buffer (Main.scala:32,100,104)         -> streaming source options
 - fetchDependencies HTTP+parse (NpmPackage.scala:7-22)
-    -> hermetic join to frozen docs (or fetch.http_enrich), then
+    -> hermetic join to frozen docs (or the ``npmregistry`` source), then
        PERMISSIVE ``from_json`` — missing keys become NULLs, replacing
        the reference's swallowed exceptions
 - mapConcat(versionList) (Main.scala:37-38)       -> ``explode`` of the versions map

@@ -567,9 +567,12 @@ def corpus_pipeline_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("is_keeper").alias("f_keep")
     )
     c = contamination_ngram_hits(spark, sf_dir)
+    # broadcast by hint, not by AQE at run time: a runtime conversion
+    # depends on which side finishes first, and when the window's doc_id
+    # exchange had already started the query ran one more job
     j = (
-        exact.join(fz, "doc_id", "left")
-        .join(c, "doc_id", "left")
+        exact.join(F.broadcast(fz), "doc_id", "left")
+        .join(F.broadcast(c), "doc_id", "left")
     )
     verdict = (
         F.when(F.col("doc_id") < N_PROBE_DOCS, "probe_holdout")

@@ -300,7 +300,10 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     active weeks) joined on user_id — the same partitioning end to end —
     then a small (cohort x offset) hash agg. The distinct collapses the
     event stream to at most (users x weeks) rows before the join, so the
-    join never sees raw-event cardinality."""
+    join never sees raw-event cardinality. The join is a shuffled hash
+    join by hint: left to AQE it became a broadcast join at run time
+    whose build side depended on which aggregate finished first, and one
+    of the two plans ran one more job."""
     e = load_table(spark, sf_dir, "events")
     # DATE, not timestamp: DuckDB's date_trunc('week', ts) yields a DATE,
     # Spark's a midnight timestamp — align on the date form
@@ -311,7 +314,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.date_trunc("week", "ts").alias("week")
     ).distinct()
     return (
-        active.join(first_week, "user_id")
+        active.join(first_week.hint("shuffle_hash"), "user_id")
         .groupBy(
             "cohort_week",
             (F.datediff(F.to_date("week"), F.to_date("cohort_week")) / 7)

@@ -1,39 +1,33 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: runs the HEADLINE queries at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS], writes the
+full record to BENCH_FULL.json and prints ONE JSON line: totals, the
+flagship and the slowest queries (``compact_line``).
 
-Methodology (round-4 rework, after round 3's unexplained 2-3x drifts on
-byte-identical queries; round-7 de-noise, after rounds 5 AND 6 each
-burned audit time on phantom >25% swings in untouched code):
-- the whole suite runs once unmeasured first — JVM/codegen compilation,
-  Python-worker pool spin-up and file-index caches land there;
-- the suite is then timed MEASURE_RUNS times, each full pass visiting
-  the queries in a DIFFERENT seeded-shuffled order — so same-session
-  interference (a GC pause, an executor-pool respawn, another query's
-  cache spill) hits different neighbors each pass instead of the same
-  victim three times;
-- each query reports the MEDIAN of its samples, and BENCH_FULL.json
-  additionally records the per-query [min, median, max] spread so
-  tools/bench_compare.py can flag only deltas that exceed the measured
-  noise band instead of any 1.5x median wiggle;
-- the timed span covers query CONSTRUCTION + execution (t0 before the
-  builder call), so operators that materialize eagerly inside the builder
-  (the LSH family localCheckpoints its verified pairs to release the
-  signature cache) are fully charged.
+What is timed: each query's construction plus a noop-sink write (count()
+would let Catalyst prune unaggregated projections; construction counts
+because the LSH family localCheckpoints inside its builders). The suite
+runs once untimed (JVM and codegen compilation, the Python worker pool,
+file-index caches), then MEASURE_RUNS times, each pass in its own
+seeded-shuffled order so that session interference does not hit the
+same query every pass. A query reports the median of its runs and their
+[min, median, max] ``spread``. The streaming operators (rows/s and
+per-batch latency) and the sketch kernels (rows/s, no Spark) are timed
+after the batch passes.
 
-Each query executes via the noop sink (count() would let Catalyst prune
-unaggregated projections).
+What is gated: each query's Spark jobs and stages per run, folded by
+``observability.job_profile`` around every timed run (its probes fall
+outside the timed span) and recorded in ``profiles`` with the shuffle
+bytes written, next to the session's ``cpus`` and
+``spark.sql.shuffle.partitions``. ``tools/bench_compare.py OLD NEW``
+fails when any query's jobs or stages rise. Counts do not depend on the
+host and wall times do, so wall-time comparisons go through
+``tools/ab.py`` with ``tools/query_arm.py``, in one session.
 
 The JSON carries a "notes" field for expected-warning context: the
 WindowExec single-partition warning in the log tail comes from
-pack_sequences' per-shard offsets frame (one row per shard BY DESIGN —
-quality.py pack_token_counts, plan-tested as sharded-not-global); it is
-left visible so real unpartitioned-window regressions aren't masked.
-
-Baseline context (BASELINE.md): the reference is throttle-bound at 1
-package / 3 s (>= 57 s for its 20-package input) on a single thread; the
-hermetic flagship here is compute-bound and embarrassingly parallel.
+pack_sequences' per-shard offsets frame (one row per shard by design,
+quality.py pack_token_counts); it is left visible so that real
+unpartitioned-window regressions are not masked.
 """
 
 from __future__ import annotations
@@ -47,98 +41,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 MEASURE_RUNS = 3
-CAL_RUNS = 5
-
-# HEADLINE queries whose runtime is dominated by Python workers
-# (mapInPandas / applyInPandas / pandas_udf / UDTF) rather than JVM
-# execution. tools/bench_compare.py normalizes these by the PYWORKER
-# calibration below instead of the JVM session calibration — round-11's
-# phantom uniform ~1.2x came from the JVM-only calibration running
-# 0.83x faster in a session where python-worker time did not move, so
-# the single divisor over-corrected every python-heavy query (round-12
-# verdict #2). Derived by scanning each query's source for python-worker
-# entry points; re-derive when adding HEADLINE members.
-PYWORKER_QUERIES = frozenset({
-    "asof_cogroup_pandas",
-    "embedding_pca_project",
-    "grouped_median_pandas",
-    "multimodal_decode_audio",
-    "multimodal_decode_features",
-    "multimodal_decode_jpeg",
-    "multimodal_decode_png",
-    "multimodal_decode_real",
-    "multimodal_decode_vp8",
-    "multimodal_decode_webp",
-    "multimodal_frame_sample",
-    "pca_project_fixed_basis",
-    "udtf_sentences",
-})
-
-
-def calibration_pyworker_once(spark) -> float:
-    """One timed pass of the PYTHON-WORKER calibration twin: a fixed
-    Arrow-batched mapInPandas workload (splitmix-style integer mixing
-    over 2M ids, identical bytes every session) whose runtime measures
-    the python-worker machinery — worker pool dispatch, Arrow transfer,
-    numpy throughput — that the JVM session calibration cannot see.
-    tools/bench_compare.py divides PYWORKER_QUERIES timings by the
-    old/new ratio of THIS number, so a session where only the JVM side
-    sped up (round 11: JVM cal 0.83x, python flat) stops phantom-
-    flagging every decode/pandas query."""
-
-    def _mix(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            x = pdf["id"].to_numpy(dtype=np.uint64).copy()
-            for _ in range(16):
-                x ^= x >> np.uint64(33)
-                x *= np.uint64(0xFF51AFD7ED558CCD)
-                x ^= x >> np.uint64(29)
-            yield pd.DataFrame(
-                {"h": [int(x.sum() & np.uint64(0x7FFFFFFFFFFFFFFF))]}
-            )
-
-    t0 = time.perf_counter()
-    (
-        spark.range(0, 2_000_000, 1, 32)
-        .mapInPandas(_mix, "h long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    return time.perf_counter() - t0
-
-
-def calibration_once(spark) -> float:
-    """One timed pass of the fixed calibration micro-workload: a
-    deterministic in-memory aggregate with exactly one shuffle and no
-    parquet, identical bytes every session. Its runtime measures the
-    SESSION (JVM state, CPU contention, thermal/host noise), never the
-    code under test — tools/bench_compare.py divides per-query medians
-    by the old/new calibration ratio so a uniformly slow session (round
-    7 ran 1.66x slower than round 6 on untouched code) stops flagging
-    every query (round-7 verdict item #2)."""
-    from pyspark.sql import functions as F
-
-    t0 = time.perf_counter()
-    (
-        spark.range(0, 4_000_000, 1, 32)
-        .selectExpr("id % 9973 AS k", "(id * 2654435761) % 1000003 AS v")
-        .groupBy("k")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("v").alias("s"),
-            F.avg("v").alias("a"),
-            F.max("v").alias("mx"),
-        )
-        .orderBy("k")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    return time.perf_counter() - t0
 
 HEADLINE = [
     "npm_dependency_counts",
@@ -275,12 +177,10 @@ HEADLINE = [
 
 # Streaming surface: each stateful/windowed operator timed over the sf
 # events fixture, sliced into time-ordered files so several micro-batches
-# run. Each op runs STREAM_PASSES full passes and reports the median:
-# single-pass rows/s swung both ways on untouched ops (three quiet passes
-# of one build spread stateful_user_counts over 11k-32k rows/s), and the
-# recorded [min, median, max] rows_per_sec_band lets
-# tools/bench_compare.py suppress cross-session swings the way the batch
-# side's spread bands already do.
+# run. Each op runs STREAM_PASSES full passes and reports the median pass
+# with the [min, median, max] rows_per_sec_band: single-pass rows/s swung
+# both ways on untouched ops (three quiet passes of one build spread
+# stateful_user_counts over 11k-32k rows/s).
 STREAM_N_FILES = 6
 STREAM_FILES_PER_TRIGGER = 2
 STREAM_PASSES = 3
@@ -555,26 +455,6 @@ def bench_streaming(spark, sf_dir: str) -> dict:
 KERNEL_RUNS = 3
 
 
-def _kernel_calibration_once() -> float:
-    """One timed pass of a fixed PURE-NUMPY micro-workload (sort +
-    searchsorted + cumsum on deterministic arrays, identical bytes every
-    session) — the kernel section's twin of ``calibration_once``: the
-    streaming-sketch kernels never enter the JVM, so the Spark
-    calibration can't normalize them; this measures the host's raw
-    numpy/CPU speed instead."""
-    import numpy as np
-
-    t0 = time.perf_counter()
-    x = ((np.arange(2_000_000, dtype=np.int64) * 2654435761) % 1000003).astype(
-        np.float64
-    )
-    xs = np.sort(x)
-    pos = np.searchsorted(xs, x[:200_000])
-    acc = float(np.cumsum(xs)[-1]) + int(pos.sum())
-    assert acc != 0.0
-    return time.perf_counter() - t0
-
-
 def bench_kernels() -> dict:
     """Pure-Python rows/s for the streaming-sketch kernels, NO Spark in
     the loop (round-9 verdict #3): at sf0.1 every stateful streaming op
@@ -583,9 +463,7 @@ def bench_kernels() -> dict:
     is invisible in the streaming section. Each kernel consumes a
     deterministic synthetic stream in micro-batch-sized chunks, state
     re-initialized per pass; the median of KERNEL_RUNS passes is
-    reported, normalized round-over-round by tools/bench_compare.py
-    against ``calibration_sec`` (the numpy twin of the session
-    calibration)."""
+    reported."""
     import numpy as np
     import pandas as pd
 
@@ -607,9 +485,6 @@ def bench_kernels() -> dict:
         _welford_batch,
         HLL_B,
     )
-
-    _kernel_calibration_once()  # warm numpy (first-call import/alloc cost)
-    cal = [_kernel_calibration_once() for _ in range(CAL_RUNS)]
 
     # deterministic synthetic streams (fixed seed; the kernels are
     # distribution-sensitive, so the same bytes must flow every session)
@@ -702,10 +577,22 @@ def bench_kernels() -> dict:
     record("reservoir_update", rsv_eids.size, timed(rsv_pass))
 
     return {
-        "calibration_sec": round(statistics.median(cal), 4),
-        "calibration_samples": [round(c, 4) for c in cal],
         "runs_per_kernel": KERNEL_RUNS,
         "kernels": out,
+    }
+
+
+def reduce_profiles(name: str, passes: list[dict]) -> dict:
+    """One query's gated profile from its measured passes: the largest
+    jobs and stages of any pass (a pass that starts more is never hidden)
+    and the median shuffle bytes. Passes that disagree on jobs or stages
+    are named on stderr."""
+    if len({(p["jobs"], p["stages"]) for p in passes}) > 1:
+        print(f"bench: {name} jobs/stages differ across passes: {passes}", file=sys.stderr)
+    return {
+        "jobs": max(p["jobs"] for p in passes),
+        "stages": max(p["stages"] for p in passes),
+        "shuffle_write_bytes": int(statistics.median(p["shuffle_write_bytes"] for p in passes)),
     }
 
 
@@ -714,6 +601,7 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     import __spark_entry__ as entrymod
+    from akkastreamprocessnpmpackagedependencies_spark.observability import job_profile
     from akkastreamprocessnpmpackagedependencies_spark.session import get_spark
 
     spark = get_spark("bench")
@@ -732,54 +620,22 @@ def main() -> None:
     for name in HEADLINE:
         run_once(name)
 
-    # session calibration, bracketing the measured passes (start AND end,
-    # so a mid-session slowdown shows up as start/end disagreement)
-    calibration_once(spark)  # its own warmup
-    cal_start = [calibration_once(spark) for _ in range(CAL_RUNS)]
-    calibration_pyworker_once(spark)  # its own warmup (worker pool)
-    pycal_start = [calibration_pyworker_once(spark) for _ in range(CAL_RUNS)]
-
     # measured passes: each full pass visits the suite in a different
     # seeded-shuffled order, so session interference (GC, pool respawn,
-    # a neighbor's spill) can't hit the same query every pass — the
-    # round-5/6 phantom-regression class
+    # a neighbor's spill) can't hit the same query every pass
     import random
 
     samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    passes: dict[str, list[dict]] = {name: [] for name in HEADLINE}
     for run in range(MEASURE_RUNS):
         order = list(HEADLINE)
         random.Random(2026 + run).shuffle(order)
         for name in order:
-            samples[name].append(run_once(name))
+            wall, prof = job_profile(spark, lambda: run_once(name))
+            samples[name].append(wall)
+            passes[name].append(prof)
 
-    cal_end = [calibration_once(spark) for _ in range(CAL_RUNS)]
-    pycal_end = [calibration_pyworker_once(spark) for _ in range(CAL_RUNS)]
-    calibration = {
-        "workload": "range(4e6,32p) modkey groupBy agg orderBy -> noop",
-        "runs": CAL_RUNS,
-        "start_median": round(statistics.median(cal_start), 4),
-        "end_median": round(statistics.median(cal_end), 4),
-        "median": round(statistics.median(cal_start + cal_end), 4),
-        "samples": [round(x, 4) for x in cal_start + cal_end],
-        # the python-worker twin (round-12 verdict #2): same bracket,
-        # different machinery — normalizes PYWORKER_QUERIES
-        "pyworker": {
-            "workload": "range(2e6,32p) mapInPandas splitmix x16 -> noop",
-            "runs": CAL_RUNS,
-            "start_median": round(statistics.median(pycal_start), 4),
-            "end_median": round(statistics.median(pycal_end), 4),
-            "median": round(statistics.median(pycal_start + pycal_end), 4),
-            "samples": [round(x, 4) for x in pycal_start + pycal_end],
-        },
-    }
-
-    # streaming surface: outside the calibration bracket by design (it
-    # measures different machinery; the bracket certifies the batch passes)
     streaming = bench_streaming(spark, sf_dir)
-
-    # kernel surface: pure numpy/Python, no Spark — carries its own
-    # numpy calibration (the Spark session calibration can't normalize
-    # non-JVM work)
     kernels = bench_kernels()
 
     times = {n: round(statistics.median(s), 3) for n, s in samples.items()}
@@ -794,8 +650,9 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "spread": spread,
-        "calibration": calibration,
-        "pyworker_queries": sorted(PYWORKER_QUERIES & set(times)),
+        "profiles": {n: reduce_profiles(n, p) for n, p in passes.items()},
+        "cpus": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
         "streaming": streaming,
         "kernels": kernels,
         "sf": sf,
@@ -807,9 +664,7 @@ def main() -> None:
             f"the {len(qs) - len(times)} excluded are deliberately the "
             "sub-second scalar-function / set-operation / small-projection "
             "queries whose sf0.1 runtime is dominated by fixed query-launch "
-            "overhead, not operator work — including them would add noise "
-            "floor, not signal (round-8 verdict #6: this subset was "
-            "previously undocumented)."
+            "overhead, not operator work."
         ),
         "notes": (
             "WindowExec single-partition warnings in the log tail are "
@@ -825,11 +680,7 @@ def main() -> None:
     with open(full_path, "w") as fh:
         json.dump(result, fh, indent=1, sort_keys=True)
         fh.write("\n")
-    line, n_kept = compact_line(
-        times, total, sf, cal=calibration["median"],
-        cal_py=calibration["pyworker"]["median"],
-        py_tags=PYWORKER_QUERIES,
-    )
+    line, n_kept = compact_line(times, total, sf)
     print(
         f"bench: stdout line {len(line)}B carries flagship + {n_kept - 1} "
         f"slowest of {len(times)} queries; full map in {full_path}",
@@ -848,29 +699,14 @@ def compact_line(
     total: float,
     sf: float,
     budget: int = LINE_BUDGET,
-    cal: float | None = None,
-    cal_py: float | None = None,
-    py_tags: frozenset | None = None,
 ) -> tuple[str, int]:
-    """The ONE stdout JSON line, guaranteed to fit the driver's capture.
-
-    The driver records only the last ~2000 chars of stdout (measured:
-    BENCH_r06.json tail is exactly 2000 chars, so the 2861-char 96-query
-    compact line of rounds 5-6 was decapitated -> parsed: null two
-    rounds running). The line therefore carries totals + the flagship +
-    the slowest queries — dropping the cheapest included query until it
-    fits ``budget`` — with the full per-query map in BENCH_FULL.json
-    (referenced by the ``queries_full`` field). Returns (line,
-    n_queries_included).
-
-    When ``py_tags`` is given, the line also carries ``pyworker_queries``
-    — the tag list intersected with the queries the line kept — so a
-    driver-captured artifact is self-describing for calibration-class
-    normalization (round-13 verdict #4: tools/bench_compare.py otherwise
-    backfills tags from the CURRENT checkout's bench.py, which misclassifies
-    historical artifacts if the tag set ever changes). Intersecting with
-    the kept queries keeps the field inside the budget loop: a dropped
-    query needs no tag because it cannot be compared."""
+    """The ONE stdout JSON line, short enough for a capture of stdout's
+    last ~2000 characters (BENCH_r06.json's captured tail is exactly
+    2000; a 2861-char 96-query line lost its head and did not parse).
+    The line carries totals, the flagship and the slowest queries,
+    dropping the cheapest included query until it fits ``budget``; the
+    full per-query map is in BENCH_FULL.json (the ``queries_full``
+    field). Returns (line, n_queries_included)."""
     slowest = sorted(times, key=times.get, reverse=True)
     keep = ([FLAGSHIP] if FLAGSHIP in times else []) + [
         q for q in slowest if q != FLAGSHIP
@@ -887,12 +723,6 @@ def compact_line(
             "runs_per_query": MEASURE_RUNS,
             "aggregation": "median",
         }
-        if cal is not None:
-            compact["calibration"] = cal
-        if cal_py is not None:
-            compact["calibration_pyworker"] = cal_py
-        if py_tags is not None:
-            compact["pyworker_queries"] = sorted(py_tags & set(keep))
         line = json.dumps(compact, separators=(",", ":"))
         if len(line) <= budget or len(keep) <= 1:
             return line, len(keep)

@@ -1,15 +1,17 @@
-"""Unit tests for the bench artifact plumbing: the bounded stdout line
-(bench.py compact_line) and the spread-aware regression comparator
-(tools/bench_compare.py). No SparkSession needed."""
+"""Tests for the bench artifact plumbing: the bounded stdout line
+(bench.py compact_line), the streaming reducers, the job-profile fold
+(observability.job_profile) and the job/stage regression gate
+(tools/bench_compare.py)."""
 
 from __future__ import annotations
 
 import importlib.util
 import json
 import os
-import sys
 
 import pytest
+
+from akkastreamprocessnpmpackagedependencies_spark.observability import job_profile
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -60,139 +62,6 @@ def test_compact_line_small_suite_includes_everything():
     assert set(json.loads(line)["queries"]) == set(times)
 
 
-def test_median_in_band():
-    assert bc.median_in_band(1.5, [1.0, 1.5, 2.0])
-    assert bc.median_in_band(1.0, [1.0, 1.5, 2.0])  # inclusive edges
-    assert bc.median_in_band(2.0, [1.0, 1.5, 2.0])
-    assert not bc.median_in_band(2.1, [1.0, 1.5, 2.0])
-    assert not bc.median_in_band(0.9, [1.0, 1.5, 2.0])
-
-
-def _write(tmp_path, name, payload) -> str:
-    p = tmp_path / name
-    p.write_text(json.dumps(payload))
-    return str(p)
-
-
-def test_compare_suppresses_delta_within_spread_bands(tmp_path, capsys):
-    """A 2x median swing whose noise bands overlap is session
-    interference, not a regression — reported as 'noise', not flagged
-    (the rounds-5/6 phantom chargram_jaccard_pairs class)."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0}, "spread": {"q": [0.8, 1.0, 2.4]}})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 2.0}, "spread": {"q": [1.9, 2.0, 2.1]}})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "noise  q" in out
-    assert "flagged >1.5x: 0" in out
-    assert "noise-suppressed: 1" in out
-
-
-def test_compare_flags_delta_beyond_spread_bands(tmp_path, capsys):
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0}, "spread": {"q": [0.9, 1.0, 1.1]}})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 2.0}, "spread": {"q": [1.9, 2.0, 2.1]}})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "SLOWER q" in out
-    assert "flagged >1.5x: 1" in out
-    assert "bands [0.90,1.10] vs norm'd [1.90,2.10]" in out
-
-
-def test_outlier_inflated_band_no_longer_suppresses(tmp_path, capsys):
-    """Round-8 ADVICE: with 3 samples, one outlier pass used to inflate a
-    band enough that mere band OVERLAP masked a genuine regression. The
-    tightened rule — new MEDIAN must lie inside the old band — flags it:
-    new band [1.05,2.1] overlaps old [0.9,1.1], but the 2.0 median does
-    not sit inside the old band."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0}, "spread": {"q": [0.9, 1.0, 1.1]}})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 2.0}, "spread": {"q": [1.05, 2.0, 2.1]}})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "SLOWER q" in out and "flagged >1.5x: 1" in out
-
-
-def test_calibration_normalizes_uniform_session_shift(tmp_path, capsys):
-    """The round-7 failure mode: every query uniformly ~2x slower because
-    the SESSION was slower (calibration moved 2x too). Normalized, zero
-    flags; a query that moved 4x raw (2x beyond the session shift) is
-    still caught."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q1": 1.0, "q2": 2.0, "q3": 0.5},
-        "spread": {"q1": [0.9, 1.0, 1.1], "q2": [1.9, 2.0, 2.1],
-                   "q3": [0.45, 0.5, 0.55]},
-        "calibration": {"median": 0.10}})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q1": 2.0, "q2": 4.1, "q3": 2.0},
-        "spread": {"q1": [1.9, 2.0, 2.1], "q2": [3.9, 4.1, 4.3],
-                   "q3": [1.9, 2.0, 2.1]},
-        "calibration": {"median": 0.20}})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "dividing new timings by 2.000" in out
-    # q1 (2x raw = session shift) and q2 (2.05x raw) normalize clean;
-    # q3 (4x raw = 2x normalized, outside old band) is the real mover
-    assert "SLOWER q3" in out
-    assert "flagged >1.5x: 1" in out
-
-
-def test_streaming_section_compared_with_inverse_normalization(tmp_path, capsys):
-    """rows/s scales inversely with session slowness: under a 2x-slower
-    session (calibration 2x), an op whose raw rows/s halved is unchanged
-    after normalization, while a real 4x-raw throughput drop stays
-    flagged."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0},
-        "calibration": {"median": 0.1},
-        "streaming": {"op_same": {"rows_per_sec": 1000},
-                      "op_drop": {"rows_per_sec": 1000}}})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 2.0},
-        "calibration": {"median": 0.2},
-        "streaming": {"op_same": {"rows_per_sec": 500},
-                      "op_drop": {"rows_per_sec": 250}}})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "op_same" not in out
-    assert "SLOWER [stream] op_drop" in out
-    assert "streaming: 2 common ops, flagged >1.5x: 1" in out
-
-
-def test_median_normalize_fallback_for_pre_calibration_artifacts(tmp_path, capsys):
-    """Pre-round-8 artifacts carry no calibration; --normalize median
-    divides by the median per-query ratio instead, so a uniformly
-    shifted session yields zero flags."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {f"q{i}": 1.0 for i in range(9)}})
-    new = _write(tmp_path, "new.json", {
-        "queries": {f"q{i}": 1.7 for i in range(9)}})
-    sys.argv = ["bench_compare", old, new, "--normalize", "median"]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "median per-query ratio" in out
-    assert "flagged >1.5x: 0" in out
-
-
-def test_compare_without_spread_falls_back_to_median_only(tmp_path, capsys):
-    """Pre-round-7 artifacts carry no spread: median-ratio flagging
-    still works (no silent suppression when noise data is absent)."""
-    old = _write(tmp_path, "old.json", {"queries": {"q": 1.0}})
-    new = _write(tmp_path, "new.json", {"queries": {"q": 2.0}})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "SLOWER q" in out and "flagged >1.5x: 1" in out
-
-
 def test_progress_stats_filters_idle_triggers():
     """bench.py's streaming-progress reducer: idle (0-row) triggers must
     not dilute rows/s or the latency spread; dict and .json-attr
@@ -214,335 +83,6 @@ def test_progress_stats_filters_idle_triggers():
     rows, batches, durs = bench._progress_stats(_Q())
     assert (rows, batches) == (400, 2)
     assert durs == [50.0, 150.0]
-
-
-def test_tail_salvage_skips_scalar_fields():
-    qs = bc._from_tail(
-        '"queries":{"a_query":1.25,"other":0.5},"n_queries":103,'
-        '"sf":0.1,"runs_per_query":3'
-    )
-    assert qs == {"a_query": 1.25, "other": 0.5}
-
-
-def test_normalize_flag_validates_mode_and_value(tmp_path, capsys):
-    """Round-8 ADVICE: a trailing --normalize must exit with usage (not
-    IndexError) and an unknown mode must exit with usage (not silently
-    fall through to the misleading no-calibration message)."""
-    old = _write(tmp_path, "old.json", {"queries": {"q": 1.0}})
-    for argv in (
-        ["bench_compare", old, old, "--normalize"],
-        ["bench_compare", old, old, "--normalize", "typo"],
-    ):
-        sys.argv = argv
-        with pytest.raises(SystemExit) as ex:
-            bc.main()
-        assert "--normalize needs one of" in str(ex.value)
-
-
-def test_fail_on_regression_gate_trips_and_clears(tmp_path, capsys):
-    """Round-8 verdict #3: with --fail-on-regression a confirmed
-    out-of-band >1.5x slowdown exits non-zero naming the query; an
-    identical artifact pair (and an in-band delta) exits 0."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0, "r": 1.0},
-        "spread": {"q": [0.9, 1.0, 1.1], "r": [0.8, 1.0, 2.4]}})
-    slow = _write(tmp_path, "slow.json", {
-        "queries": {"q": 2.0, "r": 2.0},
-        "spread": {"q": [1.9, 2.0, 2.1], "r": [1.9, 2.0, 2.1]}})
-    sys.argv = ["bench_compare", old, slow, "--fail-on-regression"]
-    with pytest.raises(SystemExit) as ex:
-        bc.main()
-    msg = str(ex.value)
-    assert "REGRESSION GATE" in msg and "q" in msg
-    # r's 2x median sits inside old's [0.8, 2.4] band: suppressed, so it
-    # must NOT appear in the gate's confirmed list
-    assert ", r" not in msg and "r," not in msg
-    sys.argv = ["bench_compare", old, old, "--fail-on-regression"]
-    bc.main()  # no SystemExit
-    assert "regression gate: clean" in capsys.readouterr().out
-
-
-def test_fail_on_regression_ignores_speedups(tmp_path, capsys):
-    """Speedups stay informational under the gate — only slowdowns fail."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 2.0}, "spread": {"q": [1.9, 2.0, 2.1]}})
-    fast = _write(tmp_path, "fast.json", {
-        "queries": {"q": 1.0}, "spread": {"q": [0.9, 1.0, 1.1]}})
-    sys.argv = ["bench_compare", old, fast, "--fail-on-regression"]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "faster q" in out
-    assert "regression gate: clean" in out
-
-
-def test_kernel_section_compared_with_numpy_calibration(tmp_path, capsys):
-    """Round-9 verdict #3: the kernel section normalizes by the NUMPY
-    calibration (kernels never touch the JVM): under a 2x-slower host
-    (kernel cal 2x), a kernel whose raw rows/s halved is unchanged,
-    while a real 4x-raw throughput drop is flagged AND enters the gate
-    list under the kernel: prefix."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0},
-        "kernels": {"calibration_sec": 0.1,
-                    "kernels": {"k_same": {"rows_per_sec": 1_000_000},
-                                "k_drop": {"rows_per_sec": 1_000_000}}}})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 1.0},
-        "kernels": {"calibration_sec": 0.2,
-                    "kernels": {"k_same": {"rows_per_sec": 500_000},
-                                "k_drop": {"rows_per_sec": 250_000}}}})
-    flags = str(tmp_path / "flags.json")
-    sys.argv = ["bench_compare", old, new, "--json-flags", flags,
-                "--fail-on-regression"]
-    with pytest.raises(SystemExit) as ex:
-        bc.main()
-    assert "kernel:k_drop" in str(ex.value)
-    out = capsys.readouterr().out
-    assert "SLOWER [kernel] k_drop" in out
-    assert "k_same" not in out.replace("kernels: 2 common", "")
-    assert json.load(open(flags))["regressed"] == ["kernel:k_drop"]
-
-
-def test_kernel_missing_calibration_warns_loudly(tmp_path, capsys):
-    """Round-10 ADVICE: when either artifact lacks
-    kernels.calibration_sec the comparison used to fall back to raw
-    rows/s with no signal beyond a 'None' fragment — across
-    differently-loaded hosts that can flag a phantom regression or mask
-    a real one. Now the fallback prints an explicit WARNING naming the
-    artifact so the flags read as advisory."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0},
-        "kernels": {"kernels": {"k": {"rows_per_sec": 1_000_000}}}})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 1.0},
-        "kernels": {"calibration_sec": 0.2,
-                    "kernels": {"k": {"rows_per_sec": 1_000_000}}}})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "WARNING [kernel] calibration_sec missing from old" in out
-    assert "RAW rows/s" in out
-
-
-def test_kernel_speedup_does_not_trip_gate(tmp_path, capsys):
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0},
-        "kernels": {"calibration_sec": 0.1,
-                    "kernels": {"k": {"rows_per_sec": 1_000_000}}}})
-    fast = _write(tmp_path, "fast.json", {
-        "queries": {"q": 1.0},
-        "kernels": {"calibration_sec": 0.1,
-                    "kernels": {"k": {"rows_per_sec": 4_000_000}}}})
-    sys.argv = ["bench_compare", old, fast, "--fail-on-regression"]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "faster [kernel] k" in out
-    assert "regression gate: clean" in out
-
-
-def test_cumulative_drift_line_exposes_compounding_creep(tmp_path, capsys):
-    """Round-9 verdict #6, the three-artifact creep scenario: each
-    round-over-round step is 1.3x (inside the 1.5x flag ratio, zero
-    flags), but r0->r2 compounds to 1.69x — the --drift-since line
-    anchored on the oldest artifact makes the accumulated number
-    visible where the pairwise comparison stays silent."""
-    r0 = _write(tmp_path, "r0.json", {
-        "queries": {"q1": 1.0, "q2": 2.0}, "calibration": {"median": 0.1}})
-    r1 = _write(tmp_path, "r1.json", {
-        "queries": {"q1": 1.3, "q2": 2.6}, "calibration": {"median": 0.1}})
-    r2 = _write(tmp_path, "r2.json", {
-        "queries": {"q1": 1.69, "q2": 3.38}, "calibration": {"median": 0.1}})
-    # pairwise r1->r2: no flags (1.3x < 1.5x), drift line vs r0 shows 1.69x
-    sys.argv = ["bench_compare", r1, r2, "--drift-since", r0,
-                "--fail-on-regression"]
-    bc.main()  # gate must stay clean — creep is visibility, not failure
-    out = capsys.readouterr().out
-    assert "flagged >1.5x: 0" in out
-    assert "cumulative drift vs" in out
-    assert "(1.69x" in out
-
-
-def test_drift_since_flag_validates_operand(tmp_path):
-    old = _write(tmp_path, "old.json", {"queries": {"q": 1.0}})
-    sys.argv = ["bench_compare", old, old, "--drift-since"]
-    with pytest.raises(SystemExit) as ex:
-        bc.main()
-    assert "--drift-since needs" in str(ex.value)
-
-
-def test_pyworker_calibration_normalizes_python_only_shift(tmp_path, capsys):
-    """Round-12 verdict #2 (the round-11 phantom uniform ~1.2x): a
-    session where the JVM calibration sped up 2x while python-worker
-    time did not move must NOT flag an untouched python-heavy query.
-    The tagged query divides by the PYWORKER calibration ratio (1.0 ->
-    clean); the untouched JVM query, which sped up with the session,
-    divides by the JVM ratio (also clean)."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"jvmq": 1.0, "pyq": 1.0},
-        "spread": {"jvmq": [0.9, 1.0, 1.1], "pyq": [0.9, 1.0, 1.1]},
-        "calibration": {"median": 0.10, "pyworker": {"median": 1.0}},
-        "pyworker_queries": ["pyq"]})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"jvmq": 0.5, "pyq": 1.0},
-        "spread": {"jvmq": [0.45, 0.5, 0.55], "pyq": [0.9, 1.0, 1.1]},
-        "calibration": {"median": 0.05, "pyworker": {"median": 1.0}},
-        "pyworker_queries": ["pyq"]})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "dividing new timings by 0.500" in out
-    assert "pyworker normalization: dividing 1 tagged queries by 1.000" in out
-    assert "flagged >1.5x: 0" in out
-
-
-def test_pyworker_calibration_still_catches_real_python_regression(
-    tmp_path, capsys
-):
-    """The twin must not mask real work: a tagged query 3x slower while
-    the pyworker calibration moved only 1.0x stays flagged."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"pyq": 1.0},
-        "spread": {"pyq": [0.9, 1.0, 1.1]},
-        "calibration": {"median": 0.10, "pyworker": {"median": 1.0}},
-        "pyworker_queries": ["pyq"]})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"pyq": 3.0},
-        "spread": {"pyq": [2.9, 3.0, 3.1]},
-        "calibration": {"median": 0.10, "pyworker": {"median": 1.0}},
-        "pyworker_queries": ["pyq"]})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "SLOWER pyq" in out and "flagged >1.5x: 1" in out
-
-
-def test_pyworker_calibration_missing_names_side_and_falls_back(
-    tmp_path, capsys
-):
-    """Pre-round-12 artifacts lack the pyworker calibration: with too
-    few tagged queries in common for a stable median, tagged queries
-    fall back to the JVM divisor with an explicit advisory naming the
-    missing side(s) — never a silent 1.0 (the kernel-warning lesson,
-    round-11 ADVICE)."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"pyq": 1.0},
-        "calibration": {"median": 0.10},
-        "pyworker_queries": ["pyq"]})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"pyq": 1.0},
-        "calibration": {"median": 0.05, "pyworker": {"median": 1.0}},
-        "pyworker_queries": ["pyq"]})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "pyworker normalization: unavailable" in out
-    assert "missing from old artifact" in out
-
-
-def test_pyworker_missing_calibration_self_normalizes_tagged_class(
-    tmp_path, capsys
-):
-    """The r11->r12 comparison shape: the OLD artifact predates the
-    pyworker calibration, the JVM calibration ran 2x faster while the
-    python side shifted uniformly 1.2x — with >=5 tagged queries in
-    common, the tagged class divides by its OWN median ratio, so the
-    uniform shift cancels and only the genuinely-regressed tagged query
-    (4x) is flagged."""
-    tagged = [f"py{i}" for i in range(6)]
-    old = _write(tmp_path, "old.json", {
-        "queries": {**{q: 1.0 for q in tagged}},
-        "spread": {**{q: [0.9, 1.0, 1.1] for q in tagged}},
-        "calibration": {"median": 0.10},
-        "pyworker_queries": tagged})
-    new_q = {q: 1.2 for q in tagged}
-    new_q["py5"] = 4.0  # the one real python regression
-    new = _write(tmp_path, "new.json", {
-        "queries": new_q,
-        "spread": {q: [v - 0.1, v, v + 0.1] for q, v in new_q.items()},
-        "calibration": {"median": 0.05, "pyworker": {"median": 1.0}},
-        "pyworker_queries": tagged})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "dividing 6 tagged queries by their own median ratio 1.200" in out
-    assert "SLOWER py5" in out
-    assert "flagged >1.5x: 1" in out
-
-
-def test_kernel_missing_calibration_names_both_sides(tmp_path, capsys):
-    """Round-11 ADVICE: with BOTH kernel calibrations absent the warning
-    used to blame only 'old'; it must name each missing side."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0},
-        "kernels": {"kernels": {"k": {"rows_per_sec": 1_000_000}}}})
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 1.0},
-        "kernels": {"kernels": {"k": {"rows_per_sec": 1_000_000}}}})
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "calibration_sec missing from old and new artifact" in out
-
-
-def test_compact_line_carries_pyworker_calibration():
-    times = {"q1": 1.0, "q2": 2.0}
-    line, _ = bench.compact_line(times, 3.0, 0.1, cal=0.1, cal_py=0.7)
-    d = json.loads(line)
-    assert d["calibration"] == 0.1
-    assert d["calibration_pyworker"] == 0.7
-
-
-def test_tag_backfill_from_live_bench_is_announced(tmp_path, capsys):
-    """Round-12 ADVICE (low): when an artifact carries no
-    pyworker_queries tag list, load() backfills it from the CURRENT
-    checkout's bench.py — which may not describe what an old artifact
-    measured. The backfill must be announced per-path, never silent; an
-    artifact that carries its own tags stays quiet."""
-    untagged = _write(tmp_path, "old.json", {"queries": {"q": 1.0}})
-    tagged = _write(tmp_path, "new.json", {
-        "queries": {"q": 1.0}, "pyworker_queries": ["q"]})
-    bc.load(untagged)
-    err = capsys.readouterr().err
-    assert "backfilled" in err and "old.json" in err and "bench.py" in err
-    bc.load(tagged)
-    assert "backfilled" not in capsys.readouterr().err
-
-
-def test_compact_line_carries_pyworker_tags_for_kept_queries():
-    """Round-13 verdict #4: the driver-captured stdout line must be
-    self-describing for calibration-class normalization — it carries
-    the pyworker tag list intersected with the queries it kept, so
-    tools/bench_compare.py never backfills tags from a checkout whose
-    tag set may postdate the artifact."""
-    times = {"npm_dependency_counts": 0.3, "jvm_q": 1.0, "py_q": 2.0}
-    line, _ = bench.compact_line(
-        times, 3.3, 0.1, py_tags=frozenset({"py_q", "dropped_q"}))
-    d = json.loads(line)
-    assert d["pyworker_queries"] == ["py_q"]  # kept ∩ tags only
-    # the field shrinks with the kept set: a 103-query suite drops
-    # cheap queries to fit the budget, and their tags go with them
-    many = _many_queries(103)
-    tags = frozenset(many) - {"npm_dependency_counts"}
-    line, kept = bench.compact_line(many, 82.5, 0.1, py_tags=tags)
-    assert len(line) <= bench.LINE_BUDGET
-    d = json.loads(line)
-    assert set(d["pyworker_queries"]) == set(d["queries"]) - {
-        "npm_dependency_counts"}
-    # no py_tags argument -> field absent (pre-r14 line shape preserved)
-    line, _ = bench.compact_line(times, 3.3, 0.1)
-    assert "pyworker_queries" not in json.loads(line)
-
-
-def test_present_but_empty_tag_list_is_authoritative(tmp_path, capsys):
-    """A compact line whose kept queries include no pyworker query emits
-    pyworker_queries: [] — that is a statement, not missing data, and
-    must NOT trigger the current-checkout backfill (which would wrongly
-    reclassify queries the artifact's own bench run said were JVM)."""
-    empty_tagged = _write(tmp_path, "empty.json", {
-        "queries": {"jvm_q": 1.0}, "pyworker_queries": []})
-    *_, tags = bc.load(empty_tagged)
-    assert tags == frozenset()
-    assert "backfilled" not in capsys.readouterr().err
 
 
 def test_reduce_stream_passes_median_of_three():
@@ -573,71 +113,108 @@ def test_reduce_stream_passes_median_of_three():
     assert out["op_b"]["rows_per_sec_band"][-1] == 700
 
 
-def test_compare_suppresses_stream_swing_inside_old_band(tmp_path, capsys):
-    """The r13->r14 failure mode this round retires at the source: a
-    ~2x one-shot rows/s swing on untouched code. With the old artifact
-    carrying a rows_per_sec_band that covers the new normalized rate,
-    the compare reports 'noise', not a flag."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0},
-        "streaming": {"sink": {
-            "rows_per_sec": 20000,
-            "rows_per_sec_band": [9500, 20000, 21000],
-        }},
-    })
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 1.0},
-        "streaming": {"sink": {
-            "rows_per_sec": 10000,
-            "rows_per_sec_band": [9800, 10000, 10400],
-        }},
-    })
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "noise  [stream] sink" in out
-    assert "streaming: 1 common ops, flagged >1.5x: 0; noise-suppressed: 1" in out
+def test_job_profile_counts_the_broadcast_job(spark):
+    """A broadcast join starts two jobs: the broadcast's collect, which
+    runs under a job group of its own, and the join. Bracketing by job id
+    counts both."""
+    small = spark.range(100).selectExpr("id AS k", "id * 2 AS v")
+    big = spark.range(0, 10_000, 1, 4).selectExpr("id % 100 AS k")
+    joined = big.join(small.hint("broadcast"), "k")
+    _, prof = job_profile(spark, lambda: joined.write.format("noop").mode("overwrite").save())
+    assert prof["jobs"] == 2
+    assert prof["stages"] == 2
+    assert prof["shuffle_write_bytes"] == 0
 
 
-def test_compare_flags_stream_swing_beyond_old_band(tmp_path, capsys):
-    """A genuine streaming regression — new rate far below the old
-    band — still flags, with both the delta and the old band printed."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0},
-        "streaming": {"sink": {
-            "rows_per_sec": 20000,
-            "rows_per_sec_band": [19000, 20000, 21000],
-        }},
-    })
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 1.0},
-        "streaming": {"sink": {"rows_per_sec": 10000,
-                               "rows_per_sec_band": [9800, 10000, 10400]}},
-    })
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "SLOWER [stream] sink" in out
-    assert "old band [19000,21000]" in out
-    assert "streaming: 1 common ops, flagged >1.5x: 1" in out
+def test_job_profile_counts_a_one_shuffle_aggregation(spark):
+    """An aggregation over one shuffle runs two stages. Under AQE the map
+    stage is its own job and the result job lists it again as skipped; the
+    fold counts it once, with the shuffle bytes it wrote."""
+    agg = spark.range(0, 10_000, 1, 4).selectExpr("id % 10 AS k").groupBy("k").count()
+    out, prof = job_profile(spark, lambda: agg.collect())
+    assert len(out) == 10
+    assert prof["stages"] == 2
+    assert prof["jobs"] == 2
+    assert prof["tasks"] >= 5  # 4 map tasks and at least one reduce task
+    assert prof["shuffle_write_bytes"] > 0
 
 
-def test_compare_stream_legacy_artifact_without_band_still_flags(
-    tmp_path, capsys
-):
-    """Pre-r15 artifacts carry no rows_per_sec_band: the comparison
-    degrades to the old flag-on-ratio behavior (no silent suppression
-    of a swing nobody banded)."""
-    old = _write(tmp_path, "old.json", {
-        "queries": {"q": 1.0},
-        "streaming": {"sink": {"rows_per_sec": 20000}},
-    })
-    new = _write(tmp_path, "new.json", {
-        "queries": {"q": 1.0},
-        "streaming": {"sink": {"rows_per_sec": 10000}},
-    })
-    sys.argv = ["bench_compare", old, new]
-    bc.main()
-    out = capsys.readouterr().out
-    assert "SLOWER [stream] sink" in out
-    assert "streaming: 1 common ops, flagged >1.5x: 1" in out
+def _artifact(**profiles) -> dict:
+    base = {
+        "npm_dependency_counts": {"jobs": 6, "stages": 6, "shuffle_write_bytes": 1857},
+        "pricing_summary": {"jobs": 2, "stages": 2, "shuffle_write_bytes": 4096},
+    }
+    return {"sf": 0.1, "cpus": 4, "shuffle_partitions": 4, "profiles": {**base, **profiles}}
+
+
+def _gate(tmp_path, capsys, old: dict, new: dict) -> tuple[int, str]:
+    paths = []
+    for name, payload in (("old.json", old), ("new.json", new)):
+        (tmp_path / name).write_text(json.dumps(payload))
+        paths.append(str(tmp_path / name))
+    code = bc.main(paths)
+    return code, capsys.readouterr().out
+
+
+def test_gate_passes_equal_artifacts(tmp_path, capsys):
+    code, out = _gate(tmp_path, capsys, _artifact(), _artifact())
+    assert code == 0
+    assert "2 common queries, 0 failures" in out
+
+
+@pytest.mark.parametrize("key", ["jobs", "stages"])
+def test_gate_fails_one_more_job_or_stage(tmp_path, capsys, key):
+    new = _artifact()
+    new["profiles"]["npm_dependency_counts"][key] += 1
+    code, out = _gate(tmp_path, capsys, _artifact(), new)
+    assert code == 1
+    assert f"FAIL npm_dependency_counts: {key} 6 -> 7" in out
+
+
+def test_gate_fails_a_vanished_query(tmp_path, capsys):
+    new = _artifact()
+    del new["profiles"]["pricing_summary"]
+    code, out = _gate(tmp_path, capsys, _artifact(), new)
+    assert code == 1
+    assert "FAIL pricing_summary: missing from NEW" in out
+
+
+@pytest.mark.parametrize("key, value", [("cpus", 8), ("shuffle_partitions", 8), ("sf", 0.01)])
+def test_gate_fails_other_settings(tmp_path, capsys, key, value):
+    """Counts compare only at equal scale factor, cpus and shuffle
+    partitions."""
+    new = _artifact()
+    before, new[key] = new[key], value
+    code, out = _gate(tmp_path, capsys, _artifact(), new)
+    assert code == 1
+    assert f"FAIL {key} differs: {before} -> {value}" in out
+
+
+def test_gate_passes_fewer_jobs_and_new_queries(tmp_path, capsys):
+    new = _artifact(new_query={"jobs": 9, "stages": 9, "shuffle_write_bytes": 0})
+    new["profiles"]["npm_dependency_counts"]["jobs"] = 5
+    code, out = _gate(tmp_path, capsys, _artifact(), new)
+    assert code == 0
+    assert "npm_dependency_counts: jobs 6 -> 5" in out
+    assert "new_query: new query" in out
+
+
+def test_gate_fails_an_artifact_without_profiles(tmp_path, capsys):
+    old = {"sf": 0.1, "cpus": 4, "shuffle_partitions": 4, "queries": {"pricing_summary": 1.0}}
+    code, out = _gate(tmp_path, capsys, old, _artifact())
+    assert code == 1
+    assert "FAIL OLD artifact carries no query profiles" in out
+
+
+def test_reduce_profiles_keeps_the_largest_counts(capsys):
+    """A query whose passes disagree is gated on its largest counts and
+    named on stderr."""
+    passes = [
+        {"jobs": 23, "stages": 23, "tasks": 50, "shuffle_write_bytes": 100},
+        {"jobs": 24, "stages": 24, "tasks": 51, "shuffle_write_bytes": 300},
+        {"jobs": 23, "stages": 23, "tasks": 50, "shuffle_write_bytes": 200},
+    ]
+    assert bench.reduce_profiles("q", passes) == {"jobs": 24, "stages": 24, "shuffle_write_bytes": 200}
+    assert "q jobs/stages differ across passes" in capsys.readouterr().err
+    assert bench.reduce_profiles("q", passes[:1]) == {"jobs": 23, "stages": 23, "shuffle_write_bytes": 100}
+    assert capsys.readouterr().err == ""

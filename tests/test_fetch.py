@@ -1,9 +1,9 @@
-"""Record/replay harness for the HTTP enrichment path: the
+"""Record/replay harness for the registry fetch path: the
 retry/backoff/token-bucket engine (fetch.ThrottledFetcher) executes against
 canned transcripts covering all four outcome families — 200, 404,
 5xx-then-success, connection-error — with no network. Timing behavior is
-unit-tested with a fake clock; the Spark mapInPandas live path and the
-npmregistry source's replay mode run end-to-end."""
+unit-tested with a fake clock; the npmregistry source's replay mode runs
+end-to-end."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import json
 import os
 
 from akkastreamprocessnpmpackagedependencies_spark import fetch
-from akkastreamprocessnpmpackagedependencies_spark.schemas import PACKAGES_SCHEMA
 from akkastreamprocessnpmpackagedependencies_spark.sources.registry import register
 
 
@@ -92,10 +91,29 @@ def test_5xx_exhausts_to_last_status():
     assert fc.sleeps == [1.0, 2.0]
 
 
-def test_http_enrich_live_path_with_replay_transport(spark):
-    """The live mapInPandas path end-to-end on a canned transcript: every
-    outcome family in one frame. This is the exact code a real network run
-    executes — only the transport differs."""
+def _replay(spark, tmp_path, transcript: dict, names: list[str], **options):
+    """The npmregistry batch reader in replay mode over ``names``."""
+    pkgs = tmp_path / "packages.txt"
+    pkgs.write_text("".join(f"{n}\n" for n in names))
+    tpath = tmp_path / "transcript.json"
+    tpath.write_text(json.dumps(transcript))
+    register(spark)
+    reader = (
+        spark.read.format("npmregistry")
+        .option("mode", "replay")
+        .option("packages_path", str(pkgs))
+        .option("transcript_path", str(tpath))
+        .option("rate_per_sec", "0")
+    )
+    for key, value in options.items():
+        reader = reader.option(key, value)
+    return reader.load()
+
+
+def test_registry_reader_replays_every_outcome_family(spark, tmp_path):
+    """The batch reader's fetch path end-to-end on a canned transcript:
+    every outcome family in one read, spread over two partitions. This is
+    the code a live run executes; only the transport differs."""
     doc_ok = json.dumps({"versions": {"1.0.0": {"dependencies": {"a": "1"}}}})
     doc_flaky = json.dumps({"versions": {"2.0.0": {}}})
     transcript = {
@@ -104,19 +122,8 @@ def test_http_enrich_live_path_with_replay_transport(spark):
         "dead": ["error"],
         # "missing" absent from the transcript -> 404
     }
-    packages = spark.createDataFrame(
-        [("ok",), ("missing",), ("flaky",), ("dead",)], PACKAGES_SCHEMA
-    )
-    rows = {
-        r.name: (r.status_code, r.doc)
-        for r in fetch.http_enrich(
-            packages.coalesce(1),
-            mode="live",
-            transport=fetch.ReplayTransport(transcript),
-            rate_per_sec=0,
-            max_retries=2,
-        ).collect()
-    }
+    df = _replay(spark, tmp_path, transcript, ["ok", "missing", "flaky", "dead"], max_retries="2", numpartitions="2")
+    rows = {r.name: (r.status_code, r.doc) for r in df.collect()}
     assert rows["ok"] == (200, doc_ok)
     assert rows["missing"] == (404, None)
     assert rows["flaky"] == (200, doc_flaky)  # survived two 503s
@@ -126,29 +133,13 @@ def test_http_enrich_live_path_with_replay_transport(spark):
 def test_registry_source_replay_mode(spark, tmp_path):
     """The npmregistry source's replay mode drives the same fetcher engine
     from a transcript file — the source-side live path, hermetic."""
-    pkgs = tmp_path / "packages.txt"
-    pkgs.write_text("alpha\nbeta\ngamma\n")
     transcript = {
         "alpha": [[200, '{"versions": {}}']],
         "beta": [502, [200, '{"versions": {}}']],
         # gamma absent -> 404
     }
-    tpath = tmp_path / "transcript.json"
-    tpath.write_text(json.dumps(transcript))
-    register(spark)
-    rows = {
-        r.name: r.status_code
-        for r in spark.read.format("npmregistry")
-        .option("mode", "replay")
-        .option("packages_path", str(pkgs))
-        .option("transcript_path", str(tpath))
-        .option("rate_per_sec", "0")
-        .option("max_retries", "2")
-        .option("numpartitions", "1")
-        .load()
-        .collect()
-    }
-    assert rows == {"alpha": 200, "beta": 200, "gamma": 404}
+    df = _replay(spark, tmp_path, transcript, ["alpha", "beta", "gamma"], max_retries="2", numpartitions="1")
+    assert {r.name: r.status_code for r in df.collect()} == {"alpha": 200, "beta": 200, "gamma": 404}
 
 
 def test_replay_mode_survives_gzip_package_list(spark, tmp_path):
@@ -175,10 +166,10 @@ def test_replay_mode_survives_gzip_package_list(spark, tmp_path):
     assert [(r.name, r.status_code) for r in rows] == [("only", 200)]
 
 
-def test_fetch_then_parse_pipeline_from_replay(spark):
-    """Replayed live fetch feeds the downstream parse/count operators the
-    same way fixture mode does — proving transports are interchangeable
-    above the fetch boundary."""
+def test_fetch_then_parse_pipeline_from_replay(spark, tmp_path):
+    """Replayed fetches feed the downstream parse/count operators the same
+    way fixture docs do — transports are interchangeable above the fetch
+    boundary."""
     from pyspark.sql import functions as F
 
     from akkastreamprocessnpmpackagedependencies_spark.operators import npm
@@ -191,18 +182,12 @@ def test_fetch_then_parse_pipeline_from_replay(spark):
             }
         }
     )
-    packages = spark.createDataFrame([("lib",)], PACKAGES_SCHEMA)
-    enriched = fetch.http_enrich(
-        packages,
-        mode="live",
-        transport=fetch.ReplayTransport({"lib": [[200, doc]]}),
-        rate_per_sec=0,
-    )
+    fetched = _replay(spark, tmp_path, {"lib": [[200, doc]]}, ["lib"])
     out = npm.report(
         npm.accumulate_counts(
             npm.count_dependencies(
                 npm.explode_versions(
-                    npm.parse_registry(enriched.filter(F.col("status_code") == 200))
+                    npm.parse_registry(fetched.filter(F.col("status_code") == 200))
                 )
             )
         )
@@ -286,9 +271,6 @@ def test_registry_readers_reject_bad_options():
     for reader in (NpmRegistryStreamReader, NpmRegistryBatchReader):
         with pytest.raises(ValueError, match="transcript_path"):
             reader({"mode": "replay", "packages_path": "p.txt"})
-    # http_enrich checks its mode before it touches the frame
-    with pytest.raises(ValueError, match="mode"):
-        fetch.http_enrich(None, mode="fixtures")
     # the smallest valid values; rate_per_sec=0 means unthrottled
     assert NpmRegistryStreamReader({"rate": "1", "max_retries": "0", "rate_per_sec": "0"}).rate == 1
     assert NpmRegistryBatchReader({"numpartitions": "1", "rate_per_sec": "0"}).n_parts == 1

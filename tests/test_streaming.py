@@ -10,9 +10,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from akkastreamprocessnpmpackagedependencies_spark import fetch, fixtures
+from akkastreamprocessnpmpackagedependencies_spark import fixtures
 from akkastreamprocessnpmpackagedependencies_spark.operators import npm
-from akkastreamprocessnpmpackagedependencies_spark.schemas import PACKAGES_SCHEMA
 from akkastreamprocessnpmpackagedependencies_spark.sources.registry import (
     NpmRegistryStreamReader,
     register,
@@ -74,14 +73,18 @@ def test_streaming_flagship_matches_batch(spark, fixtures_dir, tmp_path):
     assert got == fixtures.expected_counts()
 
 
-def test_http_enrich_fixture_mode(spark):
-    packages = spark.createDataFrame([(n,) for n in fixtures.package_names()], PACKAGES_SCHEMA)
-    enriched = fetch.http_enrich(packages)
+def test_registry_reader_fixture_mode_feeds_npm_operators(spark, tmp_path):
+    """The batch reader in fixture mode, restricted to the fixture package
+    list, feeds the npm operators to the flagship's expected counts."""
+    pkgs = tmp_path / "packages.txt"
+    pkgs.write_text("".join(f"{n}\n" for n in fixtures.package_names()))
+    register(spark)
+    docs = spark.read.format("npmregistry").option("packages_path", str(pkgs)).load()
     out = npm.report(
         npm.accumulate_counts(
             npm.count_dependencies(
                 npm.explode_versions(
-                    npm.parse_registry(enriched.filter(F.col("status_code") == 200))
+                    npm.parse_registry(docs.filter(F.col("status_code") == 200))
                 )
             )
         )

@@ -6,11 +6,13 @@
 
 Pair ``i`` runs the arm once in each checkout with seed ``--seed + i``,
 the parent first on even pairs and the change first on odd ones, so
-drift on the host lands on both sides. Each run has the checkout as its
+a slow spell on the host lands on both sides. Each run has the checkout as its
 working directory, with ``{repo}`` in the command replaced by the
 checkout's absolute path and ``{seed}`` by the pair's seed. Arms:
 ``perfbench/run.py``, ``tools/gate_arm.py`` and ``tools/query_arm.py``
-(give the latter two by absolute path: the parent may predate them).
+(give the latter two by absolute path: the parent may predate them;
+both import ``observability.job_profile`` from the checkout, so neither
+runs in a checkout older than that function).
 
 An arm prints one JSON object as its last line of standard output:
 ``correct``, ``attempted``, ``failed``, ``metrics`` ({name: {value,

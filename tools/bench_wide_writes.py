@@ -11,7 +11,7 @@ localCheckpointed synthetic docs frame (doc_id + ~1 KiB text + a
 at a ladder of batch sizes bracketing the threshold. Each shape is
 forced by setting ``WIDE_WRITES_ROWS`` just above (narrow) or at (wide)
 the batch size. Shapes are INTERLEAVED per rep (narrow, wide, narrow,
-wide, ...) so ambient drift lands on both arms, and every rep writes to
+wide, ...) so a slow spell on the host lands on both arms, and every rep writes to
 a fresh directory so no arm pays accumulated-listing costs the other
 skipped.
 

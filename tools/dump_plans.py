@@ -100,18 +100,20 @@ real. Two costs are charged on purpose:
 
 Each measured pass visits the suite in a different seeded-shuffled
 order, so session interference hits different queries each pass.
-BENCH_FULL.json records per-query [min, median, max] spread, and the
-stdout line is trimmed to fit a ~2000-char capture tail (totals +
-flagship + slowest queries; the full map stays in BENCH_FULL.json).
-`tools/bench_compare.py` divides new timings by the ratio of a
-calibration micro-workload (deterministic in-memory agg + one shuffle,
-no parquet; CAL_RUNS samples bracketing the measured passes), because
-between-session ambient shifts move every query uniformly, and
-suppresses a delta only when the normalized new MEDIAN lies inside the
-old band. BENCH_FULL also carries a "streaming" section — rows/s and
-per-micro-batch latency spread for the stateful/windowed operators over
-time-sliced sf event files — compared with the inverse normalization
-(rows/s scales inversely with session slowness).
+BENCH_FULL.json records per-query [min, median, max] spread and each
+query's Spark jobs, stages and shuffle bytes per run
+(`observability.job_profile`, folded outside the timed span), with the
+session's cpus and shuffle partitions; the stdout line is trimmed to
+fit a ~2000-char capture tail (totals + flagship + slowest queries).
+`tools/bench_compare.py OLD NEW` gates on those counts: it fails when
+any query's jobs or stages rise, when a query disappears, or when the
+two artifacts' scale factor, cpus or shuffle partitions differ. Counts do not depend
+on the host; wall time does, so it is compared only within one session,
+with `tools/ab.py` over `tools/query_arm.py`. BENCH_FULL also carries a
+"streaming" section (rows/s and per-micro-batch latency of the
+stateful/windowed operators over time-sliced sf event files) and a
+"kernels" section (rows/s of the sketch kernels, no Spark); both are
+recorded, not gated.
 
 The real-codec decode queries (`multimodal_decode_real/_png/_jpeg/
 _webp/_audio`) show `Exchange RoundRobinPartitioning` under the

@@ -53,8 +53,6 @@ import sys
 import tempfile
 import time
 
-from query_arm import probe_job_id
-
 COPIES = 10
 TOKENS_PER_DOC = 60  # a synthetic clean doc has 56 5-grams
 ARMS = {  # arm -> micro-batches
@@ -186,8 +184,8 @@ def main(argv: list[str] | None = None) -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
 
+    from akkastreamprocessnpmpackagedependencies_spark.observability import job_profile
     from akkastreamprocessnpmpackagedependencies_spark.streaming import pipeline as sp
 
     work = tempfile.mkdtemp(prefix=f"gate_arm_{args.arm}_")
@@ -199,13 +197,16 @@ def main(argv: list[str] | None = None) -> int:
         else:
             n_rows, writer = gate_input(spark, sp, args, src, out, work)
         spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm the JVM
-        j0 = probe_job_id(sc)
-        t0 = time.perf_counter()
-        q = writer.option("checkpointLocation", os.path.join(work, "ck")).start()
-        q.processAllAvailable()
-        q.stop()
-        wall = time.perf_counter() - t0
-        jobs = probe_job_id(sc) - j0 - 1
+
+        def run() -> float:
+            t0 = time.perf_counter()
+            q = writer.option("checkpointLocation", os.path.join(work, "ck")).start()
+            q.processAllAvailable()
+            q.stop()
+            return time.perf_counter() - t0
+
+        wall, prof = job_profile(spark, run)
+        jobs = prof["jobs"]
         if args.arm.startswith("sink_"):
             series = spark.read.parquet(out).collect()
             distinct = "\n".join(sorted({repr(tuple(r)) for r in series}))

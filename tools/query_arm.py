@@ -1,7 +1,7 @@
 """One query arm for ``tools/ab.py``: time one registered query the way
-``bench.py`` does and print one JSON line with its median time and, as
-``result``, its row count (which must match across checkouts), and
-the Spark jobs a timed run starts.
+``bench.py`` does and print one JSON line with its median time, its
+Spark jobs and stages per timed run and, as ``result``, its row count
+(which must match across checkouts).
 
     python /path/to/tools/query_arm.py SF_DIR QUERY
 
@@ -9,7 +9,11 @@ Run it from the root of the checkout under test: ``__spark_entry__`` is
 imported from the working directory, so one copy of this script drives
 both sides of an A/B. The session is ``bench.py``'s (``get_spark``,
 local[$SPARK_GRAFT_CPUS]); the timed span is construction plus a noop
-sink, after the same warm-up (a JVM sum, then one untimed run).
+sink, after the same warm-up (a JVM sum, then one untimed run). Timed
+runs follow perfbench's ``harness.measure`` rule over BUDGET_S seconds:
+a run starts only while the median run so far still fits in the time
+left: a sub-second query gets many runs, and a slow one runs at least
+once.
 """
 
 from __future__ import annotations
@@ -21,19 +25,7 @@ import statistics
 import sys
 import time
 
-RUNS = 3  # bench.py's MEASURE_RUNS
-
-
-def probe_job_id(sc) -> int:
-    """The id of a one-task probe job run now. Job ids are global and
-    sequential, so two probes bracket the jobs run between them; a job
-    group would miss broadcast jobs, which run under a group of their
-    own."""
-    sc.setJobGroup("probe", "probe")
-    sc.parallelize([0], 1).count()
-    ids = sc.statusTracker().getJobIdsForGroup("probe")
-    sc.setJobGroup(None, None)
-    return max(ids)
+BUDGET_S = 15.0
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -44,6 +36,7 @@ def main(argv: list[str] | None = None) -> int:
     sys.path.insert(0, os.getcwd())
 
     import __spark_entry__ as entrymod
+    from akkastreamprocessnpmpackagedependencies_spark.observability import job_profile
     from akkastreamprocessnpmpackagedependencies_spark.session import get_spark
 
     qs = entrymod.queries()
@@ -57,20 +50,27 @@ def main(argv: list[str] | None = None) -> int:
         qs[args.query](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
+    def measure() -> list[float]:
+        walls: list[float] = []
+        deadline = time.perf_counter() + BUDGET_S
+        while not walls or time.perf_counter() + statistics.median(walls) <= deadline:
+            walls.append(run_once())
+        return walls
+
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     run_once()
-    j0 = probe_job_id(spark.sparkContext)
-    walls = [run_once() for _ in range(RUNS)]
-    jobs = (probe_job_id(spark.sparkContext) - j0 - 1) / RUNS
+    walls, prof = job_profile(spark, measure)
     rows = qs[args.query](spark, args.sf_dir).count()
     spark.stop()
     print(json.dumps({
         "correct": True,
-        "attempted": RUNS,
+        "attempted": len(walls),
         "failed": 0,
         "metrics": {
             "query.wall_s": {"value": statistics.median(walls), "unit": "s"},
-            "query.jobs_per_run": {"value": jobs, "unit": "count"},
+            "query.runs": {"value": len(walls), "unit": "count"},
+            "query.jobs_per_run": {"value": prof["jobs"] / len(walls), "unit": "count"},
+            "query.stages_per_run": {"value": prof["stages"] / len(walls), "unit": "count"},
         },
         "result": {"rows": rows},
     }))
